@@ -180,3 +180,50 @@ def test_cluster_by_categorical_collapses_distinct_sets(spark, webpages, outdir)
     exp = webpages.where(F.col("lang") == "de").count()
     assert dec.count() == exp
     assert ev["qualifying"] < ev["total"] * 0.5
+
+
+def test_cluster_by_lists_strip_whitespace(spark, monkeypatch, tmp_path):
+    """``"lang, n_chars"`` names two columns in both parsers: the
+    ``UPES_ENCODE_CLUSTER_BY`` environment variable and the
+    ``upe_encoded`` writer's ``cluster_by`` option."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from universal_parquet_exporter_spark.encode.pipeline import _persist_plan
+    from universal_parquet_exporter_spark.plans.partitioning import EncodePlan
+    from universal_parquet_exporter_spark.sources import spark_datasource as sds
+
+    out = str(tmp_path)
+    monkeypatch.setenv("UPES_ENCODE_OUTPUT_DIR", out)
+    monkeypatch.setenv("UPES_ENCODE_CLUSTER_BY", "lang, n_chars")
+    assert EncodeJobConfig.from_environment().cluster_by == ("lang", "n_chars")
+
+    _persist_plan(EncodePlan("doc_id", [], [1]), out)
+    schema = StructType(
+        [
+            StructField("doc_id", StringType()),
+            StructField("lang", StringType()),
+            StructField("n_chars", LongType()),
+        ]
+    )
+    writer = sds._EncodedBatchWriter(
+        {"path": out, "key_col": "doc_id", "cluster_by": " lang , n_chars"},
+        schema,
+        overwrite=False,
+    )
+    assert writer.cluster_cols == ("lang", "n_chars")
+
+
+def test_cluster_column_named_like_the_unit_key_keeps_unit_major_order():
+    """A cluster column literally named ``__unit__`` must not replace the
+    internal unit sort key: rows stay unit-major, cluster order within
+    each unit."""
+    import numpy as np
+    import pyarrow as pa
+
+    from universal_parquet_exporter_spark.encode.pipeline import _cluster_order
+
+    units = np.array([2, 0, 1, 0, 2, 1, 0], dtype=np.int64)
+    batch = pa.record_batch({"__unit__": pa.array([1, 6, 5, 4, 0, 2, 3])})
+    order = _cluster_order(units, batch, ("__unit__",))
+    assert units[order].tolist() == [0, 0, 0, 1, 1, 2, 2]
+    assert batch.column(0).take(pa.array(order)).to_pylist() == [3, 4, 6, 2, 5, 0, 1]

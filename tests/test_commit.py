@@ -1,0 +1,173 @@
+"""The encode commit (:func:`commit_fragments`): the stage's one Spark
+action brings the manifest rows to the driver as Arrow, and the driver
+writes one manifest file and one lineage file per call — no Spark
+write, no read-back."""
+
+import os
+import uuid
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from universal_parquet_exporter_spark.encode import pipeline
+from universal_parquet_exporter_spark.encode.pipeline import (
+    EncodeJobConfig,
+    decode_dataset,
+    encode_job,
+    encode_parquet_job,
+    load_or_build_plan,
+)
+from universal_parquet_exporter_spark.fixtures import generate_webpages
+from universal_parquet_exporter_spark.plans.partitioning import EncodePlan, assign_units
+from universal_parquet_exporter_spark.sources import spark_datasource as sds
+
+N_ROWS = 4000
+
+
+@pytest.fixture(scope="module")
+def webpages(spark):
+    df = generate_webpages(spark, N_ROWS, partitions=4).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def webpages_parquet(spark, webpages, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("commit_in"))
+    webpages.write.mode("overwrite").parquet(d)
+    return d
+
+
+def _cfg(out, **kw):
+    return EncodeJobConfig(output_dir=out, target_unit_bytes=1 << 20, chunk_rows=1024, **kw)
+
+
+def _parquet_files(d):
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith("."))
+
+
+def test_lineage_is_the_group_by_of_the_runs_manifest(spark, webpages_parquet, tmp_path):
+    out = str(tmp_path / "a")
+    m = encode_parquet_job(spark, webpages_parquet, _cfg(out, batch_tag="t0"))
+    data, lineage = os.path.join(out, "data"), os.path.join(out, "lineage")
+    assert len(_parquet_files(data)) == 1 and len(_parquet_files(lineage)) == 1
+
+    frags = pq.read_table(data).to_pylist()
+    want: dict = {}
+    for r in frags:
+        assert r["run_id"] == m["run_id"]
+        u = want.setdefault(
+            r["unit"], {"n_rows": 0, "bytes_in": 0, "bytes_out": 0, "n_fragments": 0, "native": True}
+        )
+        u["n_rows"] += r["n_rows"]
+        u["bytes_in"] += r["bytes_in"]
+        u["bytes_out"] += r["bytes_out"]
+        u["n_fragments"] += 1
+        u["native"] = u["native"] and r["native"]
+    lin = pq.read_table(lineage).to_pylist()
+    got = {
+        r["unit"]: {k: r[k] for k in ("n_rows", "bytes_in", "bytes_out", "n_fragments", "native")}
+        for r in lin
+    }
+    assert got == want
+    assert len(lin) == len(want)  # one row per unit
+    assert {(r["run_id"], r["status"], r["batch_tag"]) for r in lin} == {(m["run_id"], "ok", "t0")}
+    assert len({r["committed_at"] for r in lin}) == 1  # one stamp per commit
+    assert m["rows"] == N_ROWS == sum(u["n_rows"] for u in want.values())
+    assert m["encoded_units"] == len(want)
+    assert m["bytes_out"] == sum(u["bytes_out"] for u in want.values())
+
+
+def test_calls_sharing_a_run_id_keep_both_commits(spark, webpages, tmp_path):
+    """A config reused across calls keeps its run id; the second commit
+    must add files, not replace the first commit's."""
+    out = str(tmp_path / "b")
+    cfg = _cfg(out, run_id="sharedrun", skip_completed=False)
+    halves = [webpages.where(F.crc32("url") % 2 == i) for i in (0, 1)]
+    encode_job(spark, halves[0], cfg)
+    m = encode_job(spark, halves[1], cfg)
+    assert len(_parquet_files(os.path.join(out, "data"))) == 2
+    assert len(_parquet_files(os.path.join(out, "lineage"))) == 2
+    assert m["rows"] == N_ROWS
+    dec = decode_dataset(spark, out)
+    assert dec.count() == N_ROWS
+    assert dec.select("url").distinct().count() == N_ROWS
+
+
+def _units_below(df, plan: EncodePlan, k: int):
+    """The rows of ``df`` whose encode unit is < ``k``."""
+    bjson = plan.to_json()
+
+    def tag(iterator):
+        p = EncodePlan.from_json(bjson)
+        for batch in iterator:
+            keys = np.asarray(batch.column("url").to_pylist(), dtype=object)
+            yield batch.append_column("__unit", pa.array(assign_units(keys, p), type=pa.int64()))
+
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+    return df.mapInArrow(tag, schema + ", __unit long").where(F.col("__unit") < k).drop("__unit")
+
+
+def test_crash_between_manifest_and_lineage_is_invisible_and_resumable(
+    spark, webpages, webpages_parquet, tmp_path, monkeypatch
+):
+    out = str(tmp_path / "c")
+    cfg = _cfg(out)
+    plan = load_or_build_plan(webpages, cfg)
+    k = plan.n_units // 2
+    assert k >= 1
+    first = _units_below(webpages, plan, k)
+    n_first = first.count()
+    encode_job(spark, first, cfg)
+
+    # the next call dies after its manifest file landed, before lineage
+    real_write = pipeline._write_parquet_file
+
+    def crash_on_lineage(dir_path, name, tbl):
+        if os.path.basename(dir_path.rstrip("/")) == "lineage":
+            raise OSError("simulated crash before the lineage commit")
+        real_write(dir_path, name, tbl)
+
+    monkeypatch.setattr(pipeline, "_write_parquet_file", crash_on_lineage)
+    with pytest.raises(OSError, match="simulated crash"):
+        encode_parquet_job(spark, webpages_parquet, cfg)
+    monkeypatch.setattr(pipeline, "_write_parquet_file", real_write)
+    assert len(_parquet_files(os.path.join(out, "data"))) == 2  # orphan rows on disk
+
+    assert decode_dataset(spark, out).count() == n_first
+    sds.register(spark)
+    assert spark.read.format("upe_encoded").load(out).count() == n_first
+
+    m = encode_parquet_job(spark, webpages_parquet, cfg)
+    assert m["resumed_units"] == k
+    assert m["encoded_units"] == plan.n_units
+    assert m["rows"] == N_ROWS
+    dec = decode_dataset(spark, out)
+    assert dec.count() == N_ROWS
+    assert dec.select("url").distinct().count() == N_ROWS
+
+
+def _spark_jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the Spark jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_job_runs_two_spark_jobs_fresh_and_one_on_resume(spark, webpages_parquet, tmp_path):
+    """Fresh directory: the plan sample and the encode stage, nothing
+    else (the commit, the resume check and the returned totals read and
+    write metadata with pyarrow).  Resume: the plan is reloaded, so only
+    the stage runs."""
+    out = str(tmp_path / "d")
+    assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 2
+    assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1

@@ -262,3 +262,38 @@ def test_compact_cluster_by_unknown_column_fails(spark, tmp_path):
     _ingest_fragmented(spark, out, n_batches=2)
     with pytest.raises(ValueError, match="cluster_by"):
         compact(spark, out, chunk_rows=64, cluster_by=("nope",))
+
+
+def test_compact_cluster_by_column_outside_targets_fails_up_front(spark, tmp_path):
+    """A cluster column that only NON-target generations carry cannot
+    sort the target units' rows: compact must refuse before launching the
+    rewrite, with the manifest untouched."""
+    from universal_parquet_exporter_spark.encode.pipeline import _persist_plan
+    from universal_parquet_exporter_spark.plans.partitioning import EncodePlan
+
+    out = str(tmp_path / "cmp_cluster_outside")
+    df = _docs(spark)
+    # two unsalted units split at doc_id '25': unit 0 gets fragmented
+    # appends without `score`, unit 1 one healthy slice with it
+    _persist_plan(EncodePlan("doc_id", ["25"], [1, 1]), out)
+    frag = df.where("doc_id < '25'")
+    for i in range(2):
+        encode_job(
+            spark,
+            frag.where(F.crc32(F.col("doc_id")) % 2 == i),
+            EncodeJobConfig(
+                output_dir=out, key_col="doc_id", size_cols=("text",), chunk_rows=64,
+                skip_completed=False, batch_tag=f"frag_{i}",
+            ),
+        )
+    encode_job(
+        spark,
+        df.where("doc_id >= '25'").withColumn("score", F.col("n_chars") / 10.0).coalesce(1),
+        EncodeJobConfig(
+            output_dir=out, key_col="doc_id", size_cols=("text",), skip_completed=False,
+            batch_tag="healthy",
+        ),
+    )
+    with pytest.raises(ValueError, match="outside the units selected"):
+        compact(spark, out, cluster_by=("score",))
+    assert manifest_dir(out).endswith("data")

@@ -165,6 +165,15 @@ def compact(
     union_fields = list(
         _union_probe_schema(payload_dir, sorted((r.file, r.offset) for r in probes))
     )
+    # the rewrite pads rows to the TARGETS' union only, so a cluster
+    # column that exists solely in non-target generations would crash
+    # the sort on an executor mid-rewrite — fail here instead
+    absent = [c for c in cluster_by if c not in {f.name for f in union_fields}]
+    if absent:
+        raise ValueError(
+            f"cluster_by columns {absent} exist only in generations outside the "
+            "units selected for compaction; their rows cannot be sorted by them"
+        )
 
     def rewrite(iterator):
         """Decode this task's slices (one-chunk cache, slices arrive

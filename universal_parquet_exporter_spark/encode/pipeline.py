@@ -24,17 +24,19 @@ Scale notes (100 TB / 1000-executor thinking):
   nominal scale a consolidate-per-unit exchange is pure network cost on
   already-compressed bytes;
 - payload I/O resolves through ``pyarrow.fs`` for ``hdfs://``/``s3://``
-  output dirs (same storage as the Spark-written manifests); plain paths
-  use POSIX I/O and require a driver+executor shared mount, and payload
-  files are fsync'd before their manifest rows are emitted;
-- unit atomicity without a shuffle: the manifest parquet commit is
-  job-atomic (FileOutputCommitter), lineage rows are derived from the
-  committed manifest and appended after, and decode semi-joins fragments
-  against lineage on (unit, run_id) — a run that crashes between payload
-  writes / manifest commit / lineage commit leaves only dead payload
-  files or orphan manifest rows, which are never read, and a resume
-  re-encodes those units under a new run_id (GC of dead files is the
-  usual Iceberg maintenance sweep);
+  output dirs (same storage as the manifests); plain paths use POSIX I/O
+  and require a driver+executor shared mount, and payload files are
+  fsync'd before their manifest rows are emitted;
+- unit atomicity without a shuffle: the stage's one Spark action brings
+  the manifest rows to the driver as Arrow, and :func:`commit_fragments`
+  writes them as ONE parquet file (temp name + rename, so it appears
+  whole or not at all), then the lineage file derived from the same
+  table.  Decode semi-joins fragments against lineage on
+  (unit, run_id) — a run that crashes between payload writes /
+  manifest file / lineage file leaves only dead payload files or orphan
+  manifest rows, which are never read, and a resume re-encodes those
+  units under a fresh commit id (GC of dead files is the usual Iceberg
+  maintenance sweep);
 - payload files hold our codec output verbatim — sizes are honest and
   decode never pays a double-decompress;
 - decode prunes to requested columns before deserializing payloads.
@@ -54,6 +56,44 @@ import pyarrow as pa
 from ..plans.partitioning import EncodePlan, assign_units_arrow, plan_encode
 from .container import deserialize_chunk, serialize_chunk
 
+
+def _ddl_type(t: pa.DataType) -> str:
+    if pa.types.is_large_string(t) or pa.types.is_string(t):
+        return "string"
+    if pa.types.is_large_binary(t) or pa.types.is_binary(t):
+        return "binary"
+    if pa.types.is_timestamp(t):
+        return "timestamp"
+    if pa.types.is_int64(t):
+        return "long"
+    if pa.types.is_int32(t):
+        return "int"
+    if pa.types.is_float64(t):
+        return "double"
+    if pa.types.is_float32(t):
+        return "float"
+    if pa.types.is_boolean(t):
+        return "boolean"
+    if pa.types.is_date32(t):
+        return "date"
+    if pa.types.is_decimal(t):
+        return f"decimal({t.precision},{t.scale})"
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return f"array<{_ddl_type(t.value_type)}>"
+    raise TypeError(f"unsupported type {t}")
+
+
+def _arrow_to_ddl(schema: pa.Schema, columns: list[str] | None) -> str:
+    def q(name: str) -> str:
+        # backtick-quote so dotted names parse as one identifier
+        return "`" + name.replace("`", "``") + "`"
+
+    if columns:
+        # requested order — must match deserialize_chunk's pruned order
+        return ", ".join(f"{q(c)} {_ddl_type(schema.field(c).type)}" for c in columns)
+    return ", ".join(f"{q(f.name)} {_ddl_type(f.type)}" for f in schema)
+
+
 # manifest row layout: one row per unit-slice — a contiguous row range
 # [row_off, row_off+n_rows) of ONE encode unit inside a serialized chunk.
 # A chunk (payload bytes at [offset, offset+length) of a task's payload
@@ -62,11 +102,43 @@ from .container import deserialize_chunk, serialize_chunk
 # sized for codec throughput) is decoupled from the bookkeeping
 # granularity (unit, sized for resume/lineage), so fragment size no
 # longer shrinks with task parallelism.  Iceberg-style: tasks write data
-# files straight to storage, Spark commits only the manifest.
-FRAG_SCHEMA = (
-    "unit long, first_key string, n_rows long, row_off long, bytes_in long, "
-    "bytes_out long, wall_ms double, codecs string, file string, offset long, length long, "
-    "stats string, native boolean"
+# files straight to storage, the driver commits only the manifest.
+FRAG_PA_SCHEMA = pa.schema(
+    [
+        ("unit", pa.int64()),
+        ("first_key", pa.string()),
+        ("n_rows", pa.int64()),
+        ("row_off", pa.int64()),
+        ("bytes_in", pa.int64()),
+        ("bytes_out", pa.int64()),
+        ("wall_ms", pa.float64()),
+        ("codecs", pa.string()),
+        ("file", pa.string()),
+        ("offset", pa.int64()),
+        ("length", pa.int64()),
+        ("stats", pa.string()),
+        ("native", pa.bool_()),
+    ]
+)
+FRAG_SCHEMA = _arrow_to_ddl(FRAG_PA_SCHEMA, None)  # the same fields as mapInArrow DDL
+MANIFEST_PA_SCHEMA = FRAG_PA_SCHEMA.append(pa.field("run_id", pa.string()))
+# one row per (unit, commit): the visibility key every reader semi-joins
+# manifest rows against, plus the unit's rolled-up fragment totals
+LINEAGE_PA_SCHEMA = pa.schema(
+    [
+        ("unit", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("bytes_in", pa.int64()),
+        ("bytes_out", pa.int64()),
+        ("wall_ms", pa.float64()),
+        ("n_fragments", pa.int64()),
+        ("codecs", pa.string()),
+        ("run_id", pa.string()),
+        ("status", pa.string()),
+        ("batch_tag", pa.string()),
+        ("committed_at", pa.timestamp("us", "UTC")),
+        ("native", pa.bool_()),
+    ]
 )
 
 _STATS_STR_MAX = 64  # string bound length cap (see _chunk_stats)
@@ -258,7 +330,7 @@ def _dv_values(col, t) -> list | None:
 def _payload_fs(path: str):
     """(filesystem, path) for payload I/O.  ``hdfs://``/``s3://``-style
     URIs route through pyarrow.fs so payload bytes land in the same
-    storage as the Spark-written manifests; plain paths use POSIX I/O and
+    storage as the manifests; plain paths use POSIX I/O and
     REQUIRE a filesystem shared by driver and executors at the same
     mount point (the usual Iceberg warehouse assumption)."""
     if "://" in path:
@@ -319,6 +391,13 @@ def _open_payload(payload_dir: str, fname: str):
     return f.open_input_file(f"{d}/{fname}")
 
 
+def split_columns(spec: str) -> tuple:
+    """``"lang, n_chars"`` → ``("lang", "n_chars")``: a comma-separated
+    column list from an option or environment variable, whitespace
+    stripped and empty entries dropped."""
+    return tuple(c.strip() for c in spec.split(",") if c.strip())
+
+
 @dataclass
 class EncodeJobConfig:
     output_dir: str
@@ -326,6 +405,8 @@ class EncodeJobConfig:
     size_cols: tuple = ("text", "html")
     target_unit_bytes: int = 64 << 20
     sample_rows: int = 100_000
+    # prefix of the id each commit records in manifest and lineage (a
+    # per-call suffix is appended; see commit_fragments)
     run_id: str = ""
     # serialize-flush threshold: a task groups consecutive unit-slices
     # into one chunk until it holds this many rows.  Codec throughput and
@@ -406,7 +487,7 @@ class EncodeJobConfig:
         return cls(
             output_dir=env["UPES_ENCODE_OUTPUT_DIR"],
             key_col=env.get("UPES_ENCODE_KEY_COL", "url"),
-            size_cols=tuple(c for c in size_cols.split(",") if c),
+            size_cols=split_columns(size_cols),
             target_unit_bytes=int(env.get("UPES_ENCODE_TARGET_UNIT_BYTES", 64 << 20)),
             sample_rows=int(env.get("UPES_ENCODE_SAMPLE_ROWS", 100_000)),
             run_id=env.get("UPES_ENCODE_RUN_ID", ""),
@@ -414,9 +495,7 @@ class EncodeJobConfig:
             max_buffer_bytes=int(env.get("UPES_ENCODE_MAX_BUFFER_BYTES", 256 << 20)),
             map_tasks=int(map_tasks) if map_tasks else None,
             input_format=env.get("UPES_ENCODE_INPUT_FORMAT", "parquet"),
-            cluster_by=tuple(
-                c for c in env.get("UPES_ENCODE_CLUSTER_BY", "").split(",") if c
-            ),
+            cluster_by=split_columns(env.get("UPES_ENCODE_CLUSTER_BY", "")),
         )
 
 
@@ -540,13 +619,120 @@ def next_manifest_name(output_dir: str) -> str:
     return f"data_v{top + 1}"
 
 
-def _dir_exists(path: str) -> bool:
-    fs, p = _payload_fs(path)
-    if fs is None:
-        return os.path.isdir(p)
-    from pyarrow.fs import FileType
+def _read_meta_table(path: str, columns: list[str]) -> pa.Table | None:
+    """A parquet metadata directory (manifest or lineage) as one Arrow
+    table (``_SUCCESS`` markers and ``.``-prefixed temp files ignored by
+    pyarrow.dataset's default ``ignore_prefixes``); None when the
+    directory doesn't exist yet."""
+    import pyarrow.dataset as pads
 
-    return fs.get_file_info(p).type == FileType.Directory
+    try:
+        dset = pads.dataset(path, format="parquet")
+    except (FileNotFoundError, OSError):
+        return None
+    names = [c for c in columns if c in dset.schema.names]
+    return dset.to_table(columns=names)
+
+
+def _ok_lineage(output_dir: str, columns: list[str]) -> pa.Table | None:
+    """The ``status='ok'`` lineage rows (``columns`` only), read with
+    pyarrow — no Spark job; None when there is no lineage or it lacks
+    any of ``columns``."""
+    import pyarrow.compute as pc
+
+    lin = _read_meta_table(os.path.join(output_dir, "lineage"), [*columns, "status"])
+    if lin is None or not set(columns) <= set(lin.schema.names):
+        return None
+    return lin.filter(pc.equal(lin.column("status"), "ok")).select(columns)
+
+
+def _write_parquet_file(dir_path: str, name: str, tbl: pa.Table) -> None:
+    """One parquet file into a metadata directory, atomically (temp name
+    prefixed ``.`` — invisible to Spark/pyarrow listings — then rename)."""
+    import pyarrow.parquet as pq
+
+    fs, root = _payload_fs(dir_path)
+    if fs is None:
+        os.makedirs(root, exist_ok=True)
+        tmp = os.path.join(root, f".tmp-{name}")
+        pq.write_table(tbl, tmp)
+        os.replace(tmp, os.path.join(root, name))
+    else:
+        fs.create_dir(root, recursive=True)
+        tmp = f"{root}/.tmp-{name}"
+        with fs.open_output_stream(tmp) as out:
+            pq.write_table(tbl, out)
+        fs.move(tmp, f"{root}/{name}")
+
+
+def commit_fragments(
+    frags: pa.Table, output_dir: str, data_dir: str, run_id: str, batch_tag: str = ""
+) -> tuple[str, float]:
+    """The one commit every encode path shares: write the fragments'
+    manifest rows as ONE parquet file under ``data_dir``, then ONE
+    lineage file — a row per unit, derived from the same table — that
+    makes them visible to readers.  Both files use the temp-write +
+    rename idiom, so a concurrent reader never sees a torn footer, and
+    a crash between them leaves orphan manifest rows that no reader
+    joins and a resume re-encodes.
+
+    Every call commits under its own id, ``<run_id>-<8 hex>``, which
+    tags its rows and names its files: a config reused across a resume
+    keeps its ``run_id``, and the resumed call must neither replace an
+    earlier commit's files nor make a crashed call's orphan rows
+    visible through its own lineage.  Runs on the driver or in Spark's
+    Python planning worker (no SparkSession needed).  Returns the
+    commit id and the ``time.perf_counter()`` instant the manifest file
+    landed, so callers can time the stage without the lineage
+    bookkeeping."""
+    from datetime import datetime, timezone
+
+    commit_id = f"{run_id}-{uuid.uuid4().hex[:8]}"
+    frags = frags.select(FRAG_PA_SCHEMA.names).cast(FRAG_PA_SCHEMA)
+    man = pa.Table.from_arrays(
+        [*frags.columns, pa.repeat(pa.scalar(commit_id), frags.num_rows)],
+        schema=MANIFEST_PA_SCHEMA,
+    )
+    name = f"part-{commit_id}.parquet"
+    _write_parquet_file(data_dir, name, man)
+    t_manifest = time.perf_counter()
+
+    # `native` (codec provenance — C fast path vs NumPy fallback per
+    # worker) rolls up as min(): False if ANY fragment of the unit fell
+    # back, so a heterogeneous cluster's mixed-path units are attributable
+    per_unit = frags.group_by("unit", use_threads=False).aggregate(
+        [
+            ("n_rows", "sum"),
+            ("bytes_in", "sum"),
+            ("bytes_out", "sum"),
+            ("wall_ms", "sum"),
+            ([], "count_all"),
+            ("codecs", "first"),
+            ("native", "min"),
+        ]
+    )
+    k = per_unit.num_rows
+    # one stamp per commit: the streaming reader's cursor order
+    now = pa.scalar(datetime.now(timezone.utc), LINEAGE_PA_SCHEMA.field("committed_at").type)
+    lineage = pa.Table.from_arrays(
+        [
+            per_unit.column("unit"),
+            per_unit.column("n_rows_sum"),
+            per_unit.column("bytes_in_sum"),
+            per_unit.column("bytes_out_sum"),
+            per_unit.column("wall_ms_sum"),
+            per_unit.column("count_all"),
+            per_unit.column("codecs_first"),
+            pa.repeat(pa.scalar(commit_id), k),
+            pa.repeat(pa.scalar("ok"), k),
+            pa.repeat(pa.scalar(batch_tag), k),
+            pa.repeat(now, k),
+            per_unit.column("native_min"),
+        ],
+        schema=LINEAGE_PA_SCHEMA,
+    )
+    _write_parquet_file(os.path.join(output_dir, "lineage"), name, lineage)
+    return commit_id, t_manifest
 
 
 def load_or_build_plan(df, cfg: EncodeJobConfig) -> EncodePlan:
@@ -656,13 +842,18 @@ def load_or_build_plan_parquet(
     size_cols = list(cfg.size_cols)
     pick = items[:: max(1, len(items) // 16)][:16]
     per_item = max(64, cfg.sample_rows // len(pick))
+    # the same task shape as the encode stage: broadcast the picked items
+    # and drive one task per item from a JVM-native range source — no
+    # createDataFrame + repartition shuffle in front of the sample
+    bpick = spark.sparkContext.broadcast(pick)
 
     def sample_rg(iterator):
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
+        picked = bpick.value
         for batch in iterator:
-            for path, rg in zip(batch.column("path").to_pylist(), batch.column("rg").to_pylist()):
+            for i in batch.column("id").to_pylist():
+                path, rg = picked[i]
                 tbl = _parquet_file(path).read_row_group(
                     max(rg, 0), columns=[key_col] + size_cols, use_threads=False
                 )
@@ -678,8 +869,7 @@ def load_or_build_plan_parquet(
                 yield pa.RecordBatch.from_pydict({"k": k, "sz": sz})
 
     sample = (
-        spark.createDataFrame(pick, "path string, rg int")
-        .repartition(len(pick))
+        spark.range(len(pick), numPartitions=len(pick))
         .mapInArrow(sample_rg, "k string, sz long")
         .toPandas()
     )
@@ -690,38 +880,25 @@ def load_or_build_plan_parquet(
 
 def completed_units(spark, output_dir: str) -> np.ndarray:
     """Units whose lineage rows say 'ok' — skipped on resume.  Returned
-    as a SORTED int64 numpy array fetched over Arrow (``toArrow``): no
-    per-row Python objects on the driver, ~8 B/unit resident (13 MB for
+    as a SORTED int64 numpy array read with pyarrow (no Spark job, no
+    per-row Python objects on the driver): ~8 B/unit resident (13 MB for
     the 1.6 M units of a 100 TB / 64 MB dataset), broadcast as-is to the
     encode tasks for the sorted-searchsorted membership test
-    (:func:`_resume_keep_mask`)."""
-    lineage_dir = os.path.join(output_dir, "lineage")
-    if not _dir_exists(lineage_dir):
+    (:func:`_resume_keep_mask`).  ``spark`` is unused; kept for callers."""
+    lin = _ok_lineage(output_dir, ["unit"])
+    if lin is None:
         return np.array([], dtype=np.int64)
-    tbl = (
-        spark.read.parquet(lineage_dir)
-        .where("status = 'ok'")
-        .select("unit")
-        .distinct()
-        .toArrow()
-    )
-    return np.sort(tbl.column("unit").to_numpy(zero_copy_only=False).astype(np.int64))
+    return np.unique(lin.column("unit").to_numpy().astype(np.int64))
 
 
 def completed_batch_tags(spark, output_dir: str) -> set[str]:
     """Batch tags with committed lineage — a streaming sink checks this
     before encoding so micro-batch replays are no-ops (exactly-once at
-    batch granularity)."""
-    lineage_dir = os.path.join(output_dir, "lineage")
-    if not _dir_exists(lineage_dir):
+    batch granularity).  Read with pyarrow; ``spark`` is unused."""
+    lin = _ok_lineage(output_dir, ["batch_tag"])
+    if lin is None:
         return set()
-    ldf = spark.read.parquet(lineage_dir)
-    if "batch_tag" not in ldf.columns:
-        return set()
-    rows = (
-        ldf.where("status = 'ok' AND batch_tag != ''").select("batch_tag").distinct().collect()
-    )
-    return {r.batch_tag for r in rows}
+    return {t for t in lin.column("batch_tag").unique().to_pylist() if t}
 
 
 def _resume_keep_mask(units: np.ndarray, done_local: np.ndarray) -> np.ndarray:
@@ -797,6 +974,24 @@ def _prefetched(iterable, depth: int = 2):
                 break
 
 
+def _cluster_order(units: np.ndarray, batch: pa.RecordBatch, cluster_cols: tuple) -> np.ndarray:
+    """Row order for cluster mode: unit-major, then the cluster columns.
+    The batch arrives globally sorted by the cluster columns (encode_job's
+    range-repartition + sort pre-pass), so a stable per-unit re-sort on
+    the same keys preserves that order inside every unit slice, and
+    concatenated slices of one unit across batches stay sorted.  pyarrow
+    sort_indices handles every zone-map type (timestamps, decimals,
+    strings) and puts nulls last, which RLE then picks up as one run.
+    The sort table's columns are named by position, so no user column
+    name (``__unit__`` included) can replace the unit key."""
+    cols = [pa.array(units)] + [batch.column(c) for c in cluster_cols]
+    names = [str(i) for i in range(len(cols))]
+    return pa.compute.sort_indices(
+        pa.Table.from_arrays(cols, names=names),
+        sort_keys=[(n, "ascending") for n in names],
+    ).to_numpy()
+
+
 def _encode_stream(
     iterator,
     plan_local: EncodePlan,
@@ -846,13 +1041,7 @@ def _encode_stream(
     # host).  Recorded per fragment → aggregated into lineage, so a perf
     # delta on a heterogeneous cluster is attributable from metadata.
     native_flag = get_native() is not None
-    rows: dict[str, list] = {
-        k: []
-        for k in (
-            "unit", "first_key", "n_rows", "row_off", "bytes_in", "bytes_out",
-            "wall_ms", "codecs", "file", "offset", "length", "stats", "native",
-        )
-    }
+    rows: dict[str, list] = {k: [] for k in FRAG_PA_SCHEMA.names}
 
     def train_fsst():
         # train FSST tables ONCE per task, at the first flush, from the
@@ -982,24 +1171,7 @@ def _encode_stream(
             if len(units) == 0:
                 continue
             if cluster_cols:
-                # cluster mode: unit-major, then the cluster columns —
-                # the batch arrives globally sorted by the cluster
-                # columns (encode_job's range-repartition + sort pre-
-                # pass), so a stable per-unit re-sort on the same keys
-                # preserves that order inside every unit slice, and
-                # concatenated slices of one unit across batches stay
-                # sorted.  pyarrow sort_indices handles every zone-map
-                # type (timestamps, decimals, strings) and puts nulls
-                # last, which RLE then picks up as one run.
-                sort_tbl = pa.table(
-                    {"__unit__": pa.array(units)}
-                    | {c: batch.column(c) for c in cluster_cols}
-                )
-                order = pa.compute.sort_indices(
-                    sort_tbl,
-                    sort_keys=[("__unit__", "ascending")]
-                    + [(c, "ascending") for c in cluster_cols],
-                ).to_numpy()
+                order = _cluster_order(units, batch, cluster_cols)
             else:
                 order = np.lexsort((keys, units))
             batch = batch.take(pa.array(order))
@@ -1021,7 +1193,7 @@ def _encode_stream(
         stats["peak_buffer_bytes"] = peak_bytes
         stats["flush_waves"] = waves
     if rows["unit"]:
-        yield pa.RecordBatch.from_pydict(rows)
+        yield pa.RecordBatch.from_pydict(rows, schema=FRAG_PA_SCHEMA)
 
 
 def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
@@ -1090,7 +1262,7 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
         )
 
     frags = df.mapInArrow(map_encode, FRAG_SCHEMA)
-    return _finish_encode(spark, frags, plan, done, cfg)
+    return _finish_encode(frags, plan, done, cfg)
 
 
 def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: int = 65536) -> dict:
@@ -1193,75 +1365,41 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
     else:
         work = spark.range(n_map, numPartitions=n_map)
     frags = work.mapInArrow(map_encode_files, FRAG_SCHEMA)
-    return _finish_encode(spark, frags, plan, done, cfg)
+    return _finish_encode(frags, plan, done, cfg)
 
 
-def _finish_encode(spark, frags, plan: EncodePlan, done: np.ndarray, cfg: EncodeJobConfig) -> dict:
-    """Shared tail of the encode job: append MANIFEST rows (tagged with
-    this run's id) — a NARROW stage, and the encoded bytes themselves were
-    already written to payload files by the map tasks, so the JVM never
-    touches them — then derive per-unit lineage from the committed
-    manifest and aggregate metrics.  See the module docstring for why this
-    is crash-safe without unit consolidation."""
-    from pyspark.sql import functions as F
+def _finish_encode(frags, plan: EncodePlan, done: np.ndarray, cfg: EncodeJobConfig) -> dict:
+    """Shared tail of the encode job: ONE Spark action runs the encode
+    stage and brings its MANIFEST rows to the driver as Arrow — the
+    encoded bytes themselves were already written to payload files by
+    the map tasks, so the JVM never touches them — then
+    :func:`commit_fragments` writes the manifest and lineage files, and
+    the returned totals come from a pyarrow read of lineage.  See the
+    module docstring for why this is crash-safe without unit
+    consolidation."""
+    import pyarrow.compute as pc
 
-    n_units = plan.n_units
-    data_dir = manifest_dir(cfg.output_dir)
     t_stage = time.perf_counter()
-    (
-        frags.withColumn("run_id", F.lit(cfg.run_id))
-        .write.mode("append")
-        .parquet(data_dir)
+    commit_id, t_manifest = commit_fragments(
+        frags.toArrow(), cfg.output_dir, manifest_dir(cfg.output_dir), cfg.run_id, cfg.batch_tag
     )
-    stage_wall = time.perf_counter() - t_stage
+    # wall of the read→assign→encode action plus the manifest file
+    # (excludes planning and the lineage commit, which are O(1) driver work)
+    stage_wall = t_manifest - t_stage
 
-    # per-unit lineage from the COMMITTED manifest, this run's rows only;
-    # `native` (codec provenance — C fast path vs NumPy fallback per
-    # worker) aggregates as min(): False if ANY fragment fell back, so a
-    # heterogeneous cluster's mixed-path units are attributable.  Guarded:
-    # manifest dirs predating the column read back without it.
-    sink = spark.read.parquet(data_dir).drop("first_key")
-    aggs = [
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
-        F.sum("wall_ms").alias("wall_ms"),
-        F.count("*").alias("n_fragments"),
-        F.first("codecs").alias("codecs"),
-    ]
-    if "native" in sink.columns:
-        aggs.append(F.min("native").alias("native"))
-    new_units = sink.where(F.col("run_id") == cfg.run_id).groupBy("unit").agg(*aggs)
-    lineage = (
-        new_units.withColumn("run_id", F.lit(cfg.run_id))
-        .withColumn("status", F.lit("ok"))
-        .withColumn("batch_tag", F.lit(cfg.batch_tag))
-        .withColumn("committed_at", F.current_timestamp())
-    )
-    lineage.write.mode("append").parquet(os.path.join(cfg.output_dir, "lineage"))
-
-    agg = (
-        spark.read.parquet(os.path.join(cfg.output_dir, "lineage"))
-        .where("status = 'ok'")
-        .agg(
-            F.countDistinct("unit").alias("units"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-        )
-        .collect()[0]
+    lin = _ok_lineage(cfg.output_dir, ["unit", "n_rows", "bytes_in", "bytes_out"])
+    rows, bytes_in, bytes_out = (
+        int(pc.sum(lin.column(c)).as_py() or 0) for c in ("n_rows", "bytes_in", "bytes_out")
     )
     return {
-        "run_id": cfg.run_id,
-        "plan_units": n_units,
+        "run_id": commit_id,
+        "plan_units": plan.n_units,
         "resumed_units": int(done.size),
-        "encoded_units": int(agg.units),
-        "rows": int(agg.rows or 0),
-        "bytes_in": int(agg.bytes_in or 0),
-        "bytes_out": int(agg.bytes_out or 0),
-        "ratio": (int(agg.bytes_out or 0) / int(agg.bytes_in)) if agg.bytes_in else None,
-        # wall of the read→assign→encode→sink action alone (excludes
-        # planning and lineage bookkeeping, which are O(1) driver work)
+        "encoded_units": pc.count_distinct(lin.column("unit")).as_py(),
+        "rows": rows,
+        "bytes_in": bytes_in,
+        "bytes_out": bytes_out,
+        "ratio": bytes_out / bytes_in if bytes_in else None,
         "encode_stage_sec": round(stage_wall, 3),
     }
 
@@ -2113,43 +2251,6 @@ def _timestamps_to_us(tbl: pa.Table) -> pa.Table:
     ]
     target = pa.schema(fields)
     return tbl.cast(target) if target != tbl.schema else tbl
-
-
-def _ddl_type(t: pa.DataType) -> str:
-    if pa.types.is_large_string(t) or pa.types.is_string(t):
-        return "string"
-    if pa.types.is_large_binary(t) or pa.types.is_binary(t):
-        return "binary"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_int64(t):
-        return "long"
-    if pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    if pa.types.is_date32(t):
-        return "date"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
-        return f"array<{_ddl_type(t.value_type)}>"
-    raise TypeError(f"unsupported type {t}")
-
-
-def _arrow_to_ddl(schema: pa.Schema, columns: list[str] | None) -> str:
-    def q(name: str) -> str:
-        # backtick-quote so dotted names parse as one identifier
-        return "`" + name.replace("`", "``") + "`"
-
-    if columns:
-        # requested order — must match deserialize_chunk's pruned order
-        return ", ".join(f"{q(c)} {_ddl_type(schema.field(c).type)}" for c in columns)
-    return ", ".join(f"{q(f.name)} {_ddl_type(f.type)}" for f in schema)
 
 
 def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:

@@ -45,7 +45,8 @@ What Catalyst's v2 pushdown buys here, mechanically:
   (:func:`..encode.pipeline._encode_stream` — codec auto-selection,
   bounded buffering, payload files written straight to storage) and
   return their manifest rows as the task's ``WriterCommitMessage``; only
-  the driver's ``commit()`` appends manifest + lineage.  A failed or
+  the driver's ``commit()`` appends manifest + lineage, through the same
+  :func:`..encode.pipeline.commit_fragments` the encode jobs use.  A failed or
   speculative task leaves at most an uncommitted payload file — dead
   bytes that ``vacuum`` sweeps — so the sink inherits the engine's
   exactly-once-at-job-granularity story through Spark's OWN commit
@@ -101,20 +102,27 @@ from pyspark.sql.datasource import (
 
 from ..encode.container import deserialize_chunk
 from ..encode.pipeline import (
+    FRAG_PA_SCHEMA,
+    MANIFEST_PA_SCHEMA,
     _arrow_to_ddl,
     _ddl_type,
     _encode_stream,
     _load_plan,
     _normalize_batch,
+    _ok_lineage,
     _open_payload,
     _pad_table,
     _payload_fs,
+    _read_meta_table,
     _union_probe_schema,
+    commit_fragments,
+    completed_batch_tags,
     date_value_days,
     key_range_from_terms,
     manifest_dir,
     next_manifest_name as _next_manifest_name,
     set_manifest_dir,
+    split_columns,
     ts_value_us,
 )
 from ..plans.partitioning import EncodePlan, units_for_key_range
@@ -136,20 +144,6 @@ def register(spark, enable_filter_pushdown: bool = True) -> None:
 # ---------------------------------------------------------------------------
 # driver/planning-side metadata access (pyarrow only — no SparkSession)
 # ---------------------------------------------------------------------------
-
-
-def _read_meta_table(path: str, columns: list[str]) -> pa.Table | None:
-    """A Spark-written parquet directory as one Arrow table (``_SUCCESS``
-    markers ignored by pyarrow.dataset's default ``ignore_prefixes``);
-    None when the directory doesn't exist yet."""
-    import pyarrow.dataset as pads
-
-    try:
-        dset = pads.dataset(path, format="parquet")
-    except (FileNotFoundError, OSError):
-        return None
-    names = [c for c in columns if c in dset.schema.names]
-    return dset.to_table(columns=names)
 
 
 def _meta_state_token(output_dir: str) -> tuple | None:
@@ -192,33 +186,13 @@ def _committed_manifest(output_dir: str) -> pa.Table:
         hit = _MANIFEST_CACHE.get(output_dir)
         if hit is not None and hit[0] == token:
             return hit[1]
-    man = _read_meta_table(
-        manifest_dir(output_dir),
-        ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "stats", "codecs"],
-    )
-    lin = _read_meta_table(os.path.join(output_dir, "lineage"), ["unit", "run_id", "status"])
-    if man is None or lin is None or man.num_rows == 0:
-        out = pa.table(
-            {
-                "unit": pa.array([], pa.int64()),
-                "run_id": pa.array([], pa.string()),
-                "file": pa.array([], pa.string()),
-                "offset": pa.array([], pa.int64()),
-                "length": pa.array([], pa.int64()),
-                "row_off": pa.array([], pa.int64()),
-                "n_rows": pa.array([], pa.int64()),
-                "stats": pa.array([], pa.string()),
-            }
-        )
+    cols = ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "stats", "codecs"]
+    man = _read_meta_table(manifest_dir(output_dir), cols)
+    ok = _ok_lineage(output_dir, ["unit", "run_id"])
+    if man is None or ok is None or man.num_rows == 0:
+        out = MANIFEST_PA_SCHEMA.empty_table().select(cols)
     else:
-        import pyarrow.compute as pc
-
-        ok = (
-            lin.filter(pc.equal(lin.column("status"), "ok"))
-            .select(["unit", "run_id"])
-            .group_by(["unit", "run_id"])
-            .aggregate([])  # distinct — join keys must be unique
-        )
+        ok = ok.group_by(["unit", "run_id"]).aggregate([])  # distinct — join keys must be unique
         out = man.join(ok, keys=["unit", "run_id"], join_type="left semi")
     if token is not None:
         # re-validate: a write racing this load invalidates via mtime
@@ -689,9 +663,9 @@ def _current_generation(path: str) -> str:
 def _committed_run_order(path: str) -> list[tuple[int, str]]:
     """Committed runs as a TOTAL ORDER ``(committed_at_µs, run_id)`` —
     the stream's cursor space.  ``committed_at`` is stamped once per
-    commit (``F.current_timestamp()`` is query-constant; the DataSource
-    sink stamps one ``datetime.now`` per commit), so a run collapses to
-    one cursor point; ``run_id`` (uuid hex) breaks µs ties
+    commit (``commit_fragments`` stamps one ``datetime.now``;
+    compaction's ``F.current_timestamp()`` is query-constant), so a run
+    collapses to one cursor point; ``run_id`` (uuid hex) breaks µs ties
     deterministically.  Runs predating the ``committed_at`` column sort
     at epoch 0 — an old dataset replays entirely in the first batch,
     ordered by run id, which is the only order its metadata can
@@ -854,62 +828,6 @@ class _EncodedStreamReader(DataSourceStreamReader):
 # ---------------------------------------------------------------------------
 
 
-_MANIFEST_PA_SCHEMA = pa.schema(
-    [
-        ("unit", pa.int64()),
-        ("first_key", pa.string()),
-        ("n_rows", pa.int64()),
-        ("row_off", pa.int64()),
-        ("bytes_in", pa.int64()),
-        ("bytes_out", pa.int64()),
-        ("wall_ms", pa.float64()),
-        ("codecs", pa.string()),
-        ("file", pa.string()),
-        ("offset", pa.int64()),
-        ("length", pa.int64()),
-        ("stats", pa.string()),
-        ("native", pa.bool_()),
-        ("run_id", pa.string()),
-    ]
-)
-
-_LINEAGE_PA_SCHEMA = pa.schema(
-    [
-        ("unit", pa.int64()),
-        ("n_rows", pa.int64()),
-        ("bytes_in", pa.int64()),
-        ("bytes_out", pa.int64()),
-        ("wall_ms", pa.float64()),
-        ("n_fragments", pa.int64()),
-        ("codecs", pa.string()),
-        ("run_id", pa.string()),
-        ("status", pa.string()),
-        ("batch_tag", pa.string()),
-        ("committed_at", pa.timestamp("us", "UTC")),
-        ("native", pa.bool_()),
-    ]
-)
-
-
-def _write_parquet_file(dir_path: str, name: str, tbl: pa.Table) -> None:
-    """One parquet file into a metadata directory, atomically (temp name
-    prefixed ``.`` — invisible to Spark/pyarrow listings — then rename)."""
-    import pyarrow.parquet as pq
-
-    fs, root = _payload_fs(dir_path)
-    if fs is None:
-        os.makedirs(root, exist_ok=True)
-        tmp = os.path.join(root, f".tmp-{name}")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(root, name))
-    else:
-        fs.create_dir(root, recursive=True)
-        tmp = f"{root}/.tmp-{name}"
-        with fs.open_output_stream(tmp) as out:
-            pq.write_table(tbl, out)
-        fs.move(tmp, f"{root}/{name}")
-
-
 class _FragMessage(WriterCommitMessage):
     """One task's manifest rows (fragment bookkeeping, ~100 B/row — the
     payload bytes themselves went straight to storage)."""
@@ -979,8 +897,7 @@ class _EncodedWriterBase:
         # unit slice instead of re-sorting by key — chunk zone maps on
         # the cluster columns stay narrow either way (they follow the
         # flush wave), this preserves the RLE/FOR run structure too.
-        cb = options.get("cluster_by", "")
-        self.cluster_cols = tuple(c for c in cb.split(",") if c)
+        self.cluster_cols = split_columns(options.get("cluster_by", ""))
         missing = [c for c in self.cluster_cols if c not in schema_names]
         if missing:
             raise ValueError(f"cluster_by columns not in the written schema: {missing}")
@@ -1005,48 +922,13 @@ class _EncodedWriterBase:
 
     # -- commit side (Spark's Python planning worker: pyarrow only) -----
     def _commit_rows(self, rows: list[dict], data_dir: str, run_id: str, batch_tag: str = "") -> None:
-        """The engine's two-step commit, from pre-collected manifest rows:
-        append ONE manifest parquet file (tagged with this commit's run
-        id), then the lineage file that makes its rows visible — derived
-        here from the same in-hand rows (``_finish_encode`` re-reads the
-        manifest because its rows never leave the cluster; a commit
-        message's rows are already local).  Spark's commit hook runs in
-        the Python planning worker where no SparkSession exists, so both
-        files are written with pyarrow — plain int64/double/utf8/µs-UTC
-        columns that Spark reads interchangeably with its own files —
-        via the temp-write + rename idiom (a concurrent reader never
-        sees a torn footer)."""
-        from datetime import datetime, timezone
-
-        tagged = [{**r, "run_id": run_id} for r in rows]
-        man_tbl = pa.Table.from_pylist(tagged, schema=_MANIFEST_PA_SCHEMA)
-        _write_parquet_file(data_dir, f"part-ds-{run_id}-manifest.parquet", man_tbl)
-
-        per_unit: dict[int, dict] = {}
-        for r in rows:
-            u = per_unit.setdefault(
-                r["unit"],
-                {"unit": r["unit"], "n_rows": 0, "bytes_in": 0, "bytes_out": 0,
-                 "wall_ms": 0.0, "n_fragments": 0, "codecs": r["codecs"],
-                 "native": True},
-            )
-            u["n_rows"] += r["n_rows"]
-            u["bytes_in"] += r["bytes_in"]
-            u["bytes_out"] += r["bytes_out"]
-            u["wall_ms"] += r["wall_ms"]
-            u["n_fragments"] += 1
-            # provenance: min() semantics — False if ANY fragment of the
-            # unit came off the pure-NumPy fallback path
-            u["native"] = u["native"] and bool(r.get("native", False))
-        now = datetime.now(timezone.utc)
-        lin_rows = [
-            {**u, "run_id": run_id, "status": "ok", "batch_tag": batch_tag, "committed_at": now}
-            for u in per_unit.values()
-        ]
-        lin_tbl = pa.Table.from_pylist(lin_rows, schema=_LINEAGE_PA_SCHEMA)
-        _write_parquet_file(
-            os.path.join(self.path, "lineage"), f"part-ds-{run_id}-lineage.parquet", lin_tbl
-        )
+        """Commit the tasks' manifest rows through the engine's shared
+        :func:`..encode.pipeline.commit_fragments` — the same manifest
+        file + lineage file every encode job writes.  Spark's commit hook
+        runs in the Python planning worker where no SparkSession exists;
+        the commit needs none (pyarrow files, temp-write + rename)."""
+        frags = pa.Table.from_pylist(rows, schema=FRAG_PA_SCHEMA)
+        commit_fragments(frags, self.path, data_dir, run_id, batch_tag)
 
     def _drop_payload(self, messages) -> None:
         """Best-effort removal of aborted/duplicate tasks' payload files;
@@ -1128,19 +1010,9 @@ class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
     def _tag(self, batch_id: int) -> str:
         return f"ds_epoch_{self._query_token}_{batch_id}"
 
-    def _committed_tags(self) -> set[str]:
-        lin = _read_meta_table(os.path.join(self.path, "lineage"), ["batch_tag", "status"])
-        if lin is None:
-            return set()
-        return {
-            t
-            for t, s in zip(lin.column("batch_tag").to_pylist(), lin.column("status").to_pylist())
-            if t and s == "ok"
-        }
-
     def commit(self, messages, batchId: int):
         tag = self._tag(batchId)
-        if tag in self._committed_tags():
+        if tag in completed_batch_tags(None, self.path):
             # replayed epoch (sink committed, checkpoint didn't): the
             # rerun's payload files are duplicates — drop, don't commit
             self._drop_payload(messages)
