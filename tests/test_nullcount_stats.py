@@ -254,10 +254,10 @@ def test_datasource_null_pushdown_prunes(spark, outdir):
 
 
 def test_dotted_column_filters_never_misprune(spark, outdir):
-    """A dotted column name breaks get_json_object paths: the failed
-    _nc lookup must NOT read as all-null (which pruned every chunk and
-    returned 0 rows).  Manifest pruning is skipped for such columns;
-    the exact residual still applies."""
+    """A dotted column name must never read as a missing ``_nc`` entry
+    (an all-null verdict would prune every chunk and return 0 rows):
+    the planner looks names up in the parsed stats, and the exact
+    residual resolves the dotted name as one column."""
     from pyspark.sql import functions as F
 
     from universal_parquet_exporter_spark.encode.pipeline import load_or_build_plan

@@ -1,0 +1,318 @@
+"""The one scan planner (:mod:`universal_parquet_exporter_spark.encode.scan`):
+``decode_dataset`` plans on the driver and runs as one Spark job, the
+planner's manifest cache follows commits exactly, and both scan paths —
+``decode_dataset`` and the ``upe_encoded`` reader — plan the same chunks
+and return the rows a plain Spark filter of the source returns."""
+
+import dataclasses
+import json
+import os
+from datetime import date, datetime
+from decimal import Decimal
+
+import numpy as np
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
+    Not,
+    StringContains,
+    StringEndsWith,
+    StringStartsWith,
+)
+from test_commit import _spark_jobs
+
+from universal_parquet_exporter_spark.encode import scan
+from universal_parquet_exporter_spark.encode.pipeline import (
+    EncodeJobConfig,
+    _load_plan,
+    decode_dataset,
+    encode_job,
+    load_or_build_plan,
+    manifest_dir,
+)
+from universal_parquet_exporter_spark.fixtures import generate_webpages
+from universal_parquet_exporter_spark.plans.partitioning import units_for_key_range
+from universal_parquet_exporter_spark.sources import spark_datasource as sds
+
+# ---------------------------------------------------------------------------
+# one Spark job per decode, evidence from the planner's masks
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def pages(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("scan_pages") / "enc")
+    df = generate_webpages(spark, 3000, partitions=4).cache()
+    encode_job(
+        spark, df, EncodeJobConfig(output_dir=out, target_unit_bytes=256 << 10, chunk_rows=256)
+    )
+    yield df, out
+    df.unpersist()
+
+
+def test_decode_dataset_runs_one_spark_job(spark, pages):
+    """Full, filtered and evidence-carrying decodes each run exactly one
+    Spark job: planning, pruning and the evidence counts read metadata
+    with pyarrow on the driver."""
+    df, out = pages
+    urls = sorted(r.url for r in df.select("url").collect())
+    lo, hi = urls[len(urls) // 4], urls[len(urls) // 2]
+    terms = [("url", ">=", lo), ("url", "<", hi)]
+    got: dict = {}
+
+    def run(name, **kw):
+        got[name] = decode_dataset(spark, out, **kw).toArrow()
+
+    assert _spark_jobs(spark, lambda: run("full")) == 1
+    assert _spark_jobs(spark, lambda: run("filtered", filters=terms)) == 1
+    ev: dict = {}
+    assert _spark_jobs(spark, lambda: run("evidence", filters=terms, pruning_evidence=ev)) == 1
+
+    assert got["full"].num_rows == 3000
+    want = df.where((F.col("url") >= lo) & (F.col("url") < hi)).count()
+    assert got["filtered"].num_rows == got["evidence"].num_rows == want > 0
+
+    # unit counts: the plan's units, and those the key range can reach
+    plan = _load_plan(out)
+    units = set(units_for_key_range(plan, lo, hi))
+    assert ev["units_total"] == sum(plan.salts) > ev["units_qualifying"] == len(units)
+    # slice counts: manifest rows of those units, before and after the
+    # url zone maps drop the chunks that can't hold [lo, hi)
+    rows = [r for r in pq.read_table(manifest_dir(out)).to_pylist() if r["unit"] in units]
+
+    def chunk_may_match(stats):
+        mn, mx = json.loads(stats)["url"]
+        return (mx is None or mx >= lo) and mn < hi
+
+    assert ev["total"] == len(rows)
+    assert ev["qualifying"] == sum(chunk_may_match(r["stats"]) for r in rows) > 0
+
+
+def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tmp_path):
+    """The planner's manifest cache is keyed on the committed file names
+    and the manifest pointer, not on directory mtimes: a commit whose
+    directories carry their old mtimes (a coarse-clock or restored
+    timestamp) is still visible to the next plan."""
+    out = str(tmp_path / "fresh")
+    df = generate_webpages(spark, 1000, partitions=2)
+    halves = [df.where(F.crc32("url") % 2 == i) for i in (0, 1)]
+    n_first = halves[0].count()
+    cfg = EncodeJobConfig(output_dir=out, target_unit_bytes=1 << 20, chunk_rows=256)
+    encode_job(spark, halves[0], cfg)
+    assert decode_dataset(spark, out).toArrow().num_rows == n_first
+    assert sds._committed_manifest(out).num_rows > 0
+
+    dirs = [manifest_dir(out), os.path.join(out, "lineage")]
+    before = {d: os.stat(d) for d in dirs}
+    encode_job(spark, halves[1], dataclasses.replace(cfg, skip_completed=False))
+    for d, st in before.items():
+        os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
+
+    assert sds._committed_manifest(out).num_rows == pq.read_table(manifest_dir(out)).num_rows
+    assert decode_dataset(spark, out).toArrow().num_rows == 1000
+
+
+# ---------------------------------------------------------------------------
+# differential: decode_dataset vs the upe_encoded reader vs a Spark filter
+# ---------------------------------------------------------------------------
+
+_CATALYST = {
+    "<": LessThan,
+    "<=": LessThanOrEqual,
+    ">": GreaterThan,
+    ">=": GreaterThanOrEqual,
+    "=": EqualTo,
+    "==": EqualTo,
+    "in": In,
+    "startswith": StringStartsWith,
+    "endswith": StringEndsWith,
+    "contains": StringContains,
+}
+
+
+def _catalyst(c, op, v):
+    """The filter Catalyst pushes to the reader for one term."""
+    a = (c,)
+    if op in ("!=", "<>"):
+        return Not(EqualTo(a, v))
+    if op == "not_in":
+        return Not(In(a, tuple(v)))
+    if op == "is_null":
+        return IsNull(a)
+    if op == "not_null":
+        return IsNotNull(a)
+    return _CATALYST[op](a, tuple(v) if op == "in" else v)
+
+
+def _column(c, op, v):
+    col = F.col("`" + c + "`")
+    if op in ("in", "not_in"):
+        e = col.isin(*v)
+        return ~e if op == "not_in" else e
+    return {
+        "<": lambda: col < v,
+        "<=": lambda: col <= v,
+        ">": lambda: col > v,
+        ">=": lambda: col >= v,
+        "=": lambda: col == v,
+        "==": lambda: col == v,
+        "!=": lambda: col != v,
+        "<>": lambda: col != v,
+        "is_null": col.isNull,
+        "not_null": col.isNotNull,
+        "startswith": lambda: col.startswith(v),
+        "endswith": lambda: col.endswith(v),
+        "contains": lambda: col.contains(v),
+    }[op]()
+
+
+def _condition(groups):
+    cond = None
+    for g in groups:
+        gc = None
+        for t in g:
+            gc = _column(*t) if gc is None else gc & _column(*t)
+        cond = gc if cond is None else cond | gc
+    return cond
+
+
+def _typed_source(spark, n=600):
+    """Clustered zero-padded keys beside decimal(38), timestamp and date
+    columns, a categorical with a dotted name and a null-heavy column
+    (a populated head, an all-null middle, a sparse tail)."""
+    return spark.range(n).select(
+        F.lpad(F.col("id").cast("string"), 6, "0").alias("k"),
+        F.timestamp_micros(F.lit(1704067200000000) + F.col("id") * 3600_000_000).alias("ts"),
+        F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).alias("d"),
+        (F.col("id").cast("decimal(38,4)") * Decimal("1.2500")).cast("decimal(38,4)").alias("price"),
+        F.element_at(
+            F.array(*[F.lit(x) for x in ("ar", "de", "en", "fr", "zh")]),
+            (F.col("id") % 5 + 1).cast("int"),
+        ).alias("meta.lang"),
+        F.when(
+            (F.col("id") < 150) | ((F.col("id") >= 450) & (F.col("id") % 5 == 0)),
+            F.concat(F.lit("o"), F.col("id").cast("string")),
+        ).alias("opt"),
+        F.concat(F.lit("payload-"), F.col("id").cast("string")).alias("text"),
+    )
+
+
+def _filters(rows, rng):
+    """One seeded filter per supported op, plus two DNF filters."""
+    pick = lambda: rows[int(rng.integers(0, len(rows)))]  # noqa: E731
+    keys = [pick()["k"] for _ in range(3)]
+    single = [  # each a conjunction of one term
+        [("ts", "<", pick()["ts"])],
+        [("d", "<=", pick()["d"])],
+        [("price", ">", pick()["price"])],
+        [("k", ">=", pick()["k"])],
+        [("meta.lang", "=", pick()["meta.lang"])],
+        [("price", "==", pick()["price"])],
+        [("meta.lang", "!=", pick()["meta.lang"])],
+        [("opt", "<>", "o7")],
+        [("k", "in", keys + ["zz-absent"])],
+        [("meta.lang", "not_in", ["de", pick()["meta.lang"]])],
+        [("opt", "is_null", None)],
+        [("opt", "not_null", None)],
+        [("k", "startswith", pick()["k"][:5])],
+        [("meta.lang", "endswith", pick()["meta.lang"][-1:])],
+        [("text", "contains", "-" + pick()["k"][-2:])],
+    ]
+    dnf = [
+        [[("k", "<", pick()["k"])], [("meta.lang", "=", "fr"), ("ts", ">=", pick()["ts"])]],
+        [[("opt", "is_null", None), ("price", "<", pick()["price"])], [("d", ">", pick()["d"])]],
+    ]
+    return single, dnf
+
+
+def _planned_chunks(parts):
+    return sorted((f, off) for p in parts for f, off, _ln, _sl in p.chunks)
+
+
+_COLS = ["k", "ts", "d", "price", "meta.lang", "opt", "text"]
+
+
+def _sorted_rows(tbl):
+    return sorted(tuple(r.values()) for r in tbl.select(_COLS).to_pylist())
+
+
+def test_both_scan_paths_match_a_spark_filter_of_the_source(spark, tmp_path, monkeypatch):
+    sds.register(spark)
+    out = str(tmp_path / "diff")
+    src = _typed_source(spark)
+    load_or_build_plan(
+        src, EncodeJobConfig(output_dir=out, key_col="k", size_cols=("text",), target_unit_bytes=8 << 10)
+    )
+    # the upe_encoded sink takes the dotted name the DataFrame encode rejects
+    src.write.format("upe_encoded").option("key_col", "k").option("chunk_rows", "64").mode(
+        "append"
+    ).save(out)
+    rows = src.collect()
+    single, dnf = _filters([r.asDict() for r in rows], np.random.default_rng(20261017))
+    assert {f[0][1] for f in single} == set(
+        ("<", "<=", ">", ">=", "=", "==", "!=", "<>", "in", "not_in", "is_null",
+         "not_null", "startswith", "endswith", "contains")
+    )
+
+    planned: list = []
+    real_plan = scan.plan_partitions
+
+    def recording_plan(*a, **kw):
+        parts = real_plan(*a, **kw)
+        planned.append(_planned_chunks(parts))
+        return parts
+
+    monkeypatch.setattr(scan, "plan_partitions", recording_plan)
+    reader_df = spark.read.format("upe_encoded").load(out)
+    all_chunks = _planned_chunks(sds._EncodedPushdownReader({"path": out}).partitions())
+    pruned = 0
+    for filters in single + dnf:
+        groups = filters if isinstance(filters[0], list) else [filters]
+        cond = _condition(groups)
+        want = _sorted_rows(src.where(cond).toArrow())
+        assert _sorted_rows(decode_dataset(spark, out, filters=filters).toArrow()) == want, filters
+        assert _sorted_rows(reader_df.where(cond).toArrow()) == want, filters
+
+        reader = sds._EncodedPushdownReader({"path": out})
+        if len(groups) == 1:
+            reader.pushFilters([_catalyst(*t) for t in groups[0]])
+        # Catalyst pushes no disjunction to a Python source: the reader
+        # plans every chunk for a DNF filter, a superset of the decode's
+        reader_chunks = _planned_chunks(reader.partitions())
+        if len(groups) == 1:
+            assert planned[-1] == reader_chunks, filters
+        else:
+            assert set(planned[-1]) <= set(reader_chunks) == set(all_chunks), filters
+        pruned += len(planned[-1]) < len(all_chunks)
+    # the filters exercise pruning, not only the residual
+    assert pruned >= len(single) // 2
+
+
+def test_normalized_terms_drop_what_cannot_prune():
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [("ts", pa.timestamp("us")), ("d", pa.date32()), ("x", pa.float64()), ("p", pa.decimal128(38, 4))]
+    )
+    got = scan._normalize_terms(
+        [
+            ("ts", "in", ["2024-01-01"]),  # strings don't convert to epoch-µs
+            ("d", "=", datetime(2024, 1, 1)),  # a datetime is not a date bound
+            ("x", "<", float("nan")),  # NaN has no place in the bounds' order
+            ("absent", "=", 1),
+            ("p", "==", 1.5),
+            ("x", "<>", 2.0),
+            ("d", ">=", date(2024, 1, 2)),
+        ],
+        schema,
+    )
+    assert got == [("p", "=", Decimal("1.5")), ("x", "!=", 2.0), ("d", ">=", 19724)]

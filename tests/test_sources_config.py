@@ -85,6 +85,29 @@ def test_read_jdbc_rejects_bad_args():
         read_jdbc(_FakeSpark(), "jdbc:mysql://h/d", table="t", partition_column="id")
 
 
+def test_read_jdbc_rejects_query_with_partition_column_up_front():
+    """Spark's JDBC source refuses ``query`` with ``partitionColumn`` only
+    when the read runs; the shim must refuse it before touching the
+    reader (no option set, nothing loaded)."""
+    spark = _FakeSpark()
+    with pytest.raises(ValueError, match="query= cannot be combined with partition_column="):
+        read_jdbc(
+            spark,
+            "jdbc:mysql://h/d",
+            query="SELECT id FROM t",
+            partition_column="id",
+            lower_bound=0,
+            upper_bound=100,
+            num_partitions=4,
+        )
+    assert spark.read.fmt is None and spark.read.opts == {} and not spark.read.loaded
+    # the bounds check also fires before any option is set
+    spark = _FakeSpark()
+    with pytest.raises(ValueError, match="requires"):
+        read_jdbc(spark, "jdbc:mysql://h/d", table="t", partition_column="id")
+    assert spark.read.opts == {}
+
+
 def test_encode_config_from_environment(monkeypatch):
     monkeypatch.setenv("UPES_ENCODE_OUTPUT_DIR", "/data/out")
     monkeypatch.setenv("UPES_ENCODE_KEY_COL", "page_url")

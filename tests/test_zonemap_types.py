@@ -19,14 +19,12 @@ import pytest
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     _chunk_stats,
-    _units_condition,
     completed_units,
     date_value_days,
     decode_dataset,
     encode_job,
     manifest_dir,
     ts_value_us,
-    unit_id_ranges,
 )
 
 
@@ -157,29 +155,8 @@ def test_date_and_decimal_filters_exact(spark, outdir):
 
 
 # ---------------------------------------------------------------------------
-# scale-safe unit pruning: O(ranges) literals, identical bytes
+# key-range unit pruning
 # ---------------------------------------------------------------------------
-
-
-def test_unit_id_ranges_collapse():
-    assert unit_id_ranges([]) == []
-    assert unit_id_ranges([7]) == [(7, 7)]
-    assert unit_id_ranges([3, 4, 5, 9, 10, 12]) == [(3, 5), (9, 10), (12, 12)]
-    # unsorted + duplicated input collapses the same way
-    assert unit_id_ranges([5, 3, 4, 4, 12, 10, 9]) == [(3, 5), (9, 10), (12, 12)]
-    # the common case — units_for_key_range returns one contiguous span
-    assert unit_id_ranges(range(100, 1100)) == [(100, 1099)]
-
-
-def test_units_condition_is_o_ranges_not_o_units(spark):
-    # a contiguous million-unit span must compile to ONE BETWEEN, not a
-    # million-literal isin (the 100 TB metadata-plane fix)
-    cond = _units_condition(range(1_000_000))
-    s = str(cond)
-    assert s.count("1000000") <= 1 and len(s) < 200
-    df = spark.range(5).selectExpr("id as unit")
-    assert df.where(_units_condition([1, 2, 4])).count() == 3
-    assert df.where(_units_condition([])).count() == 0
 
 
 def test_key_range_decode_unchanged_by_range_predicate(spark, outdir):
@@ -645,10 +622,13 @@ def test_dnf_cross_column_or_is_exact(spark, outdir):
 
 
 def test_dnf_unprunable_group_disables_pruning_but_stays_exact(spark, outdir):
-    """A group whose only term can't use manifest stats (dotted column
-    name breaks the JSON path) keeps every chunk — the whole disjunction
-    must then prune nothing (conservative), while the exact residual
-    still applies the full OR-of-AND predicate."""
+    """A group whose only term no evaluator can prune keeps every chunk —
+    ``contains`` on the high-cardinality ``text`` column, which records
+    no distinct-value set and has no order relation to its bounds.  The
+    whole disjunction must then prune nothing (conservative), while the
+    exact residual still applies the full OR-of-AND predicate.  A dotted
+    column name is an ordinary prunable column: the planner reads the
+    zone maps as parsed JSON, so no path syntax can misread the name."""
     from pyspark.sql import functions as F
 
     from universal_parquet_exporter_spark.encode.pipeline import load_or_build_plan
@@ -666,21 +646,37 @@ def test_dnf_unprunable_group_disables_pruning_but_stays_exact(spark, outdir):
         ),
     )
     df.write.format("upe_encoded").option("key_col", "k").mode("append").save(outdir)
+
     ev: dict = {}
-    p = Decimal("700.00")
     dec = decode_dataset(
         spark,
         outdir,
-        filters=[[("k", "<", "000100")], [("pr.ice", ">", p)]],
+        filters=[[("k", "<", "000100")], [("text", "contains", "-55")]],
         pruning_evidence=ev,
     )
     got = sorted(r.k for r in dec.collect())
     exp = sorted(
         r.k
-        for r in df.where((F.col("k") < "000100") | (F.col("`pr.ice`") > p)).collect()
+        for r in df.where((F.col("k") < "000100") | F.col("text").contains("-55")).collect()
     )
     assert got == exp and len(got) > 0
     assert ev["qualifying"] == ev["total"]  # conservative: nothing pruned
+
+    p = Decimal("700.00")
+    ev2: dict = {}
+    dec2 = decode_dataset(
+        spark,
+        outdir,
+        filters=[[("k", "<", "000100")], [("pr.ice", ">", p)]],
+        pruning_evidence=ev2,
+    )
+    got2 = sorted(r.k for r in dec2.collect())
+    exp2 = sorted(
+        r.k
+        for r in df.where((F.col("k") < "000100") | (F.col("`pr.ice`") > p)).collect()
+    )
+    assert got2 == exp2 and len(got2) > 0
+    assert ev2["qualifying"] < ev2["total"], f"dotted-name group pruned nothing ({ev2})"
 
 
 def test_dnf_shape_validation(spark, outdir):

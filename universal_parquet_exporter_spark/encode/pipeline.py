@@ -1446,8 +1446,8 @@ def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
     bound needs prefix-successor arithmetic the unit pruner doesn't
     require), and a string IN-list contributes its [min, max].
     Non-string operands never contribute (the key domain is string).
-    Shared by the ``upe_encoded`` reader's pushFilters path and
-    :func:`decode_dataset`'s filter-driven unit pruning."""
+    Used by the scan planner's unit pruning (:mod:`.scan`), which both
+    :func:`decode_dataset` and the ``upe_encoded`` reader run."""
     lo = hi = None
     for col, op, v in terms:
         if col != key_col:
@@ -1470,108 +1470,12 @@ def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
     return lo, hi
 
 
-_JSON_PATH_SAFE = None  # compiled lazily (module import stays light)
-
-
 def _exact_col(name: str):
     """Column reference resolving the EXACT name — backtick-quoted so a
     dotted name ("meta.lang") is never parsed as a struct path."""
     from pyspark.sql import functions as F
 
     return F.col("`" + name.replace("`", "``") + "`")
-
-
-def _json_path_safe(name: str) -> bool:
-    """True when ``name`` survives a ``get_json_object`` path segment
-    verbatim (``$.<name>`` / ``$._nc.<name>``).  Dots, brackets,
-    quotes, or other punctuation would be parsed as path STRUCTURE — a
-    failed lookup must never be mistaken for recorded data."""
-    global _JSON_PATH_SAFE
-    if _JSON_PATH_SAFE is None:
-        import re
-
-        _JSON_PATH_SAFE = re.compile(r"^[A-Za-z0-9_]+$")
-    return bool(_JSON_PATH_SAFE.match(name))
-
-
-def _zone_bound_type(ftype: pa.DataType):
-    """(spark cast type, value converter) for comparing a filter value
-    against this column's recorded zone-map bounds: timestamps/dates
-    become exact epoch ints, decimals re-type both sides to the column's
-    own decimal (bounds are stored as exact strings — unscaled ints can
-    overflow int64 at precision 38), ints/floats cast so comparisons
-    stay in the right domain, strings compare lexicographically."""
-    if pa.types.is_integer(ftype):
-        return "long", lambda v: v
-    if pa.types.is_floating(ftype):
-        return "double", lambda v: v
-    if pa.types.is_timestamp(ftype):
-        return "long", ts_value_us
-    if pa.types.is_date(ftype):
-        return "long", date_value_days
-    if pa.types.is_decimal(ftype):
-        from decimal import Decimal
-
-        return f"decimal({ftype.precision},{ftype.scale})", lambda v: Decimal(str(v))
-    return None, lambda v: v
-
-
-def _dv_array_col(c: str, ftype: pa.DataType, cast_to: str | None):
-    """Spark Column parsing the stats ``_dv.<c>`` JSON array into the
-    column's zone-map domain for ``array_contains`` membership, or None
-    when this type records no distinct sets (floats).  Stored domains:
-    ints for integer/timestamp/date (parse as array<bigint>), exact
-    strings for decimal (parse as array<string>, transform-cast to the
-    column's own decimal so '1.50' == 1.5), raw strings otherwise."""
-    from pyspark.sql import functions as F
-
-    if pa.types.is_floating(ftype):
-        return None
-    if pa.types.is_decimal(ftype):
-        return F.expr(
-            f"transform(from_json(get_json_object(stats, '$._dv.{c}'), "
-            f"'array<string>'), x -> cast(x AS {cast_to}))"
-        )
-    if cast_to == "long":
-        return F.from_json(
-            F.get_json_object(F.col("stats"), f"$._dv.{c}"), "array<bigint>"
-        )
-    return F.from_json(
-        F.get_json_object(F.col("stats"), f"$._dv.{c}"), "array<string>"
-    )
-
-
-def unit_id_ranges(units) -> list[tuple[int, int]]:
-    """Collapse a unit-id list into inclusive contiguous ``(lo, hi)``
-    ranges.  :func:`..plans.partitioning.units_for_key_range` returns a
-    contiguous id span by construction (units are ordered by key range),
-    so this is almost always ONE range — the point is that the pruning
-    predicate stays O(ranges) literals, not O(units): at 10^12 docs /
-    64 MB units an ``isin`` over ~10^6 ids would be a multi-megabyte
-    expression tree Catalyst re-evaluates per manifest row."""
-    ranges: list[list[int]] = []
-    for u in sorted(set(int(x) for x in units)):
-        if ranges and u == ranges[-1][1] + 1:
-            ranges[-1][1] = u
-        else:
-            ranges.append([u, u])
-    return [(a, b) for a, b in ranges]
-
-
-def _units_condition(units):
-    """Manifest-row predicate for a unit-id set, as OR-of-BETWEEN over
-    the collapsed contiguous ranges (false literal for an empty set)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    ranges = unit_id_ranges(units)
-    if not ranges:
-        return F.lit(False)
-    return reduce(
-        lambda a, b: a | b,
-        [F.col("unit").between(lo, hi) for lo, hi in ranges],
-    )
 
 
 def _union_probe_schema(payload_dir: str, probes: list[tuple[str, int]]) -> pa.Schema:
@@ -1717,8 +1621,8 @@ def decode_dataset(
     an OR of AND-groups (``[[("lang", "=", "de")], [("lang", "=",
     "fr")]]``; the flat list stays one conjunction).  A chunk is
     pruned only when EVERY group's recorded stats disqualify it — a
-    group containing any unprunable term keeps all chunks,
-    conservatively disabling pruning for the whole disjunction — and
+    group with no prunable term keeps all chunks, conservatively
+    disabling pruning for the whole disjunction — and
     the exact OR-of-AND predicate is re-applied to decoded rows.  The
     out-of-range-key scan (``key < a OR key >= b``) and the
     multi-category scan are the intended shapes.
@@ -1727,29 +1631,33 @@ def decode_dataset(
     UNITS (each group's implied key range via
     :func:`key_range_from_terms`, unioned across the disjunction) —
     the same layer an explicit ``key_range`` drives, fired before any
-    chunk statistics are consulted; with ``pruning_evidence`` the
-    unit-level counts ship as ``units_total``/``units_qualifying``.
+    chunk statistics are consulted; a string IN-list on the key keeps
+    only the units of its listed points.
+
+    Execution: the scan is planned on the driver by the engine's one
+    scan planner (:mod:`.scan`, shared with the ``upe_encoded`` reader)
+    from metadata alone, and runs as ONE Spark job — the planned chunk
+    partitions are broadcast and decoded by one task each, then the
+    exact residual filter applies.  ``pruning_evidence`` (a dict) is
+    filled from the planner's own masks at no extra cost:
+    ``units_total``/``units_qualifying`` when every group bounds the
+    key, and ``total``/``qualifying`` — manifest slice rows before and
+    after zone-map pruning — whenever filters are given.
 
     Schema evolution (additive): appends may add or omit columns — the
     output schema is the union-by-name over all chunk generations
     (meta-only probes), and generations that predate a column read back
     as nulls; a column whose TYPE differs between generations raises a
     schema-conflict error rather than casting silently."""
-    from pyspark.sql import functions as F
+    from .scan import (
+        _committed_manifest,
+        _probe_chunk_schema,
+        _read_chunk_partition,
+        plan_partitions,
+    )
 
-    payload_dir = os.path.join(output_dir, "payload")
-    enc, has_stats = _committed_manifest_df(spark, output_dir)
-    # committed-but-unpruned view, captured BEFORE any key-range unit
-    # filter: the schema probe must (a) survive a range that prunes every
-    # unit (typed empty result) and (b) never land on an orphan manifest
-    # row — after vacuum(rewrite_manifest=False), the documented
-    # object-store mode, orphan rows outlive their deleted payload files
-    # and a raw-manifest probe would raise FileNotFoundError
-    enc_committed = enc
     key_col = None
     if key_range is not None:
-        from ..plans.partitioning import units_for_key_range
-
         plan = _load_plan(output_dir)
         if plan is None:
             raise ValueError(f"no plan.json under {output_dir} for key-range pruning")
@@ -1758,264 +1666,60 @@ def decode_dataset(
             raise ValueError(
                 f"key_range pruning needs the key column '{key_col}' in columns"
             )
-        units = units_for_key_range(plan, key_range[0], key_range[1])
-        enc = enc.where(_units_condition(units))
-
-    # filter-driven UNIT pruning: terms on the plan's key column imply a
-    # key range per DNF group; the union of each group's qualifying
-    # units is a conservative superset of where matches can live (the
-    # same algebra as the upe_encoded reader's pushFilters path),
-    # applied before any chunk statistics are consulted.  A group whose
-    # key terms leave both bounds open keeps every unit, disabling this
-    # layer for the whole disjunction; datasets without a plan skip it.
     fgroups = _filter_groups(filters) if filters else []
-    if fgroups:
-        fplan = _load_plan(output_dir)
-        if fplan is not None:
-            from ..plans.partitioning import units_for_key_range
 
-            funits: set | None = set()
-            for g in fgroups:
-                f_lo, f_hi = key_range_from_terms(g, fplan.key_col)
-                if f_lo is None and f_hi is None:
-                    funits = None
-                    break
-                funits.update(units_for_key_range(fplan, f_lo, f_hi))
-            if funits is not None:
-                if pruning_evidence is not None:
-                    pruning_evidence["units_total"] = int(sum(fplan.salts))
-                    pruning_evidence["units_qualifying"] = len(funits)
-                enc = enc.where(_units_condition(sorted(funits)))
-
-    # one meta-only probe per distinct column-name set (derived from the
-    # manifest's own codecs maps — no payload read), unioned by name:
-    # schema evolution means different chunk generations may carry
-    # different column sets, and a single-chunk probe would miss columns
-    probe_rows = _probe_rows(enc_committed)
-    if not probe_rows:
-        raise ValueError("empty encoded dataset")
-    probe = _union_probe_schema(payload_dir, [(r.file, r.offset) for r in probe_rows])
+    # the schema comes from the whole committed manifest, before any
+    # pruning: it must (a) survive a range that prunes every unit (typed
+    # empty result) and (b) never probe an orphan manifest row — after
+    # vacuum(rewrite_manifest=False), the documented object-store mode,
+    # orphan rows outlive their deleted payload files
+    man = _committed_manifest(output_dir)
+    probe = _probe_chunk_schema(output_dir, man)
     if columns:
         missing = [c for c in columns if c not in probe.names]
         if missing:
             raise ValueError(f"columns not in dataset: {missing}")
     out_schema = _arrow_to_ddl(probe, columns)
-    want_fields = [probe.field(c) for c in columns] if columns else list(probe)
 
-    if filters:
-        for c, op, _v in (t for g in fgroups for t in g):
-            if op not in _FILTER_OPS:
-                raise ValueError(f"unsupported filter op {op!r} (use one of {_FILTER_OPS})")
-            if op in ("in", "not_in") and not _v:
-                raise ValueError(f"empty {op.upper()}-list for filter column {c!r}")
-            if c not in probe.names:
-                raise ValueError(f"filter column {c!r} not in dataset schema")
-            if op in ("startswith", "endswith", "contains") and not (
-                isinstance(_v, str)
-                and (
-                    pa.types.is_string(probe.field(c).type)
-                    or pa.types.is_large_string(probe.field(c).type)
-                )
-            ):
-                raise ValueError(
-                    f"{op} needs a string value on a string column ({c!r})"
-                )
-            if columns is not None and c not in columns:
-                raise ValueError(f"filters need column {c!r} in columns (residual filter)")
-        if has_stats:
-            # zone-map chunk pruning: keep a chunk unless its recorded
-            # bounds PROVE the term can't match; null/absent bounds keep.
-            # Bounds are typed from the probed schema so integer
-            # comparisons stay exact (no double round-trip past 2^53).
-            ncj = F.get_json_object(F.col("stats"), "$._nc")
-            n_total = F.get_json_object(F.col("stats"), "$._n").cast("long")
-            has_nc = ncj.isNotNull() & n_total.isNotNull()
+    for c, op, _v in (t for g in fgroups for t in g):
+        if op not in _FILTER_OPS:
+            raise ValueError(f"unsupported filter op {op!r} (use one of {_FILTER_OPS})")
+        if op in ("in", "not_in") and not _v:
+            raise ValueError(f"empty {op.upper()}-list for filter column {c!r}")
+        if c not in probe.names:
+            raise ValueError(f"filter column {c!r} not in dataset schema")
+        if op in ("startswith", "endswith", "contains") and not (
+            isinstance(_v, str)
+            and (
+                pa.types.is_string(probe.field(c).type)
+                or pa.types.is_large_string(probe.field(c).type)
+            )
+        ):
+            raise ValueError(
+                f"{op} needs a string value on a string column ({c!r})"
+            )
+        if columns is not None and c not in columns:
+            raise ValueError(f"filters need column {c!r} in columns (residual filter)")
 
-            def _term_keep(c, op, v):
-                if not _json_path_safe(c):
-                    # a dotted/bracketed name breaks the get_json_object
-                    # path and a failed _nc lookup would read as
-                    # all-null and WRONGLY prune — skip manifest pruning
-                    # for this column (the exact residual still applies)
-                    return None
-                # null-count pruning (the parquet null-count analog):
-                # a column absent from a recorded _nc map is all-null in
-                # that chunk — including generations that PREDATE the
-                # column under additive evolution
-                nc = F.get_json_object(F.col("stats"), f"$._nc.{c}").cast("long")
-                not_all_null = (~has_nc) | (nc.isNotNull() & (nc < n_total))
-                if op in ("is_null", "not_null"):
-                    if op == "is_null":
-                        term = (~has_nc) | nc.isNull() | (nc > F.lit(0))
-                    else:
-                        term = not_all_null
-                    return F.col("stats").isNull() | term
-                cast_to, conv = _zone_bound_type(probe.field(c).type)
-                vs = [conv(x) for x in v] if op in ("in", "not_in") else [conv(v)]
-                mn = F.get_json_object(F.col("stats"), f"$.{c}[0]")
-                mx = F.get_json_object(F.col("stats"), f"$.{c}[1]")
-                if cast_to:
-                    mn, mx = mn.cast(cast_to), mx.cast(cast_to)
-                if op == "startswith":
-                    # every match is >= the prefix itself, and the min's
-                    # length-prefix can't exceed it (the same algebra as
-                    # the DataSource reader's _chunk_keep)
-                    lit = F.lit(vs[0])
-                    term = (mx.isNull() | (mx >= lit)) & (
-                        mn.isNull() | (F.substring(mn, 1, len(vs[0])) <= lit)
-                    )
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        member = F.exists(dv_arr, lambda x: x.startswith(vs[0]))
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = term & (dvj.isNull() | member)
-                elif op in ("endswith", "contains"):
-                    # no order relation to [min, max] — membership in
-                    # the exact distinct-value set is the only pruner
-                    # (plus the shared all-null rejection below)
-                    term = F.lit(True)
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        if op == "endswith":
-                            member = F.exists(dv_arr, lambda x: x.endswith(vs[0]))
-                        else:
-                            member = F.exists(dv_arr, lambda x: x.contains(vs[0]))
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = term & (dvj.isNull() | member)
-                elif op in (">", ">="):
-                    lit = F.lit(vs[0])
-                    cmpc = mx > lit if op == ">" else mx >= lit
-                    term = mx.isNull() | cmpc
-                elif op in ("<", "<="):
-                    lit = F.lit(vs[0])
-                    cmpc = mn < lit if op == "<" else mn <= lit
-                    term = mn.isNull() | cmpc
-                elif op in ("!=", "<>", "not_in"):
-                    # bounds can never prove inequality (the mn==mx==v
-                    # constant chunk records dv={v} anyway), so prune
-                    # purely on the distinct-value set: the chunk matches
-                    # nothing when every recorded non-null value is
-                    # rejected.  Absent set → keep; all-null rejection
-                    # comes from the shared null-rejecting tail below.
-                    term = F.lit(True)
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        # factory, not default-args: F.exists introspects
-                        # the lambda's arity and passes one Column per
-                        # PARAMETER, so extra params would become lambda
-                        # variables
-                        def _make_survives(_vs, _cast):
-                            def _survives(e):
-                                t = None
-                                for x in _vs:
-                                    litx = F.lit(x)
-                                    if _cast and _cast.startswith("decimal"):
-                                        litx = litx.cast(_cast)
-                                    cmpx = e != litx
-                                    t = cmpx if t is None else (t & cmpx)
-                                return t
-
-                            return _survives
-
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = dvj.isNull() | F.exists(
-                            dv_arr, _make_survives(vs, cast_to)
-                        )
-                else:  # = / == / in: any listed value inside [mn, mx]
-                    term = None
-                    for x in vs:
-                        lit = F.lit(x)
-                        t = (mn.isNull() | (mn <= lit)) & (mx.isNull() | (mx >= lit))
-                        term = t if term is None else (term | t)
-                    # distinct-value set: when the chunk recorded its
-                    # exact values (≤ _STATS_DV_MAX), equality prunes on
-                    # MEMBERSHIP — the interleaved-categorical case
-                    # bounds can never exclude.  Absent set → keep.
-                    dv_arr = _dv_array_col(c, probe.field(c).type, cast_to)
-                    if dv_arr is not None:
-                        member = None
-                        for x in vs:
-                            litx = F.lit(x)
-                            if cast_to and cast_to.startswith("decimal"):
-                                litx = litx.cast(cast_to)
-                            m = F.array_contains(dv_arr, litx)
-                            member = m if member is None else (member | m)
-                        dvj = F.get_json_object(F.col("stats"), f"$._dv.{c}")
-                        term = term & (dvj.isNull() | member)
-                # comparison/equality terms are null-rejecting: an
-                # all-null chunk (evolution: column-predating chunks
-                # included) can never satisfy them
-                term = term & not_all_null
-                return F.col("stats").isNull() | term
-
-            # OR-of-AND composition (pyarrow DNF): a chunk survives when
-            # ANY group's prunable terms all keep it.  A group with no
-            # prunable term keeps every chunk, which conservatively
-            # disables pruning for the whole disjunction.
-            any_prunable = False
-            keep = None
-            for g in fgroups:
-                gk = None
-                for c, op, v in g:
-                    t = _term_keep(c, op, v)
-                    if t is not None:
-                        any_prunable = True
-                        gk = t if gk is None else (gk & t)
-                gk = F.lit(True) if gk is None else gk
-                keep = gk if keep is None else (keep | gk)
-            if any_prunable:
-                if pruning_evidence is not None:
-                    # opt-in pruning audit (two tiny manifest-only jobs):
-                    # chunk rows qualifying before/after the zone-map
-                    # keep — the EXPLAIN analog for a filtered decode
-                    pruning_evidence["total"] = enc.count()
-                enc = enc.where(keep)
-                if pruning_evidence is not None:
-                    pruning_evidence["qualifying"] = enc.count()
+    # plan on the driver (metadata only, no Spark job), then run the
+    # partitions as ONE job: one task per partition, driven from a
+    # JVM-native range source — the same task shape as the parquet-path
+    # planner's sample stage.  Partitions pack to the engine's default
+    # size, capped so the live bytes spread over the cluster's cores.
+    sc = spark.sparkContext
+    parts = plan_partitions(
+        output_dir, man, probe, columns, fgroups,
+        key_range=key_range, spread=sc.defaultParallelism, evidence=pruning_evidence,
+    )
+    bparts = sc.broadcast(parts)
 
     def decode(iterator):
-        # several manifest rows (unit-slices) share one chunk; the input
-        # is sorted by (file, offset) within the partition, so a
-        # one-chunk cache deserializes each chunk exactly once
-        handles: dict[str, object] = {}
-        cur_key = None
-        cur_tbl = None
-        try:
-            for batch in iterator:
-                cols = [batch.column(i).to_pylist() for i in range(5)]
-                for fname, off, ln, roff, nr in zip(*cols):
-                    if (fname, off) != cur_key:
-                        fh = handles.get(fname)
-                        if fh is None:
-                            fh = handles[fname] = _open_payload(payload_dir, fname)
-                        fh.seek(off)
-                        # column pruning happens INSIDE the container:
-                        # excluded columns' buffers are skipped, never
-                        # decompressed; columns a chunk generation
-                        # predates are null-padded from the union schema
-                        cur_tbl = _pad_table(
-                            deserialize_chunk(fh.read(ln), columns, missing_ok=True),
-                            want_fields,
-                        )
-                        cur_key = (fname, off)
-                    for b in cur_tbl.slice(roff, nr).to_batches():
-                        if b.num_rows:
-                            yield _normalize_batch(b)
-        finally:
-            for fh in handles.values():
-                fh.close()
+        planned = bparts.value
+        for batch in iterator:
+            for i in batch.column("id").to_pylist():
+                yield from _read_chunk_partition(planned[i])
 
-    # the manifest is tiny (hundreds of rows in small files), so the scan
-    # coalesces to ~1 partition; spread chunk workloads across the
-    # cluster, keeping all slices of a chunk together (hash by chunk id)
-    # so the one-chunk cache still gets a hit per slice
-    par = spark.sparkContext.defaultParallelism
-    out = (
-        enc.select("file", "offset", "length", "row_off", "n_rows")
-        .repartition(par, "file", "offset")
-        .sortWithinPartitions("file", "offset", "row_off")
-        .mapInArrow(decode, out_schema)
-    )
+    out = spark.range(len(parts), numPartitions=len(parts)).mapInArrow(decode, out_schema)
     if key_range is not None:
         # exact residual on the full-precision key (unit pruning is a
         # conservative prefix-range superset)
@@ -2064,8 +1768,8 @@ def decode_dataset(
 
 
 def _committed_manifest_df(spark, output_dir: str):
-    """``(enc, has_stats)`` — the committed manifest view shared by
-    :func:`decode_dataset` and :func:`dataset_column_stats`: manifest
+    """``(enc, has_stats)`` — the committed manifest as a Spark
+    DataFrame, for :func:`dataset_column_stats`' aggregation: manifest
     fragment rows semi-joined to lineage ``status='ok'`` on
     ``(unit, run_id)``, so orphans from a run that crashed between its
     data and lineage commits are invisible to every reader."""
@@ -2121,6 +1825,8 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
     brackets) reports unknown bounds/counts instead of misreading a
     failed lookup as data.
     """
+    import re
+
     from pyspark.sql import functions as F
 
     enc, has_stats = _committed_manifest_df(spark, output_dir)
@@ -2150,10 +1856,20 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
     ncmap = F.get_json_object(F.col("stats"), "$._nc")
     partial = n_total.isNull() | (F.col("covered") < n_total)
     aggs = [F.sum(partial.cast("long")).alias("\x1fpartial")]
-    safe_cols = [c for c in cols if _json_path_safe(c)]
+    # a name with dots, brackets or quotes would parse as path STRUCTURE
+    safe_cols = [c for c in cols if re.fullmatch(r"[A-Za-z0-9_]+", c)]
     for c in safe_cols:
+        # bounds compare in the column's own domain: exact epoch ints for
+        # timestamps/dates, the column's decimal, lexicographic strings
         ftype = probe.field(c).type
-        cast_to, _ = _zone_bound_type(ftype)
+        if pa.types.is_decimal(ftype):
+            cast_to = f"decimal({ftype.precision},{ftype.scale})"
+        elif pa.types.is_floating(ftype):
+            cast_to = "double"
+        elif pa.types.is_integer(ftype) or pa.types.is_timestamp(ftype) or pa.types.is_date(ftype):
+            cast_to = "long"
+        else:
+            cast_to = None
         is_str = cast_to is None
         mnj = F.get_json_object(F.col("stats"), f"$.{c}[0]")
         mxj = F.get_json_object(F.col("stats"), f"$.{c}[1]")

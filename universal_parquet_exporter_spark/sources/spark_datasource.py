@@ -33,13 +33,17 @@ What Catalyst's v2 pushdown buys here, mechanically:
   both BEFORE a single payload byte is read.  Pruning is conservative
   (bounds are supersets), so ALL filters are returned to Spark for the
   exact residual — the same contract parquet row-group statistics have.
-- **Partition planning**: committed manifest rows (lineage semi-join, so
-  orphans from torn runs are invisible — identical to
-  :func:`..encode.pipeline.decode_dataset`) are grouped per chunk and
-  packed into ~``partition_target_bytes`` scan partitions by payload
-  locality.  Planning reads ONLY metadata (manifest + lineage parquet,
-  plan.json) with pyarrow — it runs in Spark's planning worker where no
-  SparkSession exists, exactly like a JVM DSv2 ``ScanBuilder``.
+- **Partition planning**: this reader is a thin protocol adapter over
+  the engine's one scan planner, :mod:`..encode.scan`, which
+  :func:`..encode.pipeline.decode_dataset` runs too: committed manifest
+  rows (lineage semi-join, so orphans from torn runs are invisible),
+  unit and chunk pruning, and chunks packed into
+  ~``partition_target_bytes`` scan partitions by payload locality.
+  Planning reads ONLY metadata (manifest + lineage parquet, plan.json)
+  with pyarrow — it runs in Spark's planning worker where no
+  SparkSession exists, exactly like a JVM DSv2 ``ScanBuilder``.  The
+  planner's names (``_committed_manifest``, ``_chunk_keep``,
+  ``_pack_chunk_partitions`` ...) stay importable from this module.
 - **Write commit protocol** (``DataSourceArrowWriter``): tasks encode
   their Arrow batches with the engine's own stream
   (:func:`..encode.pipeline._encode_stream` — codec auto-selection,
@@ -70,7 +74,6 @@ sample the whole input.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
@@ -88,7 +91,6 @@ from pyspark.sql.datasource import (
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -100,32 +102,35 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..encode.container import deserialize_chunk
 from ..encode.pipeline import (
     FRAG_PA_SCHEMA,
-    MANIFEST_PA_SCHEMA,
     _arrow_to_ddl,
     _ddl_type,
     _encode_stream,
     _load_plan,
-    _normalize_batch,
-    _ok_lineage,
-    _open_payload,
-    _pad_table,
     _payload_fs,
     _read_meta_table,
-    _union_probe_schema,
     commit_fragments,
     completed_batch_tags,
-    date_value_days,
-    key_range_from_terms,
     manifest_dir,
     next_manifest_name as _next_manifest_name,
     set_manifest_dir,
     split_columns,
-    ts_value_us,
 )
-from ..plans.partitioning import EncodePlan, units_for_key_range
+from ..encode.scan import (  # noqa: F401  (the planner's names stay importable here)
+    DEFAULT_PARTITION_BYTES,
+    _MANIFEST_CACHE,
+    _ChunkScanPartition,
+    _chunk_keep,
+    _committed_manifest,
+    _meta_state_token,
+    _normalize_terms,
+    _pack_chunk_partitions,
+    _probe_chunk_schema,
+    _read_chunk_partition,
+    plan_partitions,
+)
+from ..plans.partitioning import EncodePlan
 
 FORMAT_NAME = "upe_encoded"
 _PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
@@ -139,92 +144,6 @@ def register(spark, enable_filter_pushdown: bool = True) -> None:
     if enable_filter_pushdown:
         spark.conf.set(_PUSHDOWN_CONF, "true")
     spark.dataSource.register(EncodedContainerDataSource)
-
-
-# ---------------------------------------------------------------------------
-# driver/planning-side metadata access (pyarrow only — no SparkSession)
-# ---------------------------------------------------------------------------
-
-
-def _meta_state_token(output_dir: str) -> tuple | None:
-    """Cheap freshness token for the planning-side manifest cache: the
-    (mtime_ns, size-ish) of the manifest dir, lineage dir, and version
-    pointer.  Any committed write touches at least one of them (new
-    parquet file → directory mtime on POSIX; pointer swap → file mtime).
-    Remote (non-POSIX) paths return None — never cached."""
-    if "://" in output_dir:
-        return None
-    parts = []
-    for p in (
-        manifest_dir(output_dir),
-        os.path.join(output_dir, "lineage"),
-        os.path.join(output_dir, "manifest_current"),
-    ):
-        try:
-            st = os.stat(p)
-            parts.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            parts.append((p, None, None))
-    return tuple(parts)
-
-
-_MANIFEST_CACHE: dict[str, tuple[tuple, pa.Table]] = {}
-
-
-def _committed_manifest(output_dir: str) -> pa.Table:
-    """Committed manifest rows (the lineage ``status='ok'`` semi-join on
-    ``(unit, run_id)``) — the planning-side twin of
-    :func:`..encode.pipeline.decode_dataset`'s ``enc`` DataFrame.  At
-    nominal scale this is manifest METADATA (fragment rows, not data),
-    but it is ~10^7 rows at 100 TB, so the join runs entirely in Arrow
-    (hash semi-join in C++, zero per-row Python objects) and the result
-    is cached per (path, dir-mtime token): ``schema()``, ``partitions()``
-    and the append-schema guard share one load per plan instead of
-    re-reading per call."""
-    token = _meta_state_token(output_dir)
-    if token is not None:
-        hit = _MANIFEST_CACHE.get(output_dir)
-        if hit is not None and hit[0] == token:
-            return hit[1]
-    cols = ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "stats", "codecs"]
-    man = _read_meta_table(manifest_dir(output_dir), cols)
-    ok = _ok_lineage(output_dir, ["unit", "run_id"])
-    if man is None or ok is None or man.num_rows == 0:
-        out = MANIFEST_PA_SCHEMA.empty_table().select(cols)
-    else:
-        ok = ok.group_by(["unit", "run_id"]).aggregate([])  # distinct — join keys must be unique
-        out = man.join(ok, keys=["unit", "run_id"], join_type="left semi")
-    if token is not None:
-        # re-validate: a write racing this load invalidates via mtime
-        if _meta_state_token(output_dir) == token:
-            _MANIFEST_CACHE[output_dir] = (token, out)
-            if len(_MANIFEST_CACHE) > 64:
-                _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-    return out
-
-
-def _probe_chunk_schema(output_dir: str, man: pa.Table) -> pa.Schema:
-    """Union-by-name schema over committed chunks (orphan-safe — rows
-    came through the lineage semi-join): one meta-only probe per
-    distinct column-name set, the same evolution-aware resolution
-    ``decode_dataset`` uses (column sets come from the manifest's own
-    codecs maps; distinct codecs STRINGS are deduped before any JSON
-    parse, so planning cost tracks codec diversity, not row count)."""
-    if man.num_rows == 0:
-        raise ValueError(f"empty encoded dataset at {output_dir}")
-    payload_dir = os.path.join(output_dir, "payload")
-    files = man.column("file").to_pylist()
-    offsets = man.column("offset").to_pylist()
-    codecs = man.column("codecs").to_pylist() if "codecs" in man.schema.names else [None] * man.num_rows
-    by_ns: dict[tuple, tuple[str, int]] = {}
-    seen_cj: set = set()
-    for i, cj in enumerate(codecs):
-        if cj in seen_cj:
-            continue
-        seen_cj.add(cj)
-        ns = tuple(sorted(json.loads(cj).keys())) if cj else ("",)
-        by_ns.setdefault(ns, (files[i], offsets[i]))
-    return _union_probe_schema(payload_dir, sorted(by_ns.values()))
 
 
 # ---------------------------------------------------------------------------
@@ -292,204 +211,9 @@ def _terms_from_filters(filters) -> list[tuple[str, str, object]]:
     return terms
 
 
-def _key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
-    """One algebra for both scan paths: delegates to the engine's
-    :func:`~..encode.pipeline.key_range_from_terms` (also used by
-    ``decode_dataset``'s filter-driven unit pruning)."""
-    return key_range_from_terms(terms, key_col)
-
-
-def _normalize_terms(terms, schema: pa.Schema):
-    """Convert term values to the zone-map domain ONCE per scan (not per
-    chunk): timestamps → epoch-µs ints, dates → epoch-days ints,
-    decimals → ``Decimal`` (their bounds are stored as exact strings and
-    re-typed in :func:`_chunk_keep`).  Terms whose column is absent from
-    the schema or whose value can't convert are dropped from PRUNING
-    (Spark still applies them as the residual — conservative)."""
-    from datetime import date, datetime
-    from decimal import Decimal
-
-    out = []
-    for col, op, v in terms:
-        if col not in schema.names:
-            continue
-        if op in ("is_null", "not_null"):
-            # value-less terms skip the domain conversion entirely
-            out.append((col, op, None))
-            continue
-        t = schema.field(col).type
-        try:
-            if pa.types.is_timestamp(t):
-                if op in ("in", "not_in"):
-                    v = tuple(ts_value_us(x) for x in v)
-                elif isinstance(v, datetime):
-                    v = ts_value_us(v)
-                else:
-                    continue
-            elif pa.types.is_date(t):
-                if op in ("in", "not_in"):
-                    v = tuple(date_value_days(x) for x in v)
-                elif isinstance(v, date):
-                    v = date_value_days(v)
-                else:
-                    continue
-            elif pa.types.is_decimal(t):
-                if op in ("in", "not_in"):
-                    v = tuple(Decimal(str(x)) for x in v)
-                else:
-                    v = Decimal(str(v))
-        except (TypeError, ValueError, ArithmeticError):
-            continue
-        out.append((col, op, v))
-    return out
-
-
-def _chunk_keep(stats_json: str | None, terms, schema: pa.Schema) -> bool:
-    """Zone-map verdict for ONE chunk: False only when the recorded
-    bounds PROVE a term can't match (missing/partial bounds keep — the
-    same conservative algebra as ``decode_dataset``'s SQL form, from
-    which the driver's value-hash gate certifies the semantics).  Terms
-    must be pre-normalized (:func:`_normalize_terms`); decimal bounds
-    are stored as exact strings and re-typed here."""
-    from decimal import Decimal
-
-    if not stats_json:
-        return True
-    try:
-        stats = json.loads(stats_json)
-    except (TypeError, ValueError):
-        return True
-    dv_map = stats.get("_dv")
-    if not isinstance(dv_map, dict):
-        dv_map = {}
-    nc_map = stats.get("_nc")
-    n_total = stats.get("_n")
-    have_nc = isinstance(nc_map, dict) and isinstance(n_total, int)
-    for col, op, v in terms:
-        # null-count pruning (the parquet null-count analog): a column
-        # absent from a recorded _nc map is all-null in this chunk —
-        # including chunks whose generation PREDATES the column under
-        # additive evolution; comparison/equality/prefix terms are
-        # null-rejecting, so all-null prunes those too
-        if have_nc:
-            nc = nc_map.get(col)
-            all_null = not isinstance(nc, int) or nc >= n_total
-            if op == "is_null":
-                if isinstance(nc, int) and nc == 0:
-                    return False
-                continue
-            if op == "not_null":
-                if all_null:
-                    return False
-                continue
-            if all_null:
-                return False
-        elif op in ("is_null", "not_null"):
-            continue
-        # exact distinct-value sets (≤ _STATS_DV_MAX values recorded):
-        # equality/IN/prefix prune on MEMBERSHIP — the interleaved-
-        # categorical case min/max bounds can never exclude
-        dv = dv_map.get(col)
-        if dv is not None and op in ("!=", "not_in"):
-            # inequality prunes ONLY through the exact value set: the
-            # chunk matches nothing when every recorded non-null value
-            # is rejected (all-null rejection already returned above)
-            rejected = v if op == "not_in" else (v,)
-            if schema is not None and col in schema.names and pa.types.is_decimal(
-                schema.field(col).type
-            ):
-                try:
-                    dv = [Decimal(str(x)) for x in dv]
-                except ArithmeticError:
-                    dv = None
-            try:
-                if dv is not None and all(x in rejected for x in dv):
-                    return False
-            except TypeError:
-                pass  # cross-type membership: never prune on it
-            continue
-        if dv is not None and op in ("=", "in", "startswith", "endswith", "contains"):
-            if schema is not None and col in schema.names and pa.types.is_decimal(
-                schema.field(col).type
-            ):
-                try:
-                    dv = [Decimal(str(x)) for x in dv]
-                except ArithmeticError:
-                    dv = None
-            try:
-                if dv is None:
-                    pass
-                elif op == "=" and v not in dv:
-                    return False
-                elif op == "in" and not any(x in dv for x in v):
-                    return False
-                elif op == "startswith" and all(isinstance(x, str) for x in dv) and not any(
-                    x.startswith(v) for x in dv
-                ):
-                    return False
-                elif op == "endswith" and all(isinstance(x, str) for x in dv) and not any(
-                    x.endswith(v) for x in dv
-                ):
-                    return False
-                elif op == "contains" and all(isinstance(x, str) for x in dv) and not any(
-                    v in x for x in dv
-                ):
-                    return False
-            except TypeError:
-                pass  # cross-type membership: never prune on it
-        bounds = stats.get(col)
-        if not isinstance(bounds, (list, tuple)) or len(bounds) != 2:
-            continue
-        mn, mx = bounds
-        if schema is not None and col in schema.names and pa.types.is_decimal(schema.field(col).type):
-            try:
-                mn = None if mn is None else Decimal(str(mn))
-                mx = None if mx is None else Decimal(str(mx))
-            except ArithmeticError:
-                continue
-        try:
-            if op in (">", ">="):
-                if mx is not None and not (mx > v if op == ">" else mx >= v):
-                    return False
-            elif op in ("<", "<="):
-                if mn is not None and not (mn < v if op == "<" else mn <= v):
-                    return False
-            elif op == "=":
-                if (mn is not None and mn > v) or (mx is not None and mx < v):
-                    return False
-            elif op == "in":
-                if mn is not None and mx is not None and not any(
-                    mn <= x <= mx for x in v
-                ):
-                    return False
-            elif op == "startswith":
-                # all matches are >= v and share v's length-prefix
-                if mx is not None and mx < v:
-                    return False
-                if mn is not None and isinstance(mn, str) and mn[: len(v)] > v:
-                    return False
-        except TypeError:
-            continue  # cross-type comparison: never prune on it
-    return True
-
-
 # ---------------------------------------------------------------------------
 # reader
 # ---------------------------------------------------------------------------
-
-
-class _ChunkScanPartition(InputPartition):
-    """One scan task: a locality-packed run of chunks.  ``chunks`` is
-    ``[(file, offset, length, [(row_off, n_rows), ...]), ...]`` sorted by
-    (file, offset) so the read loop deserializes each chunk once.
-    ``fields`` are the output Arrow fields (union schema restricted to
-    the requested columns) — chunks predating a column null-pad to it."""
-
-    def __init__(self, payload_dir: str, columns: list[str] | None, chunks: list, fields: list):
-        self.payload_dir = payload_dir
-        self.columns = columns
-        self.chunks = chunks
-        self.fields = fields
 
 
 class _EncodedReader(DataSourceReader):
@@ -502,141 +226,24 @@ class _EncodedReader(DataSourceReader):
             raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
         cols = options.get("columns")
         self.columns = [c.strip() for c in cols.split(",") if c.strip()] if cols else None
-        self.target_bytes = int(options.get("partition_target_bytes", 64 << 20))
+        self.target_bytes = int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
         self._terms: list[tuple[str, str, object]] = []
 
     def partitions(self):
         man = _committed_manifest(self.path)
-        payload_dir = os.path.join(self.path, "payload")
         if man.num_rows == 0:
-            return [_ChunkScanPartition(payload_dir, self.columns, [], [])]
-        probe_schema = _probe_chunk_schema(self.path, man)
-        want_fields = (
-            [probe_schema.field(c) for c in self.columns]
-            if self.columns
-            else list(probe_schema)
-        )
-
-        units = man.column("unit").to_numpy(zero_copy_only=False).astype(np.int64)
-        keep = np.ones(man.num_rows, dtype=bool)
-        if self._terms:
-            plan = _load_plan(self.path)
-            if plan is not None:
-                lo, hi = _key_range_from_terms(self._terms, plan.key_col)
-                if lo is not None or hi is not None:
-                    allowed = np.asarray(units_for_key_range(plan, lo, hi), dtype=np.int64)
-                    keep &= np.isin(units, allowed)
-                for col, op, v in self._terms:
-                    # IN on the key: union of point ranges — the
-                    # point-lookup-list pattern prunes to just the
-                    # units that could hold any listed key
-                    if col == plan.key_col and op == "in" and all(
-                        isinstance(x, str) for x in v
-                    ):
-                        pts: set[int] = set()
-                        for x in v:
-                            pts.update(units_for_key_range(plan, x, x))
-                        keep &= np.isin(units, np.asarray(sorted(pts), dtype=np.int64))
-
-        if not keep.all():
-            man = man.filter(pa.array(keep))
-        norm_terms = _normalize_terms(self._terms, probe_schema) if self._terms else []
-        return _pack_chunk_partitions(
-            man, payload_dir, self.columns, want_fields,
-            self.target_bytes, norm_terms, probe_schema,
+            return [_ChunkScanPartition(os.path.join(self.path, "payload"), self.columns, [], [])]
+        return plan_partitions(
+            self.path,
+            man,
+            _probe_chunk_schema(self.path, man),
+            self.columns,
+            [self._terms] if self._terms else [],
+            target_bytes=self.target_bytes,
         )
 
     def read(self, partition: _ChunkScanPartition):
         return _read_chunk_partition(partition)
-
-
-def _pack_chunk_partitions(
-    man: pa.Table,
-    payload_dir: str,
-    columns: list[str] | None,
-    want_fields: list,
-    target_bytes: int,
-    norm_terms: list,
-    probe_schema: pa.Schema,
-) -> list[_ChunkScanPartition]:
-    """Group manifest rows (unit-slices) by their chunk, VECTORIZED:
-    the (file, offset, row_off) sort runs in Arrow C++, chunk boundaries
-    come from one numpy change-point scan, and per-chunk metadata is
-    gathered with ``take`` on the boundary indices — planning cost is
-    O(rows) in C plus O(chunks) in Python, never O(rows) Python objects
-    (at 100 TB the committed manifest is ~10^7 fragment rows).  The
-    zone-map test runs once per CHUNK (slices of a chunk share its
-    stats).  Shared by the batch reader and the stream reader — the
-    stream plans the same way over the manifest rows of one offset
-    range."""
-    man = man.sort_by(
-        [("file", "ascending"), ("offset", "ascending"), ("row_off", "ascending")]
-    )
-    offsets = man.column("offset").to_numpy(zero_copy_only=False)
-    lengths = man.column("length").to_numpy(zero_copy_only=False)
-    row_offs = man.column("row_off").to_numpy(zero_copy_only=False)
-    n_rows_a = man.column("n_rows").to_numpy(zero_copy_only=False)
-    fdict = man.column("file").combine_chunks().dictionary_encode()
-    fcodes = fdict.indices.to_numpy(zero_copy_only=False)
-    fnames = fdict.dictionary.to_pylist()
-    if man.num_rows:
-        change = np.flatnonzero(
-            (fcodes[1:] != fcodes[:-1]) | (offsets[1:] != offsets[:-1])
-        )
-        starts = np.concatenate(([0], change + 1))
-        ends = np.concatenate((change + 1, [man.num_rows]))
-    else:  # every chunk pruned
-        starts = ends = np.array([], dtype=np.int64)
-    if "stats" in man.schema.names:
-        chunk_stats = man.column("stats").take(pa.array(starts)).to_pylist()
-    else:
-        chunk_stats = [None] * len(starts)
-
-    ordered = []
-    for i, (s, e) in enumerate(zip(starts, ends)):
-        if norm_terms and not _chunk_keep(chunk_stats[i], norm_terms, probe_schema):
-            continue
-        slices = np.stack((row_offs[s:e], n_rows_a[s:e]), axis=1).tolist()
-        ordered.append((fnames[fcodes[s]], int(offsets[s]), int(lengths[s]), slices))
-
-    # pack chunk runs into ~target_bytes partitions, preserving file
-    # locality (consecutive chunks of one payload file stay together)
-    parts: list[_ChunkScanPartition] = []
-    cur: list = []
-    cur_bytes = 0
-    for ch in ordered:
-        cur.append(ch)
-        cur_bytes += ch[2]
-        if cur_bytes >= target_bytes:
-            parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields))
-            cur, cur_bytes = [], 0
-    if cur or not parts:
-        parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields))
-    return parts
-
-
-def _read_chunk_partition(partition: _ChunkScanPartition):
-    """Executor-side scan of one packed chunk run (shared by the batch
-    and stream readers): each chunk deserializes ONCE, its unit-slices
-    yield as Arrow batches."""
-    handles: dict[str, object] = {}
-    try:
-        for fname, off, length, slices in partition.chunks:
-            fh = handles.get(fname)
-            if fh is None:
-                fh = handles[fname] = _open_payload(partition.payload_dir, fname)
-            fh.seek(off)
-            tbl = _pad_table(
-                deserialize_chunk(fh.read(length), partition.columns, missing_ok=True),
-                partition.fields,
-            )
-            for roff, nr in slices:
-                for b in tbl.slice(roff, nr).to_batches():
-                    if b.num_rows:
-                        yield _normalize_batch(b)
-    finally:
-        for fh in handles.values():
-            fh.close()
 
 
 class _EncodedPushdownReader(_EncodedReader):
@@ -730,7 +337,7 @@ class _EncodedStreamReader(DataSourceStreamReader):
             raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
         cols = options.get("columns")
         self.columns = [c.strip() for c in cols.split(",") if c.strip()] if cols else None
-        self.target_bytes = int(options.get("partition_target_bytes", 64 << 20))
+        self.target_bytes = int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
         self.starting = options.get("starting", "earliest").lower()
         if self.starting not in ("earliest", "latest"):
             raise ValueError(f"starting must be earliest|latest, got {self.starting!r}")
@@ -795,23 +402,19 @@ class _EncodedStreamReader(DataSourceStreamReader):
             # cursor from it so the NEXT batch caps from the right place
             self._cursor = hi
         runs = [r for t, r in _committed_run_order(self.path) if lo < (t, r) <= hi]
-        payload_dir = os.path.join(self.path, "payload")
         man = _committed_manifest(self.path)
         if man.num_rows == 0 or not runs:
-            return [_ChunkScanPartition(payload_dir, self.columns, [], [])]
+            return [_ChunkScanPartition(os.path.join(self.path, "payload"), self.columns, [], [])]
         # the OUTPUT schema is the full dataset's union (fixed at stream
         # start by Spark) — probe it from the whole manifest, then plan
         # scan partitions from this interval's fragments only
-        probe_schema = _probe_chunk_schema(self.path, man)
-        want_fields = (
-            [probe_schema.field(c) for c in self.columns]
-            if self.columns
-            else list(probe_schema)
-        )
-        batch_man = man.filter(pc.is_in(man.column("run_id"), pa.array(runs, pa.string())))
-        return _pack_chunk_partitions(
-            batch_man, payload_dir, self.columns, want_fields,
-            self.target_bytes, [], probe_schema,
+        return plan_partitions(
+            self.path,
+            man.filter(pc.is_in(man.column("run_id"), pa.array(runs, pa.string()))),
+            _probe_chunk_schema(self.path, man),
+            self.columns,
+            [],
+            target_bytes=self.target_bytes,
         )
 
     # -- executor side ---------------------------------------------------

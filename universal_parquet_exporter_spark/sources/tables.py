@@ -78,6 +78,16 @@ def read_jdbc(
     ``options``."""
     if (query is None) == (table is None):
         raise ValueError("exactly one of query= or table= is required")
+    if partition_column is not None:
+        if query is not None:
+            # Spark's JDBC source rejects this pair only when the read runs
+            raise ValueError(
+                "query= cannot be combined with partition_column= (Spark's "
+                "JDBC source partitions table scans only); pass table= "
+                "(a table name or a parenthesized subquery with an alias)"
+            )
+        if None in (lower_bound, upper_bound, num_partitions):
+            raise ValueError("partition_column requires lower_bound, upper_bound and num_partitions")
     reader = spark.read.format("jdbc").option("url", url).option("fetchsize", str(fetchsize))
     reader = reader.option("query", query) if query is not None else reader.option("dbtable", table)
     for k, v in (
@@ -91,8 +101,6 @@ def read_jdbc(
     ):
         if v is not None:
             reader = reader.option(k, str(v))
-    if partition_column is not None and None in (lower_bound, upper_bound, num_partitions):
-        raise ValueError("partition_column requires lower_bound, upper_bound and num_partitions")
     for k, v in (options or {}).items():
         reader = reader.option(k, str(v))
     return reader.load()
