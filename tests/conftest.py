@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -19,3 +20,16 @@ def spark():
     s = build_session(app_name="upes-tests", cpus=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the Spark jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -4,7 +4,6 @@ writes one manifest file and one lineage file per call — no Spark
 write, no read-back."""
 
 import os
-import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -12,6 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import _spark_jobs
 from universal_parquet_exporter_spark.encode import pipeline
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
@@ -149,18 +149,6 @@ def test_crash_between_manifest_and_lineage_is_invisible_and_resumable(
     dec = decode_dataset(spark, out)
     assert dec.count() == N_ROWS
     assert dec.select("url").distinct().count() == N_ROWS
-
-
-def _spark_jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count the Spark jobs of one call")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_parquet_job_runs_two_spark_jobs_fresh_and_one_on_resume(spark, webpages_parquet, tmp_path):

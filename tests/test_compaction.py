@@ -5,18 +5,22 @@ bytes reclaimable by the next vacuum."""
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _spark_jobs
+from universal_parquet_exporter_spark.encode import compaction
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.maintenance import vacuum
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
+    dataset_column_stats,
     decode_dataset,
     encode_job,
     manifest_dir,
 )
+from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -297,3 +301,58 @@ def test_compact_cluster_by_column_outside_targets_fails_up_front(spark, tmp_pat
     with pytest.raises(ValueError, match="outside the units selected"):
         compact(spark, out, cluster_by=("score",))
     assert manifest_dir(out).endswith("data")
+
+
+def test_metadata_work_runs_no_spark_job(spark, tmp_path):
+    """Compaction, vacuum and column stats read and commit the manifest
+    on the driver in Arrow: the only Spark job left among them is
+    compaction's payload rewrite."""
+    out = str(tmp_path / "jobs")
+    _ingest_fragmented(spark, out)
+    assert _spark_jobs(spark, lambda: dataset_column_stats(spark, out)) == 0
+    assert _spark_jobs(spark, lambda: compact(spark, out, dry_run=True)) == 0
+    rep: dict = {}
+    assert _spark_jobs(spark, lambda: rep.update(compact(spark, out, chunk_rows=32768))) == 1
+    assert rep["manifest_rewritten"]
+    vac: dict = {}
+    assert _spark_jobs(spark, lambda: vac.update(vacuum(spark, out))) == 0
+    assert 0 < vac["deleted_files"] <= 256  # below the cluster fan-out threshold
+
+
+def test_crash_before_pointer_swap_leaves_the_old_manifest_live(spark, tmp_path, monkeypatch):
+    """A compaction that dies after ``commit_fragments`` wrote its
+    manifest and lineage files but before the pointer swap: both scan
+    paths still read the pre-compaction rows, the new lineage matches no
+    live manifest row, and a second compaction takes the next version
+    dir and decodes the same rows."""
+    out = str(tmp_path / "crash")
+    df = _ingest_fragmented(spark, out)
+    expected = sorted(tuple(r) for r in df.collect())
+    lineage = os.path.join(out, "lineage")
+    lineage_before = set(os.listdir(lineage))
+
+    def crash(*a, **k):
+        raise RuntimeError("crashed before the pointer swap")
+
+    monkeypatch.setattr(compaction, "set_manifest_dir", crash)
+    with pytest.raises(RuntimeError, match="pointer swap"):
+        compact(spark, out, chunk_rows=32768)
+    monkeypatch.undo()
+
+    assert manifest_dir(out).endswith("data")
+    new_lineage = [f for f in set(os.listdir(lineage)) - lineage_before if f.endswith(".parquet")]
+    assert len(new_lineage) == 1
+    compact_runs = set(pq.read_table(os.path.join(lineage, new_lineage[0])).column("run_id").to_pylist())
+    assert len(pq.read_table(os.path.join(out, "data_v1"))) > 0  # the orphaned new manifest
+    live_runs = set(pq.read_table(manifest_dir(out)).column("run_id").to_pylist())
+    assert not (compact_runs & live_runs)
+
+    assert sorted(tuple(r) for r in decode_dataset(spark, out).collect()) == expected
+    sds.register(spark)
+    got = spark.read.format("upe_encoded").load(out).select(*df.columns)
+    assert sorted(tuple(r) for r in got.collect()) == expected
+
+    rep = compact(spark, out, chunk_rows=32768)
+    assert rep["manifest_rewritten"]
+    assert manifest_dir(out).endswith("data_v2")
+    assert sorted(tuple(r) for r in decode_dataset(spark, out).collect()) == expected

@@ -80,12 +80,14 @@ def test_stats_never_decode_payload(spark, outdir, monkeypatch):
     df = _df(spark, n=300)
     _encode(spark, df, outdir)
 
-    from universal_parquet_exporter_spark.encode import pipeline as pl
+    from universal_parquet_exporter_spark.encode import compaction, container, scan
 
     def boom(*a, **k):  # pragma: no cover - the assert IS the test
         raise AssertionError("dataset_column_stats decoded a payload chunk")
 
-    monkeypatch.setattr(pl, "deserialize_chunk", boom)
+    # every module binding the payload decoder
+    for mod in (container, scan, compaction):
+        monkeypatch.setattr(mod, "deserialize_chunk", boom)
     st = {r.column: r for r in dataset_column_stats(spark, outdir).collect()}
     assert int(st["n"].max) == 299 and st["n"].row_count == 300
 
@@ -112,10 +114,9 @@ def test_stats_column_validation(spark, outdir):
         dataset_column_stats(spark, outdir, columns=["nope"])
 
 
-def test_dotted_column_reports_unknown_not_fabricated(spark, outdir):
-    """A column name that would break the get_json_object path must
-    surface unknown stats — never a failed lookup misread as all-null
-    (which would fabricate null_count == row_count as exact).  Dotted
+def test_dotted_column_stats_are_exact(spark, outdir):
+    """A dotted column name is a plain key of the chunk's zone-map
+    dict, so its stats are as exact as any other column's.  Dotted
     columns reach datasets through the upe_encoded sink (pure Arrow);
     the DataFrame encode path rejects them loudly (mapInArrow
     limitation)."""
@@ -140,9 +141,9 @@ def test_dotted_column_reports_unknown_not_fabricated(spark, outdir):
     df.write.format("upe_encoded").option("key_col", "k").mode("append").save(outdir)
     st = {r.column: r for r in dataset_column_stats(spark, outdir).collect()}
     d = st["meta.lang"]
-    assert d.min is None and d.max is None
-    assert not d.min_exact and not d.max_exact
-    assert d.null_count is None and d.row_count == 200
+    assert d.min == "de" and d.max == "de"
+    assert d.min_exact and d.max_exact
+    assert d.null_count == 0 and d.row_count == 200
     # plain columns beside it stay exact
     assert int(st["n"].max) == 199 and st["n"].min_exact
 
@@ -174,7 +175,10 @@ def test_partial_chunk_coverage_poisons_exactness(spark, outdir):
     assert base["n"].min_exact and base["n"].null_count == 0
 
     # surgically drop one slice of a multi-slice chunk from the manifest
-    # (the state shape compaction leaves a shared multi-unit chunk in)
+    # (the state shape compaction leaves a shared multi-unit chunk in).
+    # Manifest files are immutable — every commit or rewrite lands under
+    # a fresh name, which is what the planner's manifest cache keys on —
+    # so the trimmed file replaces the original under a new name too
     mdir = manifest_dir(outdir)
     dropped = False
     for f in sorted(_os.listdir(mdir)):
@@ -191,7 +195,8 @@ def test_partial_chunk_coverage_poisons_exactness(spark, outdir):
             continue
         drop_idx = keys.index(victim)
         keep = [i for i in range(t.num_rows) if i != drop_idx]
-        _pq.write_table(t.take(_pa.array(keep)), p)
+        _pq.write_table(t.take(_pa.array(keep)), _os.path.join(mdir, "trimmed-" + f))
+        _os.unlink(p)
         dropped = True
     assert dropped, "no multi-slice chunk in the fixture"
     for f in list(_os.listdir(mdir)):

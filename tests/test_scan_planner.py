@@ -28,8 +28,7 @@ from pyspark.sql.datasource import (
     StringEndsWith,
     StringStartsWith,
 )
-from test_commit import _spark_jobs
-
+from tests.conftest import _spark_jobs
 from universal_parquet_exporter_spark.encode import scan
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,

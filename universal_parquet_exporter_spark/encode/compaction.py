@@ -11,26 +11,33 @@ repair.  :func:`compact` is the engine's analog:
 1. **Select** committed units whose average slice is smaller than
    ``min_avg_slice_rows`` (default ``chunk_rows // 2``) — work is
    proportional to the FRAGMENTED data only, never the healthy bulk.
-2. **Rewrite** those units through the engine's own stream: tasks
-   decode their units' slices straight from storage (Arrow, payload
-   bytes never enter the JVM — only manifest rows cross the exchange),
-   re-encode them as fresh ~``chunk_rows``-row chunks with freshly
-   trained FSST tables and zone maps, and append new payload files.
+   Selection is an Arrow ``group_by`` over the scan planner's cached
+   committed manifest (:func:`.scan._committed_manifest`), on the
+   driver, with no Spark job.
+2. **Rewrite** those units in ONE Spark job: the driver packs the
+   target slices by unit into one list per task, sorted by
+   (file, offset, row_off), and broadcasts them; each task decodes its
+   units' slices straight from storage (payload bytes never enter the
+   JVM, and there is no shuffle), re-encodes them as fresh
+   ~``chunk_rows``-row chunks with freshly trained FSST tables and zone
+   maps, appends new payload files, and returns their manifest rows.
 3. **Publish atomically** with the same versioned-manifest pointer
-   swap vacuum's rewrite uses: the new ``data_v<N>`` dir holds every
+   swap vacuum's rewrite uses: the new ``data_v<N>`` dir gets every
    surviving row (non-compacted units verbatim — their committed
    lineage stays valid — plus in-flight runs' young uncommitted rows,
-   which must outlive the rewrite) and the compacted units' new rows;
-   lineage for the new run is committed BEFORE the pointer lands, so a
-   reader resolves either the old complete manifest or the new one.
+   which must outlive the rewrite), then the compacted units' new rows
+   and their lineage through :func:`.pipeline.commit_fragments`, the
+   commit every encode path shares; the pointer lands last, so a reader
+   resolves either the old complete manifest or the new one.
 
 Crash windows mirror the encode job's: payload written but lineage
 missing → orphan files vacuum sweeps; lineage written but pointer not
 swapped → an unreferenced ``data_v<N>`` dir that ages out under
-:func:`~.maintenance.vacuum`'s retired-manifest horizon.  Superseded
-payload chunks of compacted units become dead only when NO surviving
-manifest row references them (multi-unit chunks shared with healthy
-units stay live) — the next vacuum reclaims the rest.
+:func:`~.maintenance.vacuum`'s retired-manifest horizon (the new
+lineage rows match no row of the live manifest).  Superseded payload
+chunks of compacted units become dead only when NO surviving manifest
+row references them (multi-unit chunks shared with healthy units stay
+live) — the next vacuum reclaims the rest.
 
 Concurrency contract = vacuum's: run while no encode job is writing,
 or rely on the kept-young-rows rule above plus a later horizoned
@@ -46,6 +53,8 @@ import os
 import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .container import deserialize_chunk
 from .pipeline import (
@@ -54,12 +63,14 @@ from .pipeline import (
     _load_plan,
     _open_payload,
     _pad_table,
-    _probe_rows,
-    _union_probe_schema,
+    _read_meta_table,
+    _write_parquet_file,
+    commit_fragments,
     manifest_dir,
     next_manifest_name,
     set_manifest_dir,
 )
+from .scan import _committed_manifest, _probe_chunk_schema
 
 
 def compact(
@@ -83,47 +94,29 @@ def compact(
     retroactively, without re-reading the source.  Selection is
     unchanged — pair with a large ``min_avg_slice_rows`` to re-cluster
     every multi-slice unit, not just fragmented ones."""
-    from pyspark.sql import functions as F
-
     from ..plans.partitioning import EncodePlan
 
     threshold = min_avg_slice_rows if min_avg_slice_rows is not None else chunk_rows // 2
     plan = _load_plan(output_dir)
     if plan is None:
         raise ValueError(f"no plan.json under {output_dir}: not an encoded dataset")
-    data_dir = manifest_dir(output_dir)
-    lineage_dir = os.path.join(output_dir, "lineage")
     payload_dir = os.path.join(output_dir, "payload")
 
-    manifest = spark.read.parquet(data_dir)
-    committed = (
-        spark.read.parquet(lineage_dir).where("status = 'ok'").select("unit", "run_id")
+    man = _committed_manifest(output_dir)
+    per_unit = man.group_by("unit", use_threads=False).aggregate(
+        [([], "count_all"), ("n_rows", "sum"), ("bytes_out", "sum")]
     )
-    committed_rows = manifest.join(F.broadcast(committed), ["unit", "run_id"], "left_semi")
-
-    per_unit = committed_rows.groupBy("unit").agg(
-        F.count("*").alias("n_slices"),
-        F.sum("n_rows").alias("rows"),
-        F.sum("bytes_out").alias("bytes_out"),
-    )
-    frag_cond = (F.col("n_slices") > 1) & ((F.col("rows") / F.col("n_slices")) < threshold)
-    # selection report as ONE aggregation row — the unit ids themselves
-    # never reach the driver (at 100 TB the fragmented set can be
-    # millions of units); targets flow into the rewrite as a DataFrame
-    # through broadcast semi/anti joins below
-    ev = per_unit.agg(
-        F.count("*").alias("units_total"),
-        F.sum(frag_cond.cast("long")).alias("units_compacted"),
-        F.sum(F.when(frag_cond, F.col("n_slices"))).alias("slices_before"),
-        F.sum(F.when(frag_cond, F.col("bytes_out"))).alias("bytes_before"),
-    ).collect()[0]
-    n_targets = int(ev.units_compacted or 0)
+    n_slices = per_unit.column("count_all").to_numpy()
+    rows = per_unit.column("n_rows_sum").to_numpy()
+    is_target = pa.array((n_slices > 1) & (rows / n_slices < threshold))
+    targets = per_unit.filter(is_target)
+    n_targets = targets.num_rows
     report = {
-        "units_total": int(ev.units_total or 0),
+        "units_total": per_unit.num_rows,
         "units_compacted": n_targets,
-        "slices_before": int(ev.slices_before or 0),
+        "slices_before": pc.sum(targets.column("count_all")).as_py() or 0,
         "slices_after": 0,
-        "bytes_before": int(ev.bytes_before or 0),
+        "bytes_before": pc.sum(targets.column("bytes_out_sum")).as_py() or 0,
         "bytes_after": 0,
         "manifest_rewritten": False,
         "dry_run": dry_run,
@@ -132,13 +125,7 @@ def compact(
         # validate against the DATASET's union schema (meta-only probes
         # over committed rows) before any early return, so a typo'd
         # column fails loudly even when selection is empty
-        ds_probes = _probe_rows(committed_rows.select("codecs", "file", "offset"))
-        ds_names = [
-            f.name
-            for f in _union_probe_schema(
-                payload_dir, sorted((r.file, r.offset) for r in ds_probes)
-            )
-        ]
+        ds_names = _probe_chunk_schema(output_dir, man).names
         missing_cols = [c for c in cluster_by if c not in ds_names]
         if missing_cols:
             raise ValueError(
@@ -146,11 +133,6 @@ def compact(
             )
     if not n_targets or dry_run:
         return report
-    target_units = per_unit.where(frag_cond).select("unit")
-
-    run_id = "compact-" + uuid.uuid4().hex[:12]
-    bplan = spark.sparkContext.broadcast(plan.to_json())
-    key_col = plan.key_col
 
     # schema evolution: a target unit may hold chunks from several
     # generations (different column sets).  The rewrite merges their rows
@@ -160,11 +142,9 @@ def compact(
     # before and after compaction).  One meta-only probe per distinct
     # name set over the TARGET slices finds that union; a type flip
     # between generations fails loudly here, not mid-rewrite.
-    target_slices_df = committed_rows.join(F.broadcast(target_units), "unit", "left_semi")
-    probes = _probe_rows(target_slices_df.select("codecs", "file", "offset"))
-    union_fields = list(
-        _union_probe_schema(payload_dir, sorted((r.file, r.offset) for r in probes))
-    )
+    target_units = targets.column("unit")
+    slices = man.filter(pc.is_in(man.column("unit"), value_set=target_units))
+    union_fields = list(_probe_chunk_schema(output_dir, slices))
     # the rewrite pads rows to the TARGETS' union only, so a cluster
     # column that exists solely in non-target generations would crash
     # the sort on an executor mid-rewrite — fail here instead
@@ -175,36 +155,54 @@ def compact(
             "units selected for compaction; their rows cannot be sorted by them"
         )
 
+    # a unit's slices must meet in one task (so it re-packs into the
+    # fewest chunks): contiguous runs of sorted unit ids, one per task,
+    # each task's slices sorted by (file, offset, row_off) so the read
+    # loop deserializes each chunk once
+    sc = spark.sparkContext
+    n_part = max(1, min(n_targets, sc.defaultParallelism))
+    sorted_units = np.sort(target_units.to_numpy())
+    task = np.searchsorted(sorted_units, slices.column("unit").to_numpy()) * n_part // n_targets
+    slices = slices.append_column("task", pa.array(task)).sort_by(
+        [(c, "ascending") for c in ("task", "file", "offset", "row_off")]
+    )
+    work: list[list] = [[] for _ in range(n_part)]
+    cols = ("task", "file", "offset", "length", "row_off", "n_rows")
+    for t, *sl in zip(*(slices.column(c).to_pylist() for c in cols)):
+        work[t].append(sl)
+    bwork = sc.broadcast((plan.to_json(), work))
+    key_col = plan.key_col
+
     def rewrite(iterator):
-        """Decode this task's slices (one-chunk cache, slices arrive
-        sorted by (file, offset)) and feed the rows straight back
-        through the encode stream — payload in and out via storage."""
-        plan_local = EncodePlan.from_json(bplan.value)
+        """Decode this task's slices (one-chunk cache) and feed the rows
+        straight back through the encode stream — payload in and out
+        via storage."""
+        plan_json, planned = bwork.value
 
         def decoded():
             handles: dict[str, object] = {}
             cur_key, cur_tbl = None, None
             try:
                 for batch in iterator:
-                    cols = [batch.column(i).to_pylist() for i in range(5)]
-                    for fname, off, ln, roff, nr in zip(*cols):
-                        if (fname, off) != cur_key:
-                            fh = handles.get(fname)
-                            if fh is None:
-                                fh = handles[fname] = _open_payload(payload_dir, fname)
-                            fh.seek(off)
-                            cur_tbl = _pad_table(deserialize_chunk(fh.read(ln)), union_fields)
-                            cur_key = (fname, off)
-                        for b in cur_tbl.slice(roff, nr).to_batches():
-                            if b.num_rows:
-                                yield b
+                    for i in batch.column("id").to_pylist():
+                        for fname, off, ln, roff, nr in planned[i]:
+                            if (fname, off) != cur_key:
+                                fh = handles.get(fname)
+                                if fh is None:
+                                    fh = handles[fname] = _open_payload(payload_dir, fname)
+                                fh.seek(off)
+                                cur_tbl = _pad_table(deserialize_chunk(fh.read(ln)), union_fields)
+                                cur_key = (fname, off)
+                            for b in cur_tbl.slice(roff, nr).to_batches():
+                                if b.num_rows:
+                                    yield b
             finally:
                 for fh in handles.values():
                     fh.close()
 
         yield from _encode_stream(
             decoded(),
-            plan_local,
+            EncodePlan.from_json(plan_json),
             np.array([], dtype=np.int64),
             key_col,
             payload_dir,
@@ -214,81 +212,40 @@ def compact(
             sort_units_at_flush=True,
         )
 
-    # a unit's slices must meet in one task (so it re-packs into the
-    # fewest chunks); partition the SLICE MANIFEST by unit — the only
-    # exchange in the job, and it carries bookkeeping rows, not payload
-    n_part = max(1, min(n_targets, spark.sparkContext.defaultParallelism))
-    slices = (
-        target_slices_df
-        .select("file", "offset", "length", "row_off", "n_rows", "unit")
-        .repartition(n_part, "unit")
-        .sortWithinPartitions("file", "offset", "row_off")
-        .drop("unit")
+    run_id = "compact-" + uuid.uuid4().hex[:12]
+    new_frags = (
+        spark.range(n_part, numPartitions=n_part).mapInArrow(rewrite, FRAG_SCHEMA).toArrow()
     )
-    new_frags = slices.mapInArrow(rewrite, FRAG_SCHEMA).withColumn("run_id", F.lit(run_id))
 
-    # surviving manifest = everything except the compacted units'
-    # COMMITTED rows: non-target units verbatim, and in-flight runs'
-    # young uncommitted rows (even of target units) must outlive the
-    # rewrite — they commit their lineage later
-    # anti/semi joins move their key columns first — re-project both
-    # legs to the manifest's column order before the positional union
-    survivors = (
-        manifest.join(F.broadcast(committed), ["unit", "run_id"], "left_anti")
-        .select(*manifest.columns)
-        .union(
-            committed_rows.join(F.broadcast(target_units), "unit", "left_anti")
-            .select(*manifest.columns)
-        )
-    )
+    # surviving manifest = every raw row except the compacted units'
+    # COMMITTED rows (the (unit, run_id) pairs the targets were read
+    # from): non-target units verbatim, and in-flight runs' young
+    # uncommitted rows (even of target units) must outlive the rewrite —
+    # they commit their lineage later
+    raw = _read_meta_table(manifest_dir(output_dir), None)
+    gone = slices.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
+    survivors = raw.join(gone, keys=["unit", "run_id"], join_type="left anti")
 
     # version allocation scans EXISTING data_v* dirs (next_manifest_name),
     # never current-pointer+1: a crashed or in-flight DataSource
-    # overwrite's unreferenced dir must not be clobbered or appended into
+    # overwrite's unreferenced dir must not be clobbered or appended into.
+    # Survivors first, then the new rows and their lineage (the new
+    # rows' visibility key), pointer swap last — until the swap, readers
+    # resolve the old manifest, which the new lineage rows cannot touch
+    # (their rows exist only in the new dir)
     new_name = next_manifest_name(output_dir)
     new_dir = (
         os.path.join(output_dir, new_name)
         if "://" not in output_dir
         else f"{output_dir}/{new_name}"
     )
-    survivors.unionByName(new_frags, allowMissingColumns=True).write.mode(
-        "overwrite"
-    ).parquet(new_dir)
-
-    # lineage first (the new rows' visibility key), pointer swap last —
-    # until the swap, readers resolve the old manifest, which the new
-    # lineage rows cannot touch (their rows exist only in the new dir)
-    new_manifest = spark.read.parquet(new_dir)
-    lin_aggs = [
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
-        F.sum("wall_ms").alias("wall_ms"),
-        F.count("*").alias("n_fragments"),
-        F.first("codecs").alias("codecs"),
-    ]
-    if "native" in new_manifest.columns:
-        lin_aggs.append(F.min("native").alias("native"))
-    new_units = (
-        new_manifest.where(F.col("run_id") == run_id).groupBy("unit").agg(*lin_aggs)
-    )
-    (
-        new_units.withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("ok"))
-        .withColumn("batch_tag", F.lit("compact"))
-        .withColumn("committed_at", F.current_timestamp())
-        .write.mode("append")
-        .parquet(lineage_dir)
-    )
+    if survivors.num_rows:
+        _write_parquet_file(new_dir, f"part-{run_id}-survivors.parquet", survivors)
+    commit_fragments(new_frags, output_dir, new_dir, run_id, "compact")
     set_manifest_dir(output_dir, new_name)
 
-    after = (
-        new_manifest.where(F.col("run_id") == run_id)
-        .agg(F.count("*").alias("n"), F.sum("bytes_out").alias("b"))
-        .collect()[0]
-    )
-    report["slices_after"] = int(after.n or 0)
-    report["bytes_after"] = int(after.b or 0)
+    report["slices_after"] = new_frags.num_rows
+    report["bytes_after"] = pc.sum(new_frags.column("bytes_out")).as_py() or 0
     report["manifest_rewritten"] = True
     return report
 

@@ -25,20 +25,33 @@ possible in-flight job so a live task's payload file (written, not yet
 committed) is never swept.  Production default should be hours-to-days;
 0 is for tests and known-quiet tables.
 
-Scale notes: the live-file set is one ``file`` value per committed task
-attempt — collected to the driver it is bounded by total task count
-(~1.6 M for 100 TB at 64 MB units), a few tens of MB.  The payload-dir
-listing is the same driver-side listing Iceberg's action does.  Deletes
-fan out through the cluster above a small threshold so the sweep is not
-bottlenecked on one filesystem client.
+Scale notes: every set here is computed on the driver in Arrow, with
+no Spark job — the manifest is metadata (fragment rows, not data), read
+one file at a time so each row carries its file's age.  The live-file
+set is one ``file`` value per committed task attempt, bounded by total
+task count (~1.6 M for 100 TB at 64 MB units), a few tens of MB.  The
+payload-dir listing is the same driver-side listing Iceberg's action
+does.  Deletes fan out through the cluster above a small threshold so
+the sweep is not bottlenecked on one filesystem client.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
-from .pipeline import _payload_fs, manifest_dir, next_manifest_name, set_manifest_dir
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from .pipeline import (
+    _ok_lineage,
+    _payload_fs,
+    _write_parquet_file,
+    manifest_dir,
+    next_manifest_name,
+    set_manifest_dir,
+)
 
 
 def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
@@ -68,6 +81,24 @@ def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
                 mtime = info.mtime.timestamp() if info.mtime is not None else float("inf")
                 out.append((info.base_name, info.size, mtime))
     return out
+
+
+def _manifest_rows_by_file(data_dir: str) -> pa.Table | None:
+    """Every raw manifest row (orphans included, every column) plus a
+    ``__part`` column naming the manifest file it came from — that
+    file's mtime is the row's age.  None when there is no manifest."""
+    import pyarrow.dataset as pads
+
+    try:
+        dset = pads.dataset(data_dir, format="parquet")
+    except (FileNotFoundError, OSError):
+        return None
+    parts = []
+    for frag in dset.get_fragments():
+        t = frag.to_table(schema=dset.schema)
+        name = pa.scalar(os.path.basename(frag.path))
+        parts.append(t.append_column("__part", pa.repeat(name, t.num_rows)))
+    return pa.concat_tables(parts) if parts else None
 
 
 def _delete_files(payload_dir: str, names: list[str], spark=None) -> None:
@@ -266,10 +297,7 @@ def vacuum(
     Returns counts + reclaimed bytes; decode results are unchanged by
     construction (only never-read data is touched — pytest-gated by a
     crash-mid-commit round trip in ``tests/test_maintenance.py``)."""
-    from pyspark.sql import functions as F
-
     data_dir = manifest_dir(output_dir)
-    lineage_dir = os.path.join(output_dir, "lineage")
     payload_dir = os.path.join(output_dir, "payload")
     # the horizon compares against STORAGE mtimes, so 'now' comes from the
     # storage clock (marker-file round trip) — driver/storage skew must
@@ -285,51 +313,40 @@ def vacuum(
         output_dir, data_dir, now, older_than_sec, dry_run=dry_run
     )
 
-    committed = (
-        spark.read.parquet(lineage_dir).where("status = 'ok'").select("unit", "run_id")
-    )
+    manifest = _manifest_rows_by_file(data_dir)
+    ok = _ok_lineage(output_dir, ["unit", "run_id"])
+    if manifest is None or ok is None:
+        raise ValueError(f"no manifest or lineage under {output_dir}: not an encoded dataset")
+
+    def row_keys(t):
+        return pc.binary_join_element_wise(pc.cast(t["unit"], pa.string()), t["run_id"], "/")
+
+    committed = pc.is_in(row_keys(manifest), value_set=row_keys(ok))
     # per-part-file mtimes give orphan rows their age (each manifest
-    # append writes fresh part files, so file mtime ≈ that run's commit
+    # commit writes fresh part files, so file mtime ≈ that run's commit
     # time); rows in young part files are NEVER treated as orphans
-    part_mtimes = {name: m for name, _sz, m in _list_payload_files(data_dir)}
-    old_parts = {n for n, m in part_mtimes.items() if (now - m) >= older_than_sec}
-    manifest = spark.read.parquet(data_dir).withColumn(
-        "__part", F.element_at(F.split(F.input_file_name(), "/"), -1)
+    old_parts = pa.array(
+        [n for n, _sz, m in _list_payload_files(data_dir) if (now - m) >= older_than_sec],
+        pa.string(),
     )
-    base_cols = [c for c in manifest.columns if c != "__part"]
-    uncommitted = manifest.join(F.broadcast(committed), ["unit", "run_id"], "left_anti")
-    is_old_part = F.col("__part").isin(list(old_parts) or [""])
-    # the anti-join moves its key columns first; re-project to the
-    # manifest's column order so exceptAll aligns positionally
-    orphans = uncommitted.where(is_old_part).select(*base_cols)
-    young_uncommitted = uncommitted.where(~is_old_part)
-    live = manifest.select(*base_cols).exceptAll(orphans)
+    orphan = pc.and_(pc.invert(committed), pc.is_in(manifest["__part"], value_set=old_parts))
+    live = manifest.filter(pc.invert(orphan)).drop_columns(["__part"])
+    orphan_rows = manifest.num_rows - live.num_rows
 
     # payload liveness: referenced by a committed row OR by any
     # uncommitted-but-young row (an in-flight run's files) — plus the
-    # payload file's own mtime horizon, belt and braces.  The driver
-    # collects only the DEAD list (what it must delete anyway, bounded
-    # by actual garbage) via an anti-join against the live references —
-    # never the full live-file set, which at 100 TB is ~10^6 names of
-    # healthy data the sweep doesn't touch
-    committed_rows = manifest.join(F.broadcast(committed), ["unit", "run_id"], "left_semi")
-    keep_refs = (
-        committed_rows.select("file").union(young_uncommitted.select("file")).distinct()
-    )
+    # payload file's own mtime horizon, belt and braces
+    keep_refs = set(pc.unique(live.column("file")).to_pylist())
     listed = _list_payload_files(payload_dir)
-    aged = [(name, int(size)) for name, size, mtime in listed if (now - mtime) >= older_than_sec]
-    dead: list[tuple[str, int]] = []
-    if aged:
-        aged_df = spark.createDataFrame(aged, "file string, size long")
-        dead = [
-            (r.file, r.size)
-            for r in aged_df.join(keep_refs, "file", "left_anti").collect()
-        ]
+    dead = [
+        (name, int(size))
+        for name, size, mtime in listed
+        if (now - mtime) >= older_than_sec and name not in keep_refs
+    ]
     reclaimed = sum(s for _, s in dead)
     if dead and not dry_run:
         _delete_files(payload_dir, [n for n, _ in dead], spark)
 
-    orphan_rows = int(orphans.count())
     rewrote = False
     if orphan_rows and rewrite_manifest and not dry_run:
         # versioned rewrite + atomic pointer swap: write the orphan-free
@@ -344,7 +361,7 @@ def vacuum(
             if "://" not in output_dir
             else f"{output_dir}/{new_name}"
         )
-        live.write.mode("overwrite").parquet(new_dir)
+        _write_parquet_file(new_dir, f"part-vacuum-{uuid.uuid4().hex[:12]}.parquet", live)
         set_manifest_dir(output_dir, new_name)
         rewrote = True
 
@@ -382,7 +399,7 @@ def vacuum(
 
     return {
         "payload_files": len(listed),
-        "live_files": int(keep_refs.count()),
+        "live_files": len(keep_refs),
         "deleted_files": len(dead),
         "reclaimed_bytes": int(reclaimed),
         "orphan_manifest_rows": orphan_rows,

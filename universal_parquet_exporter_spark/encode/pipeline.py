@@ -54,7 +54,7 @@ import numpy as np
 import pyarrow as pa
 
 from ..plans.partitioning import EncodePlan, assign_units_arrow, plan_encode
-from .container import deserialize_chunk, serialize_chunk
+from .container import serialize_chunk
 
 
 def _ddl_type(t: pa.DataType) -> str:
@@ -619,19 +619,20 @@ def next_manifest_name(output_dir: str) -> str:
     return f"data_v{top + 1}"
 
 
-def _read_meta_table(path: str, columns: list[str]) -> pa.Table | None:
+def _read_meta_table(path: str, columns: list[str] | None) -> pa.Table | None:
     """A parquet metadata directory (manifest or lineage) as one Arrow
     table (``_SUCCESS`` markers and ``.``-prefixed temp files ignored by
-    pyarrow.dataset's default ``ignore_prefixes``); None when the
-    directory doesn't exist yet."""
+    pyarrow.dataset's default ``ignore_prefixes``); ``columns=None``
+    reads every column.  None when the directory doesn't exist yet."""
     import pyarrow.dataset as pads
 
     try:
         dset = pads.dataset(path, format="parquet")
     except (FileNotFoundError, OSError):
         return None
-    names = [c for c in columns if c in dset.schema.names]
-    return dset.to_table(columns=names)
+    if columns is None:
+        return dset.to_table()
+    return dset.to_table(columns=[c for c in columns if c in dset.schema.names])
 
 
 def _ok_lineage(output_dir: str, columns: list[str]) -> pa.Table | None:
@@ -1516,24 +1517,6 @@ def _union_probe_schema(payload_dir: str, probes: list[tuple[str, int]]) -> pa.S
     return pa.schema(fields)
 
 
-def _probe_rows(manifest_df) -> list:
-    """One ``(file, offset)`` probe row per DISTINCT column-name set in a
-    committed-manifest DataFrame, derived from the manifest's own codecs
-    maps — probe count tracks schema GENERATIONS, never row count, and
-    no payload byte is read to find them."""
-    from pyspark.sql import functions as F
-
-    return (
-        manifest_df.groupBy(
-            F.to_json(
-                F.sort_array(F.map_keys(F.from_json(F.col("codecs"), "map<string,string>")))
-            ).alias("_ns")
-        )
-        .agg(F.first("file").alias("file"), F.first("offset").alias("offset"))
-        .collect()
-    )
-
-
 def _pad_table(tbl: pa.Table, fields: list) -> pa.Table:
     """Conform a decoded chunk to the union schema's requested fields:
     present columns pass through (decode order already matches), absent
@@ -1767,36 +1750,15 @@ def decode_dataset(
     return out
 
 
-def _committed_manifest_df(spark, output_dir: str):
-    """``(enc, has_stats)`` — the committed manifest as a Spark
-    DataFrame, for :func:`dataset_column_stats`' aggregation: manifest
-    fragment rows semi-joined to lineage ``status='ok'`` on
-    ``(unit, run_id)``, so orphans from a run that crashed between its
-    data and lineage commits are invisible to every reader."""
-    from pyspark.sql import functions as F
-
-    raw = spark.read.parquet(manifest_dir(output_dir))
-    has_stats = "stats" in raw.columns
-    sel = ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "codecs"]
-    if has_stats:
-        sel.append("stats")
-    committed = (
-        spark.read.parquet(os.path.join(output_dir, "lineage"))
-        .where("status = 'ok'")
-        .select("unit", "run_id")
-    )
-    enc = raw.select(*sel).join(F.broadcast(committed), ["unit", "run_id"], "left_semi")
-    return enc, has_stats
-
-
 def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = None):
     """Per-column statistics answered from manifest METADATA — the
     ``MIN/MAX(col)`` diagnostic shape (the reference's only aggregate
     diagnostic is ``MIN/MAX(order_date)``,
     /root/reference/examples/advanced_integration_example.py:168-169)
-    without scanning or decoding a single payload chunk: one Spark
-    aggregation over the committed manifest plus the usual meta-only
-    schema probe (chunk header bytes, never chunk payload).
+    without scanning or decoding a single payload chunk, and without a
+    Spark job: the committed manifest and the meta-only schema probe
+    (chunk header bytes, never chunk payload) come from the scan planner
+    (:mod:`.scan`), and the zone maps aggregate on the driver.
 
     Returns a DataFrame ``(column, min, max, min_exact, max_exact,
     null_count, row_count)``:
@@ -1817,106 +1779,108 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
       NaN-bearing float chunks record no bounds, so they surface as
       inexact rather than wrong.
 
-    Two further never-wrong guards: a chunk whose committed slices
-    cover FEWER rows than its recorded ``_n`` (compaction can supersede
-    a subset of a multi-unit chunk) poisons exactness for every column
-    — its whole-chunk statistics describe dead rows too — and a column
-    whose name would break the ``get_json_object`` path (dots,
-    brackets) reports unknown bounds/counts instead of misreading a
-    failed lookup as data.
+    One further never-wrong guard: a chunk whose committed slices cover
+    FEWER rows than its recorded ``_n`` (compaction can supersede a
+    subset of a multi-unit chunk) poisons exactness for every column —
+    its whole-chunk statistics describe dead rows too.
     """
-    import re
+    from decimal import Decimal
 
-    from pyspark.sql import functions as F
+    import pyarrow.compute as pc
 
-    enc, has_stats = _committed_manifest_df(spark, output_dir)
-    if not has_stats:
+    from .scan import _committed_manifest, _parse_stats, _probe_chunk_schema
+
+    man = _committed_manifest(output_dir)
+    if "stats" not in man.schema.names:
         raise ValueError(f"dataset at {output_dir} predates zone-map statistics")
-    probe_rows = _probe_rows(enc)
-    if not probe_rows:
-        raise ValueError("empty encoded dataset")
-    probe = _union_probe_schema(
-        os.path.join(output_dir, "payload"), [(r.file, r.offset) for r in probe_rows]
-    )
-    cols = list(columns) if columns else [f.name for f in probe]
+    probe = _probe_chunk_schema(output_dir, man)
+    cols = list(columns) if columns else probe.names
     missing = [c for c in cols if c not in probe.names]
     if missing:
         raise ValueError(f"columns not in dataset: {missing}")
 
-    n_rows_total = enc.agg(F.sum("n_rows")).collect()[0][0]
     # slices of one chunk share its stats: dedupe to chunks first,
     # keeping the LIVE row coverage per chunk — compaction can supersede
     # a subset of a multi-unit chunk's slices, after which the chunk's
     # whole-chunk _n/_nc/bounds describe MORE rows than are committed
     # through it, so a partially-covered chunk poisons exactness
-    chunks = enc.groupBy("file", "offset").agg(
-        F.first("stats").alias("stats"), F.sum("n_rows").alias("covered")
+    chunks = man.group_by(["file", "offset"], use_threads=False).aggregate(
+        [("stats", "first"), ("n_rows", "sum")]
     )
-    n_total = F.get_json_object(F.col("stats"), "$._n").cast("long")
-    ncmap = F.get_json_object(F.col("stats"), "$._nc")
-    partial = n_total.isNull() | (F.col("covered") < n_total)
-    aggs = [F.sum(partial.cast("long")).alias("\x1fpartial")]
-    # a name with dots, brackets or quotes would parse as path STRUCTURE
-    safe_cols = [c for c in cols if re.fullmatch(r"[A-Za-z0-9_]+", c)]
-    for c in safe_cols:
-        # bounds compare in the column's own domain: exact epoch ints for
-        # timestamps/dates, the column's decimal, lexicographic strings
-        ftype = probe.field(c).type
-        if pa.types.is_decimal(ftype):
-            cast_to = f"decimal({ftype.precision},{ftype.scale})"
-        elif pa.types.is_floating(ftype):
-            cast_to = "double"
-        elif pa.types.is_integer(ftype) or pa.types.is_timestamp(ftype) or pa.types.is_date(ftype):
-            cast_to = "long"
-        else:
-            cast_to = None
-        is_str = cast_to is None
-        mnj = F.get_json_object(F.col("stats"), f"$.{c}[0]")
-        mxj = F.get_json_object(F.col("stats"), f"$.{c}[1]")
-        mn = mnj.cast(cast_to) if cast_to else mnj
-        mx = mxj.cast(cast_to) if cast_to else mxj
-        ncj = F.get_json_object(F.col("stats"), f"$._nc.{c}").cast("long")
-        # recorded-null-count per chunk: absent key under a recorded map
-        # means the column is absent from the chunk (all-null under
-        # additive evolution); no map at all means unknown
-        nc_eff = F.when(
-            ncmap.isNull() | n_total.isNull(), F.lit(None).cast("long")
-        ).otherwise(F.coalesce(ncj, n_total))
-        all_null = (
-            ncmap.isNotNull()
-            & n_total.isNotNull()
-            & (ncj.isNull() | (ncj >= n_total))
-        )
-        aggs += [
-            F.min(mn).cast("string").alias(f"{c}\x1fmn"),
-            F.max(mx).cast("string").alias(f"{c}\x1fmx"),
-            F.sum((mn.isNull() & ~all_null).cast("long")).alias(f"{c}\x1fmiss_mn"),
-            F.sum((mx.isNull() & ~all_null).cast("long")).alias(f"{c}\x1fmiss_mx"),
-            F.sum(nc_eff).alias(f"{c}\x1fnc"),
-            F.sum(nc_eff.isNull().cast("long")).alias(f"{c}\x1fnc_unknown"),
-            F.max((F.length(mnj) >= _STATS_STR_MAX).cast("long")).alias(f"{c}\x1fat_cap")
-            if is_str
-            else F.max(F.lit(0)).alias(f"{c}\x1fat_cap"),
-        ]
-    row = chunks.agg(*aggs).collect()[0].asDict()
-    any_partial = bool(row["\x1fpartial"])
+    stats = [_parse_stats(s) or {} for s in chunks.column("stats_first").to_pylist()]
+    n_tot = [st.get("_n") if type(st.get("_n")) is int else None for st in stats]
+    # a recorded null-count map needs the chunk's row count beside it
+    nc_maps = [
+        st.get("_nc") if n is not None and isinstance(st.get("_nc"), dict) else None
+        for st, n in zip(stats, n_tot)
+    ]
+    any_partial = any(
+        n is None or cov < n
+        for n, cov in zip(n_tot, chunks.column("n_rows_sum").to_pylist())
+    )
+
+    def typed(conv, v):
+        if v is None:
+            return None
+        try:
+            return conv(v)
+        except (TypeError, ValueError, ArithmeticError):
+            return None
+
+    def render(v):  # decimals in plain notation (never 1E-7)
+        return None if v is None else format(v, "f") if isinstance(v, Decimal) else str(v)
+
+    n_rows_total = pc.sum(man.column("n_rows")).as_py()
 
     out_rows = []
     for c in cols:
-        if c not in safe_cols:
-            # a dotted/bracketed name breaks the get_json_object path —
-            # surface unknown, never fabricated-exact
-            out_rows.append((c, None, None, False, False, None, n_rows_total))
-            continue
-        g = lambda k: row[f"{c}\x1f{k}"]
-        min_exact = g("miss_mn") == 0 and not (g("at_cap") or 0) and not any_partial
-        max_exact = g("miss_mx") == 0 and not any_partial
-        null_count = (
-            None
-            if (g("nc_unknown") or any_partial)
-            else (g("nc") if g("nc") is not None else 0)
-        )
-        out_rows.append((c, g("mn"), g("mx"), min_exact, max_exact, null_count, n_rows_total))
+        # bounds compare in the column's own domain: exact epoch ints for
+        # timestamps/dates, Decimal for decimals, lexicographic strings
+        t = probe.field(c).type
+        if pa.types.is_decimal(t):
+            conv = Decimal  # bounds are stored as exact decimal strings
+        elif pa.types.is_floating(t):
+            conv = float
+        elif pa.types.is_integer(t) or pa.types.is_timestamp(t) or pa.types.is_date(t):
+            conv = int
+        else:
+            conv = str
+        mins, maxs = [], []
+        miss_mn = miss_mx = at_cap = nc_unknown = False
+        nc_sum = 0
+        for st, n, ncm in zip(stats, n_tot, nc_maps):
+            # an absent key under a recorded _nc map means the column is
+            # absent from the chunk (all-null under additive evolution);
+            # no map at all means unknown
+            all_null = False
+            if ncm is None:
+                nc_unknown = True
+            else:
+                nc = ncm.get(c) if type(ncm.get(c)) is int else None
+                all_null = nc is None or nc >= n
+                nc_sum += n if nc is None else nc
+            b = st.get(c)
+            mn, mx = b if isinstance(b, list) and len(b) == 2 else (None, None)
+            if conv is str and isinstance(mn, str) and len(mn) >= _STATS_STR_MAX:
+                at_cap = True
+            mn, mx = typed(conv, mn), typed(conv, mx)
+            if mn is not None:
+                mins.append(mn)
+            elif not all_null:
+                miss_mn = True
+            if mx is not None:
+                maxs.append(mx)
+            elif not all_null:
+                miss_mx = True
+        out_rows.append((
+            c,
+            render(min(mins) if mins else None),
+            render(max(maxs) if maxs else None),
+            not (miss_mn or at_cap or any_partial),
+            not (miss_mx or any_partial),
+            None if nc_unknown or any_partial else nc_sum,
+            n_rows_total,
+        ))
     return spark.createDataFrame(
         out_rows,
         "column string, min string, max string, min_exact boolean, "

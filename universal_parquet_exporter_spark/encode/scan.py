@@ -96,7 +96,7 @@ def _meta_state_token(output_dir: str) -> tuple:
 
 
 _MANIFEST_CACHE: dict[str, tuple[tuple, pa.Table]] = {}
-_MANIFEST_COLS = ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "stats", "codecs"]
+_MANIFEST_COLS = ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "bytes_out", "stats", "codecs"]
 
 
 def _committed_manifest(output_dir: str) -> pa.Table:

@@ -270,8 +270,8 @@ def _current_generation(path: str) -> str:
 def _committed_run_order(path: str) -> list[tuple[int, str]]:
     """Committed runs as a TOTAL ORDER ``(committed_at_µs, run_id)`` —
     the stream's cursor space.  ``committed_at`` is stamped once per
-    commit (``commit_fragments`` stamps one ``datetime.now``;
-    compaction's ``F.current_timestamp()`` is query-constant), so a run
+    commit (``commit_fragments``, which every encode path and compaction
+    share, stamps one ``datetime.now``), so a run
     collapses to one cursor point; ``run_id`` (uuid hex) breaks µs ties
     deterministically.  Runs predating the ``committed_at`` column sort
     at epoch 0 — an old dataset replays entirely in the first batch,
