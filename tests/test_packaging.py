@@ -25,6 +25,18 @@ def test_engine_zip_imports_standalone():
             "import universal_parquet_exporter_spark.operators.relational;"
             "import __spark_entry__;"
             "assert m.__file__.startswith(sys.path[0]), m.__file__;"
+            # --py-files mode: the engine's zip adds importers, and none of
+            # them re-reads its directory on pyspark's per-task call
+            "import importlib, zipimport;"
+            "importlib.invalidate_caches();"
+            "zips = [k for k, v in sys.path_importer_cache.items()"
+            " if isinstance(v, zipimport.zipimporter)];"
+            f"assert any(k.startswith({zip_path!r}) for k in zips), zips;"
+            "reads = [];"
+            "real = zipimport._read_directory;"
+            "zipimport._read_directory = lambda a: reads.append(a) or real(a);"
+            "importlib.invalidate_caches();"
+            "assert reads == [], reads;"
             "print('zip-import-ok')"
         )
         out = subprocess.run(

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     decode_dataset,
@@ -116,3 +117,28 @@ def test_decode_fails_loudly_on_conflicting_generations(spark, tmp_path):
     # conflict surfaces in the decode task's per-chunk type check
     with pytest.raises(Exception, match="schema conflict"):
         decode_dataset(spark, out).collect()
+
+
+def test_timestamp_ntz_appends_match_an_ntz_dataset(spark, tmp_path):
+    """A dataset encoded from TIMESTAMP_NTZ stores naive timestamps: an
+    NTZ append is the same type and compacts with the first generation;
+    a TIMESTAMP (zone-aware) append is a type flip, rejected up front."""
+    out = str(tmp_path / "ntz")
+    df = _docs(spark).withColumn("ts", F.timestamp_seconds("n_chars").cast("timestamp_ntz"))
+    load_or_build_plan(df, EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",)))
+    sds.register(spark)
+    for half in (0, 1):  # every unit gets a slice from each append
+        part = df.where(F.crc32("doc_id") % 2 == half)
+        part.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
+
+    def read_back():
+        got = spark.read.format("upe_encoded").load(out)
+        return _rows(got.withColumn("ts", F.col("ts").cast("timestamp_ntz")).select(*df.columns))
+
+    assert read_back() == _rows(df)
+    aware = _docs(spark).limit(3).withColumn("ts", F.timestamp_seconds("n_chars"))
+    with pytest.raises(Exception, match="type conflict appending column 'ts'"):
+        aware.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
+    rep = compact(spark, out)
+    assert rep["units_compacted"] > 0
+    assert read_back() == _rows(df)

@@ -28,8 +28,9 @@ import sys as _sys
 if "pyarrow" not in _sys.modules:
     _os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
-from .memtune import tune_malloc as _tune_malloc
+from . import memtune as _memtune
 
-_tune_malloc()
+_memtune.tune_malloc()
+_memtune.cache_zip_directories()
 
 __version__ = "0.1.0"

@@ -57,13 +57,13 @@ from ..plans.partitioning import EncodePlan, assign_units_arrow, plan_encode
 from .container import serialize_chunk
 
 
-def _ddl_type(t: pa.DataType) -> str:
+def _ddl_type(t: pa.DataType, ntz: bool = False) -> str:
     if pa.types.is_large_string(t) or pa.types.is_string(t):
         return "string"
     if pa.types.is_large_binary(t) or pa.types.is_binary(t):
         return "binary"
     if pa.types.is_timestamp(t):
-        return "timestamp"
+        return "timestamp_ntz" if ntz and t.tz is None else "timestamp"
     if pa.types.is_int64(t):
         return "long"
     if pa.types.is_int32(t):
@@ -79,7 +79,7 @@ def _ddl_type(t: pa.DataType) -> str:
     if pa.types.is_decimal(t):
         return f"decimal({t.precision},{t.scale})"
     if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
-        return f"array<{_ddl_type(t.value_type)}>"
+        return f"array<{_ddl_type(t.value_type, ntz)}>"
     raise TypeError(f"unsupported type {t}")
 
 

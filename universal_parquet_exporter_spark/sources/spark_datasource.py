@@ -444,7 +444,8 @@ def _check_append_schema(output_dir: str, schema) -> None:
     (older rows null-pad on decode) or OMIT columns (new rows null-pad),
     but a column shared with any existing chunk generation must keep its
     type — a silent type flip would poison the union probe for every
-    future reader, so it fails here, at write planning time."""
+    future reader, so it fails here, at write planning time.  Naive
+    (``TIMESTAMP_NTZ``) and zone-aware timestamps count as two types."""
     man = _committed_manifest(output_dir)
     if man.num_rows == 0:
         return
@@ -452,7 +453,7 @@ def _check_append_schema(output_dir: str, schema) -> None:
     for f in schema.fields:
         if f.name not in union.names:
             continue
-        have = _ddl_type(union.field(f.name).type)
+        have = _ddl_type(union.field(f.name).type, ntz=True)
         got = f.dataType.simpleString().replace("bigint", "long")
         if got != have:
             raise ValueError(
