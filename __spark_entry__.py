@@ -17,72 +17,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_encode_roundtrip as _q_encode_roundtrip,
-)
-from universal_parquet_exporter_spark.encode.maintenance import (
-    q_vacuum_roundtrip as _q_vacuum_roundtrip,
-)
-from universal_parquet_exporter_spark.encode.compaction import (
-    q_compact_roundtrip as _q_compact_roundtrip,
-)
-from universal_parquet_exporter_spark.encode.compaction import (
-    q_compact_filtered as _q_compact_filtered,
-)
-from universal_parquet_exporter_spark.encode.compaction import (
-    q_compact_clustered as _q_compact_clustered,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters_ts as _q_decode_filters_ts,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters_dv as _q_decode_filters_dv,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters_null as _q_decode_filters_null,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters_prefix as _q_decode_filters_prefix,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters_ne as _q_decode_filters_ne,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters_or as _q_decode_filters_or,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_stats_agg as _q_stats_agg,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_encode_roundtrip_embeddings as _q_encode_roundtrip_embeddings,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_key_range as _q_decode_key_range,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_key_range_open as _q_decode_key_range_open,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_decode_filters as _q_decode_filters,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_encode_roundtrip_pruned as _q_encode_roundtrip_pruned,
-)
-from universal_parquet_exporter_spark.encode.pipeline import (
-    q_encode_roundtrip_clustered as _q_encode_roundtrip_clustered,
-)
-from universal_parquet_exporter_spark.sources.spark_datasource import (
-    q_source_read_filtered as _q_source_read_filtered,
-)
-from universal_parquet_exporter_spark.sources.spark_datasource import (
-    q_source_write_roundtrip as _q_source_write_roundtrip,
-)
-from universal_parquet_exporter_spark.sources.spark_datasource import (
-    q_source_stream_read as _q_source_stream_read,
-)
-from universal_parquet_exporter_spark.sources.spark_datasource import (
-    q_evolve_roundtrip as _q_evolve_roundtrip,
-)
+from universal_parquet_exporter_spark import queries as engine
 from universal_parquet_exporter_spark.operators import (
     dedup,
     multimodal,
@@ -115,28 +50,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # driver-row placement is a bet on the cutoff.
     return {
         # --- the encode engine itself, oracle-checked end-to-end ---
-        "encode_roundtrip": _q_encode_roundtrip,
-        "encode_roundtrip_embeddings": _q_encode_roundtrip_embeddings,
-        "encode_roundtrip_pruned": _q_encode_roundtrip_pruned,
-        "encode_roundtrip_clustered": _q_encode_roundtrip_clustered,
-        "decode_key_range": _q_decode_key_range,
-        "decode_key_range_open": _q_decode_key_range_open,
-        "decode_filters": _q_decode_filters,
-        "decode_filters_ts": _q_decode_filters_ts,
-        "decode_filters_dv": _q_decode_filters_dv,
-        "decode_filters_null": _q_decode_filters_null,
-        "decode_filters_prefix": _q_decode_filters_prefix,
-        "decode_filters_ne": _q_decode_filters_ne,
-        "decode_filters_or": _q_decode_filters_or,
-        "stats_agg": _q_stats_agg,
-        "vacuum_roundtrip": _q_vacuum_roundtrip,
-        "compact_roundtrip": _q_compact_roundtrip,
-        "compact_filtered": _q_compact_filtered,
-        "compact_clustered": _q_compact_clustered,
-        "source_read_filtered": _q_source_read_filtered,
-        "source_write_roundtrip": _q_source_write_roundtrip,
-        "source_stream_read": _q_source_stream_read,
-        "evolve_roundtrip": _q_evolve_roundtrip,
+        "encode_roundtrip": engine.q_encode_roundtrip,
+        "encode_roundtrip_embeddings": engine.q_encode_roundtrip_embeddings,
+        "encode_roundtrip_pruned": engine.q_encode_roundtrip_pruned,
+        "encode_roundtrip_clustered": engine.q_encode_roundtrip_clustered,
+        "decode_key_range": engine.q_decode_key_range,
+        "decode_key_range_open": engine.q_decode_key_range_open,
+        "decode_filters": engine.q_decode_filters,
+        "decode_filters_ts": engine.q_decode_filters_ts,
+        "decode_filters_dv": engine.q_decode_filters_dv,
+        "decode_filters_null": engine.q_decode_filters_null,
+        "decode_filters_prefix": engine.q_decode_filters_prefix,
+        "decode_filters_ne": engine.q_decode_filters_ne,
+        "decode_filters_or": engine.q_decode_filters_or,
+        "stats_agg": engine.q_stats_agg,
+        "vacuum_roundtrip": engine.q_vacuum_roundtrip,
+        "compact_roundtrip": engine.q_compact_roundtrip,
+        "compact_filtered": engine.q_compact_filtered,
+        "compact_clustered": engine.q_compact_clustered,
+        "source_read_filtered": engine.q_source_read_filtered,
+        "source_write_roundtrip": engine.q_source_write_roundtrip,
+        "source_stream_read": engine.q_source_stream_read,
+        "evolve_roundtrip": engine.q_evolve_roundtrip,
         # --- round-4-stale rows, certified fresh this round (VERDICT #1) ---
         "media_frames": multimodal.q_media_frames,
         "multimodal_meta": multimodal.q_multimodal_meta,

@@ -48,3 +48,44 @@ def test_engine_zip_imports_standalone():
         )
         assert out.returncode == 0, out.stderr
         assert "zip-import-ok" in out.stdout
+
+
+def test_driver_queries_live_in_one_module():
+    """Engine modules under ``encode/`` and ``sources/`` hold no driver
+    query builders and no Spark-SQL reader of the zone-map JSON: every
+    pruning guard reads the scan planner's own evidence through
+    ``queries.require_pruned``, which checks the one layer the query
+    certifies."""
+    import pytest
+
+    pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
+    hits = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg)
+            engine = rel.split(os.sep)[0] in ("encode", "sources")
+            with open(path, encoding="utf-8") as f:
+                for i, line in enumerate(f, 1):
+                    if "get_json_object" in line or (engine and line.startswith("def q_")):
+                        hits.append(f"{rel}:{i}: {line.strip()}")
+    assert hits == []
+
+    from universal_parquet_exporter_spark.queries import require_pruned
+
+    with pytest.raises(RuntimeError, match="pruned nothing"):
+        require_pruned({"total": 6, "qualifying": 6}, "zone maps", "slices")
+    # each guard holds its own layer: pruned units do not stand in for
+    # zone maps that pruned no slice, nor the reverse
+    both = {"units_total": 4, "units_qualifying": 1, "total": 3, "qualifying": 3}
+    with pytest.raises(RuntimeError, match="pruned nothing"):
+        require_pruned(both, "zone maps", "slices")
+    require_pruned(both, "key range", "units")
+    with pytest.raises(RuntimeError, match="pruned nothing"):
+        require_pruned({**both, "units_qualifying": 4, "qualifying": 1}, "key range", "units")
+    with pytest.raises(RuntimeError, match="no units evidence"):
+        require_pruned({"total": 6, "qualifying": 2}, "key range", "units")
+    require_pruned({"total": 6, "qualifying": 2}, "zone maps", "slices")
+    require_pruned({"total": 1, "qualifying": 1}, "one slice, nothing to prune", "slices")

@@ -622,31 +622,10 @@ def test_decode_key_range_empty_and_inverted(spark, webpages, outdir):
     assert j.where(~F.col("a.lang").eqNullSafe(F.col("b.lang"))).count() == 0
 
 
-def test_prefetched_preserves_order_and_propagates_errors():
-    """The read-ahead wrapper must be a transparent iterator: same items
-    in the same order, producer exceptions re-raised at the consumer,
-    depth<=0 degrading to the plain iterator."""
-    from universal_parquet_exporter_spark.encode.pipeline import _prefetched
-
-    assert list(_prefetched(iter(range(100)), 2)) == list(range(100))
-    assert list(_prefetched(iter(range(10)), 0)) == list(range(10))
-    assert list(_prefetched(iter([]), 2)) == []
-
-    def boom():
-        yield 1
-        raise ValueError("producer failed")
-
-    it = _prefetched(boom(), 2)
-    assert next(it) == 1
-    with pytest.raises(ValueError, match="producer failed"):
-        list(it)
-
-
-def test_encode_job_prefetch_depths_agree(spark, tmp_path):
-    """prefetch_depth must not change WHAT is encoded: depth 0 and the
-    default read-ahead produce byte-identical decoded datasets."""
-    import pyarrow.parquet as pq
-
+def test_encode_parquet_job_tasks_read_several_row_groups(spark, tmp_path):
+    """Six single-row-group files over three map tasks: each task reads
+    two row groups in turn from the broadcast work list, and the decoded
+    dataset equals the source, with every planned unit encoded."""
     from universal_parquet_exporter_spark.encode.pipeline import (
         EncodeJobConfig,
         decode_dataset,
@@ -655,69 +634,12 @@ def test_encode_job_prefetch_depths_agree(spark, tmp_path):
 
     src = str(tmp_path / "src")
     generate_webpages(spark, 3000, partitions=6).write.parquet(src)
-    outs = {}
-    for depth in (0, 2):
-        out = str(tmp_path / f"d{depth}")
-        encode_parquet_job(
-            spark, src,
-            EncodeJobConfig(output_dir=out, map_tasks=3, prefetch_depth=depth),
-        )
-        outs[depth] = sorted(
-            tuple(r) for r in decode_dataset(spark, out).collect()
-        )
-    assert outs[0] == outs[2]
-    assert len(outs[0]) == 3000
-
-
-def test_encode_job_work_dist_modes_agree(spark, tmp_path):
-    """The broadcast+range work distribution must encode exactly what the
-    legacy rdd distribution does — same decoded rows, same unit layout."""
-    import pyarrow.parquet as pq
-
-    from universal_parquet_exporter_spark.encode.pipeline import (
-        EncodeJobConfig,
-        decode_dataset,
-        encode_parquet_job,
-    )
-
-    src = str(tmp_path / "src")
-    generate_webpages(spark, 3000, partitions=6).write.parquet(src)
-    outs = {}
-    units = {}
-    for mode in ("rdd", "range"):
-        out = str(tmp_path / mode)
-        m = encode_parquet_job(
-            spark, src,
-            EncodeJobConfig(output_dir=out, map_tasks=3, work_dist=mode),
-        )
-        outs[mode] = sorted(tuple(r) for r in decode_dataset(spark, out).collect())
-        units[mode] = m["encoded_units"]
-    assert outs["rdd"] == outs["range"]
-    assert len(outs["rdd"]) == 3000
-    assert units["rdd"] == units["range"]
-
-
-def test_prefetched_releases_pump_on_early_exit():
-    """A consumer that abandons the generator (task death mid-stream)
-    must release the pump thread — no permanent block on a full queue."""
-    import threading
-    import time as _time
-
-    from universal_parquet_exporter_spark.encode.pipeline import _prefetched
-
-    produced = []
-
-    def slow_producer():
-        for i in range(100):
-            produced.append(i)
-            yield i
-
-    before = threading.active_count()
-    it = _prefetched(slow_producer(), 2)
-    assert next(it) == 0
-    it.close()  # GeneratorExit -> finally -> stop + drain
-    deadline = _time.time() + 5
-    while threading.active_count() > before and _time.time() < deadline:
-        _time.sleep(0.05)
-    assert threading.active_count() <= before
-    assert len(produced) < 100  # pump stopped early, not run to completion
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 6
+    out = str(tmp_path / "out")
+    m = encode_parquet_job(spark, src, EncodeJobConfig(output_dir=out, map_tasks=3))
+    dec = decode_dataset(spark, out)
+    got = sorted(tuple(r) for r in dec.collect())
+    want = sorted(tuple(r) for r in spark.read.parquet(src).select(*dec.columns).collect())
+    assert len(got) == 3000
+    assert got == want
+    assert m["encoded_units"] == m["plan_units"]

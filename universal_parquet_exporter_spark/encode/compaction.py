@@ -248,168 +248,3 @@ def compact(
     report["bytes_after"] = pc.sum(new_frags.column("bytes_out")).as_py() or 0
     report["manifest_rewritten"] = True
     return report
-
-
-def q_compact_roundtrip(spark, sf_dir: str):
-    """Driver-contract query: ingest the documents table in FOUR small
-    appends (the fragment drift a streaming table accrues), compact, and
-    decode through the rewritten manifest.  The oracle is a plain
-    SELECT, so the driver's value hash certifies the rewrite moved every
-    row bit-identically; the query itself also asserts the rewrite
-    actually merged fragments (fewer slices after than before)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .pipeline import EncodeJobConfig, decode_dataset, encode_job
-
-    out = tempfile.mkdtemp(prefix="upes_cmpq_")
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    for i in range(4):
-        part = df.where(F.crc32(F.col("doc_id")) % 4 == i)
-        cfg = EncodeJobConfig(
-            output_dir=out,
-            key_col="doc_id",
-            size_cols=("text",),
-            target_unit_bytes=4 << 20,
-            chunk_rows=64,
-            skip_completed=False,
-            batch_tag=f"append_{i}",
-        )
-        encode_job(spark, part, cfg)
-
-    rep = compact(spark, out, chunk_rows=32768)
-    if not rep["units_compacted"] or rep["slices_after"] >= rep["slices_before"]:
-        raise RuntimeError(f"compaction merged nothing: {rep}")
-    dec = decode_dataset(spark, out)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-
-
-def q_compact_filtered(spark, sf_dir: str):
-    """Driver-contract query: zone-map pruning STILL WORKS after a
-    compaction rewrite — fragments carry stats, the rewrite re-encodes
-    target units into fresh chunks with freshly computed stats
-    (:func:`~.pipeline._chunk_stats` runs inside ``_encode_stream``
-    unconditionally), and a filtered decode over the rewritten manifest
-    must still skip chunks.  The query raises unless (a) compaction
-    merged fragments and (b) the post-compact manifest's bounds actually
-    disqualify chunks for the predicate — so a green row certifies stats
-    survival through the rewrite, not just row identity."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .pipeline import EncodeJobConfig, decode_dataset, encode_job, manifest_dir
-
-    out = tempfile.mkdtemp(prefix="upes_cmpf_")
-    # zero-padded key: lexicographic unit order == numeric id order, so
-    # post-compact chunks carry NARROW key bounds a bound can disqualify.
-    # small units (64 KiB) → many units; three random-third appends give
-    # each unit ~3 under-filled slices (a unit's wave flushes as one
-    # chunk, so fragmentation here is slices-per-unit, not chunk splits)
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.lpad(F.col("doc_id").cast("string"), 8, "0")
-    )
-    for i in range(3):
-        part = df.where(F.crc32(F.col("doc_id")) % 3 == i)
-        cfg = EncodeJobConfig(
-            output_dir=out,
-            key_col="doc_id",
-            size_cols=("text",),
-            target_unit_bytes=16 << 10,
-            chunk_rows=64,
-            skip_completed=False,
-            batch_tag=f"append_{i}",
-        )
-        encode_job(spark, part, cfg)
-    rep = compact(spark, out, chunk_rows=64, min_avg_slice_rows=64)
-    if not rep["units_compacted"] or rep["slices_after"] >= rep["slices_before"]:
-        raise RuntimeError(f"compaction merged nothing: {rep}")
-
-    # pruning evidence on the REWRITTEN manifest, as one aggregation row
-    bound = "00000300"
-    mx = F.get_json_object(F.col("stats"), "$.doc_id[1]")
-    ev = (
-        spark.read.parquet(manifest_dir(out))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((mx.isNull() | (mx >= bound)).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"post-compact zone maps pruned nothing ({ev.qualifying}/{ev.total} qualify)"
-        )
-    dec = decode_dataset(spark, out, filters=[("doc_id", ">=", bound)])
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "source", "n_chars"
-    )
-
-
-def q_compact_clustered(spark, sf_dir: str):
-    """Driver-contract query: RETRO-CLUSTERING (``compact(cluster_by=…)``,
-    Iceberg's sort-strategy ``rewrite_data_files``) end to end.  A
-    dataset ingested in interleaved arrival order — every chunk mixes
-    all languages, so ``lang = 'de'`` can prune nothing — is rewritten
-    in place with ``cluster_by=("lang",)``; the query raises unless the
-    rewrite ran AND the post-rewrite equality decode actually skipped
-    chunks (distinct-value-set membership on now-narrow chunks), and the
-    oracle is the plain predicate, so a green row certifies both the
-    pruning evidence and bit-identical values through the re-sort."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .pipeline import EncodeJobConfig, decode_dataset, encode_job
-
-    out = tempfile.mkdtemp(prefix="upes_cmpc_")
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.lpad(F.col("doc_id").cast("string"), 8, "0")
-    )
-    # two hash-split appends: each unit gets ~2 slices (selectable) and
-    # every chunk interleaves languages (nothing for equality to prune)
-    for i in range(2):
-        part = df.where(F.crc32(F.col("doc_id")) % 2 == i)
-        cfg = EncodeJobConfig(
-            output_dir=out,
-            key_col="doc_id",
-            size_cols=("text",),
-            target_unit_bytes=16 << 10,
-            chunk_rows=64,
-            skip_completed=False,
-            batch_tag=f"append_{i}",
-        )
-        encode_job(spark, part, cfg)
-
-    ev_pre: dict = {}
-    decode_dataset(
-        spark, out, filters=[("lang", "=", "de")], pruning_evidence=ev_pre
-    )
-    # min_avg_slice_rows above any slice size selects every multi-slice
-    # unit — re-clustering is the goal here, not fragment repair.
-    # chunk_rows=16 < rows-per-lang-per-unit so the sorted rewrite yields
-    # mostly single-language chunks (pruning needs chunks narrower than
-    # the language mix)
-    rep = compact(
-        spark,
-        out,
-        chunk_rows=16,
-        min_avg_slice_rows=1 << 30,
-        cluster_by=("lang",),
-    )
-    if not rep["units_compacted"] or not rep["manifest_rewritten"]:
-        raise RuntimeError(f"retro-clustering rewrote nothing: {rep}")
-    ev: dict = {}
-    dec = decode_dataset(spark, out, filters=[("lang", "=", "de")], pruning_evidence=ev)
-    if ev["qualifying"] >= ev["total"]:
-        raise RuntimeError(
-            f"retro-clustered equality decode pruned nothing ({ev}, pre {ev_pre})"
-        )
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )

@@ -408,51 +408,3 @@ def vacuum(
         "stale_plan_tmp": len(stale_tmp),
         "dry_run": dry_run,
     }
-
-
-def q_vacuum_roundtrip(spark, sf_dir: str):
-    """Driver-contract query: encode the documents table, simulate a run
-    that crashed between the manifest commit and the lineage commit
-    (orphan manifest rows pointing at copied dead payload files, plus a
-    payload-only casualty from a lost task attempt), :func:`vacuum` the
-    dataset, and decode it back.  The oracle is a plain SELECT, so the
-    driver's value hash certifies that the sweep deletes ONLY never-read
-    data — the same crash pattern `tests/test_maintenance.py` gates,
-    here re-proven against independent data every round."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .pipeline import EncodeJobConfig, decode_dataset, encode_job
-
-    out = tempfile.mkdtemp(prefix="upes_vacq_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=4 << 20
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-
-    data_dir = os.path.join(out, "data")
-    pdir = os.path.join(out, "payload")
-    torn = spark.read.parquet(data_dir).withColumn("run_id", F.lit("deadbeef0000"))
-    renames = {
-        r.file: f"frag-torn-{i:04d}.bin"
-        for i, r in enumerate(torn.select("file").distinct().collect())
-    }
-    for src, dst in renames.items():
-        shutil.copyfile(os.path.join(pdir, src), os.path.join(pdir, dst))
-    mapping = F.create_map([F.lit(x) for kv in renames.items() for x in kv])
-    torn.withColumn("file", mapping[F.col("file")]).write.mode("append").parquet(data_dir)
-    with open(os.path.join(pdir, "frag-lost-attempt.bin"), "wb") as f:
-        f.write(b"\x00" * 1024)
-
-    rep = vacuum(spark, out)
-    if not rep["deleted_files"] or not rep["manifest_rewritten"]:
-        raise RuntimeError(f"vacuum swept nothing: {rep}")
-    dec = decode_dataset(spark, out)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source", "n_chars"
-    )

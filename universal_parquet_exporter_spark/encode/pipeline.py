@@ -439,17 +439,6 @@ class EncodeJobConfig:
     # (``<table>.files`` metadata table) as whole-file items whose row
     # groups the tasks expand themselves.
     input_format: str = "parquet"
-    # row groups read ahead of the encode loop by a task-local reader
-    # thread (pyarrow reads release the GIL, so the next group's
-    # IO+decompress overlaps the current chunk's encode kernels).  Task
-    # memory grows by at most depth x one decoded row group.  0 = serial.
-    prefetch_depth: int = 2
-    # how the (file, row-group) work list reaches tasks: "range" (default)
-    # broadcasts the list and drives tasks from a JVM-native range source
-    # — no python work-list relay in the encode stage; "rdd" is the old
-    # parallelize+createDataFrame shape, kept as the measured A/B lever
-    # (BENCH/workdist_ab.py).
-    work_dist: str = "range"
     # write-time clustering (the Iceberg SortOrder analog): the DataFrame
     # encode path range-repartitions + sorts the input by these columns
     # before the map-side encode, and every unit-slice keeps the cluster
@@ -913,68 +902,6 @@ def _resume_keep_mask(units: np.ndarray, done_local: np.ndarray) -> np.ndarray:
     return done_local[pos] != units
 
 
-def _prefetched(iterable, depth: int = 2):
-    """Yield from ``iterable`` with a bounded read-ahead thread: the
-    producer (pyarrow row-group reads — IO + decompress in C++, GIL
-    released) runs up to ``depth`` items ahead of the consumer (the
-    encode kernels), so read time hides behind encode time instead of
-    adding to it.  Exceptions propagate to the consumer; the queue bound
-    caps task memory at depth x one item.  ``depth<=0`` degrades to the
-    plain iterator (the A/B lever)."""
-    if depth <= 0:
-        yield from iterable
-        return
-    import queue as _queue
-    import threading
-
-    q: _queue.Queue = _queue.Queue(maxsize=depth)
-    _end = object()
-    stop = threading.Event()
-
-    def put_or_abandon(item) -> bool:
-        # bounded put that notices consumer abandonment: a task that
-        # dies mid-stream must not leave this thread blocked forever on
-        # a full queue (pinning row groups) in a reused worker.  EVERY
-        # pump-side put goes through here — the terminal _end/exception
-        # puts included, since the consumer's finally-drain is one-pass
-        # and a plain blocking put can land just after it finishes.
-        while not stop.is_set():
-            try:
-                q.put(item, timeout=0.2)
-                return True
-            except _queue.Full:
-                continue
-        return False
-
-    def pump():
-        try:
-            for item in iterable:
-                if not put_or_abandon(item):
-                    return
-        except BaseException as e:  # noqa: BLE001 — relayed to consumer
-            put_or_abandon(e)
-            return
-        put_or_abandon(_end)
-
-    t = threading.Thread(target=pump, daemon=True, name="upes-prefetch")
-    t.start()
-    try:
-        while True:
-            item = q.get()
-            if item is _end:
-                break
-            if isinstance(item, BaseException):
-                raise item
-            yield item
-    finally:
-        stop.set()
-        while True:  # unblock a pump waiting on a full queue
-            try:
-                q.get_nowait()
-            except _queue.Empty:
-                break
-
-
 def _cluster_order(units: np.ndarray, batch: pa.RecordBatch, cluster_cols: tuple) -> np.ndarray:
     """Row order for cluster mode: unit-major, then the cluster columns.
     The batch arrives globally sorted by the cluster columns (encode_job's
@@ -1302,8 +1229,6 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
     chunk_rows = cfg.chunk_rows
     max_buf = cfg.max_buffer_bytes
 
-    prefetch = cfg.prefetch_depth
-
     # task granularity: cfg.map_tasks if pinned (benchmarks pin it so
     # every parallelism level runs identical per-task work), else ~4
     # waves of the current parallelism; chunking no longer ties fragment
@@ -1314,57 +1239,33 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
     # work distribution: the items list is BROADCAST (torrent-shipped
     # once per executor — ~50 MB for 100 TB of 64 MB row groups) and a
     # JVM-native range source carries only slice ids, so the encode
-    # stage has NO python work-list relay in front of it.  The old shape
-    # (`parallelize(items)` + `createDataFrame`) chained a second python
-    # runner into the stage to unpickle the work rows — measured up to
-    # ~40% slower at 8 single-core executors (BENCH/workdist_ab.py);
-    # cfg.work_dist="rdd" keeps it as the A/B lever.
-    bitems = spark.sparkContext.broadcast(items) if cfg.work_dist != "rdd" else None
+    # stage has NO python work-list relay in front of it
+    bitems = spark.sparkContext.broadcast(items)
     n_items = len(items)
 
     def map_encode_files(iterator):
         plan_local = EncodePlan.from_json(bplan.value)
         done_local = bdone.value
+        all_items = bitems.value
 
         def slice_items():
-            if bitems is None:  # rdd mode: items arrive as input rows
-                for batch in iterator:
-                    paths = batch.column("path").to_pylist()
-                    rgs = batch.column("rg").to_pylist()
-                    yield from zip(paths, rgs)
-                return
-            all_items = bitems.value
             for batch in iterator:
                 for s in batch.column("id").to_pylist():
-                    s = int(s)
-                    # the same contiguous equal slicing parallelize uses
-                    yield from all_items[
-                        n_items * s // n_map : n_items * (s + 1) // n_map
-                    ]
+                    # slice s of n_map contiguous, equal slices
+                    yield from all_items[n_items * s // n_map : n_items * (s + 1) // n_map]
 
-        def tables():
+        def batches():
             for path, rg in slice_items():
                 pf = _parquet_file(path)
                 for g in _expand_row_groups(pf, rg):
-                    yield _timestamps_to_us(pf.read_row_group(g, use_threads=False))
-
-        def batches():
-            # read-ahead thread: the NEXT row group's IO+decompress
-            # (GIL-released pyarrow C++) overlaps the current chunk's
-            # encode kernels; bounded queue caps the extra task memory
-            for tbl in _prefetched(tables(), prefetch):
-                yield from tbl.to_batches(max_chunksize=batch_rows)
+                    tbl = _timestamps_to_us(pf.read_row_group(g, use_threads=False))
+                    yield from tbl.to_batches(max_chunksize=batch_rows)
 
         yield from _encode_stream(
             batches(), plan_local, done_local, key_col, payload_dir, chunk_rows, max_buf
         )
 
-    if cfg.work_dist == "rdd":
-        work = spark.createDataFrame(
-            spark.sparkContext.parallelize(items, n_map), "path string, rg int"
-        )
-    else:
-        work = spark.range(n_map, numPartitions=n_map)
+    work = spark.range(n_map, numPartitions=n_map)
     frags = work.mapInArrow(map_encode_files, FRAG_SCHEMA)
     return _finish_encode(frags, plan, done, cfg)
 
@@ -1623,9 +1524,10 @@ def decode_dataset(
     partitions are broadcast and decoded by one task each, then the
     exact residual filter applies.  ``pruning_evidence`` (a dict) is
     filled from the planner's own masks at no extra cost:
-    ``units_total``/``units_qualifying`` when every group bounds the
-    key, and ``total``/``qualifying`` — manifest slice rows before and
-    after zone-map pruning — whenever filters are given.
+    ``units_total``/``units_qualifying`` when ``key_range`` is given or
+    every group bounds the key, and ``total``/``qualifying`` — manifest
+    slice rows before and after zone-map pruning — whenever filters are
+    given.
 
     Schema evolution (additive): appends may add or omit columns — the
     output schema is the union-by-name over all chunk generations
@@ -1888,37 +1790,6 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
     )
 
 
-def q_stats_agg(spark, sf_dir: str):
-    """Driver-contract query: metadata-only MIN/MAX/COUNT — the
-    reference's ``MIN/MAX(order_date)`` diagnostic answered from the
-    manifest without decoding any payload chunk
-    (:func:`dataset_column_stats`).  The value hash certifies the
-    metadata-derived numbers EQUAL the oracle's full-scan aggregate;
-    the query raises unless the engine reports them exact."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_stat_")
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .withColumn("doc_key", F.lpad(F.col("doc_id").cast("string"), 8, "0"))
-        .select("doc_key", "doc_id", "lang", "n_chars")
-    )
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_key", size_cols=("doc_key",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    encode_job(spark, df, cfg)
-    st = dataset_column_stats(spark, out, columns=["n_chars"]).collect()[0]
-    if not (st.min_exact and st.max_exact and st.null_count is not None):
-        raise RuntimeError(f"metadata stats not exact: {st}")
-    return spark.createDataFrame(
-        [(int(st.min), int(st.max), int(st.null_count), int(st.row_count))],
-        "mn long, mx long, nulls long, n_rows long",
-    )
-
-
 def _timestamps_to_us(tbl: pa.Table) -> pa.Table:
     """Spark's INT96 parquet timestamps read back as ns; Spark's Arrow
     boundary only accepts µs (Spark timestamp semantics).  Lossless here —
@@ -1953,526 +1824,3 @@ def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         cols.append(col)
         fields.append(pa.field(f.name, col.type, f.nullable))
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
-
-
-def q_encode_roundtrip(spark, sf_dir: str):
-    """Driver-contract query: run the REAL encode engine over the
-    documents table and decode it back — the oracle is a plain ``SELECT``
-    from the source, so the driver's value-hash check asserts the
-    engine's bit-identical round trip on independent data, not just our
-    own fixtures (north-rule invariant; reference round-trip pattern
-    /root/reference/tests/test_parquet_writer.py:38-58)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_rt_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=4 << 20
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    dec = decode_dataset(spark, out)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-
-
-def q_encode_roundtrip_pruned(spark, sf_dir: str):
-    """Driver-contract query: encode the documents table, then decode
-    ONLY (doc_id, lang) — the container skips the text column's buffers
-    by their recorded lengths without decompressing them
-    (:func:`..container.deserialize_chunk`).  The oracle is a plain
-    two-column SELECT, so the driver's value hash certifies that pruned
-    decode is exact, not just non-crashing."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_rtq_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=4 << 20
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    dec = decode_dataset(spark, out, columns=["doc_id", "lang"])
-    return dec.select(F.col("doc_id").cast("long").alias("doc_id"), "lang")
-
-
-def q_decode_key_range(spark, sf_dir: str):
-    """Driver-contract query: encode the documents table keyed by
-    doc_id-as-string, then decode only the key range ['1', '3'] — the
-    plan's range boundaries prune whole encode units before any payload
-    byte is read, and the residual filter makes the result exact (string
-    comparison semantics, mirrored by the oracle's VARCHAR predicate).
-    The query raises if the plan had multiple units but pruning skipped
-    none, so the driver's green row certifies the pruning path runs, not
-    just the filter."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_krq_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=64 << 10
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    from ..plans.partitioning import units_for_key_range
-
-    plan = _load_plan(out)
-    pruned = units_for_key_range(plan, "1", "3")
-    if plan.n_units > 1 and len(pruned) >= plan.n_units:
-        raise RuntimeError(
-            f"key-range pruning kept all {plan.n_units} units — pruning path not exercised"
-        )
-    dec = decode_dataset(spark, out, key_range=("1", "3"))
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )
-
-
-def q_decode_key_range_open(spark, sf_dir: str):
-    """Driver-contract query: open-ended key-range decode — ``['5', None)``
-    prunes every unit strictly below bucket('5') and leaves the upper end
-    unbounded, the common "resume the scan from key K" shape.  Same
-    pruning-exercised guard as :func:`q_decode_key_range`; the oracle is
-    the equivalent VARCHAR ``>=`` predicate."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_kro_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=64 << 10
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    from ..plans.partitioning import units_for_key_range
-
-    plan = _load_plan(out)
-    pruned = units_for_key_range(plan, "5", None)
-    if plan.n_units > 1 and len(pruned) >= plan.n_units:
-        raise RuntimeError(
-            f"open key-range pruning kept all {plan.n_units} units — pruning path not exercised"
-        )
-    dec = decode_dataset(spark, out, key_range=("5", None))
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )
-
-
-def q_decode_filters(spark, sf_dir: str):
-    """Driver-contract query: zone-map filtered decode — a string bound
-    on the key column (doc_id >= '5', which prunes chunks: keys are
-    range-clustered into units) AND a numeric bound on n_chars (which
-    exercises typed residual filtering).  The query raises unless the
-    stats actually pruned manifest rows, so a green row certifies the
-    pruning path ran, not just the residual.  Oracle: the equivalent
-    VARCHAR + integer predicates."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_zmq_")
-    # small chunk_rows: each task's chunks then cover CONTIGUOUS unit
-    # sub-ranges (the stream flushes units in sorted order), so a key
-    # bound inside the range genuinely prunes chunks even at sf0.001
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    # pruning evidence as ONE aggregation row — never a full-manifest
-    # collect (a null max bound qualifies: unbounded never prunes)
-    mx = F.get_json_object(F.col("stats"), "$.doc_id[1]")
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((mx.isNull() | (mx >= "5")).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"zone maps pruned nothing ({ev.qualifying}/{ev.total} chunks qualify)"
-        )
-    dec = decode_dataset(
-        spark, out, filters=[("doc_id", ">=", "5"), ("n_chars", ">=", 200)]
-    )
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )
-
-
-def q_decode_filters_dv(spark, sf_dir: str):
-    """Driver-contract query: DISTINCT-VALUE-SET equality pruning — an
-    IN term on the interleaved categorical ``lang`` column mixing a
-    present value with one ('eo') that sits strictly INSIDE every
-    chunk's [min, max] lang bounds but occurs in no row.  Bounds can
-    never exclude it; only the recorded exact value sets can, so the
-    query raises unless the sets pruned the absent value's membership in
-    some chunk — then returns the present value's rows for the oracle's
-    value hash (exactness: pruning must not lose a single 'de' row
-    sharing chunks with the pruned check).  Oracle: plain IN predicate."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_dvq_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: no chunk's recorded set holds 'eo'
-    dvj = F.get_json_object(F.col("stats"), "$._dv.lang")
-    member = F.array_contains(F.from_json(dvj, "array<string>"), F.lit("eo"))
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((dvj.isNull() | member).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"distinct-value sets pruned nothing ({ev.qualifying}/{ev.total})"
-        )
-    dec = decode_dataset(spark, out, filters=[("lang", "in", ["de", "eo"])])
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )
-
-
-def q_decode_filters_ne(spark, sf_dir: str):
-    """Driver-contract query: INEQUALITY pruning through the exact
-    distinct-value sets — ``cat != 'en'`` over a categorical that is
-    constant 'en' on key-contiguous runs (the boilerplate-language-strip
-    shape: drop the dominant language).  Bounds can never prove
-    inequality, so the all-'en' chunks (recorded set exactly ``['en']``)
-    are the ONLY prunable evidence; the query raises unless some chunk
-    was disqualified, then returns the surviving rows for the oracle's
-    value hash (exactness: mixed chunks must survive and re-filter to
-    the row).  Oracle: the same ``<>`` predicate as plain SQL."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_neq_")
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .withColumn("doc_key", F.lpad(F.col("doc_id").cast("string"), 8, "0"))
-        .withColumn(
-            "cat",
-            F.when(F.col("doc_id") % 500 < 250, F.lit("en")).otherwise(F.col("lang")),
-        )
-        .select("doc_key", "doc_id", "cat", "n_chars")
-    )
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_key", size_cols=("cat",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: some chunk's recorded value set
-    # holds nothing but the rejected 'en' — disqualified for != 'en'
-    dvj = F.get_json_object(F.col("stats"), "$._dv.cat")
-    survivor = F.exists(
-        F.from_json(dvj, "array<string>"), lambda x: x != F.lit("en")
-    )
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((dvj.isNull() | survivor).cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"inequality pruned nothing ({ev.qualifying}/{ev.total})"
-        )
-    dec = decode_dataset(spark, out, filters=[("cat", "!=", "en")])
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "cat", "n_chars"
-    )
-
-
-def q_encode_roundtrip_clustered(spark, sf_dir: str):
-    """Driver-contract query: WRITE-TIME CLUSTERING
-    (``EncodeJobConfig.cluster_by`` — the Iceberg SortOrder analog the
-    reference's arbitrary-cursor-order export lacks).  The documents
-    table arrives lang-interleaved (every chunk of a plain write holds
-    most languages); clustering by (lang, n_chars) range-repartitions +
-    sorts before encode so chunks collapse to single-language distinct
-    sets, and the decode's ``lang = 'de'`` equality PRUNES chunk payload
-    — the query raises unless ``pruning_evidence`` proves it did.
-    Oracle: the same equality as plain SQL; the value hash certifies the
-    clustered write reorders rows WITHOUT losing or altering one (the
-    north-rule bit-identity, under a permutation)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_clusq_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",),
-        target_unit_bytes=64 << 10, chunk_rows=64, map_tasks=8,
-        cluster_by=("lang", "n_chars"),
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    ev: dict = {}
-    dec = decode_dataset(
-        spark, out, filters=[("lang", "=", "de")], pruning_evidence=ev
-    )
-    if ev["total"] > 1 and ev["qualifying"] >= ev["total"]:
-        raise RuntimeError(
-            f"clustered write pruned nothing ({ev['qualifying']}/{ev['total']})"
-        )
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "n_chars"
-    )
-
-
-def q_decode_filters_null(spark, sf_dir: str):
-    """Driver-contract query: NULL-COUNT pruning — ``IS NOT NULL`` on a
-    column that is null on a key-contiguous half of the table (nulls
-    clustered by the zero-padded key, so whole chunks are all-null —
-    min/max bounds say nothing about nulls, only the recorded per-chunk
-    null counts can disqualify).  The query raises unless the counts
-    actually pruned chunks, then returns the non-null rows for the
-    oracle's value hash (exactness: chunks MIXING null and non-null rows
-    must survive pruning and re-filter exactly).  Oracle: the same
-    predicate as plain SQL."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_ncq_")
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .withColumn("doc_key", F.lpad(F.col("doc_id").cast("string"), 8, "0"))
-        .withColumn(
-            "opt_lang",
-            F.when(F.col("doc_id") % 500 < 250, F.lit(None)).otherwise(F.col("lang")),
-        )
-        .select("doc_key", "doc_id", "opt_lang", "n_chars")
-    )
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_key", size_cols=("opt_lang",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: some chunk is all-null in
-    # opt_lang (nc == _n), i.e. disqualified for IS NOT NULL
-    nc = F.get_json_object(F.col("stats"), "$._nc.opt_lang").cast("long")
-    n_total = F.get_json_object(F.col("stats"), "$._n").cast("long")
-    survives = nc.isNotNull() & (nc < n_total)
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum(survives.cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"null counts pruned nothing ({ev.qualifying}/{ev.total})"
-        )
-    dec = decode_dataset(spark, out, filters=[("opt_lang", "not_null", None)])
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "opt_lang", "n_chars"
-    )
-
-
-def q_decode_filters_prefix(spark, sf_dir: str):
-    """Driver-contract query: STRING-PREFIX pruning — ``startswith`` on
-    the zero-padded key column (the url-prefix scan shape over a
-    url-keyed Common-Crawl table: keys are clustered, so narrow
-    per-chunk [min, max] key bounds disqualify every chunk outside the
-    prefix's range).  Raises unless the bounds actually pruned chunks,
-    then returns the matching rows for the oracle's value hash.
-    Oracle: the equivalent integer BETWEEN."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_pfx_")
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .withColumn("doc_key", F.lpad(F.col("doc_id").cast("string"), 8, "0"))
-        .select("doc_key", "doc_id", "lang", "n_chars")
-    )
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_key", size_cols=("doc_key",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    encode_job(spark, df, cfg)
-    # evidence as ONE aggregation row: most chunks' key bounds exclude
-    # the prefix '0000012' (doc_ids 120-129)
-    mn = F.get_json_object(F.col("stats"), "$.doc_key[0]")
-    mx = F.get_json_object(F.col("stats"), "$.doc_key[1]")
-    pfx = F.lit("0000012")
-    survives = (
-        (mx.isNull() | (mx >= pfx))
-        & (mn.isNull() | (F.substring(mn, 1, 7) <= pfx))
-    )
-    ev = (
-        spark.read.parquet(os.path.join(out, "data"))
-        .agg(
-            F.count("*").alias("total"),
-            F.sum(survives.cast("long")).alias("qualifying"),
-        )
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"prefix bounds pruned nothing ({ev.qualifying}/{ev.total})"
-        )
-    dec = decode_dataset(spark, out, filters=[("doc_key", "startswith", "0000012")])
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )
-
-
-def q_decode_filters_or(spark, sf_dir: str):
-    """Driver-contract query: DISJUNCTIVE (DNF) filtered decode — the
-    out-of-range scan ``key < a OR key >= b`` over a key-clustered
-    dataset.  Filters in pyarrow's list-of-lists shape are OR-ed across
-    groups; a chunk survives when ANY group's bounds keep it, so the
-    chunks covering the middle of the key range are skipped before any
-    payload byte.  Raises unless that pruning actually fired; the
-    oracle is the plain OR predicate, so a green row certifies both
-    halves of the union arrive exactly once (no loss, no duplication
-    across groups)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_dnf_")
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .withColumn("doc_key", F.lpad(F.col("doc_id").cast("string"), 8, "0"))
-        .select("doc_key", "doc_id", "lang", "n_chars")
-    )
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_key", size_cols=("doc_key",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    encode_job(spark, df, cfg)
-    ev: dict = {}
-    dec = decode_dataset(
-        spark,
-        out,
-        filters=[[("doc_key", "<", "00000100")], [("doc_key", ">=", "00000400")]],
-        pruning_evidence=ev,
-    )
-    if ev["total"] > 1 and ev["qualifying"] >= ev["total"]:
-        raise RuntimeError(
-            f"disjunctive bounds pruned nothing ({ev['qualifying']}/{ev['total']})"
-        )
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang", "n_chars"
-    )
-
-
-def q_decode_filters_ts(spark, sf_dir: str):
-    """Driver-contract query: TIMESTAMP zone-map pruning — the canonical
-    Common-Crawl range filter (``warc_ts``-shaped; SURVEY §1.2, and the
-    reference's only range diagnostic is ``MIN/MAX(order_date)``,
-    /root/reference/examples/advanced_integration_example.py:168-169).
-    The events table is keyed by zero-padded event_id (corr ≈ 1 with
-    ``ts``), so chunks carry narrow epoch-µs ts bounds; the query raises
-    unless the bounds actually disqualify chunks, certifying the
-    timestamp pruning path ran — not just the exact residual.  Oracle:
-    the same half-month window as plain SQL."""
-    import tempfile
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_zts_")
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .withColumn("event_key", F.lpad(F.col("event_id").cast("string"), 10, "0"))
-    )
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="event_key", size_cols=("props",),
-        target_unit_bytes=64 << 10, chunk_rows=128,
-    )
-    encode_job(spark, df, cfg)
-    lo = datetime(2024, 1, 8)
-    hi = datetime(2024, 1, 15)
-    # pruning evidence as ONE aggregation row (no manifest collect):
-    # a chunk survives iff its recorded [min,max] epoch-µs window can
-    # intersect [lo, hi]; null bounds keep (unbounded never prunes)
-    mn = F.get_json_object(F.col("stats"), "$.ts[0]").cast("long")
-    mx = F.get_json_object(F.col("stats"), "$.ts[1]").cast("long")
-    qual = (mx.isNull() | (mx >= ts_value_us(lo))) & (mn.isNull() | (mn <= ts_value_us(hi)))
-    ev = (
-        spark.read.parquet(manifest_dir(out))
-        .agg(F.count("*").alias("total"), F.sum(qual.cast("long")).alias("qualifying"))
-        .collect()[0]
-    )
-    if ev.total > 1 and ev.qualifying >= ev.total:
-        raise RuntimeError(
-            f"timestamp zone maps pruned nothing ({ev.qualifying}/{ev.total} chunks qualify)"
-        )
-    dec = decode_dataset(spark, out, filters=[("ts", ">=", lo), ("ts", "<=", hi)])
-    # µs epoch ints: identical across engines regardless of how each
-    # stringifies timestamps (same convention as events_agg); doubles
-    # rounded to 2dp like every other raw-double query column
-    return dec.select(
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_type",
-        F.round(F.col("value"), 2).alias("value"),
-    )
-
-
-def q_encode_roundtrip_embeddings(spark, sf_dir: str):
-    """Driver-contract query: round-trip the ``embeddings`` table —
-    ``array<float>`` vectors plus int ids — through the REAL engine,
-    then explode each vector to (vec_id, label, pos, val) scalars so the
-    driver's value-hash compares every element positionally (nested
-    arrays don't sort/hash portably across engines).  Certifies that
-    list columns survive the codec layer bit-identically — the payload
-    an LLM-data engine stores most after text."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="upes_rte_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="vec_id", size_cols=(), target_unit_bytes=1 << 20
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).withColumn(
-        "vec_id", F.col("vec_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    dec = decode_dataset(spark, out)
-    return dec.select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "label",
-        F.posexplode("embedding").alias("pos", "val"),
-    )

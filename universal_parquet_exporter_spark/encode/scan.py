@@ -394,26 +394,25 @@ def plan_partitions(
     prunable term keeps everything.  ``key_range=(lo, hi)`` (inclusive,
     None = open) keeps only the units that can hold such keys.  With
     ``evidence``, the counts land in it: ``units_total`` /
-    ``units_qualifying`` when every group bounds the key, and ``total``
-    / ``qualifying`` — manifest slice rows before and after zone-map
-    pruning — when filters are given."""
+    ``units_qualifying`` when a ``key_range`` is given or every group
+    bounds the key, and ``total`` / ``qualifying`` — manifest slice rows
+    before and after zone-map pruning — when filters are given."""
     payload_dir = os.path.join(output_dir, "payload")
     want_fields = [probe_schema.field(c) for c in columns] if columns else list(probe_schema)
     plan = _load_plan(output_dir) if (groups or key_range is not None) else None
     if plan is not None:
-        units = man.column("unit").to_numpy(zero_copy_only=False).astype(np.int64)
-        keep = np.ones(man.num_rows, dtype=bool)
+        allowed = _group_units(plan, groups) if groups else None
         if key_range is not None:
             kr_units = np.asarray(units_for_key_range(plan, *key_range), dtype=np.int64)
-            keep &= np.isin(units, kr_units)
-        allowed = _group_units(plan, groups) if groups else None
+            allowed = kr_units if allowed is None else np.intersect1d(allowed, kr_units)
         if allowed is not None:
             if evidence is not None:
-                evidence["units_total"] = int(sum(plan.salts))
+                evidence["units_total"] = plan.n_units
                 evidence["units_qualifying"] = int(allowed.size)
-            keep &= np.isin(units, allowed)
-        if not keep.all():
-            man = man.filter(pa.array(keep))
+            units = man.column("unit").to_numpy(zero_copy_only=False).astype(np.int64)
+            keep = np.isin(units, allowed)
+            if not keep.all():
+                man = man.filter(pa.array(keep))
     norm_groups = [_normalize_terms(g, probe_schema) for g in groups]
     return _pack_chunk_partitions(
         man, payload_dir, columns, want_fields, target_bytes,

@@ -136,13 +136,13 @@ FORMAT_NAME = "upe_encoded"
 _PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
 
 
-def register(spark, enable_filter_pushdown: bool = True) -> None:
+def register(spark) -> None:
     """Register the ``upe_encoded`` format on a session.  Python-source
     filter pushdown is OFF by default in Spark and a reader implementing
-    ``pushFilters`` hard-fails without it, so this also flips the conf
-    (runtime-settable; verified on 4.1.2)."""
-    if enable_filter_pushdown:
-        spark.conf.set(_PUSHDOWN_CONF, "true")
+    ``pushFilters`` hard-fails without it, so this also turns the conf on
+    (runtime-settable; verified on 4.1.2).  A session that turns it off
+    again gets the plain reader (:meth:`EncodedContainerDataSource.reader`)."""
+    spark.conf.set(_PUSHDOWN_CONF, "true")
     spark.dataSource.register(EncodedContainerDataSource)
 
 
@@ -631,158 +631,6 @@ class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
 # ---------------------------------------------------------------------------
 # the DataSource
 # ---------------------------------------------------------------------------
-
-
-def q_source_read_filtered(spark, sf_dir: str):
-    """Driver-contract query: encode the documents table, then read it
-    back through the registered ``upe_encoded`` Spark format with a
-    key-range + zone-map predicate — the filters reach the reader via
-    Catalyst's pushFilters, prune units/chunks before payload reads, and
-    Spark applies the exact residual.  The oracle is the same predicate
-    as plain SQL over the source, so the driver's value hash certifies
-    the DataSource read path end to end (pushdown included), not just
-    the function-call decode."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..encode.pipeline import EncodeJobConfig, encode_job
-
-    out = tempfile.mkdtemp(prefix="upes_dsr_")
-    cfg = EncodeJobConfig(
-        output_dir=out, key_col="doc_id", size_cols=("text",),
-        target_unit_bytes=256 << 10, chunk_rows=128,
-    )
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    encode_job(spark, df, cfg)
-    register(spark)
-    r = (
-        spark.read.format("upe_encoded")
-        .load(out)
-        .where((F.col("doc_id") >= "10") & (F.col("doc_id") <= "24") & (F.col("n_chars") > 200))
-    )
-    return r.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "n_chars"
-    )
-
-
-def q_source_write_roundtrip(spark, sf_dir: str):
-    """Driver-contract query: write the documents table through the
-    ``upe_encoded`` SINK (Spark's commit protocol carrying the engine's
-    manifest rows as task commit messages) and read it back through the
-    same format.  A plain SELECT oracle certifies that the
-    protocol-committed dataset is bit-identical to the source — the
-    DataSource twin of ``encode_roundtrip``."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..encode.pipeline import EncodeJobConfig, load_or_build_plan
-
-    out = tempfile.mkdtemp(prefix="upes_dsw_")
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    load_or_build_plan(
-        df,
-        EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=1 << 20),
-    )
-    register(spark)
-    df.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
-    dec = spark.read.format("upe_encoded").load(out)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-
-
-def q_source_stream_read(spark, sf_dir: str):
-    """Driver-contract query: two separate commits into an encoded
-    dataset (an engine ``encode_job`` then a DataSource append), then
-    the WHOLE history consumed through the ``upe_encoded`` STREAMING
-    READER (``availableNow``) — each micro-batch lands in a parquet
-    staging dir via ``foreachBatch``, and the returned DataFrame is
-    the union of the emitted batches.  A plain SELECT oracle certifies
-    that tailing the commit log reproduces the dataset exactly (no row
-    lost, none duplicated across the offset intervals) — the
-    stream-read twin of ``source_write_roundtrip``."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..encode.pipeline import EncodeJobConfig, encode_job
-
-    out = tempfile.mkdtemp(prefix="upes_dsr_stream_")
-    staging = tempfile.mkdtemp(prefix="upes_dsr_stage_")
-    ck = tempfile.mkdtemp(prefix="upes_dsr_ck_")
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    cfg = EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",))
-    encode_job(spark, df.where("doc_id < '25'"), cfg)
-    register(spark)
-    df.where("doc_id >= '25'").write.format("upe_encoded").option(
-        "key_col", "doc_id"
-    ).mode("append").save(out)
-
-    q = (
-        spark.readStream.format("upe_encoded")
-        .load(out)
-        .writeStream.foreachBatch(
-            lambda bdf, bid: bdf.write.mode("append").parquet(staging)
-        )
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(staging)
-    return got.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-
-
-def q_evolve_roundtrip(spark, sf_dir: str):
-    """Driver-contract query: two appends with DIFFERENT schemas —
-    generation 1 keeps the base columns, generation 2 drops ``source``
-    and adds ``score`` — then a full decode through the evolved union
-    schema.  The oracle is the equivalent UNION ALL with typed NULLs, so
-    the driver's value hash certifies the null-padded evolution
-    semantics end to end (meta-only union probe, per-chunk padding),
-    not just that it runs."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..encode.pipeline import EncodeJobConfig, decode_dataset, load_or_build_plan
-
-    out = tempfile.mkdtemp(prefix="upes_evo_")
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-    load_or_build_plan(
-        df,
-        EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",), target_unit_bytes=1 << 20),
-    )
-    register(spark)
-    old = df.where("doc_id < '25'")
-    new = (
-        df.where("doc_id >= '25'")
-        .drop("source")
-        .withColumn("score", F.col("n_chars").cast("double") / 10.0)
-    )
-    old.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
-    new.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
-    dec = decode_dataset(spark, out)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-        "lang",
-        "source",
-        "n_chars",
-        "score",
-    )
 
 
 class EncodedContainerDataSource(DataSource):
