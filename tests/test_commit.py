@@ -159,3 +159,48 @@ def test_parquet_job_runs_two_spark_jobs_fresh_and_one_on_resume(spark, webpages
     out = str(tmp_path / "d")
     assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 2
     assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1
+
+
+def test_every_commit_file_is_synced_before_its_rename(tmp_path, monkeypatch):
+    """On local storage every file the commit protocol renames into place
+    (manifest, lineage, ``plan.json``, the manifest pointer) is fsync'd
+    while it still has its temp name — before the rename — and a task's
+    payload file is fsync'd on close, so a crash can never leave a
+    renamed file whose bytes never reached disk."""
+    synced = []
+    real_fsync = os.fsync
+
+    def fsync(fd):
+        synced.append(os.readlink(f"/proc/self/fd/{fd}"))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    out = os.path.realpath(str(tmp_path))
+    frags = pa.Table.from_pylist(
+        [
+            dict(unit=0, first_key="a", n_rows=1, row_off=0, bytes_in=1, bytes_out=1,
+                 wall_ms=0.0, codecs="{}", file="f.bin", offset=0, length=1, stats=None,
+                 native=True)
+        ],
+        schema=pipeline.FRAG_PA_SCHEMA,
+    )
+    commit_id, _ = pipeline.commit_fragments(frags, out, os.path.join(out, "data"), "sync")
+    pipeline._persist_plan(EncodePlan("url", [], [1]), out)
+    pipeline.set_manifest_dir(out, "data")
+    writer = pipeline._TaskPayloadWriter(os.path.join(out, "payload"))
+    writer.write(b"payload")
+    before_close = list(synced)
+    writer.close()
+
+    name = f"part-{commit_id}.parquet"
+    renamed = {
+        os.path.join(out, "data", f".tmp-{name}"): os.path.join(out, "data", name),
+        os.path.join(out, "lineage", f".tmp-{name}"): os.path.join(out, "lineage", name),
+        os.path.join(out, f"plan.json.tmp{os.getpid()}"): os.path.join(out, "plan.json"),
+        os.path.join(out, f"manifest_current.tmp{os.getpid()}"): os.path.join(out, "manifest_current"),
+    }
+    assert sorted(before_close) == sorted(renamed)
+    for tmp, final in renamed.items():
+        assert not os.path.exists(tmp) and os.path.isfile(final)
+    assert synced[len(before_close):] == [os.path.join(out, "payload", writer.name)]
+

@@ -16,7 +16,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from universal_parquet_exporter_spark.encode.maintenance import vacuum
+from tests.conftest import _spark_jobs
+from universal_parquet_exporter_spark.encode.maintenance import _delete_files, vacuum
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     decode_dataset,
@@ -180,7 +181,7 @@ def test_vacuum_horizon_spares_young_orphan_rows(spark, webpages, outdir):
 def test_vacuum_skips_stray_subdirectory(spark, webpages, outdir):
     """A stray subdirectory under payload/ (checkpoint dir, _tmp dir from
     some other tool) must be ignored, not classified as a dead file — the
-    POSIX listing filters regular files like the pyarrow branch does."""
+    payload listing keeps regular files only."""
     cfg = EncodeJobConfig(output_dir=outdir, target_unit_bytes=2 << 20)
     encode_job(spark, webpages, cfg)
     pdir = os.path.join(outdir, "payload")
@@ -311,3 +312,20 @@ def test_vacuum_heals_interrupted_swap(spark, webpages, outdir):
     assert not os.path.exists(data_dir + ".vacuum_tmp")
     assert rep["orphan_manifest_rows"] == 0
     assert decode_dataset(spark, outdir).count() == N_ROWS
+
+
+def test_delete_files_skips_missing_names_on_both_sides_of_the_fan_out(spark, outdir):
+    """Above 256 names the sweep's deletes run as one Spark job, below it
+    on the driver; both delete every listed file and skip a name whose
+    file is already gone."""
+    pdir = os.path.join(outdir, "payload")
+    os.makedirs(pdir)
+    for n in (10, 300):
+        names = [f"frag-{n}-{i}.bin" for i in range(n)]
+        for name in names[3:]:
+            with open(os.path.join(pdir, name), "wb") as f:
+                f.write(b"x")
+        jobs = _spark_jobs(spark, lambda: _delete_files(pdir, names, spark))
+        assert jobs == (1 if n > 256 else 0)
+        assert os.listdir(pdir) == []
+

@@ -89,3 +89,38 @@ def test_driver_queries_live_in_one_module():
         require_pruned({"total": 6, "qualifying": 2}, "key range", "units")
     require_pruned({"total": 6, "qualifying": 2}, "zone maps", "slices")
     require_pruned({"total": 1, "qualifying": 1}, "one slice, nothing to prune", "slices")
+
+
+def test_dataset_storage_has_one_path():
+    """Every dataset file operation runs through the ``pyarrow.fs``
+    filesystem that ``pipeline._payload_fs`` resolves, plain paths
+    included: no ``fs is None`` POSIX branch, and no ``"://"`` test
+    outside the resolver and the streaming writer's checkpoint-token
+    hash (which names a Spark checkpoint, not a dataset file)."""
+    import re
+
+    pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
+    posix_branch = re.compile(r"\b(_?fs|f|self\._fs) is None\b")
+    allowed = [
+        ("encode/pipeline.py", 'if "://" in path:'),
+        ("sources/spark_datasource.py", 'norm = ck if "://" in ck else os.path.abspath(ck)'),
+    ]
+    branches, scheme_tests = [], []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                for i, line in enumerate(f, 1):
+                    if posix_branch.search(line):
+                        branches.append(f"{rel}:{i}: {line.strip()}")
+                    if '"://"' in line:
+                        scheme_tests.append((rel, line.strip()))
+    assert branches == []
+    for site in allowed:
+        if site in scheme_tests:
+            scheme_tests.remove(site)
+    assert scheme_tests == []
+

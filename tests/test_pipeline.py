@@ -226,6 +226,38 @@ def test_uri_scheme_output_dir(spark, webpages, outdir):
     assert _mismatches_cols(webpages, dec) == 0
 
 
+def test_plain_relative_and_file_uri_paths_resolve_alike(tmp_path, monkeypatch):
+    """A relative path, its absolute form and its ``file://`` URI name
+    the same dataset: each resolves to ``LocalFileSystem`` at the same
+    absolute path, and whatever one form writes (pointer, version dir,
+    plan, metadata file) every form reads back identically."""
+    from pyarrow import fs as pafs
+
+    from universal_parquet_exporter_spark.encode import pipeline
+
+    monkeypatch.chdir(tmp_path)
+    absd = str(tmp_path / "ds")
+    forms = ["ds", absd, "file://" + absd]
+    for p in forms:
+        fs, root = pipeline._payload_fs(p)
+        assert isinstance(fs, pafs.LocalFileSystem)
+        assert root == absd
+
+    tbl = pa.table({"unit": [1, 2], "run_id": ["a", "b"]})
+    for i, p in enumerate(forms):
+        name = f"data_v{i + 1}"
+        pipeline.set_manifest_dir(p, name)
+        pipeline._write_parquet_file(os.path.join(p, name), "part-x.parquet", tbl)
+        plan = EncodePlan("url", [f"k{i}"], [1, 2])
+        pipeline._persist_plan(plan, p)
+        for q in forms:
+            mdir = pipeline.manifest_dir(q)
+            assert pipeline._payload_fs(mdir)[1] == os.path.join(absd, name)
+            assert pipeline.next_manifest_name(q) == f"data_v{i + 2}"
+            assert pipeline._load_plan(q).to_json() == plan.to_json()
+            assert pipeline._read_meta_table(mdir, None).equals(tbl)
+
+
 def _mismatches_cols(df, dec):
     j = df.alias("a").join(dec.alias("b"), "url", "full")
     return j.where(~F.col("a.text").eqNullSafe(F.col("b.text"))).count()

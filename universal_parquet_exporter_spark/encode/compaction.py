@@ -234,11 +234,7 @@ def compact(
     # resolve the old manifest, which the new lineage rows cannot touch
     # (their rows exist only in the new dir)
     new_name = next_manifest_name(output_dir)
-    new_dir = (
-        os.path.join(output_dir, new_name)
-        if "://" not in output_dir
-        else f"{output_dir}/{new_name}"
-    )
+    new_dir = os.path.join(output_dir, new_name)
     if survivors.num_rows:
         _write_parquet_file(new_dir, f"part-{run_id}-survivors.parquet", survivors)
     commit_fragments(new_frags, output_dir, new_dir, run_id, "compact")

@@ -43,10 +43,12 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyarrow import fs as pafs
 
 from .pipeline import (
     _ok_lineage,
     _payload_fs,
+    _remove_files,
     _write_parquet_file,
     manifest_dir,
     next_manifest_name,
@@ -54,33 +56,23 @@ from .pipeline import (
 )
 
 
-def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
-    """(name, size, mtime_epoch) for every payload file."""
-    fs, root = _payload_fs(payload_dir)
-    out = []
-    if fs is None:
-        if not os.path.isdir(root):
-            return []
-        # regular files only, matching the pyarrow branch's FileType.File
-        # filter — a stray subdirectory must not be classified as a dead
-        # payload file (os.unlink on it would crash the sweep)
-        for entry in os.scandir(root):
-            if not entry.is_file(follow_symlinks=False):
-                continue
-            st = entry.stat()
-            out.append((entry.name, st.st_size, st.st_mtime))
-    else:
-        from pyarrow.fs import FileSelector, FileType
+def _mtime(info) -> float:
+    """A listed file's mtime; a missing one (some object stores) means
+    its age is unknowable, so it counts as infinitely YOUNG — horizons
+    then protect the file rather than sweep it (0.0 would invert the
+    safety)."""
+    return info.mtime.timestamp() if info.mtime is not None else float("inf")
 
-        sel = FileSelector(root, allow_not_found=True)
-        for info in fs.get_file_info(sel):
-            if info.type == FileType.File:
-                # missing mtime (some object stores) = age unknowable:
-                # treat as infinitely YOUNG so horizons protect the file
-                # rather than sweep it (0.0 would invert the safety)
-                mtime = info.mtime.timestamp() if info.mtime is not None else float("inf")
-                out.append((info.base_name, info.size, mtime))
-    return out
+
+def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
+    """(name, size, mtime_epoch) for every payload file — regular files
+    only: a stray subdirectory is not a dead payload file."""
+    fs, root = _payload_fs(payload_dir)
+    return [
+        (info.base_name, info.size, _mtime(info))
+        for info in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
+        if info.type == pafs.FileType.File
+    ]
 
 
 def _manifest_rows_by_file(data_dir: str) -> pa.Table | None:
@@ -106,27 +98,11 @@ def _delete_files(payload_dir: str, names: list[str], spark=None) -> None:
     so one filesystem client isn't the bottleneck."""
     if spark is not None and len(names) > 256:
         def rm(it):
-            fs, root = _payload_fs(payload_dir)
-            for n in it:
-                try:
-                    if fs is None:
-                        os.unlink(os.path.join(root, n))
-                    else:
-                        fs.delete_file(f"{root}/{n}")
-                except FileNotFoundError:
-                    pass
+            _remove_files(payload_dir, it)
 
         spark.sparkContext.parallelize(names, max(1, len(names) // 1024)).foreachPartition(rm)
         return
-    fs, root = _payload_fs(payload_dir)
-    for n in names:
-        try:
-            if fs is None:
-                os.unlink(os.path.join(root, n))
-            else:
-                fs.delete_file(f"{root}/{n}")
-        except FileNotFoundError:
-            pass
+    _remove_files(payload_dir, names)
 
 
 def _storage_now(output_dir: str) -> float:
@@ -140,17 +116,9 @@ def _storage_now(output_dir: str) -> float:
     store exposes no mtime (then the horizon must also absorb worst-case
     skew — documented in :func:`vacuum`)."""
     fs, root = _payload_fs(output_dir)
-    name = ".vacuum_clock_probe"
+    path = f"{root}/.vacuum_clock_probe"
     try:
-        if fs is None:
-            os.makedirs(root, exist_ok=True)
-            path = os.path.join(root, name)
-            with open(path, "wb") as f:
-                f.write(b"x")
-            mtime = os.stat(path).st_mtime
-            os.unlink(path)
-            return mtime
-        path = f"{root}/{name}"
+        fs.create_dir(root, recursive=True)
         with fs.open_output_stream(path) as f:
             f.write(b"x")
         info = fs.get_file_info(path)
@@ -169,48 +137,30 @@ def _heal_interrupted_swap(data_dir: str) -> None:
     the first rename or after the second — stray ``.vacuum_tmp`` /
     ``.vacuum_old`` beside an intact ``data/``: delete the strays.
     Idempotent; called at every vacuum start."""
-    import shutil
-
     fs, d = _payload_fs(data_dir)
     old, tmp = d + ".vacuum_old", d + ".vacuum_tmp"
-    if fs is None:
-        if not os.path.isdir(d) and os.path.isdir(old):
-            os.rename(old, d)
-        if os.path.isdir(d):
-            shutil.rmtree(old, ignore_errors=True)
-            shutil.rmtree(tmp, ignore_errors=True)
-    else:
-        from pyarrow.fs import FileType
-
-        d_t = fs.get_file_info(d).type
-        old_t = fs.get_file_info(old).type
-        if d_t == FileType.NotFound and old_t == FileType.Directory:
-            fs.move(old, d)
-            old_t = FileType.NotFound
-        if fs.get_file_info(d).type == FileType.Directory:
-            if old_t == FileType.Directory:
-                fs.delete_dir(old)
-            if fs.get_file_info(tmp).type == FileType.Directory:
-                fs.delete_dir(tmp)
+    d_t = fs.get_file_info(d).type
+    old_t = fs.get_file_info(old).type
+    if d_t == pafs.FileType.NotFound and old_t == pafs.FileType.Directory:
+        fs.move(old, d)
+        old_t = pafs.FileType.NotFound
+    if fs.get_file_info(d).type == pafs.FileType.Directory:
+        if old_t == pafs.FileType.Directory:
+            fs.delete_dir(old)
+        if fs.get_file_info(tmp).type == pafs.FileType.Directory:
+            fs.delete_dir(tmp)
 
 
 def _ptr_mtime(output_dir: str) -> float | None:
     """mtime of the manifest_current pointer file, or None if absent."""
     fs, root = _payload_fs(output_dir)
-    if fs is None:
-        p = os.path.join(root, "manifest_current")
-        return os.path.getmtime(p) if os.path.exists(p) else None
-    from pyarrow.fs import FileType
-
     info = fs.get_file_info(f"{root}/manifest_current")
-    if info.type != FileType.File:
+    if info.type != pafs.FileType.File:
         return None
-    if info.mtime is None:
-        # mtime-less store: retirement age is UNKNOWABLE — signal the
-        # sweeper to protect retired dirs rather than treating them as
-        # infinitely old (0.0 would invert the reader-safety horizon)
-        return float("inf")
-    return info.mtime.timestamp()
+    # mtime-less store: retirement age is UNKNOWABLE — _mtime's +inf
+    # makes the sweeper protect retired dirs rather than treat them as
+    # infinitely old (0.0 would invert the reader-safety horizon)
+    return _mtime(info)
 
 
 def _sweep_retired_manifests(
@@ -224,43 +174,28 @@ def _sweep_retired_manifests(
     NEWEST of the pointer mtime (= last swap, when dirs retire) and the
     dir's own newest file (covers crashed unreferenced rewrites)."""
     import re
-    import shutil
 
     cur_name = os.path.basename(current_dir.rstrip("/"))
     ptr_m = _ptr_mtime(output_dir)
     fs, root = _payload_fs(output_dir)
-    names: list[str] = []
-    if fs is None:
-        if os.path.isdir(root):
-            names = [e.name for e in os.scandir(root) if e.is_dir(follow_symlinks=False)]
-    else:
-        from pyarrow.fs import FileSelector, FileType
-
-        names = [
-            i.base_name
-            for i in fs.get_file_info(FileSelector(root, allow_not_found=True))
-            if i.type == FileType.Directory
-        ]
+    names = [
+        i.base_name
+        for i in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
+        if i.type == pafs.FileType.Directory
+    ]
     swept = 0
     for name in names:
         if name == cur_name or not re.fullmatch(r"data(_v\d+)?", name):
             continue
-        # listing goes through the scheme-qualified path (so URI datasets
-        # resolve the right filesystem); deletion uses the resolved one
-        d_list = (
-            os.path.join(output_dir, name) if "://" not in output_dir
-            else f"{output_dir}/{name}"
+        newest = max(
+            (m for _n, _s, m in _list_payload_files(os.path.join(output_dir, name))), default=0.0
         )
-        newest = max((m for _n, _s, m in _list_payload_files(d_list)), default=0.0)
         if ptr_m is not None:
             newest = max(newest, ptr_m)
         if (now - newest) < older_than_sec:
             continue
         if not dry_run:
-            if fs is None:
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-            else:
-                fs.delete_dir(f"{root}/{name}")
+            fs.delete_dir(f"{root}/{name}")
         swept += 1
     return swept
 
@@ -356,46 +291,23 @@ def vacuum(
         # allocate above every EXISTING data_v* dir (not pointer+1) so a
         # crashed/in-flight overwrite's unreferenced dir is never reused
         new_name = next_manifest_name(output_dir)
-        new_dir = (
-            os.path.join(output_dir, new_name)
-            if "://" not in output_dir
-            else f"{output_dir}/{new_name}"
-        )
+        new_dir = os.path.join(output_dir, new_name)
         _write_parquet_file(new_dir, f"part-vacuum-{uuid.uuid4().hex[:12]}.parquet", live)
         set_manifest_dir(output_dir, new_name)
         rewrote = True
 
     # stale temp files from crashed commits: plan.json.tmp* (planner) and
-    # manifest_current.tmp* (pointer swap) — both fs paths write the same
-    # tmp names
-    def _is_stale_tmp(name: str) -> bool:
-        return name.startswith("plan.json.tmp") or name.startswith("manifest_current.tmp")
-
-    stale_tmp = []
-    fs, root = _payload_fs(output_dir)
-    if fs is None:
-        if os.path.isdir(root):
-            stale_tmp = [
-                f for f in os.listdir(root)
-                if _is_stale_tmp(f)
-                and (now - os.path.getmtime(os.path.join(root, f))) >= older_than_sec
-            ]
-            if not dry_run:
-                for f in stale_tmp:
-                    os.unlink(os.path.join(root, f))
-    else:
-        from pyarrow.fs import FileSelector, FileType
-
-        for info in fs.get_file_info(FileSelector(root, allow_not_found=True)):
-            if info.type != FileType.File or not _is_stale_tmp(info.base_name):
-                continue
-            # missing mtime → protect (an in-flight pointer swap's tmp
-            # must never be deleted from under its fs.move)
-            mt = info.mtime.timestamp() if info.mtime is not None else float("inf")
-            if (now - mt) >= older_than_sec:
-                stale_tmp.append(info.base_name)
-                if not dry_run:
-                    fs.delete_file(f"{root}/{info.base_name}")
+    # manifest_current.tmp* (pointer swap); a missing mtime protects the
+    # file (an in-flight pointer swap's tmp must never be deleted from
+    # under its move)
+    stale_tmp = [
+        name
+        for name, _size, mtime in _list_payload_files(output_dir)
+        if name.startswith(("plan.json.tmp", "manifest_current.tmp"))
+        and (now - mtime) >= older_than_sec
+    ]
+    if not dry_run:
+        _remove_files(output_dir, stale_tmp)
 
     return {
         "payload_files": len(listed),

@@ -23,10 +23,12 @@ Scale notes (100 TB / 1000-executor thinking):
   of payload bytes is precisely what destroys multi-core scaling, and at
   nominal scale a consolidate-per-unit exchange is pure network cost on
   already-compressed bytes;
-- payload I/O resolves through ``pyarrow.fs`` for ``hdfs://``/``s3://``
-  output dirs (same storage as the manifests); plain paths use POSIX I/O
-  and require a driver+executor shared mount, and payload files are
-  fsync'd before their manifest rows are emitted;
+- every dataset file operation goes through ``pyarrow.fs``:
+  ``hdfs://``/``s3://`` output dirs resolve to their filesystem, plain
+  paths to ``LocalFileSystem`` (which requires a driver+executor shared
+  mount).  Payload files are synced before their manifest rows are
+  emitted, and every metadata file is synced before it is renamed into
+  place;
 - unit atomicity without a shuffle: the stage's one Spark action brings
   the manifest rows to the driver as Arrow, and :func:`commit_fragments`
   writes them as ONE parquet file (temp name + rename, so it appears
@@ -52,6 +54,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+from pyarrow import fs as pafs
 
 from ..plans.partitioning import EncodePlan, assign_units_arrow, plan_encode
 from .container import serialize_chunk
@@ -328,17 +331,54 @@ def _dv_values(col, t) -> list | None:
 
 
 def _payload_fs(path: str):
-    """(filesystem, path) for payload I/O.  ``hdfs://``/``s3://``-style
-    URIs route through pyarrow.fs so payload bytes land in the same
-    storage as the manifests; plain paths use POSIX I/O and
-    REQUIRE a filesystem shared by driver and executors at the same
-    mount point (the usual Iceberg warehouse assumption)."""
+    """(filesystem, path) for dataset file I/O.  ``hdfs://``/``s3://``-
+    style URIs resolve to their ``pyarrow.fs`` filesystem, so payload
+    bytes land in the same storage as the manifests; plain paths resolve
+    to ``LocalFileSystem`` at their absolute path (relative paths keep
+    the meaning the process's working directory gives them) and REQUIRE
+    a filesystem shared by driver and executors at the same mount point
+    (the usual Iceberg warehouse assumption)."""
     if "://" in path:
-        from pyarrow import fs as pafs
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), os.path.abspath(path)
 
-        f, p = pafs.FileSystem.from_uri(path)
-        return f, p
-    return None, path
+
+def _sync(fs, path: str) -> None:
+    """Force a closed, written file to stable storage.  On local storage
+    its bytes sit in the page cache until an fsync (on Linux, fsync of
+    any fd flushes the file itself); an object store's file is durable
+    once its stream closes."""
+    if isinstance(fs, pafs.LocalFileSystem):
+        fd = os.open(path, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+
+
+def _atomic_write(dir_path: str, name: str, data, tmp_name: str) -> None:
+    """Commit ``data`` as ``<dir_path>/<name>`` whole or not at all: write
+    it under ``tmp_name`` in the same directory, sync it, then move it
+    into place — a reader (concurrent, or after a crash) sees the old
+    file or the complete new one, never a torn one."""
+    fs, root = _payload_fs(dir_path)
+    fs.create_dir(root, recursive=True)
+    tmp = f"{root}/{tmp_name}"
+    with fs.open_output_stream(tmp) as out:
+        out.write(data)
+    _sync(fs, tmp)
+    fs.move(tmp, f"{root}/{name}")
+
+
+def _remove_files(dir_path: str, names, ignore=FileNotFoundError) -> None:
+    """Delete ``names`` under ``dir_path`` one by one; a file already gone
+    (or any error in ``ignore``) is skipped."""
+    fs, root = _payload_fs(dir_path)
+    for n in names:
+        try:
+            fs.delete_file(f"{root}/{n}")
+        except ignore:
+            pass
 
 
 class _TaskPayloadWriter:
@@ -346,12 +386,14 @@ class _TaskPayloadWriter:
     unique per attempt, so retried/speculative attempts never collide;
     files whose rows never reach the committed manifest are dead data
     (GC-able), exactly like uncommitted Iceberg data files.  ``close``
-    fsyncs (POSIX path) BEFORE the task emits its manifest rows, so a
-    committed manifest never points at payload bytes still in page cache."""
+    syncs the file (see :func:`_sync`) BEFORE the task emits its
+    manifest rows, so a committed manifest never points at payload bytes
+    still in page cache."""
 
     def __init__(self, payload_dir: str):
         self._fs, self._dir = _payload_fs(payload_dir)
         self._fh = None
+        self._path = ""
         self.name = ""
         self.offset = 0
 
@@ -362,13 +404,9 @@ class _TaskPayloadWriter:
             ctx = TaskContext.get()
             attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
             self.name = f"frag-{attempt}-{uuid.uuid4().hex[:8]}.bin"
-            full = os.path.join(self._dir, self.name) if self._fs is None else f"{self._dir}/{self.name}"
-            if self._fs is None:
-                os.makedirs(self._dir, exist_ok=True)
-                self._fh = open(full, "wb")
-            else:
-                self._fs.create_dir(self._dir, recursive=True)
-                self._fh = self._fs.open_output_stream(full)
+            self._path = f"{self._dir}/{self.name}"
+            self._fs.create_dir(self._dir, recursive=True)
+            self._fh = self._fs.open_output_stream(self._path)
         off = self.offset
         self._fh.write(payload)
         self.offset += len(payload)
@@ -376,19 +414,15 @@ class _TaskPayloadWriter:
 
     def close(self) -> None:
         if self._fh is not None:
-            if self._fs is None:
-                self._fh.flush()
-                os.fsync(self._fh.fileno())
             self._fh.close()
+            _sync(self._fs, self._path)
 
 
 def _open_payload(payload_dir: str, fname: str):
     """Seekable read handle for a payload file via the same fs resolution
     as the writer."""
-    f, d = _payload_fs(payload_dir)
-    if f is None:
-        return open(os.path.join(d, fname), "rb")
-    return f.open_input_file(f"{d}/{fname}")
+    fs, d = _payload_fs(payload_dir)
+    return fs.open_input_file(f"{d}/{fname}")
 
 
 def split_columns(spec: str) -> tuple:
@@ -488,45 +522,24 @@ class EncodeJobConfig:
         )
 
 
-def _plan_path(output_dir: str) -> str:
-    return os.path.join(output_dir, "plan.json")
-
-
 def _persist_plan(plan: EncodePlan, output_dir: str) -> None:
-    fs, root = _payload_fs(output_dir)
-    if fs is None:
-        path = _plan_path(root)
-        os.makedirs(root, exist_ok=True)
-        tmp = path + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(plan.to_json())
-        os.replace(tmp, path)
-    else:
-        # same temp-write + atomic-move commit as the POSIX branch: a
-        # reader (concurrent or resumed job) must never load a truncated
-        # plan.json — unit identities would silently change
-        fs.create_dir(root, recursive=True)
-        tmp = f"{root}/plan.json.tmp{os.getpid()}"
-        with fs.open_output_stream(tmp) as f:
-            f.write(plan.to_json().encode())
-        fs.move(tmp, f"{root}/plan.json")
+    # atomic: a reader (concurrent or resumed job) must never load a
+    # truncated plan.json — unit identities would silently change
+    _atomic_write(output_dir, "plan.json", plan.to_json().encode(), f"plan.json.tmp{os.getpid()}")
+
+
+def _read_small_file(fs, path: str) -> str | None:
+    """A small text file's content, or None when ``path`` is not a file."""
+    if fs.get_file_info(path).type != pafs.FileType.File:
+        return None
+    with fs.open_input_file(path) as f:
+        return f.read().decode()
 
 
 def _load_plan(output_dir: str) -> EncodePlan | None:
     fs, root = _payload_fs(output_dir)
-    if fs is None:
-        path = _plan_path(root)
-        if os.path.exists(path):
-            with open(path) as f:
-                return EncodePlan.from_json(f.read())
-        return None
-    from pyarrow.fs import FileType
-
-    info = fs.get_file_info(f"{root}/plan.json")
-    if info.type == FileType.NotFound:
-        return None
-    with fs.open_input_file(f"{root}/plan.json") as f:
-        return EncodePlan.from_json(f.read().decode())
+    text = _read_small_file(fs, f"{root}/plan.json")
+    return None if text is None else EncodePlan.from_json(text)
 
 
 _MANIFEST_PTR = "manifest_current"
@@ -541,42 +554,14 @@ def manifest_dir(output_dir: str) -> str:
     manifest (still on disk until the next horizoned sweep) or the new
     one, both complete."""
     fs, root = _payload_fs(output_dir)
-    if fs is None:
-        p = os.path.join(root, _MANIFEST_PTR)
-        if os.path.exists(p):
-            with open(p) as f:
-                name = f.read().strip()
-                if name:
-                    return os.path.join(output_dir, name)
-    else:
-        from pyarrow.fs import FileType
-
-        p = f"{root}/{_MANIFEST_PTR}"
-        if fs.get_file_info(p).type == FileType.File:
-            with fs.open_input_file(p) as f:
-                name = f.read().decode().strip()
-                if name:
-                    return f"{output_dir}/{name}"
-    return os.path.join(output_dir, "data")
+    name = (_read_small_file(fs, f"{root}/{_MANIFEST_PTR}") or "").strip()
+    return os.path.join(output_dir, name or "data")
 
 
 def set_manifest_dir(output_dir: str, name: str) -> None:
-    """Atomically point ``manifest_current`` at ``name`` (temp-write +
-    rename/move — the same commit idiom as the plan file)."""
-    fs, root = _payload_fs(output_dir)
-    if fs is None:
-        p = os.path.join(root, _MANIFEST_PTR)
-        tmp = p + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
-    else:
-        tmp = f"{root}/{_MANIFEST_PTR}.tmp{os.getpid()}"
-        with fs.open_output_stream(tmp) as f:
-            f.write(name.encode())
-        fs.move(tmp, f"{root}/{_MANIFEST_PTR}")
+    """Atomically point ``manifest_current`` at ``name`` (the same
+    temp-write + sync + move commit as the plan file)."""
+    _atomic_write(output_dir, _MANIFEST_PTR, name.encode(), f"{_MANIFEST_PTR}.tmp{os.getpid()}")
 
 
 def next_manifest_name(output_dir: str) -> str:
@@ -587,17 +572,10 @@ def next_manifest_name(output_dir: str) -> str:
     sink, compaction, and vacuum's manifest rewrite so concurrent
     version allocation is consistent."""
     fs, root = _payload_fs(output_dir)
-    names: list[str] = []
-    if fs is None:
-        if os.path.isdir(root):
-            names = os.listdir(root)
-    else:
-        from pyarrow.fs import FileSelector
-
-        try:
-            names = [i.base_name for i in fs.get_file_info(FileSelector(root))]
-        except (FileNotFoundError, OSError):
-            names = []
+    try:
+        names = [i.base_name for i in fs.get_file_info(pafs.FileSelector(root))]
+    except OSError:
+        names = []
     top = 0
     for n in names:
         if n.startswith("data_v"):
@@ -638,21 +616,13 @@ def _ok_lineage(output_dir: str, columns: list[str]) -> pa.Table | None:
 
 def _write_parquet_file(dir_path: str, name: str, tbl: pa.Table) -> None:
     """One parquet file into a metadata directory, atomically (temp name
-    prefixed ``.`` — invisible to Spark/pyarrow listings — then rename)."""
+    prefixed ``.`` — invisible to Spark/pyarrow listings — then sync and
+    rename; see :func:`_atomic_write`)."""
     import pyarrow.parquet as pq
 
-    fs, root = _payload_fs(dir_path)
-    if fs is None:
-        os.makedirs(root, exist_ok=True)
-        tmp = os.path.join(root, f".tmp-{name}")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(root, name))
-    else:
-        fs.create_dir(root, recursive=True)
-        tmp = f"{root}/.tmp-{name}"
-        with fs.open_output_stream(tmp) as out:
-            pq.write_table(tbl, out)
-        fs.move(tmp, f"{root}/{name}")
+    buf = pa.BufferOutputStream()
+    pq.write_table(tbl, buf)
+    _atomic_write(dir_path, name, buf.getvalue(), f".tmp-{name}")
 
 
 def commit_fragments(
@@ -801,12 +771,8 @@ def _parquet_file(path: str):
     manifests store fully-qualified URIs)."""
     import pyarrow.parquet as pq
 
-    if "://" in path:
-        from pyarrow import fs as pafs
-
-        f, p = pafs.FileSystem.from_uri(path)
-        return pq.ParquetFile(f.open_input_file(p))
-    return pq.ParquetFile(path)
+    fs, p = _payload_fs(path)
+    return pq.ParquetFile(fs.open_input_file(p))
 
 
 def _expand_row_groups(pf, rg: int):

@@ -67,19 +67,13 @@ def _meta_files(path: str) -> tuple[str, ...] | None:
     """Sorted names of the files a metadata-directory read sees (the
     ``.``/``_``-prefixed temp files and markers pyarrow.dataset ignores
     are left out); None when the directory does not exist."""
-    fs, root = _payload_fs(path)
-    if fs is None:
-        try:
-            names = os.listdir(root)
-        except OSError:
-            return None
-    else:
-        from pyarrow.fs import FileSelector
+    from pyarrow.fs import FileSelector
 
-        try:
-            names = [i.base_name for i in fs.get_file_info(FileSelector(root))]
-        except (FileNotFoundError, OSError):
-            return None
+    fs, root = _payload_fs(path)
+    try:
+        names = [i.base_name for i in fs.get_file_info(FileSelector(root))]
+    except OSError:
+        return None
     return tuple(sorted(n for n in names if not n.startswith((".", "_"))))
 
 

@@ -108,8 +108,8 @@ from ..encode.pipeline import (
     _ddl_type,
     _encode_stream,
     _load_plan,
-    _payload_fs,
     _read_meta_table,
+    _remove_files,
     commit_fragments,
     completed_batch_tags,
     manifest_dir,
@@ -537,17 +537,8 @@ class _EncodedWriterBase:
     def _drop_payload(self, messages) -> None:
         """Best-effort removal of aborted/duplicate tasks' payload files;
         anything missed is an orphan the vacuum sweep collects."""
-        payload_dir = os.path.join(self.path, "payload")
-        fs, root = _payload_fs(payload_dir)
-        for m in messages or []:
-            for name in {r["file"] for r in getattr(m, "rows", []) or []}:
-                try:
-                    if fs is None:
-                        os.unlink(os.path.join(root, name))
-                    else:
-                        fs.delete_file(f"{root}/{name}")
-                except (FileNotFoundError, OSError):
-                    pass
+        names = {r["file"] for m in messages or [] for r in getattr(m, "rows", []) or []}
+        _remove_files(os.path.join(self.path, "payload"), names, ignore=OSError)
 
 
 class _EncodedBatchWriter(_EncodedWriterBase, DataSourceArrowWriter):
