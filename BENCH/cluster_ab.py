@@ -29,11 +29,8 @@ repo = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else "/root/repo")
 sys.path.insert(0, repo)
 import universal_parquet_exporter_spark  # noqa: F401  (malloc tuning)
 from universal_parquet_exporter_spark.sources.session import build_session, warm_workers
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
-    decode_dataset,
-    encode_job,
-)
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
 
 N_ROWS = 600_000

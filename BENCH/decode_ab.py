@@ -32,7 +32,7 @@ subprocess.run([sys.executable, os.path.join(repo, "bench.py"),
                 "--gen-fixture", "600000", "56", inp, warm], check=True)
 spark = build_session(cpus=32)
 warm_workers(spark, 32)
-from universal_parquet_exporter_spark.encode.pipeline import decode_dataset
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 m = bench.encode_bench(spark, inp, work, "probe", map_tasks=56)
 print("encode gbps:", m["gbps"], "bytes_in:", m["bytes_in"])
 for i in range(3):

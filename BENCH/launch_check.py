@@ -25,11 +25,8 @@ repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path = [p for p in sys.path if os.path.abspath(p or ".") != repo]
 
 import universal_parquet_exporter_spark  # noqa: E402  (from the zip)
-from universal_parquet_exporter_spark.encode.pipeline import (  # noqa: E402
-    EncodeJobConfig,
-    decode_dataset,
-    encode_parquet_job,
-)
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_parquet_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset  # noqa: E402
 from universal_parquet_exporter_spark.fixtures import generate_webpages  # noqa: E402
 from universal_parquet_exporter_spark.sources.session import build_session  # noqa: E402
 

@@ -424,7 +424,7 @@ def _timed_leg(
         )
         _pin_cluster_jvms(n_exec, exec_cores, driver_cores)
     else:
-        spark = build_session(app_name=f"upes-scale-{label}", cpus=n_exec, jvm_headroom=True)
+        spark = build_session(app_name=f"upes-scale-{label}", cpus=n_exec)
     spark.sparkContext.setLogLevel("ERROR")
     warm_workers(spark, slots)
     if mode == "lc":
@@ -476,7 +476,7 @@ def _timed_leg(
     best["capacity_samples"] = caps
     best["bandwidth_samples"] = bws
     if with_decode:
-        from universal_parquet_exporter_spark.encode.pipeline import decode_dataset
+        from universal_parquet_exporter_spark.encode.scan import decode_dataset
 
         # three passes — one cold + TWO warm (VERDICT r4 #3): the first
         # decode pays suite-order-dependent worker fault/JIT cost

@@ -14,11 +14,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
-    decode_dataset,
-    encode_job,
-)
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
 
 N_ROWS = 8000
@@ -188,7 +185,7 @@ def test_cluster_by_lists_strip_whitespace(spark, monkeypatch, tmp_path):
     ``upe_encoded`` writer's ``cluster_by`` option."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from universal_parquet_exporter_spark.encode.pipeline import _persist_plan
+    from universal_parquet_exporter_spark.encode.meta import _persist_plan
     from universal_parquet_exporter_spark.plans.partitioning import EncodePlan
     from universal_parquet_exporter_spark.sources import spark_datasource as sds
 

@@ -12,14 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import _spark_jobs
-from universal_parquet_exporter_spark.encode import pipeline
+from universal_parquet_exporter_spark.encode import meta
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
-    decode_dataset,
     encode_job,
     encode_parquet_job,
     load_or_build_plan,
 )
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
 from universal_parquet_exporter_spark.plans.partitioning import EncodePlan, assign_units
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
@@ -125,17 +125,17 @@ def test_crash_between_manifest_and_lineage_is_invisible_and_resumable(
     encode_job(spark, first, cfg)
 
     # the next call dies after its manifest file landed, before lineage
-    real_write = pipeline._write_parquet_file
+    real_write = meta._write_parquet_file
 
     def crash_on_lineage(dir_path, name, tbl):
         if os.path.basename(dir_path.rstrip("/")) == "lineage":
             raise OSError("simulated crash before the lineage commit")
         real_write(dir_path, name, tbl)
 
-    monkeypatch.setattr(pipeline, "_write_parquet_file", crash_on_lineage)
+    monkeypatch.setattr(meta, "_write_parquet_file", crash_on_lineage)
     with pytest.raises(OSError, match="simulated crash"):
         encode_parquet_job(spark, webpages_parquet, cfg)
-    monkeypatch.setattr(pipeline, "_write_parquet_file", real_write)
+    monkeypatch.setattr(meta, "_write_parquet_file", real_write)
     assert len(_parquet_files(os.path.join(out, "data"))) == 2  # orphan rows on disk
 
     assert decode_dataset(spark, out).count() == n_first
@@ -182,12 +182,12 @@ def test_every_commit_file_is_synced_before_its_rename(tmp_path, monkeypatch):
                  wall_ms=0.0, codecs="{}", file="f.bin", offset=0, length=1, stats=None,
                  native=True)
         ],
-        schema=pipeline.FRAG_PA_SCHEMA,
+        schema=meta.FRAG_PA_SCHEMA,
     )
-    commit_id, _ = pipeline.commit_fragments(frags, out, os.path.join(out, "data"), "sync")
-    pipeline._persist_plan(EncodePlan("url", [], [1]), out)
-    pipeline.set_manifest_dir(out, "data")
-    writer = pipeline._TaskPayloadWriter(os.path.join(out, "payload"))
+    commit_id, _ = meta.commit_fragments(frags, out, os.path.join(out, "data"), "sync")
+    meta._persist_plan(EncodePlan("url", [], [1]), out)
+    meta.set_manifest_dir(out, "data")
+    writer = meta._TaskPayloadWriter(os.path.join(out, "payload"))
     writer.write(b"payload")
     before_close = list(synced)
     writer.close()

@@ -13,13 +13,10 @@ from tests.conftest import SF_SMOKE, _spark_jobs
 from universal_parquet_exporter_spark.encode import compaction
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.maintenance import vacuum
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
-    dataset_column_stats,
-    decode_dataset,
-    encode_job,
-    manifest_dir,
-)
+from universal_parquet_exporter_spark.encode.meta import manifest_dir
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
+from universal_parquet_exporter_spark.encode.stats import dataset_column_stats
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -272,7 +269,7 @@ def test_compact_cluster_by_column_outside_targets_fails_up_front(spark, tmp_pat
     """A cluster column that only NON-target generations carry cannot
     sort the target units' rows: compact must refuse before launching the
     rewrite, with the manifest untouched."""
-    from universal_parquet_exporter_spark.encode.pipeline import _persist_plan
+    from universal_parquet_exporter_spark.encode.meta import _persist_plan
     from universal_parquet_exporter_spark.plans.partitioning import EncodePlan
 
     out = str(tmp_path / "cmp_cluster_outside")

@@ -8,12 +8,8 @@ from decimal import Decimal
 
 import pytest
 
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
-    dataset_column_stats,
-    encode_job,
-    ts_value_us,
-)
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.stats import dataset_column_stats, ts_value_us
 
 
 @pytest.fixture()
@@ -122,10 +118,7 @@ def test_dotted_column_stats_are_exact(spark, outdir):
     limitation)."""
     from pyspark.sql import functions as F
 
-    from universal_parquet_exporter_spark.encode.pipeline import (
-        encode_job,
-        load_or_build_plan,
-    )
+    from universal_parquet_exporter_spark.encode.pipeline import encode_job, load_or_build_plan
     from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
     sds.register(spark)
@@ -159,7 +152,7 @@ def test_partial_chunk_coverage_poisons_exactness(spark, outdir):
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    from universal_parquet_exporter_spark.encode.pipeline import manifest_dir
+    from universal_parquet_exporter_spark.encode.meta import manifest_dir
 
     df = _df(spark)
     # tiny units + large chunks => chunks spanning several unit-slices

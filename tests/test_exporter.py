@@ -70,7 +70,7 @@ def test_export_encoded_roundtrip(spark, outdir):
     (containers + manifest + lineage under the export dir) and the
     decoded table matches the source exactly — the sink that supersedes
     the reference's Parquet writer."""
-    from universal_parquet_exporter_spark.encode.pipeline import decode_dataset
+    from universal_parquet_exporter_spark.encode.scan import decode_dataset
 
     df = (
         spark.read.parquet(os.path.join(SF_SMOKE, "customer.parquet"))

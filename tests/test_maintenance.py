@@ -18,11 +18,8 @@ from pyspark.sql import functions as F
 
 from tests.conftest import _spark_jobs
 from universal_parquet_exporter_spark.encode.maintenance import _delete_files, vacuum
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
-    decode_dataset,
-    encode_job,
-)
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
 
 N_ROWS = 6000
@@ -95,7 +92,7 @@ def test_vacuum_reclaims_dead_files_and_orphan_rows(spark, webpages, outdir):
 
     # CURRENT manifest (pointer-resolved) now orphan-free; the retired
     # dir is still on disk for in-flight readers; decode bit-identical
-    from universal_parquet_exporter_spark.encode.pipeline import manifest_dir
+    from universal_parquet_exporter_spark.encode.meta import manifest_dir
 
     cur = manifest_dir(outdir)
     assert os.path.basename(cur) == "data_v1"
@@ -232,7 +229,7 @@ def test_decode_key_range_after_vacuum_without_rewrite(spark, webpages, outdir):
     schema probe must not land on such a row (it reads the committed
     manifest, not the raw one) — regression for the FileNotFoundError
     the raw-manifest probe could raise on a healthy dataset."""
-    from universal_parquet_exporter_spark.encode.pipeline import _load_plan
+    from universal_parquet_exporter_spark.encode.meta import _load_plan
 
     cfg = EncodeJobConfig(output_dir=outdir, target_unit_bytes=1 << 20)
     encode_job(spark, webpages, cfg)
@@ -258,7 +255,7 @@ def test_vacuum_rewrite_pointer_swap_and_crash_recovery(spark, webpages, outdir)
     (b) a rewrite that crashed AFTER writing its new dir but BEFORE the
     pointer swap leaves the pointer on the old manifest and the
     unreferenced dir is swept once aged."""
-    from universal_parquet_exporter_spark.encode.pipeline import manifest_dir
+    from universal_parquet_exporter_spark.encode.meta import manifest_dir
 
     cfg = EncodeJobConfig(output_dir=outdir, target_unit_bytes=2 << 20)
     encode_job(spark, webpages, cfg)

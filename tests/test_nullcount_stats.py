@@ -15,13 +15,10 @@ import os
 import pyarrow as pa
 import pytest
 
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
-    _chunk_stats,
-    decode_dataset,
-    encode_job,
-    manifest_dir,
-)
+from universal_parquet_exporter_spark.encode.meta import manifest_dir
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
+from universal_parquet_exporter_spark.encode.stats import _chunk_stats
 
 
 @pytest.fixture()

@@ -21,6 +21,9 @@ def test_engine_zip_imports_standalone():
             f"sys.path = [p for p in sys.path if not p.startswith({REPO!r})];"
             f"sys.path.insert(0, {zip_path!r});"
             "import universal_parquet_exporter_spark as m;"
+            "import universal_parquet_exporter_spark.encode.meta;"
+            "import universal_parquet_exporter_spark.encode.stats;"
+            "import universal_parquet_exporter_spark.encode.scan;"
             "import universal_parquet_exporter_spark.encode.pipeline;"
             "import universal_parquet_exporter_spark.operators.relational;"
             "import __spark_entry__;"
@@ -93,7 +96,7 @@ def test_driver_queries_live_in_one_module():
 
 def test_dataset_storage_has_one_path():
     """Every dataset file operation runs through the ``pyarrow.fs``
-    filesystem that ``pipeline._payload_fs`` resolves, plain paths
+    filesystem that ``meta._payload_fs`` resolves, plain paths
     included: no ``fs is None`` POSIX branch, and no ``"://"`` test
     outside the resolver and the streaming writer's checkpoint-token
     hash (which names a Spark checkpoint, not a dataset file)."""
@@ -102,7 +105,7 @@ def test_dataset_storage_has_one_path():
     pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
     posix_branch = re.compile(r"\b(_?fs|f|self\._fs) is None\b")
     allowed = [
-        ("encode/pipeline.py", 'if "://" in path:'),
+        ("encode/meta.py", 'if "://" in path:'),
         ("sources/spark_datasource.py", 'norm = ck if "://" in ck else os.path.abspath(ck)'),
     ]
     branches, scheme_tests = [], []
@@ -124,3 +127,45 @@ def test_dataset_storage_has_one_path():
             scheme_tests.remove(site)
     assert scheme_tests == []
 
+
+def test_metadata_formats_have_one_owner():
+    """Each metadata format is known to one module: only ``encode/meta.py``
+    joins the lineage path (every lineage read goes through its cached
+    table), only ``encode/stats.py`` names the zone-map keys or parses
+    the stats JSON, neither of the two imports the scan planner or the
+    encode job, and the DataSource re-exports nothing."""
+    import ast
+
+    pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
+    lineage, zone_map = [], []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                for i, line in enumerate(f, 1):
+                    if '"lineage"' in line:
+                        lineage.append(rel)
+                    if '"_dv"' in line or '"_nc"' in line or (
+                        "json.loads" in line and "stats" in line
+                    ):
+                        zone_map.append(rel)
+    assert set(lineage) == {"encode/meta.py"}
+    assert set(zone_map) == {"encode/stats.py"}
+
+    for owner in ("meta", "stats"):
+        with open(os.path.join(pkg, "encode", f"{owner}.py"), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        imported = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                imported.add((node.module or "").split(".")[-1])
+                imported.update(a.name for a in node.names)
+            elif isinstance(node, ast.Import):
+                imported.update(a.name.split(".")[-1] for a in node.names)
+        assert not imported & {"scan", "pipeline"}, (owner, imported)
+
+    with open(os.path.join(pkg, "sources", "spark_datasource.py"), encoding="utf-8") as f:
+        assert "noqa: F401" not in f.read()

@@ -14,13 +14,13 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from universal_parquet_exporter_spark.encode.meta import completed_units
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
-    completed_units,
-    decode_dataset,
     encode_job,
     load_or_build_plan,
 )
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
 from universal_parquet_exporter_spark.plans.partitioning import EncodePlan, assign_units
 
@@ -103,7 +103,7 @@ def test_resume_skips_completed_units(spark, webpages, outdir):
     )
     m1 = encode_job(spark, subset, cfg)
     assert m1["encoded_units"] == k
-    assert set(completed_units(spark, outdir)) == set(range(k))
+    assert set(completed_units(outdir)) == set(range(k))
 
     # full rerun resumes: only the remaining units get encoded
     m2 = encode_job(spark, webpages, cfg)
@@ -219,7 +219,7 @@ def test_uri_scheme_output_dir(spark, webpages, outdir):
     assert metrics["rows"] == N_ROWS
     plan = load_or_build_plan(webpages, cfg)  # must reload via fs, not rebuild
     assert plan.n_units == metrics["plan_units"]
-    assert set(completed_units(spark, uri)) == set(range(plan.n_units))
+    assert set(completed_units(uri)) == set(range(plan.n_units))
     dec = decode_dataset(spark, uri, columns=["url", "text"])
     assert dec.columns == ["url", "text"]
     assert dec.count() == N_ROWS
@@ -233,29 +233,29 @@ def test_plain_relative_and_file_uri_paths_resolve_alike(tmp_path, monkeypatch):
     plan, metadata file) every form reads back identically."""
     from pyarrow import fs as pafs
 
-    from universal_parquet_exporter_spark.encode import pipeline
+    from universal_parquet_exporter_spark.encode import meta
 
     monkeypatch.chdir(tmp_path)
     absd = str(tmp_path / "ds")
     forms = ["ds", absd, "file://" + absd]
     for p in forms:
-        fs, root = pipeline._payload_fs(p)
+        fs, root = meta._payload_fs(p)
         assert isinstance(fs, pafs.LocalFileSystem)
         assert root == absd
 
     tbl = pa.table({"unit": [1, 2], "run_id": ["a", "b"]})
     for i, p in enumerate(forms):
         name = f"data_v{i + 1}"
-        pipeline.set_manifest_dir(p, name)
-        pipeline._write_parquet_file(os.path.join(p, name), "part-x.parquet", tbl)
+        meta.set_manifest_dir(p, name)
+        meta._write_parquet_file(os.path.join(p, name), "part-x.parquet", tbl)
         plan = EncodePlan("url", [f"k{i}"], [1, 2])
-        pipeline._persist_plan(plan, p)
+        meta._persist_plan(plan, p)
         for q in forms:
-            mdir = pipeline.manifest_dir(q)
-            assert pipeline._payload_fs(mdir)[1] == os.path.join(absd, name)
-            assert pipeline.next_manifest_name(q) == f"data_v{i + 2}"
-            assert pipeline._load_plan(q).to_json() == plan.to_json()
-            assert pipeline._read_meta_table(mdir, None).equals(tbl)
+            mdir = meta.manifest_dir(q)
+            assert meta._payload_fs(mdir)[1] == os.path.join(absd, name)
+            assert meta.next_manifest_name(q) == f"data_v{i + 2}"
+            assert meta._load_plan(q).to_json() == plan.to_json()
+            assert meta._read_meta_table(mdir, None, meta._meta_files(mdir)).equals(tbl)
 
 
 def _mismatches_cols(df, dec):
@@ -392,7 +392,7 @@ def test_units_for_key_range_superset_property():
 def test_decode_key_range_prunes_units(spark, webpages, outdir):
     """key_range decode: exact rows AND fewer manifest rows scanned than
     the full decode (whole units skipped before any payload read)."""
-    from universal_parquet_exporter_spark.encode.pipeline import _load_plan
+    from universal_parquet_exporter_spark.encode.meta import _load_plan
     from universal_parquet_exporter_spark.plans.partitioning import units_for_key_range
 
     cfg = EncodeJobConfig(output_dir=outdir, target_unit_bytes=1 << 20)
@@ -642,7 +642,7 @@ def test_decode_key_range_empty_and_inverted(spark, webpages, outdir):
 
     # column pruning COMBINED with key-range pruning: both prunes apply,
     # values exact
-    from universal_parquet_exporter_spark.encode.pipeline import _load_plan
+    from universal_parquet_exporter_spark.encode.meta import _load_plan
 
     plan = _load_plan(outdir)
     lo, hi = plan.boundaries[0], plan.boundaries[-1]
@@ -660,9 +660,9 @@ def test_encode_parquet_job_tasks_read_several_row_groups(spark, tmp_path):
     dataset equals the source, with every planned unit encoded."""
     from universal_parquet_exporter_spark.encode.pipeline import (
         EncodeJobConfig,
-        decode_dataset,
         encode_parquet_job,
     )
+    from universal_parquet_exporter_spark.encode.scan import decode_dataset
 
     src = str(tmp_path / "src")
     generate_webpages(spark, 3000, partitions=6).write.parquet(src)

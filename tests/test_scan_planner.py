@@ -29,15 +29,14 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 from tests.conftest import _spark_jobs
-from universal_parquet_exporter_spark.encode import scan
+from universal_parquet_exporter_spark.encode import meta, scan, stats
+from universal_parquet_exporter_spark.encode.meta import _load_plan, manifest_dir
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
-    _load_plan,
-    decode_dataset,
     encode_job,
     load_or_build_plan,
-    manifest_dir,
 )
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
 from universal_parquet_exporter_spark.plans.partitioning import units_for_key_range
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
@@ -120,7 +119,7 @@ def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tm
     cfg = EncodeJobConfig(output_dir=out, target_unit_bytes=1 << 20, chunk_rows=256)
     encode_job(spark, halves[0], cfg)
     assert decode_dataset(spark, out).toArrow().num_rows == n_first
-    assert sds._committed_manifest(out).num_rows > 0
+    assert meta._committed_manifest(out).num_rows > 0
 
     dirs = [manifest_dir(out), os.path.join(out, "lineage")]
     before = {d: os.stat(d) for d in dirs}
@@ -128,7 +127,7 @@ def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tm
     for d, st in before.items():
         os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
 
-    assert sds._committed_manifest(out).num_rows == pq.read_table(manifest_dir(out)).num_rows
+    assert meta._committed_manifest(out).num_rows == pq.read_table(manifest_dir(out)).num_rows
     assert decode_dataset(spark, out).toArrow().num_rows == 1000
 
 
@@ -314,7 +313,7 @@ def test_normalized_terms_drop_what_cannot_prune():
     schema = pa.schema(
         [("ts", pa.timestamp("us")), ("d", pa.date32()), ("x", pa.float64()), ("p", pa.decimal128(38, 4))]
     )
-    got = scan._normalize_terms(
+    got = stats._normalize_terms(
         [
             ("ts", "in", ["2024-01-01"]),  # strings don't convert to epoch-µs
             ("d", "=", datetime(2024, 1, 1)),  # a datetime is not a date bound

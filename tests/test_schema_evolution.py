@@ -13,10 +13,10 @@ from tests.conftest import SF_SMOKE
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
-    decode_dataset,
     encode_job,
     load_or_build_plan,
 )
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")

@@ -19,13 +19,15 @@ from pyspark.sql.datasource import (
 )
 
 from tests.conftest import SF_SMOKE
+from universal_parquet_exporter_spark.encode import meta
+from universal_parquet_exporter_spark.encode.meta import manifest_dir
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
-    decode_dataset,
     encode_job,
     load_or_build_plan,
-    manifest_dir,
 )
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
+from universal_parquet_exporter_spark.encode.stats import _parse_stats, _stats_keep
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -149,7 +151,11 @@ def test_pushdown_startswith_and_equality_terms(dataset):
 def test_chunk_keep_algebra():
     """Unit coverage of the conservative zone-map verdicts."""
     stats = '{"n": [10, 20], "s": ["b", "m"]}'
-    keep = sds._chunk_keep
+
+    def keep(stats_json, terms, schema):
+        parsed = _parse_stats(stats_json)
+        return parsed is None or _stats_keep(parsed, terms, schema)
+
     assert keep(stats, [("n", ">=", 20)], None)
     assert not keep(stats, [("n", ">", 20)], None)
     assert not keep(stats, [("n", "<", 10)], None)
@@ -462,7 +468,7 @@ def test_stream_read_offsets_and_determinism(spark, tmp_path):
     latest = sds._EncodedStreamReader({"path": out, "starting": "latest"})
     assert latest.initialOffset() == latest.latestOffset()
 
-    order = sds._committed_run_order(out)
+    order = meta._committed_run_order(out)
     assert order == sorted(order) and len(order) == 2
 
     tail = sds._EncodedStreamReader({"path": out})
@@ -533,6 +539,37 @@ def test_write_cluster_by_unknown_column_fails(spark, tmp_path):
         )
 
 
+def test_stream_reader_rereads_no_lineage_on_an_unchanged_dataset(spark, tmp_path, monkeypatch):
+    """The stream cursor and the committed manifest come from the one
+    cached lineage table: once a trigger has planned, the next
+    latestOffset + partitions over an unchanged dataset reads no
+    metadata file — and a new commit is seen by the next trigger."""
+    sds.register(spark)
+    out = str(tmp_path / "sr_cached")
+    docs = _docs(spark)
+    cfg = EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",))
+    encode_job(spark, docs.where("doc_id < '3'"), cfg)
+
+    reads = []
+    real = meta._read_meta_table
+    monkeypatch.setattr(meta, "_read_meta_table", lambda *a: reads.append(a[0]) or real(*a))
+    reader = sds._EncodedStreamReader({"path": out})
+    start = reader.initialOffset()
+    end = reader.latestOffset()
+    reader.partitions(start, end)
+    reads.clear()
+    assert reader.latestOffset() == end
+    reader.partitions(start, end)
+    assert reads == []
+
+    docs.where("doc_id >= '3'").write.format("upe_encoded").option(
+        "key_col", "doc_id"
+    ).mode("append").save(out)
+    newer = reader.latestOffset()
+    assert (newer["ts"], newer["run"]) > (end["ts"], end["run"])
+    assert any(os.path.basename(p) == "lineage" for p in reads)
+
+
 def test_stream_read_rate_limit_offsets(spark, tmp_path):
     """max_runs_per_batch caps each micro-batch at N commits: successive
     latestOffset calls walk the committed-run order one capped step at a
@@ -548,7 +585,7 @@ def test_stream_read_rate_limit_offsets(spark, tmp_path):
         docs.where(cond).write.format("upe_encoded").option(
             "key_col", "doc_id"
         ).mode("append").save(out)
-    order = sds._committed_run_order(out)
+    order = meta._committed_run_order(out)
     assert len(order) == 3
 
     r = sds._EncodedStreamReader({"path": out, "max_runs_per_batch": "1"})

@@ -134,12 +134,9 @@ def test_streaming_encode_ingest_end_to_end(spark, checkpoint):
     per source file (maxFilesPerTrigger=1), per-batch lineage, decode
     reproduces every streamed row exactly once, and a replayed batch is
     a committed no-op."""
-    from universal_parquet_exporter_spark.encode.pipeline import (
-        EncodeJobConfig,
-        completed_batch_tags,
-        decode_dataset,
-        encode_job,
-    )
+    from universal_parquet_exporter_spark.encode.meta import completed_batch_tags
+    from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+    from universal_parquet_exporter_spark.encode.scan import decode_dataset
     from universal_parquet_exporter_spark.fixtures import generate_webpages
     from universal_parquet_exporter_spark.streaming import streaming_encode_ingest
 
@@ -154,7 +151,7 @@ def test_streaming_encode_ingest_end_to_end(spark, checkpoint):
     q = streaming_encode_ingest(spark, src, schema, out).trigger(availableNow=True).start()
     q.awaitTermination(180)
 
-    tags = completed_batch_tags(spark, out)
+    tags = completed_batch_tags(out)
     assert len(tags) == 2, tags
     dec = decode_dataset(spark, out)
     assert dec.count() == 3000

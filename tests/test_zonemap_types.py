@@ -16,14 +16,12 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from universal_parquet_exporter_spark.encode.pipeline import (
-    EncodeJobConfig,
+from universal_parquet_exporter_spark.encode.meta import completed_units, manifest_dir
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.scan import decode_dataset
+from universal_parquet_exporter_spark.encode.stats import (
     _chunk_stats,
-    completed_units,
     date_value_days,
-    decode_dataset,
-    encode_job,
-    manifest_dir,
     ts_value_us,
 )
 
@@ -86,6 +84,69 @@ def test_chunk_stats_ns_timestamps_normalize_to_us():
     )
     stats = json.loads(_chunk_stats(tbl))
     assert stats["ts"][0] == ts_value_us(datetime(2024, 6, 1, 12, 0, 0))
+
+
+# the stats string this table must produce, byte for byte: every zone
+# map in a committed manifest was written in this format, so a change to
+# the domain conversions would silently mis-prune existing datasets
+_PINNED_STATS = (
+    '{"ts_s":[-23325556000000,23317777000000],'
+    '"ts_s_utc":[-23325556000000,23317777000000],'
+    '"ts_ms":[-23325555554000,23317777775000],'
+    '"ts_ms_utc":[-23325555554000,23317777775000],'
+    '"ts_us":[-23325555553593,23317777775815],'
+    '"ts_us_utc":[-23325555553593,23317777775815],'
+    '"ts_ns":[-23325555553593,23317777775815],'
+    '"ts_ns_utc":[-23325555553593,23317777775815],'
+    '"ts_ns_few":[-2,2],"d":[-110963,110926],"d_few":[-3,18000],'
+    '"dec":["-617283945061728394506172839.0000000000",'
+    '"1234567890123456789012345678.0000000000"],'
+    '"dec_few":["-1.000E-7","99999999999999999999999999.9999999999"],'
+    '"lang":["de","zh"],"k16":[0,15],"k17":[0,16],'
+    '"f":[0.0,428.42857142857144],"f_nan":[0.0,2999.0],'
+    '"_dv":{"ts_ns_few":[-2,-1,2],"d_few":[-3,0,18000],'
+    '"dec_few":["-1.000E-7","99999999999999999999999999.9999999999"],'
+    '"lang":["de","en","fr","zh"],'
+    '"k16":[0,1,2,3,4,5,6,7,8,9,10,11,12,13,14,15]},'
+    '"_n":3000,"_nc":{"ts_s":0,"ts_s_utc":0,"ts_ms":0,"ts_ms_utc":0,'
+    '"ts_us":0,"ts_us_utc":0,"ts_ns":0,"ts_ns_utc":0,"ts_ns_few":750,'
+    '"d":0,"d_few":0,"dec":0,"dec_few":1000,"lang":0,"k16":0,"k17":0,'
+    '"f":0,"f_nan":0,"nothing":3000,"b":0}}'
+)
+
+
+def test_chunk_stats_json_is_pinned():
+    """s/ms/µs/ns timestamps on both sides of 1970 (naive and UTC; ns
+    floor-divides to µs), date32, decimal(38,10), distinct sets at and
+    above the 16-value cap, floats with and without NaN, an all-null and
+    a bool column, over more rows than the distinct-set probe reads."""
+    n = 3000
+    ns = [(-1) ** i * (i * 7_777_777_777_123 + 999) for i in range(n)]
+    cols = {}
+    for unit, div in (("s", 10**9), ("ms", 10**6), ("us", 10**3), ("ns", 1)):
+        vals = [v // div for v in ns]
+        cols[f"ts_{unit}"] = pa.array(vals, pa.timestamp(unit))
+        cols[f"ts_{unit}_utc"] = pa.array(vals, pa.timestamp(unit, "UTC"))
+    cols["ts_ns_few"] = pa.array([-1_500, 2_500, -999, None] * (n // 4), pa.timestamp("ns"))
+    cols["d"] = pa.array([(-1) ** i * (i * 37) for i in range(n)], pa.date32())
+    cols["d_few"] = pa.array([-3, 0, 18_000] * (n // 3), pa.date32())
+    big = Decimal("1234567890123456789012345678.0123456789")
+    cols["dec"] = pa.array(
+        [big * (-1) ** i / (i + 1) for i in range(n)], pa.decimal128(38, 10)
+    )
+    cols["dec_few"] = pa.array(
+        [Decimal("-0.0000001000"), Decimal("99999999999999999999999999.9999999999"), None]
+        * (n // 3),
+        pa.decimal128(38, 10),
+    )
+    cols["lang"] = pa.array([["de", "en", "fr", "zh"][i % 4] for i in range(n)])
+    cols["k16"] = pa.array([i % 16 for i in range(n)], pa.int32())
+    cols["k17"] = pa.array([i % 17 for i in range(n)], pa.int64())
+    cols["f"] = pa.array([i / 7 for i in range(n)], pa.float64())
+    cols["f_nan"] = pa.array([float("nan") if i == 5 else i for i in range(n)], pa.float32())
+    cols["nothing"] = pa.nulls(n, pa.int64())
+    cols["b"] = pa.array([bool(i % 2) for i in range(n)])
+    assert _chunk_stats(pa.table(cols)) == _PINNED_STATS
 
 
 # ---------------------------------------------------------------------------
@@ -177,7 +238,7 @@ def test_completed_units_is_sorted_int64_array(spark, outdir):
         output_dir=outdir, key_col="k", size_cols=("text",), target_unit_bytes=8 << 10
     )
     encode_job(spark, df, cfg)
-    done = completed_units(spark, outdir)
+    done = completed_units(outdir)
     assert isinstance(done, np.ndarray) and done.dtype == np.int64
     assert (np.sort(done) == done).all() and done.size > 0
 
@@ -801,7 +862,7 @@ def test_filter_driven_unit_pruning(spark, outdir):
 
 
 def test_key_range_from_terms_algebra():
-    from universal_parquet_exporter_spark.encode.pipeline import key_range_from_terms
+    from universal_parquet_exporter_spark.encode.scan import key_range_from_terms
 
     assert key_range_from_terms([("k", ">=", "b"), ("k", "<", "g")], "k") == ("b", "g")
     assert key_range_from_terms([("k", "=", "m")], "k") == ("m", "m")

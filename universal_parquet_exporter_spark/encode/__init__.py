@@ -6,9 +6,16 @@ Layers:
   cost-model auto-selector (SURVEY.md §2C);
 - :mod:`.container` — (de)serialization of encoded chunks to a binary
   payload + JSON meta;
-- :mod:`.pipeline` — the distributed job: size-aware partition planning,
-  ``mapInArrow`` encode, Parquet sink, lineage/metrics, checkpointed
-  resume, and the decode (read-back) path;
+- :mod:`.meta` — the dataset's files: payload storage, the manifest
+  pointer, the commit every write shares, and the one cached reader of
+  the committed manifest and lineage;
+- :mod:`.stats` — the zone-map format: per-chunk statistics, their
+  domain conversions, the pruning verdict and metadata-only column
+  statistics;
+- :mod:`.pipeline` — the distributed encode job: size-aware partition
+  planning, ``mapInArrow`` encode, commit and checkpointed resume;
+- :mod:`.scan` — the scan planner both read paths run, and the decode
+  (read-back) path;
 - :mod:`.maintenance` — vacuum sweep for dead payload files and orphan
   manifest rows (the Iceberg ``remove_orphan_files`` analog);
 - :mod:`.compaction` — rewrite fragmented units into full-size chunks
@@ -19,13 +26,9 @@ from .chunk import decode_array, encode_array
 from .compaction import compact
 from .container import deserialize_chunk, serialize_chunk
 from .maintenance import vacuum
-from .pipeline import (
-    EncodeJobConfig,
-    dataset_column_stats,
-    decode_dataset,
-    encode_job,
-    encode_parquet_job,
-)
+from .pipeline import EncodeJobConfig, encode_job, encode_parquet_job
+from .scan import decode_dataset
+from .stats import dataset_column_stats
 
 __all__ = [
     "encode_array",

@@ -12,7 +12,7 @@ repair.  :func:`compact` is the engine's analog:
    ``min_avg_slice_rows`` (default ``chunk_rows // 2``) — work is
    proportional to the FRAGMENTED data only, never the healthy bulk.
    Selection is an Arrow ``group_by`` over the scan planner's cached
-   committed manifest (:func:`.scan._committed_manifest`), on the
+   committed manifest (:func:`.meta._committed_manifest`), on the
    driver, with no Spark job.
 2. **Rewrite** those units in ONE Spark job: the driver packs the
    target slices by unit into one list per task, sorted by
@@ -26,7 +26,7 @@ repair.  :func:`compact` is the engine's analog:
    surviving row (non-compacted units verbatim — their committed
    lineage stays valid — plus in-flight runs' young uncommitted rows,
    which must outlive the rewrite), then the compacted units' new rows
-   and their lineage through :func:`.pipeline.commit_fragments`, the
+   and their lineage through :func:`.meta.commit_fragments`, the
    commit every encode path shares; the pointer lands last, so a reader
    resolves either the old complete manifest or the new one.
 
@@ -57,12 +57,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .container import deserialize_chunk
-from .pipeline import (
+from .meta import (
     FRAG_SCHEMA,
-    _encode_stream,
+    _committed_manifest,
     _load_plan,
+    _meta_files,
     _open_payload,
-    _pad_table,
+    _probe_chunk_schema,
     _read_meta_table,
     _write_parquet_file,
     commit_fragments,
@@ -70,7 +71,8 @@ from .pipeline import (
     next_manifest_name,
     set_manifest_dir,
 )
-from .scan import _committed_manifest, _probe_chunk_schema
+from .pipeline import _encode_stream
+from .scan import _pad_table
 
 
 def compact(
@@ -222,7 +224,8 @@ def compact(
     # from): non-target units verbatim, and in-flight runs' young
     # uncommitted rows (even of target units) must outlive the rewrite —
     # they commit their lineage later
-    raw = _read_meta_table(manifest_dir(output_dir), None)
+    mdir = manifest_dir(output_dir)
+    raw = _read_meta_table(mdir, None, _meta_files(mdir))
     gone = slices.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
     survivors = raw.join(gone, keys=["unit", "run_id"], join_type="left anti")
 

@@ -1,7 +1,7 @@
 """Maintenance sweep for encoded datasets: vacuum dead payload files and
 orphan manifest rows.
 
-The encode job's crash-safety design (see :mod:`.pipeline` module
+The encode job's crash-safety design (see :mod:`.meta` module
 docstring) deliberately leaves garbage instead of blocking on cleanup:
 
 - a task attempt that ran but whose manifest rows never committed (job
@@ -45,7 +45,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyarrow import fs as pafs
 
-from .pipeline import (
+from .meta import (
     _ok_lineage,
     _payload_fs,
     _remove_files,

@@ -1,7 +1,7 @@
-"""Scan planning: the one planner both scan paths run.
+"""Scan planning and decode: the one planner both scan paths run.
 
-An encoded dataset is read either through :func:`.pipeline.decode_dataset`
-or through the ``upe_encoded`` Spark source
+An encoded dataset is read either through :func:`decode_dataset` or
+through the ``upe_encoded`` Spark source
 (:mod:`..sources.spark_datasource`).  Both plan here, with pyarrow and no
 SparkSession — the reader inside Spark's planning worker, exactly like a
 JVM DSv2 ``ScanBuilder``, and ``decode_dataset`` on the driver before its
@@ -9,14 +9,14 @@ one Spark job starts:
 
 1. **committed manifest** — manifest rows semi-joined to lineage
    ``status='ok'`` on ``(unit, run_id)``, so orphans from a torn run are
-   invisible (:func:`_committed_manifest`, cached per dataset state);
+   invisible (:func:`.meta._committed_manifest`, cached per dataset state);
 2. **schema** — one meta-only chunk-header probe per schema generation,
-   unioned by name (:func:`_probe_chunk_schema`);
+   unioned by name (:func:`.meta._probe_chunk_schema`);
 3. **unit pruning** — key-column terms and an explicit key range keep
    only the encode units whose range boundaries can hold a match;
 4. **chunk pruning** — the manifest zone maps (bounds, distinct-value
    sets, null counts) drop chunks no filter group can match
-   (:func:`_chunk_keep`);
+   (:func:`.stats._stats_keep`);
 5. **packing** — surviving chunks group into locality-packed scan
    partitions (:func:`_pack_chunk_partitions`) that
    :func:`_read_chunk_partition` decodes on an executor.
@@ -30,7 +30,6 @@ contract.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -39,292 +38,92 @@ from pyspark.sql.datasource import InputPartition
 
 from ..plans.partitioning import units_for_key_range
 from .container import deserialize_chunk
-from .pipeline import (
-    MANIFEST_PA_SCHEMA,
+from .meta import (
+    _arrow_to_ddl,
+    _check_same_type,
+    _committed_manifest,
+    _ddl_type,
     _load_plan,
-    _normalize_batch,
-    _ok_lineage,
     _open_payload,
-    _pad_table,
-    _payload_fs,
-    _read_meta_table,
-    _union_probe_schema,
-    date_value_days,
-    key_range_from_terms,
-    manifest_dir,
-    ts_value_us,
+    _probe_chunk_schema,
 )
+from .stats import _normalize_terms, _parse_stats, _stats_keep
 
 DEFAULT_PARTITION_BYTES = 64 << 20
 
 
-# ---------------------------------------------------------------------------
-# committed manifest + schema (metadata only)
-# ---------------------------------------------------------------------------
+_FILTER_OPS = (
+    "<", "<=", ">", ">=", "=", "==", "!=", "<>", "in", "not_in",
+    "is_null", "not_null", "startswith", "endswith", "contains",
+)
 
 
-def _meta_files(path: str) -> tuple[str, ...] | None:
-    """Sorted names of the files a metadata-directory read sees (the
-    ``.``/``_``-prefixed temp files and markers pyarrow.dataset ignores
-    are left out); None when the directory does not exist."""
-    from pyarrow.fs import FileSelector
-
-    fs, root = _payload_fs(path)
-    try:
-        names = [i.base_name for i in fs.get_file_info(FileSelector(root))]
-    except OSError:
-        return None
-    return tuple(sorted(n for n in names if not n.startswith((".", "_"))))
-
-
-def _meta_state_token(output_dir: str) -> tuple:
-    """Freshness key for the manifest cache: the live manifest directory
-    (the ``manifest_current`` pointer's target) plus the names of the
-    committed manifest and lineage files.  Every commit adds a file under
-    a fresh name (temp write + rename) and every rewrite swaps the
-    pointer, so the key changes exactly when the committed state does —
-    unlike a directory mtime, which a coarse-grained clock or a restored
-    timestamp can leave unchanged."""
-    mdir = manifest_dir(output_dir)
-    return (mdir, _meta_files(mdir), _meta_files(os.path.join(output_dir, "lineage")))
-
-
-_MANIFEST_CACHE: dict[str, tuple[tuple, pa.Table]] = {}
-_MANIFEST_COLS = ["unit", "run_id", "file", "offset", "length", "row_off", "n_rows", "bytes_out", "stats", "codecs"]
-
-
-def _committed_manifest(output_dir: str) -> pa.Table:
-    """Committed manifest rows: the lineage ``status='ok'`` semi-join on
-    ``(unit, run_id)``.  At nominal scale this is manifest METADATA
-    (fragment rows, not data), but it is ~10^7 rows at 100 TB, so the
-    join runs entirely in Arrow (hash semi-join in C++, zero per-row
-    Python objects) and the result is cached per dataset state
-    (:func:`_meta_state_token`): a plan's ``schema()``, ``partitions()``
-    and the append-schema guard, and back-to-back ``decode_dataset``
-    calls, share one load."""
-    token = _meta_state_token(output_dir)
-    hit = _MANIFEST_CACHE.get(output_dir)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    man = _read_meta_table(token[0], _MANIFEST_COLS)
-    ok = _ok_lineage(output_dir, ["unit", "run_id"])
-    if man is None or ok is None or man.num_rows == 0:
-        out = MANIFEST_PA_SCHEMA.empty_table().select(_MANIFEST_COLS)
+def _filter_groups(filters) -> list[list[tuple]]:
+    """Normalize ``filters`` to OR-of-AND groups (pyarrow's DNF
+    convention): a flat list of ``(col, op, value)`` TUPLES is one
+    conjunction; a list of LISTS is a disjunction of conjunctions.
+    A tuple element is a term, a list element is a group — mixing the
+    two shapes is ambiguous and raises."""
+    kinds = {isinstance(f, list) for f in filters}
+    if kinds == {True}:
+        groups = filters
+    elif kinds == {False}:
+        groups = [filters]
     else:
-        ok = ok.group_by(["unit", "run_id"]).aggregate([])  # distinct — join keys must be unique
-        out = man.join(ok, keys=["unit", "run_id"], join_type="left semi")
-    # re-validate: a commit racing this load leaves the result uncached
-    if _meta_state_token(output_dir) == token:
-        _MANIFEST_CACHE[output_dir] = (token, out)
-        if len(_MANIFEST_CACHE) > 64:
-            _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-    return out
-
-
-def _probe_chunk_schema(output_dir: str, man: pa.Table) -> pa.Schema:
-    """Union-by-name schema over committed chunks (orphan-safe — rows
-    came through the lineage semi-join): one meta-only probe per
-    distinct column-name set, taken from the manifest's own codecs maps
-    (distinct codecs STRINGS are deduped before any JSON parse, so
-    planning cost tracks codec diversity, not row count)."""
-    if man.num_rows == 0:
-        raise ValueError(f"empty encoded dataset at {output_dir}")
-    payload_dir = os.path.join(output_dir, "payload")
-    files = man.column("file").to_pylist()
-    offsets = man.column("offset").to_pylist()
-    codecs = man.column("codecs").to_pylist() if "codecs" in man.schema.names else [None] * man.num_rows
-    by_ns: dict[tuple, tuple[str, int]] = {}
-    seen_cj: set = set()
-    for i, cj in enumerate(codecs):
-        if cj in seen_cj:
-            continue
-        seen_cj.add(cj)
-        ns = tuple(sorted(json.loads(cj).keys())) if cj else ("",)
-        by_ns.setdefault(ns, (files[i], offsets[i]))
-    return _union_probe_schema(payload_dir, sorted(by_ns.values()))
-
-
-# ---------------------------------------------------------------------------
-# the zone-map evaluator
-# ---------------------------------------------------------------------------
-
-_OP_ALIASES = {"==": "=", "<>": "!="}
-
-
-def _normalize_terms(terms, schema: pa.Schema):
-    """Convert term values to the zone-map domain ONCE per scan (not per
-    chunk): timestamps → epoch-µs ints, dates → epoch-days ints,
-    decimals → ``Decimal`` (their bounds are stored as exact strings and
-    re-typed in :func:`_chunk_keep`); ``==``/``<>`` become ``=``/``!=``.
-    Terms whose column is absent from the schema or whose value can't
-    convert (or is a float NaN, which has no place in the bounds' order)
-    are dropped from PRUNING — the exact residual still applies them."""
-    from datetime import date, datetime
-    from decimal import Decimal
-
-    out = []
-    for col, op, v in terms:
-        op = _OP_ALIASES.get(op, op)
-        if col not in schema.names:
-            continue
-        if op in ("is_null", "not_null"):
-            # value-less terms skip the domain conversion entirely
-            out.append((col, op, None))
-            continue
-        t = schema.field(col).type
-        try:
-            if pa.types.is_timestamp(t):
-                if op in ("in", "not_in"):
-                    v = tuple(ts_value_us(x) for x in v)
-                elif isinstance(v, datetime):
-                    v = ts_value_us(v)
-                else:
-                    continue
-            elif pa.types.is_date(t):
-                if op in ("in", "not_in"):
-                    v = tuple(date_value_days(x) for x in v)
-                elif isinstance(v, date):
-                    v = date_value_days(v)
-                else:
-                    continue
-            elif pa.types.is_decimal(t):
-                if op in ("in", "not_in"):
-                    v = tuple(Decimal(str(x)) for x in v)
-                else:
-                    v = Decimal(str(v))
-        except (TypeError, ValueError, ArithmeticError, AttributeError):
-            continue
-        vals = v if op in ("in", "not_in") else (v,)
-        if any(isinstance(x, float) and x != x for x in vals):
-            continue
-        out.append((col, op, v))
-    return out
-
-
-def _parse_stats(stats_json: str | None) -> dict | None:
-    try:
-        stats = json.loads(stats_json) if stats_json else None
-    except (TypeError, ValueError):
-        return None
-    return stats if isinstance(stats, dict) else None
-
-
-def _chunk_keep(stats_json: str | None, terms, schema: pa.Schema) -> bool:
-    """Zone-map verdict for ONE chunk and one AND-group of terms: False
-    only when the recorded stats PROVE a term can't match (missing or
-    partial stats keep).  This is the engine's one pruning evaluator —
-    the reader and ``decode_dataset`` both plan through it, and neither
-    runs a Spark job to prune.  Terms must be pre-normalized
-    (:func:`_normalize_terms`); decimal bounds are stored as exact
-    strings and re-typed here."""
-    stats = _parse_stats(stats_json)
-    return stats is None or _stats_keep(stats, terms, schema)
-
-
-def _stats_keep(stats: dict, terms, schema: pa.Schema | None) -> bool:
-    from decimal import Decimal
-
-    def is_decimal(col):
-        return schema is not None and col in schema.names and pa.types.is_decimal(
-            schema.field(col).type
+        raise ValueError(
+            "filters must be all (col, op, value) terms (AND) or all "
+            "lists of terms (OR of ANDs), not a mix"
         )
+    for g in groups:
+        if not g:
+            raise ValueError("empty AND-group in filters")
+        for t in g:
+            if not (isinstance(t, tuple) and len(t) == 3):
+                raise ValueError(
+                    f"filter term must be a (col, op, value) tuple: {t!r}"
+                )
+    return groups
 
-    dv_map = stats.get("_dv")
-    if not isinstance(dv_map, dict):
-        dv_map = {}
-    nc_map = stats.get("_nc")
-    n_total = stats.get("_n")
-    have_nc = isinstance(nc_map, dict) and isinstance(n_total, int)
+
+def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
+    """Tightest ``[lo, hi]`` (None = open) the KEY-column terms of ONE
+    conjunction imply: ``>``/``>=``/``=`` contribute ``lo`` (strict
+    bounds stay a superset — the residual filter is exact), ``<``/
+    ``<=``/``=`` contribute ``hi``, ``startswith p`` contributes
+    ``lo = p`` only (every match is ≥ its own prefix; a sound upper
+    bound needs prefix-successor arithmetic the unit pruner doesn't
+    require), and a string IN-list contributes its [min, max].
+    Non-string operands never contribute (the key domain is string).
+    Used by the planner's unit pruning, which both
+    :func:`decode_dataset` and the ``upe_encoded`` reader run."""
+    lo = hi = None
     for col, op, v in terms:
-        # null-count pruning (the parquet null-count analog): a column
-        # absent from a recorded _nc map is all-null in this chunk —
-        # including chunks whose generation PREDATES the column under
-        # additive evolution; comparison/equality/prefix terms are
-        # null-rejecting, so all-null prunes those too
-        if have_nc:
-            nc = nc_map.get(col)
-            all_null = not isinstance(nc, int) or nc >= n_total
-            if op == "is_null":
-                if isinstance(nc, int) and nc == 0:
-                    return False
-                continue
-            if op == "not_null":
-                if all_null:
-                    return False
-                continue
-            if all_null:
-                return False
-        elif op in ("is_null", "not_null"):
+        if col != key_col:
             continue
-        # exact distinct-value sets (≤ _STATS_DV_MAX values recorded):
-        # equality/IN/prefix prune on MEMBERSHIP — the interleaved-
-        # categorical case min/max bounds can never exclude
-        dv = dv_map.get(col)
-        if dv is not None and is_decimal(col):
-            try:
-                dv = [Decimal(str(x)) for x in dv]
-            except ArithmeticError:
-                dv = None
-        if dv is not None and op in ("!=", "not_in"):
-            # inequality prunes ONLY through the exact value set: the
-            # chunk matches nothing when every recorded non-null value
-            # is rejected (all-null rejection already returned above)
-            rejected = v if op == "not_in" else (v,)
-            try:
-                if all(x in rejected for x in dv):
-                    return False
-            except TypeError:
-                pass  # cross-type membership: never prune on it
+        if op == "in" and isinstance(v, (tuple, list)) and v and all(
+            isinstance(x, str) for x in v
+        ):
+            vlo, vhi = min(v), max(v)
+            lo = vlo if lo is None or vlo > lo else lo
+            hi = vhi if hi is None or vhi < hi else hi
             continue
-        if dv is not None:
-            strs = all(isinstance(x, str) for x in dv)
-            try:
-                if op == "=" and v not in dv:
-                    return False
-                if op == "in" and not any(x in dv for x in v):
-                    return False
-                if op == "startswith" and strs and not any(x.startswith(v) for x in dv):
-                    return False
-                if op == "endswith" and strs and not any(x.endswith(v) for x in dv):
-                    return False
-                if op == "contains" and strs and not any(v in x for x in dv):
-                    return False
-            except TypeError:
-                pass  # cross-type membership: never prune on it
-        bounds = stats.get(col)
-        if not isinstance(bounds, (list, tuple)) or len(bounds) != 2:
+        if not isinstance(v, str):
             continue
-        mn, mx = bounds
-        if is_decimal(col):
-            try:
-                mn = None if mn is None else Decimal(str(mn))
-                mx = None if mx is None else Decimal(str(mx))
-            except ArithmeticError:
-                continue
-        try:
-            if op in (">", ">="):
-                if mx is not None and not (mx > v if op == ">" else mx >= v):
-                    return False
-            elif op in ("<", "<="):
-                if mn is not None and not (mn < v if op == "<" else mn <= v):
-                    return False
-            elif op == "=":
-                if (mn is not None and mn > v) or (mx is not None and mx < v):
-                    return False
-            elif op == "in":
-                if mn is not None and mx is not None and not any(
-                    mn <= x <= mx for x in v
-                ):
-                    return False
-            elif op == "startswith":
-                # all matches are >= v and share v's length-prefix
-                if mx is not None and mx < v:
-                    return False
-                if mn is not None and isinstance(mn, str) and mn[: len(v)] > v:
-                    return False
-        except TypeError:
-            continue  # cross-type comparison: never prune on it
-    return True
+        if op in (">", ">=", "=", "=="):
+            lo = v if lo is None or v > lo else lo
+        if op in ("<", "<=", "=", "=="):
+            hi = v if hi is None or v < hi else hi
+        if op == "startswith":
+            lo = v if lo is None or v > lo else lo
+    return lo, hi
+
+
+def _exact_col(name: str):
+    """Column reference resolving the EXACT name — backtick-quoted so a
+    dotted name ("meta.lang") is never parsed as a struct path."""
+    from pyspark.sql import functions as F
+
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 # ---------------------------------------------------------------------------
@@ -496,6 +295,54 @@ def _pack_chunk_partitions(
     return parts
 
 
+def _pad_table(tbl: pa.Table, fields: list) -> pa.Table:
+    """Conform a decoded chunk to the union schema's requested fields:
+    present columns pass through (decode order already matches), absent
+    ones become typed all-null columns — rows written before a column
+    existed read back as null, the Iceberg add-column semantics.  Shared
+    columns are type-CHECKED (by normalized DDL, so large/small string
+    and timestamp-unit differences stay benign): a type flip between
+    chunk generations with identical column-name sets is invisible to
+    the union probe (one probe per name set), so this per-chunk check is
+    where it surfaces — a loud schema-conflict error, never a silent
+    cast."""
+    names = tbl.schema.names
+    for f in fields:
+        if f.name in names:
+            _check_same_type(f.name, _ddl_type(tbl.schema.field(f.name).type), _ddl_type(f.type))
+    if names == [f.name for f in fields]:
+        return tbl
+    cols = []
+    for f in fields:
+        if f.name in names:
+            cols.append(tbl.column(f.name))
+        else:
+            cols.append(pa.chunked_array([pa.nulls(tbl.num_rows, f.type)]))
+    return pa.table(cols, names=[f.name for f in fields])
+
+
+def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """large_string/large_binary → string/binary for Spark compatibility."""
+    cols = []
+    fields = []
+    for i, f in enumerate(batch.schema):
+        col = batch.column(i)
+        if pa.types.is_large_string(f.type):
+            col = col.cast(pa.string())
+        elif pa.types.is_large_binary(f.type):
+            col = col.cast(pa.binary())
+        elif pa.types.is_large_list(f.type) or pa.types.is_fixed_size_list(f.type):
+            col = col.cast(pa.list_(f.type.value_type))
+        elif pa.types.is_timestamp(f.type) and (f.type.unit, f.type.tz) != ("us", "UTC"):
+            # one convention regardless of fragment provenance: µs UTC.
+            # Naive inputs are UTC instants (Spark internal micros), and a
+            # naive->aware cast attaches the zone without changing values.
+            col = col.cast(pa.timestamp("us", "UTC"))
+        cols.append(col)
+        fields.append(pa.field(f.name, col.type, f.nullable))
+    return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
+
+
 def _read_chunk_partition(partition: _ChunkScanPartition):
     """Executor-side scan of one packed chunk run: each chunk
     deserializes ONCE — column pruning happens inside the container, so
@@ -520,3 +367,198 @@ def _read_chunk_partition(partition: _ChunkScanPartition):
     finally:
         for fh in handles.values():
             fh.close()
+
+
+def decode_dataset(
+    spark,
+    output_dir: str,
+    columns: list[str] | None = None,
+    key_range: tuple[str | None, str | None] | None = None,
+    filters: list[tuple[str, str, object]] | None = None,
+    pruning_evidence: dict | None = None,
+):
+    """Read the encoded dataset back as a DataFrame of original rows.
+
+    Only fragments whose (unit, run_id) is recorded ok in lineage are
+    read: orphans from a run that crashed between the data commit and the
+    lineage commit are silently skipped (their units were re-encoded by
+    the resuming run).
+
+    ``key_range=(lo, hi)`` (inclusive, None = unbounded) prunes the scan
+    to the encode units whose range boundaries can contain such keys
+    (:func:`..plans.partitioning.units_for_key_range`) — pruned units'
+    payload bytes are never read, the engine's partition-pruning analog
+    — then applies the exact full-precision filter on the decoded key
+    column.  With ``columns``, the key column must be included (the
+    residual filter needs it).
+
+    ``filters=[(col, op, value), ...]`` (op in ``< <= > >= = == != <>
+    in not_in is_null not_null startswith endswith contains``, terms
+    AND-ed; ``endswith``/``contains`` (string columns) have no order
+    relation to bounds and prune through the exact distinct-value sets
+    only, mirroring the reader's ``StringEndsWith``/``StringContains``
+    pushdown; ``in`` /
+    ``not_in`` take a non-empty tuple/list; ``in`` prunes when no
+    listed value fits the bounds; ``!=``/``not_in`` prune only through
+    the distinct-value sets — a chunk whose recorded (exact, non-null)
+    value set is a SUBSET of the rejected values matches nothing —
+    plus the all-null rejection every comparison gets, because bounds
+    can never prove inequality; ``startswith`` (string columns) prunes when no value in
+    [min, max] can carry the prefix — the url-prefix scan shape —
+    and on distinct-value-set membership when recorded;
+    ``is_null``/``not_null`` ignore the value and prune on the recorded
+    per-chunk null counts — an all-null chunk, including one whose
+    generation predates the column under additive evolution, is also
+    skipped for every null-rejecting comparison term) prunes CHUNKS by
+    the per-chunk min/max zone maps the encoder
+    records in the manifest (:func:`.stats._chunk_stats` — the parquet
+    row-group-statistics analog, orthogonal to key_range's unit
+    pruning): a chunk whose recorded bounds cannot satisfy a term is
+    skipped before any payload byte is read, a null/absent bound never
+    prunes, and the exact predicate is re-applied to the decoded rows.
+    Filter columns must be included in ``columns`` when both are given;
+    datasets encoded before zone maps existed decode fine (no stats
+    column → no pruning).
+
+    Disjunctions use pyarrow's DNF shape: a list of LISTS of terms is
+    an OR of AND-groups (``[[("lang", "=", "de")], [("lang", "=",
+    "fr")]]``; the flat list stays one conjunction).  A chunk is
+    pruned only when EVERY group's recorded stats disqualify it — a
+    group with no prunable term keeps all chunks, conservatively
+    disabling pruning for the whole disjunction — and
+    the exact OR-of-AND predicate is re-applied to decoded rows.  The
+    out-of-range-key scan (``key < a OR key >= b``) and the
+    multi-category scan are the intended shapes.
+
+    Terms on the PLAN's key column additionally prune whole encode
+    UNITS (each group's implied key range via
+    :func:`key_range_from_terms`, unioned across the disjunction) —
+    the same layer an explicit ``key_range`` drives, fired before any
+    chunk statistics are consulted; a string IN-list on the key keeps
+    only the units of its listed points.
+
+    Execution: the scan is planned on the driver by the engine's one
+    scan planner (this module's, shared with the ``upe_encoded`` reader)
+    from metadata alone, and runs as ONE Spark job — the planned chunk
+    partitions are broadcast and decoded by one task each, then the
+    exact residual filter applies.  ``pruning_evidence`` (a dict) is
+    filled from the planner's own masks at no extra cost:
+    ``units_total``/``units_qualifying`` when ``key_range`` is given or
+    every group bounds the key, and ``total``/``qualifying`` — manifest
+    slice rows before and after zone-map pruning — whenever filters are
+    given.
+
+    Schema evolution (additive): appends may add or omit columns — the
+    output schema is the union-by-name over all chunk generations
+    (meta-only probes), and generations that predate a column read back
+    as nulls; a column whose TYPE differs between generations raises a
+    schema-conflict error rather than casting silently."""
+    key_col = None
+    if key_range is not None:
+        plan = _load_plan(output_dir)
+        if plan is None:
+            raise ValueError(f"no plan.json under {output_dir} for key-range pruning")
+        key_col = plan.key_col
+        if columns is not None and key_col not in columns:
+            raise ValueError(
+                f"key_range pruning needs the key column '{key_col}' in columns"
+            )
+    fgroups = _filter_groups(filters) if filters else []
+
+    # the schema comes from the whole committed manifest, before any
+    # pruning: it must (a) survive a range that prunes every unit (typed
+    # empty result) and (b) never probe an orphan manifest row — after
+    # vacuum(rewrite_manifest=False), the documented object-store mode,
+    # orphan rows outlive their deleted payload files
+    man = _committed_manifest(output_dir)
+    probe = _probe_chunk_schema(output_dir, man)
+    if columns:
+        missing = [c for c in columns if c not in probe.names]
+        if missing:
+            raise ValueError(f"columns not in dataset: {missing}")
+    out_schema = _arrow_to_ddl(probe, columns)
+
+    for c, op, _v in (t for g in fgroups for t in g):
+        if op not in _FILTER_OPS:
+            raise ValueError(f"unsupported filter op {op!r} (use one of {_FILTER_OPS})")
+        if op in ("in", "not_in") and not _v:
+            raise ValueError(f"empty {op.upper()}-list for filter column {c!r}")
+        if c not in probe.names:
+            raise ValueError(f"filter column {c!r} not in dataset schema")
+        if op in ("startswith", "endswith", "contains") and not (
+            isinstance(_v, str)
+            and (
+                pa.types.is_string(probe.field(c).type)
+                or pa.types.is_large_string(probe.field(c).type)
+            )
+        ):
+            raise ValueError(
+                f"{op} needs a string value on a string column ({c!r})"
+            )
+        if columns is not None and c not in columns:
+            raise ValueError(f"filters need column {c!r} in columns (residual filter)")
+
+    # plan on the driver (metadata only, no Spark job), then run the
+    # partitions as ONE job: one task per partition, driven from a
+    # JVM-native range source — the same task shape as the parquet-path
+    # planner's sample stage.  Partitions pack to the engine's default
+    # size, capped so the live bytes spread over the cluster's cores.
+    sc = spark.sparkContext
+    parts = plan_partitions(
+        output_dir, man, probe, columns, fgroups,
+        key_range=key_range, spread=sc.defaultParallelism, evidence=pruning_evidence,
+    )
+    bparts = sc.broadcast(parts)
+
+    def decode(iterator):
+        planned = bparts.value
+        for batch in iterator:
+            for i in batch.column("id").to_pylist():
+                yield from _read_chunk_partition(planned[i])
+
+    out = spark.range(len(parts), numPartitions=len(parts)).mapInArrow(decode, out_schema)
+    if key_range is not None:
+        # exact residual on the full-precision key (unit pruning is a
+        # conservative prefix-range superset)
+        lo, hi = key_range
+        if lo is not None:
+            out = out.where(_exact_col(key_col) >= lo)
+        if hi is not None:
+            out = out.where(_exact_col(key_col) <= hi)
+    if filters:
+        # exact residual for every term (chunk pruning is conservative;
+        # _exact_col keeps a dotted name from parsing as a struct path),
+        # AND-ed within a group, OR-ed across groups
+        def _term_expr(c, op, v):
+            col = _exact_col(c)
+            if op == "in":
+                return col.isin(*v)
+            if op == "not_in":
+                # SQL NOT IN: null rows never match (same as the chunk
+                # pruner's null-rejecting algebra)
+                return ~col.isin(*v)
+            if op in ("!=", "<>"):
+                return col != v
+            if op == "is_null":
+                return col.isNull()
+            if op == "not_null":
+                return col.isNotNull()
+            if op == "startswith":
+                return col.startswith(v)
+            if op == "endswith":
+                return col.endswith(v)
+            if op == "contains":
+                return col.contains(v)
+            return {
+                "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v
+            }.get(op, col == v)
+
+        cond = None
+        for g in fgroups:
+            gc = None
+            for c, op, v in g:
+                e = _term_expr(c, op, v)
+                gc = e if gc is None else (gc & e)
+            cond = gc if cond is None else (cond | gc)
+        out = out.where(cond)
+    return out

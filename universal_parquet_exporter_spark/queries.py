@@ -25,21 +25,15 @@ from pyspark.sql import functions as F
 
 from .encode.compaction import compact
 from .encode.maintenance import vacuum
-from .encode.pipeline import (
-    EncodeJobConfig,
-    _filter_groups,
-    dataset_column_stats,
-    decode_dataset,
-    encode_job,
-    load_or_build_plan,
-)
+from .encode.meta import _committed_manifest, _probe_chunk_schema
+from .encode.pipeline import EncodeJobConfig, encode_job, load_or_build_plan
 from .encode.scan import (
     DEFAULT_PARTITION_BYTES,
-    _committed_manifest,
-    _normalize_terms,
+    _filter_groups,
     _pack_chunk_partitions,
-    _probe_chunk_schema,
+    decode_dataset,
 )
+from .encode.stats import _normalize_terms, dataset_column_stats
 from .sources.spark_datasource import register
 
 

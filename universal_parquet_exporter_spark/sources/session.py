@@ -20,29 +20,16 @@ def build_session(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-    jvm_headroom: bool = False,
     master: str | None = None,
 ) -> SparkSession:
     """Build a local[n] session; on a real cluster the same confs apply and
     ``master`` is supplied by spark-submit (BASELINE.md launch mode).
     An explicit ``master`` overrides the default ``local[n]`` — e.g.
     ``local-cluster[4,2,6144]`` for separate-executor-JVM topology (the
-    shape bench.py's scaling pair uses).
-
-    ``jvm_headroom=True`` reserves 1/8 of ``cpus`` (min 1 at >= 8 cores)
-    for the executor JVM's own threads (GC, netty, task dispatch) — the
-    standard cluster practice of sizing ``spark.executor.cores`` below
-    the machine core count.  Measured here: with Python workers on every
-    core, JVM wakeups preempt the encode kernels and throughput DROPS at
-    high core counts; a 4-core reserve is the fastest 32-core
-    configuration.  The reserve is PROPORTIONAL so that N-core and
-    4N-core "nodes" are compared fairly in the scaling pair (a fixed
-    reserve would tax only the big leg)."""
+    shape bench.py's scaling pair uses)."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     task_slots = int(cpus)
-    if jvm_headroom and task_slots >= 8:
-        task_slots = task_slots - max(1, task_slots // 8)
     if shuffle_partitions is None:
         shuffle_partitions = max(task_slots, 4)
     builder = (

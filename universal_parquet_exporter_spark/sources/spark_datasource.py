@@ -35,22 +35,20 @@ What Catalyst's v2 pushdown buys here, mechanically:
   exact residual — the same contract parquet row-group statistics have.
 - **Partition planning**: this reader is a thin protocol adapter over
   the engine's one scan planner, :mod:`..encode.scan`, which
-  :func:`..encode.pipeline.decode_dataset` runs too: committed manifest
+  :func:`..encode.scan.decode_dataset` runs too: committed manifest
   rows (lineage semi-join, so orphans from torn runs are invisible),
   unit and chunk pruning, and chunks packed into
   ~``partition_target_bytes`` scan partitions by payload locality.
   Planning reads ONLY metadata (manifest + lineage parquet, plan.json)
   with pyarrow — it runs in Spark's planning worker where no
-  SparkSession exists, exactly like a JVM DSv2 ``ScanBuilder``.  The
-  planner's names (``_committed_manifest``, ``_chunk_keep``,
-  ``_pack_chunk_partitions`` ...) stay importable from this module.
+  SparkSession exists, exactly like a JVM DSv2 ``ScanBuilder``.
 - **Write commit protocol** (``DataSourceArrowWriter``): tasks encode
   their Arrow batches with the engine's own stream
   (:func:`..encode.pipeline._encode_stream` — codec auto-selection,
   bounded buffering, payload files written straight to storage) and
   return their manifest rows as the task's ``WriterCommitMessage``; only
   the driver's ``commit()`` appends manifest + lineage, through the same
-  :func:`..encode.pipeline.commit_fragments` the encode jobs use.  A failed or
+  :func:`..encode.meta.commit_fragments` the encode jobs use.  A failed or
   speculative task leaves at most an uncommitted payload file — dead
   bytes that ``vacuum`` sweeps — so the sink inherits the engine's
   exactly-once-at-job-granularity story through Spark's OWN commit
@@ -102,31 +100,25 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..encode.pipeline import (
+from ..encode.meta import (
     FRAG_PA_SCHEMA,
     _arrow_to_ddl,
+    _committed_manifest,
+    _committed_run_order,
     _ddl_type,
-    _encode_stream,
     _load_plan,
-    _read_meta_table,
+    _probe_chunk_schema,
     _remove_files,
     commit_fragments,
     completed_batch_tags,
     manifest_dir,
     next_manifest_name as _next_manifest_name,
     set_manifest_dir,
-    split_columns,
 )
-from ..encode.scan import (  # noqa: F401  (the planner's names stay importable here)
+from ..encode.pipeline import _encode_stream, split_columns
+from ..encode.scan import (
     DEFAULT_PARTITION_BYTES,
-    _MANIFEST_CACHE,
     _ChunkScanPartition,
-    _chunk_keep,
-    _committed_manifest,
-    _meta_state_token,
-    _normalize_terms,
-    _pack_chunk_partitions,
-    _probe_chunk_schema,
     _read_chunk_partition,
     plan_partitions,
 )
@@ -224,8 +216,7 @@ class _EncodedReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
-        cols = options.get("columns")
-        self.columns = [c.strip() for c in cols.split(",") if c.strip()] if cols else None
+        self.columns = list(split_columns(options.get("columns", ""))) or None
         self.target_bytes = int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
         self._terms: list[tuple[str, str, object]] = []
 
@@ -267,39 +258,6 @@ def _current_generation(path: str) -> str:
     return os.path.basename(manifest_dir(path).rstrip("/"))
 
 
-def _committed_run_order(path: str) -> list[tuple[int, str]]:
-    """Committed runs as a TOTAL ORDER ``(committed_at_µs, run_id)`` —
-    the stream's cursor space.  ``committed_at`` is stamped once per
-    commit (``commit_fragments``, which every encode path and compaction
-    share, stamps one ``datetime.now``), so a run
-    collapses to one cursor point; ``run_id`` (uuid hex) breaks µs ties
-    deterministically.  Runs predating the ``committed_at`` column sort
-    at epoch 0 — an old dataset replays entirely in the first batch,
-    ordered by run id, which is the only order its metadata can
-    support."""
-    import pyarrow.compute as pc
-
-    lin = _read_meta_table(
-        os.path.join(path, "lineage"), ["run_id", "status", "committed_at"]
-    )
-    if lin is None or lin.num_rows == 0:
-        return []
-    lin = lin.filter(pc.equal(lin.column("status"), "ok"))
-    if "committed_at" in lin.schema.names:
-        ts = pc.fill_null(lin.column("committed_at").cast(pa.int64()), 0)
-        lin = lin.set_column(lin.schema.get_field_index("committed_at"), "committed_at", ts)
-    else:
-        lin = lin.append_column("committed_at", pa.array([0] * lin.num_rows, pa.int64()))
-    runs = lin.group_by("run_id").aggregate([("committed_at", "max")])
-    out = sorted(
-        zip(
-            runs.column("committed_at_max").to_pylist(),
-            runs.column("run_id").to_pylist(),
-        )
-    )
-    return [(int(t), r) for t, r in out]
-
-
 class _EncodedStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("upe_encoded")`` — tail a dataset's
     COMMITS.  Completes the source matrix (batch read, batch sink,
@@ -311,7 +269,7 @@ class _EncodedStreamReader(DataSourceStreamReader):
     Offsets are ``{"gen", "ts", "run"}``: the manifest GENERATION the
     stream is pinned to plus the high-water cursor in the total order
     ``(committed_at_µs, run_id)`` over committed runs
-    (:func:`_committed_run_order`).  A micro-batch is the half-open
+    (:func:`..encode.meta._committed_run_order`).  A micro-batch is the half-open
     cursor interval ``(start, end]`` → the manifest fragments of exactly
     those runs, planned into locality-packed chunk partitions by the
     same vectorized planner the batch reader uses
@@ -335,8 +293,7 @@ class _EncodedStreamReader(DataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
-        cols = options.get("columns")
-        self.columns = [c.strip() for c in cols.split(",") if c.strip()] if cols else None
+        self.columns = list(split_columns(options.get("columns", ""))) or None
         self.target_bytes = int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
         self.starting = options.get("starting", "earliest").lower()
         if self.starting not in ("earliest", "latest"):
@@ -527,7 +484,7 @@ class _EncodedWriterBase:
     # -- commit side (Spark's Python planning worker: pyarrow only) -----
     def _commit_rows(self, rows: list[dict], data_dir: str, run_id: str, batch_tag: str = "") -> None:
         """Commit the tasks' manifest rows through the engine's shared
-        :func:`..encode.pipeline.commit_fragments` — the same manifest
+        :func:`..encode.meta.commit_fragments` — the same manifest
         file + lineage file every encode job writes.  Spark's commit hook
         runs in the Python planning worker where no SparkSession exists;
         the commit needs none (pyarrow files, temp-write + rename)."""
@@ -607,7 +564,7 @@ class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int):
         tag = self._tag(batchId)
-        if tag in completed_batch_tags(None, self.path):
+        if tag in completed_batch_tags(self.path):
             # replayed epoch (sink committed, checkpoint didn't): the
             # rerun's payload files are duplicates — drop, don't commit
             self._drop_payload(messages)
@@ -643,8 +600,7 @@ class EncodedContainerDataSource(DataSource):
             raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
         man = _committed_manifest(path)
         probe = _probe_chunk_schema(path, man)
-        cols = self.options.get("columns")
-        columns = [c.strip() for c in cols.split(",") if c.strip()] if cols else None
+        columns = split_columns(self.options.get("columns", ""))
         if columns:
             missing = [c for c in columns if c not in probe.names]
             if missing:

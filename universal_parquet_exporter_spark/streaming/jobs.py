@@ -82,14 +82,15 @@ def streaming_encode_ingest(
     across all later batches and restarts."""
     import os as _os
 
-    from ..encode.pipeline import EncodeJobConfig, completed_batch_tags, encode_job
+    from ..encode.meta import completed_batch_tags
+    from ..encode.pipeline import EncodeJobConfig, encode_job
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(source_dir)
 
     def sink(batch_df, batch_id: int):
         tag = f"batch_{batch_id}"
         sess = batch_df.sparkSession
-        if tag in completed_batch_tags(sess, output_dir):
+        if tag in completed_batch_tags(output_dir):
             return  # replayed attempt of a committed batch: no-op
         cfg = EncodeJobConfig(
             output_dir=output_dir,
