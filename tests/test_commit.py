@@ -151,13 +151,13 @@ def test_crash_between_manifest_and_lineage_is_invisible_and_resumable(
     assert dec.select("url").distinct().count() == N_ROWS
 
 
-def test_parquet_job_runs_two_spark_jobs_fresh_and_one_on_resume(spark, webpages_parquet, tmp_path):
-    """Fresh directory: the plan sample and the encode stage, nothing
-    else (the commit, the resume check and the returned totals read and
-    write metadata with pyarrow).  Resume: the plan is reloaded, so only
-    the stage runs."""
+def test_parquet_job_runs_one_spark_job_fresh_and_on_resume(spark, webpages_parquet, tmp_path):
+    """Only the encode stage runs as a Spark job: the plan is sampled on
+    the driver (fresh directory) or reloaded (resume), and the commit,
+    the resume check and the returned totals read and write metadata
+    with pyarrow."""
     out = str(tmp_path / "d")
-    assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 2
+    assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1
     assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1
 
 

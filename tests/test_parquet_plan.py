@@ -1,0 +1,114 @@
+"""The parquet-path planner (:func:`load_or_build_plan_parquet`): a
+driver-side sample of at most 16 row groups, no Spark job, a pinned
+``plan.json``, and bad input rejected before any Spark job."""
+
+import os
+import time
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from tests.conftest import _spark_jobs
+from universal_parquet_exporter_spark.encode.pipeline import (
+    EncodeJobConfig,
+    _parquet_work_items,
+    encode_job,
+    encode_parquet_job,
+    load_or_build_plan_parquet,
+)
+from universal_parquet_exporter_spark.fixtures.webpages import generate_batch
+from universal_parquet_exporter_spark.plans.partitioning import assign_units_arrow
+
+FILES, FILE_ROWS, RG_ROWS = 4, 1280, 160
+
+# plan.json for the fixture below (32 row groups: every second one
+# picked, every second row of each sampled).  Unit boundaries, and so
+# every payload byte, follow from it: it must not change byte for byte.
+_PINNED_PLAN = (
+    '{"key_col": "url", "boundaries": ['
+    '"https://host0000.example0.com/877d/877d42/6", '
+    '"https://host0001.example1.com/1e5c/1e5c9d/1e5c9d", '
+    '"https://host0002.example2.com/a944/a94495/12fe", '
+    '"https://host0005.example5.com/942a/942a8b/e24", '
+    '"https://host0015.example1.com/6ec6/c9c", '
+    '"https://host0047.example5.com/90c0/1ba", '
+    '"https://host0164.example3.com/fe42/118e"], '
+    '"salts": [1, 1, 1, 1, 1, 1, 1, 1]}'
+)
+
+
+@pytest.fixture(scope="module")
+def pages_dir(tmp_path_factory):
+    """4 files of 8 row groups, written by pyarrow so the row-group
+    layout is fixed (no Spark writer ordering)."""
+    d = str(tmp_path_factory.mktemp("plan_in"))
+    for i in range(FILES):
+        ids = np.arange(i * FILE_ROWS, (i + 1) * FILE_ROWS)
+        tbl = pa.Table.from_batches([generate_batch(ids)])
+        pq.write_table(tbl, os.path.join(d, f"part-{i}.parquet"), row_group_size=RG_ROWS)
+    return d
+
+
+def _cfg(out, **kw):
+    kw = {"target_unit_bytes": 1 << 20, "sample_rows": 1024, **kw}
+    return EncodeJobConfig(output_dir=str(out), **kw)
+
+
+def _plan_json(out):
+    with open(os.path.join(str(out), "plan.json")) as f:
+        return f.read()
+
+
+def test_parquet_plan_json_is_pinned(spark, pages_dir, tmp_path):
+    encode_parquet_job(spark, pages_dir, _cfg(tmp_path))
+    assert _plan_json(tmp_path) == _PINNED_PLAN
+
+
+def test_parquet_plan_runs_no_spark_job(spark, pages_dir, tmp_path):
+    items, total = _parquet_work_items(pages_dir)
+    cfg = _cfg(tmp_path)
+    assert _spark_jobs(spark, lambda: load_or_build_plan_parquet(items, total, cfg)) == 0
+    assert _plan_json(tmp_path) == _PINNED_PLAN
+
+
+def test_parquet_plan_skips_size_columns_the_input_lacks(spark, pages_dir, tmp_path):
+    encode_parquet_job(spark, pages_dir, _cfg(tmp_path / "a", size_cols=("text",)))
+    encode_parquet_job(spark, pages_dir, _cfg(tmp_path / "b", size_cols=("text", "nope")))
+    assert _plan_json(tmp_path / "b") == _plan_json(tmp_path / "a")
+
+
+def test_parquet_plan_counts_8_bytes_a_row_without_size_columns(spark, pages_dir, tmp_path):
+    """With no size column every row counts 8 bytes, so a target of a
+    quarter of ``8 * rows`` cuts the keys into 4 row-balanced units."""
+    n = FILES * FILE_ROWS
+    cfg = _cfg(tmp_path, size_cols=(), target_unit_bytes=8 * n // 4)
+    m = encode_parquet_job(spark, pages_dir, cfg)
+    assert m["plan_units"] == 4 and m["rows"] == n
+    items, total = _parquet_work_items(pages_dir)
+    plan = load_or_build_plan_parquet(items, total, cfg)
+    keys = pq.read_table(pages_dir, columns=["url"]).column("url")
+    counts = np.bincount(assign_units_arrow(keys, plan), minlength=4)
+    assert counts.min() > 0.15 * n and counts.max() < 0.35 * n, counts
+
+
+def test_parquet_job_rejects_a_missing_key_column_before_any_spark_job(spark, pages_dir, tmp_path):
+    def run():
+        with pytest.raises(ValueError, match="key column 'nope'"):
+            encode_parquet_job(spark, pages_dir, _cfg(tmp_path, key_col="nope"))
+
+    assert _spark_jobs(spark, run) == 0
+    assert not os.path.exists(os.path.join(str(tmp_path), "plan.json"))
+
+
+@pytest.mark.parametrize("path", ["parquet", "dataframe"])
+def test_encode_jobs_report_plan_time(spark, pages_dir, tmp_path, path):
+    t0 = time.perf_counter()
+    if path == "parquet":
+        m = encode_parquet_job(spark, pages_dir, _cfg(tmp_path))
+    else:
+        m = encode_job(spark, spark.read.parquet(pages_dir), _cfg(tmp_path))
+    wall = time.perf_counter() - t0
+    assert 0 <= m["plan_sec"] <= wall
+    assert m["plan_sec"] + m["encode_stage_sec"] <= wall

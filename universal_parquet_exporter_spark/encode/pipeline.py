@@ -243,53 +243,40 @@ def _expand_row_groups(pf, rg: int):
 
 
 def load_or_build_plan_parquet(
-    spark, items: list[tuple[str, int]], total_rows: int, cfg: EncodeJobConfig
+    items: list[tuple[str, int]], total_rows: int, cfg: EncodeJobConfig
 ) -> EncodePlan:
-    """Parquet-path planner: sample (key, row-size) from a deterministic
-    subset of row groups, read IN PARALLEL by pyarrow inside Python
-    workers — the full input is never scanned and no raw rows cross the
-    JVM boundary (a DataFrame ``.sample()`` would scan everything)."""
+    """Parquet-path planner: sample (key, row-size) from at most 16 row
+    groups, read by pyarrow on the driver one at a time — no Spark job,
+    and the full input is never scanned (a DataFrame ``.sample()`` would
+    scan everything).  Size columns the input lacks are skipped (none
+    left: 8 bytes a row, the DataFrame planner's rule); a missing key
+    column raises ``ValueError``."""
     plan = _load_plan(cfg.output_dir)
     if plan is not None:
         return plan
 
+    import pyarrow.compute as pc
+
     from ..plans.partitioning import plan_from_sample
 
     key_col = cfg.key_col
-    size_cols = list(cfg.size_cols)
     pick = items[:: max(1, len(items) // 16)][:16]
     per_item = max(64, cfg.sample_rows // len(pick))
-    # the same task shape as the encode stage: broadcast the picked items
-    # and drive one task per item from a JVM-native range source — no
-    # createDataFrame + repartition shuffle in front of the sample
-    bpick = spark.sparkContext.broadcast(pick)
-
-    def sample_rg(iterator):
-        import pyarrow.compute as pc
-
-        picked = bpick.value
-        for batch in iterator:
-            for i in batch.column("id").to_pylist():
-                path, rg = picked[i]
-                tbl = _parquet_file(path).read_row_group(
-                    max(rg, 0), columns=[key_col] + size_cols, use_threads=False
-                )
-                stride = max(1, tbl.num_rows // per_item)
-                tbl = tbl.take(pa.array(range(0, tbl.num_rows, stride)))
-                sz = None
-                for c in size_cols:
-                    ln = pc.coalesce(pc.binary_length(tbl.column(c)), pa.scalar(0)).cast("int64")
-                    sz = ln if sz is None else pc.add(sz, ln)
-                k = tbl.column(key_col).cast(pa.string()).combine_chunks()
-                if isinstance(sz, pa.ChunkedArray):
-                    sz = sz.combine_chunks()
-                yield pa.RecordBatch.from_pydict({"k": k, "sz": sz})
-
-    sample = (
-        spark.range(len(pick), numPartitions=len(pick))
-        .mapInArrow(sample_rg, "k string, sz long")
-        .toPandas()
-    )
+    keys, sizes = [], []
+    for path, rg in pick:
+        tbl = _parquet_file(path).read_row_group(max(rg, 0), columns=[key_col, *cfg.size_cols])
+        if key_col not in tbl.column_names:
+            raise ValueError(f"key column {key_col!r} is not in the parquet input {path}")
+        rows = np.arange(0, tbl.num_rows, max(1, tbl.num_rows // per_item))
+        size_cols = [c for c in cfg.size_cols if c in tbl.column_names]
+        sz = np.full(tbl.num_rows, 0 if size_cols else 8, dtype=np.int64)
+        for c in size_cols:
+            sz += pc.coalesce(pc.binary_length(tbl.column(c)), 0).to_numpy()
+        keys.append(tbl.column(key_col).take(rows).cast(pa.string()).combine_chunks())
+        sizes.append(sz[rows])
+    sample = pa.table(
+        {"k": pa.chunked_array(keys, pa.string()), "sz": np.concatenate(sizes)}
+    ).to_pandas()
     plan = plan_from_sample(sample, total_rows, key_col, cfg.target_unit_bytes)
     _persist_plan(plan, cfg.output_dir)
     return plan
@@ -555,7 +542,9 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
             f"encode path (Spark mapInArrow limitation): {bad}; rename them "
             "or write via df.write.format('upe_encoded')"
         )
+    t_plan = time.perf_counter()
     plan = load_or_build_plan(df, cfg)
+    plan_sec = time.perf_counter() - t_plan
     if cfg.cluster_by:
         missing = [c for c in cfg.cluster_by if c not in df.columns]
         if missing:
@@ -570,7 +559,7 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
         n_part = cfg.map_tasks or spark.sparkContext.defaultParallelism
         cols = list(cfg.cluster_by)
         df = df.repartitionByRange(n_part, *cols).sortWithinPartitions(*cols)
-    return _run_encode(spark, df, plan, cfg, cluster_cols=cfg.cluster_by)
+    return _run_encode(spark, df, plan, plan_sec, cfg, cluster_cols=cfg.cluster_by)
 
 
 def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: int = 65536) -> dict:
@@ -584,7 +573,9 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
     the only Arrow-IPC traffic is the encoded fragments (~5x smaller).
     This is the scan topology a 1000-executor job wants — column chunks
     stream from storage straight into the encode kernels — and it is what
-    `bench.py` measures.
+    `bench.py` measures.  The plan is sampled on the driver
+    (:func:`load_or_build_plan_parquet`), so a call runs ONE Spark job,
+    the encode stage, on a fresh directory and on a resume alike.
 
     With ``cfg.input_format == "iceberg"``, ``input_dir`` is a catalog
     table name and the work-list comes from the table's manifests
@@ -595,7 +586,9 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
         items, total_rows = _parquet_work_items(input_dir)
     if not items:
         raise ValueError(f"no parquet input in {input_dir}")
-    plan = load_or_build_plan_parquet(spark, items, total_rows, cfg)
+    t_plan = time.perf_counter()
+    plan = load_or_build_plan_parquet(items, total_rows, cfg)
+    plan_sec = time.perf_counter() - t_plan
 
     # task granularity: cfg.map_tasks if pinned (benchmarks pin it so
     # every parallelism level runs identical per-task work), else ~4
@@ -623,10 +616,12 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
                         yield from tbl.to_batches(max_chunksize=batch_rows)
 
     work = spark.range(n_map, numPartitions=n_map)
-    return _run_encode(spark, work, plan, cfg, read=read_slices)
+    return _run_encode(spark, work, plan, plan_sec, cfg, read=read_slices)
 
 
-def _run_encode(spark, work, plan: EncodePlan, cfg: EncodeJobConfig, read=None, cluster_cols=()) -> dict:
+def _run_encode(
+    spark, work, plan: EncodePlan, plan_sec: float, cfg: EncodeJobConfig, read=None, cluster_cols=()
+) -> dict:
     """The encode stage both jobs run: broadcast the plan and the units
     a resume skips, encode each partition of ``work`` through
     :func:`_encode_stream` (``read`` turns a task's input batches into
@@ -647,10 +642,12 @@ def _run_encode(spark, work, plan: EncodePlan, cfg: EncodeJobConfig, read=None, 
             max_buf, cluster_cols=cluster_cols,
         )
 
-    return _finish_encode(work.mapInArrow(map_encode, FRAG_SCHEMA), plan, done, cfg)
+    return _finish_encode(work.mapInArrow(map_encode, FRAG_SCHEMA), plan, plan_sec, done, cfg)
 
 
-def _finish_encode(frags, plan: EncodePlan, done: np.ndarray, cfg: EncodeJobConfig) -> dict:
+def _finish_encode(
+    frags, plan: EncodePlan, plan_sec: float, done: np.ndarray, cfg: EncodeJobConfig
+) -> dict:
     """Shared tail of the encode job: ONE Spark action runs the encode
     stage and brings its MANIFEST rows to the driver as Arrow — the
     encoded bytes themselves were already written to payload files by
@@ -682,6 +679,7 @@ def _finish_encode(frags, plan: EncodePlan, done: np.ndarray, cfg: EncodeJobConf
         "bytes_in": bytes_in,
         "bytes_out": bytes_out,
         "ratio": bytes_out / bytes_in if bytes_in else None,
+        "plan_sec": round(plan_sec, 3),
         "encode_stage_sec": round(stage_wall, 3),
     }
 
