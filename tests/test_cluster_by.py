@@ -8,12 +8,14 @@ writes tables in arbitrary DB cursor order
 over its output reads everything."""
 
 import json
+import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import _spark_jobs
 from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
 from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.fixtures import generate_webpages
@@ -140,9 +142,15 @@ def test_clustered_filter_decode_prunes_and_is_exact(spark, webpages, outdir):
 
 
 def test_cluster_by_missing_column_fails_loudly(spark, webpages, outdir):
+    """The column check runs before planning: no Spark job, no plan.json."""
     cfg = EncodeJobConfig(output_dir=outdir, cluster_by=("nope",))
-    with pytest.raises(ValueError, match="cluster_by"):
-        encode_job(spark, webpages, cfg)
+
+    def call():
+        with pytest.raises(ValueError, match="cluster_by"):
+            encode_job(spark, webpages, cfg)
+
+    assert _spark_jobs(spark, call) == 0
+    assert not os.path.exists(os.path.join(outdir, "plan.json"))
 
 
 def test_cluster_by_categorical_collapses_distinct_sets(spark, webpages, outdir):

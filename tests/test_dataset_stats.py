@@ -76,13 +76,13 @@ def test_stats_never_decode_payload(spark, outdir, monkeypatch):
     df = _df(spark, n=300)
     _encode(spark, df, outdir)
 
-    from universal_parquet_exporter_spark.encode import compaction, container, scan
+    from universal_parquet_exporter_spark.encode import container, scan
 
     def boom(*a, **k):  # pragma: no cover - the assert IS the test
         raise AssertionError("dataset_column_stats decoded a payload chunk")
 
     # every module binding the payload decoder
-    for mod in (container, scan, compaction):
+    for mod in (container, scan):
         monkeypatch.setattr(mod, "deserialize_chunk", boom)
     st = {r.column: r for r in dataset_column_stats(spark, outdir).collect()}
     assert int(st["n"].max) == 299 and st["n"].row_count == 300

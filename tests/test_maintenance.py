@@ -243,7 +243,7 @@ def test_decode_key_range_after_vacuum_without_rewrite(spark, webpages, outdir):
 
     plan = _load_plan(outdir)
     lo, hi = plan.boundaries[0], plan.boundaries[-1]
-    got = decode_dataset(spark, outdir, key_range=(lo, hi))
+    got = decode_dataset(spark, outdir, filters=[("url", ">=", lo), ("url", "<=", hi)])
     expect = webpages.where((F.col("url") >= lo) & (F.col("url") <= hi))
     assert got.count() == expect.count()
 

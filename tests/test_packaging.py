@@ -25,6 +25,8 @@ def test_engine_zip_imports_standalone():
             "import universal_parquet_exporter_spark.encode.stats;"
             "import universal_parquet_exporter_spark.encode.scan;"
             "import universal_parquet_exporter_spark.encode.pipeline;"
+            "import universal_parquet_exporter_spark.encode.compaction;"
+            "import universal_parquet_exporter_spark.encode.maintenance;"
             "import universal_parquet_exporter_spark.operators.relational;"
             "import __spark_entry__;"
             "assert m.__file__.startswith(sys.path[0]), m.__file__;"
@@ -126,6 +128,24 @@ def test_dataset_storage_has_one_path():
         if site in scheme_tests:
             scheme_tests.remove(site)
     assert scheme_tests == []
+
+
+def test_payload_decode_has_one_owner():
+    """Only the scan module decodes payload chunks: compaction and every
+    other engine module read payload through ``encode/scan.py``."""
+    pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
+    callers = set()
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                for line in f:
+                    if "deserialize_chunk(" in line and "def deserialize_chunk(" not in line:
+                        callers.add(rel)
+    assert callers == {"encode/scan.py"}
 
 
 def test_metadata_formats_have_one_owner():

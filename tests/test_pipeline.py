@@ -390,8 +390,9 @@ def test_units_for_key_range_superset_property():
 
 
 def test_decode_key_range_prunes_units(spark, webpages, outdir):
-    """key_range decode: exact rows AND fewer manifest rows scanned than
-    the full decode (whole units skipped before any payload read)."""
+    """Key-range decode through key-column filters: exact rows AND fewer
+    manifest rows scanned than the full decode (whole units skipped
+    before any payload read)."""
     from universal_parquet_exporter_spark.encode.meta import _load_plan
     from universal_parquet_exporter_spark.plans.partitioning import units_for_key_range
 
@@ -404,7 +405,8 @@ def test_decode_key_range_prunes_units(spark, webpages, outdir):
     kept = units_for_key_range(plan, lo, hi)
     assert 0 < len(kept) < plan.n_units
 
-    got = decode_dataset(spark, outdir, key_range=(lo, hi))
+    key_range = [("url", ">=", lo), ("url", "<=", hi)]
+    got = decode_dataset(spark, outdir, filters=key_range)
     expect = webpages.where((F.col("url") >= lo) & (F.col("url") <= hi))
     assert got.count() == expect.count()
     assert _mismatches(expect, got) == 0
@@ -413,8 +415,8 @@ def test_decode_key_range_prunes_units(spark, webpages, outdir):
     scanned = manifest.where(F.col("unit").isin(kept)).count()
     assert scanned < manifest.count()
 
-    with pytest.raises(ValueError, match="key column"):
-        decode_dataset(spark, outdir, columns=["lang"], key_range=(lo, hi))
+    with pytest.raises(ValueError, match="filters need column 'url'"):
+        decode_dataset(spark, outdir, columns=["lang"], filters=key_range)
 
 
 def test_encode_stream_buffer_is_bounded_and_exact():
@@ -627,17 +629,17 @@ def test_decode_key_range_empty_and_inverted(spark, webpages, outdir):
     encode_job(spark, webpages, cfg)
     full = decode_dataset(spark, outdir)
 
-    inverted = decode_dataset(spark, outdir, key_range=("zzz", "aaa"))
+    inverted = decode_dataset(spark, outdir, filters=[("url", ">=", "zzz"), ("url", "<=", "aaa")])
     assert inverted.schema == full.schema
     assert inverted.count() == 0
 
-    beyond = decode_dataset(spark, outdir, key_range=("￿", None))
+    beyond = decode_dataset(spark, outdir, filters=[("url", ">=", "￿")])
     assert beyond.schema == full.schema
     assert beyond.count() == 0
 
     # lo == hi on an existing key: exactly that url's rows
     one = webpages.select("url").orderBy("url").limit(1).collect()[0].url
-    got = decode_dataset(spark, outdir, key_range=(one, one))
+    got = decode_dataset(spark, outdir, filters=[("url", ">=", one), ("url", "<=", one)])
     assert got.count() == webpages.where(F.col("url") == one).count()
 
     # column pruning COMBINED with key-range pruning: both prunes apply,
@@ -646,7 +648,9 @@ def test_decode_key_range_empty_and_inverted(spark, webpages, outdir):
 
     plan = _load_plan(outdir)
     lo, hi = plan.boundaries[0], plan.boundaries[-1]
-    sub = decode_dataset(spark, outdir, columns=["url", "lang"], key_range=(lo, hi))
+    sub = decode_dataset(
+        spark, outdir, columns=["url", "lang"], filters=[("url", ">=", lo), ("url", "<=", hi)]
+    )
     assert sub.columns == ["url", "lang"]
     expect = webpages.where((F.col("url") >= lo) & (F.col("url") <= hi)).select("url", "lang")
     assert sub.count() == expect.count()

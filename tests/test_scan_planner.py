@@ -94,18 +94,6 @@ def test_decode_dataset_runs_one_spark_job(spark, pages):
     assert ev["total"] == len(rows)
     assert ev["qualifying"] == sum(chunk_may_match(r["stats"]) for r in rows) > 0
 
-    # a key_range fills the unit counts on its own, and intersects with
-    # the filter groups' units when both are given (planning only)
-    mid = urls[len(urls) * 3 // 8]
-    kr_units = set(units_for_key_range(plan, mid, None))
-    ev_kr: dict = {}
-    decode_dataset(spark, out, key_range=(mid, None), pruning_evidence=ev_kr)
-    assert ev_kr == {"units_total": plan.n_units, "units_qualifying": len(kr_units)}
-    ev_both: dict = {}
-    decode_dataset(spark, out, filters=terms, key_range=(mid, None), pruning_evidence=ev_both)
-    assert ev_both["units_total"] == plan.n_units
-    assert ev_both["units_qualifying"] == len(units & kr_units) > 0
-
 
 def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tmp_path):
     """The planner's manifest cache is keyed on the committed file names

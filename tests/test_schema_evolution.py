@@ -11,6 +11,11 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from universal_parquet_exporter_spark.encode.compaction import compact
+from universal_parquet_exporter_spark.encode.meta import (
+    _committed_manifest,
+    _ddl_type,
+    _probe_chunk_schema,
+)
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     encode_job,
@@ -122,14 +127,20 @@ def test_decode_fails_loudly_on_conflicting_generations(spark, tmp_path):
 def test_timestamp_ntz_appends_match_an_ntz_dataset(spark, tmp_path):
     """A dataset encoded from TIMESTAMP_NTZ stores naive timestamps: an
     NTZ append is the same type and compacts with the first generation;
-    a TIMESTAMP (zone-aware) append is a type flip, rejected up front."""
+    a TIMESTAMP (zone-aware) append is a type flip, rejected up front.
+    Compaction rewrites the stored types, not Spark's read types, so an
+    NTZ append after it is still the same type."""
     out = str(tmp_path / "ntz")
     df = _docs(spark).withColumn("ts", F.timestamp_seconds("n_chars").cast("timestamp_ntz"))
     load_or_build_plan(df, EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",)))
     sds.register(spark)
-    for half in (0, 1):  # every unit gets a slice from each append
+
+    def append_half(half):
         part = df.where(F.crc32("doc_id") % 2 == half)
         part.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
+
+    for half in (0, 1):  # every unit gets a slice from each append
+        append_half(half)
 
     def read_back():
         got = spark.read.format("upe_encoded").load(out)
@@ -142,3 +153,6 @@ def test_timestamp_ntz_appends_match_an_ntz_dataset(spark, tmp_path):
     rep = compact(spark, out)
     assert rep["units_compacted"] > 0
     assert read_back() == _rows(df)
+    append_half(0)
+    probe = _probe_chunk_schema(out, _committed_manifest(out))
+    assert _ddl_type(probe.field("ts").type, ntz=True) == "timestamp_ntz"

@@ -4,6 +4,8 @@ tests (``/root/reference/tests/test_mysql_connection.py:23-62``, kwargs
 asserted against a stubbed connector) and its env-config contract
 (``config/sqlserver_config.py:53-106``)."""
 
+import os
+
 import pytest
 
 from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig
@@ -125,6 +127,14 @@ def test_encode_config_from_environment(monkeypatch):
     assert cfg.map_tasks == 56
     assert cfg.max_buffer_bytes == 64 << 20
     assert cfg.run_id  # generated
+
+
+def test_encode_config_from_environment_defaults_are_the_dataclass_defaults(monkeypatch):
+    for var in [v for v in os.environ if v.startswith("UPES_ENCODE_")]:
+        monkeypatch.delenv(var)
+    monkeypatch.setenv("UPES_ENCODE_OUTPUT_DIR", "/data/out")
+    cfg = EncodeJobConfig.from_environment()
+    assert cfg == EncodeJobConfig(output_dir="/data/out", run_id=cfg.run_id)
 
 
 def test_encode_config_from_environment_missing(monkeypatch):

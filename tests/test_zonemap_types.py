@@ -227,7 +227,7 @@ def test_key_range_decode_unchanged_by_range_predicate(spark, outdir):
         target_unit_bytes=8 << 10, chunk_rows=64,
     )
     encode_job(spark, df, cfg)
-    dec = decode_dataset(spark, outdir, key_range=("000100", "000250"))
+    dec = decode_dataset(spark, outdir, filters=[("k", ">=", "000100"), ("k", "<=", "000250")])
     got = sorted(r.k for r in dec.collect())
     assert got == [f"{i:06d}" for i in range(100, 251)]
 
@@ -819,8 +819,7 @@ def test_endswith_contains_nullsafe_pushdown_through_reader(spark, outdir):
 
 def test_filter_driven_unit_pruning(spark, outdir):
     """Terms on the plan's key column prune whole encode UNITS before
-    any chunk statistics are consulted — the same layer an explicit
-    key_range drives, derived from the filters themselves."""
+    any chunk statistics are consulted."""
     df = _typed_df(spark)
     cfg = EncodeJobConfig(
         output_dir=outdir, key_col="k", size_cols=("text",),

@@ -15,10 +15,11 @@ repair.  :func:`compact` is the engine's analog:
    committed manifest (:func:`.meta._committed_manifest`), on the
    driver, with no Spark job.
 2. **Rewrite** those units in ONE Spark job: the driver packs the
-   target slices by unit into one list per task, sorted by
-   (file, offset, row_off), and broadcasts them; each task decodes its
-   units' slices straight from storage (payload bytes never enter the
-   JVM, and there is no shuffle), re-encodes them as fresh
+   target slices by unit into one scan partition per task
+   (:func:`.scan._pack_chunk_partitions`) and broadcasts them; each task
+   decodes its units' slices straight from storage through the scan
+   module's read loop (payload bytes never enter the JVM, and there is
+   no shuffle), re-encodes them as fresh
    ~``chunk_rows``-row chunks with freshly trained FSST tables and zone
    maps, appends new payload files, and returns their manifest rows.
 3. **Publish atomically** with the same versioned-manifest pointer
@@ -56,13 +57,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .container import deserialize_chunk
 from .meta import (
     FRAG_SCHEMA,
     _committed_manifest,
     _load_plan,
     _meta_files,
-    _open_payload,
     _probe_chunk_schema,
     _read_meta_table,
     _write_parquet_file,
@@ -71,17 +70,17 @@ from .meta import (
     next_manifest_name,
     set_manifest_dir,
 )
-from .pipeline import _encode_stream
-from .scan import _pad_table
+from .pipeline import DEFAULT_CHUNK_ROWS, DEFAULT_MAX_BUFFER_BYTES, _encode_stream
+from .scan import _pack_chunk_partitions, _read_padded, _run_partitions
 
 
 def compact(
     spark,
     output_dir: str,
     *,
-    chunk_rows: int = 32768,
+    chunk_rows: int = DEFAULT_CHUNK_ROWS,
     min_avg_slice_rows: int | None = None,
-    max_buffer_bytes: int = 256 << 20,
+    max_buffer_bytes: int = DEFAULT_MAX_BUFFER_BYTES,
     dry_run: bool = False,
     cluster_by: tuple = (),
 ) -> dict:
@@ -158,53 +157,29 @@ def compact(
         )
 
     # a unit's slices must meet in one task (so it re-packs into the
-    # fewest chunks): contiguous runs of sorted unit ids, one per task,
-    # each task's slices sorted by (file, offset, row_off) so the read
-    # loop deserializes each chunk once
-    sc = spark.sparkContext
-    n_part = max(1, min(n_targets, sc.defaultParallelism))
+    # fewest chunks): contiguous runs of sorted unit ids, one scan
+    # partition per task over all columns of the targets' union, never
+    # split by size
+    n_part = max(1, min(n_targets, spark.sparkContext.defaultParallelism))
     sorted_units = np.sort(target_units.to_numpy())
-    task = np.searchsorted(sorted_units, slices.column("unit").to_numpy()) * n_part // n_targets
-    slices = slices.append_column("task", pa.array(task)).sort_by(
-        [(c, "ascending") for c in ("task", "file", "offset", "row_off")]
-    )
-    work: list[list] = [[] for _ in range(n_part)]
-    cols = ("task", "file", "offset", "length", "row_off", "n_rows")
-    for t, *sl in zip(*(slices.column(c).to_pylist() for c in cols)):
-        work[t].append(sl)
-    bwork = sc.broadcast((plan.to_json(), work))
+    by_unit = slices.sort_by("unit")
+    task = np.searchsorted(sorted_units, by_unit.column("unit").to_numpy()) * n_part // n_targets
+    cuts = np.searchsorted(task, np.arange(n_part + 1))
+    parts = [
+        _pack_chunk_partitions(
+            by_unit.slice(s, e - s), payload_dir, None, union_fields, float("inf"), [], None
+        )[0]
+        for s, e in zip(cuts[:-1], cuts[1:])
+    ]
+    bplan = spark.sparkContext.broadcast(plan.to_json())
     key_col = plan.key_col
 
-    def rewrite(iterator):
-        """Decode this task's slices (one-chunk cache) and feed the rows
-        straight back through the encode stream — payload in and out
-        via storage."""
-        plan_json, planned = bwork.value
-
-        def decoded():
-            handles: dict[str, object] = {}
-            cur_key, cur_tbl = None, None
-            try:
-                for batch in iterator:
-                    for i in batch.column("id").to_pylist():
-                        for fname, off, ln, roff, nr in planned[i]:
-                            if (fname, off) != cur_key:
-                                fh = handles.get(fname)
-                                if fh is None:
-                                    fh = handles[fname] = _open_payload(payload_dir, fname)
-                                fh.seek(off)
-                                cur_tbl = _pad_table(deserialize_chunk(fh.read(ln)), union_fields)
-                                cur_key = (fname, off)
-                            for b in cur_tbl.slice(roff, nr).to_batches():
-                                if b.num_rows:
-                                    yield b
-            finally:
-                for fh in handles.values():
-                    fh.close()
-
+    def rewrite(part):
+        """Feed the partition's decoded rows straight back through the
+        encode stream — payload in and out via storage."""
         yield from _encode_stream(
-            decoded(),
-            EncodePlan.from_json(plan_json),
+            _read_padded(part),
+            EncodePlan.from_json(bplan.value),
             np.array([], dtype=np.int64),
             key_col,
             payload_dir,
@@ -215,9 +190,7 @@ def compact(
         )
 
     run_id = "compact-" + uuid.uuid4().hex[:12]
-    new_frags = (
-        spark.range(n_part, numPartitions=n_part).mapInArrow(rewrite, FRAG_SCHEMA).toArrow()
-    )
+    new_frags = _run_partitions(spark, parts, rewrite, FRAG_SCHEMA).toArrow()
 
     # surviving manifest = every raw row except the compacted units'
     # COMMITTED rows (the (unit, run_id) pairs the targets were read

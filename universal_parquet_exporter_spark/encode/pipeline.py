@@ -58,6 +58,11 @@ from .meta import (
 from .scan import decode_dataset  # noqa: F401  (perfbench/engine.py calls pipeline.decode_dataset)
 from .stats import _chunk_stats
 
+# the encode defaults every entry point shares (EncodeJobConfig, the
+# upe_encoded writer's options, compaction)
+DEFAULT_CHUNK_ROWS = 32768
+DEFAULT_MAX_BUFFER_BYTES = 256 << 20
+
 
 def split_columns(spec: str) -> tuple:
     """``"lang, n_chars"`` → ``("lang", "n_chars")``: a comma-separated
@@ -81,13 +86,13 @@ class EncodeJobConfig:
     # ratio degrade sharply on tiny chunks (measured ~5x between 600-row
     # and 10k-row chunks), so chunk size must NOT depend on how many
     # units a task happens to touch.
-    chunk_rows: int = 32768
+    chunk_rows: int = DEFAULT_CHUNK_ROWS
     # per-task buffered-bytes cap: the encode stream flushes a grouped
     # chunk wave whenever buffered input crosses this, so task memory is
     # independent of the input split size (a 100 TB job can keep
     # map_tasks small without risking executor OOM).  256 MB default =
     # several full-size chunks per wave, no measurable ratio cost.
-    max_buffer_bytes: int = 256 << 20
+    max_buffer_bytes: int = DEFAULT_MAX_BUFFER_BYTES
     # explicit map-task count for the parquet path (None = ~4 waves of
     # defaultParallelism).  Benchmarks pin this so every parallelism
     # level runs IDENTICAL per-task work — the way a real cluster scales.
@@ -139,21 +144,26 @@ class EncodeJobConfig:
             raise ValueError(
                 "Missing required environment variables: " + ", ".join(missing)
             )
-        size_cols = env.get("UPES_ENCODE_SIZE_COLS", "text,html")
-        map_tasks = env.get("UPES_ENCODE_MAP_TASKS")
-        return cls(
-            output_dir=env["UPES_ENCODE_OUTPUT_DIR"],
-            key_col=env.get("UPES_ENCODE_KEY_COL", "url"),
-            size_cols=split_columns(size_cols),
-            target_unit_bytes=int(env.get("UPES_ENCODE_TARGET_UNIT_BYTES", 64 << 20)),
-            sample_rows=int(env.get("UPES_ENCODE_SAMPLE_ROWS", 100_000)),
-            run_id=env.get("UPES_ENCODE_RUN_ID", ""),
-            chunk_rows=int(env.get("UPES_ENCODE_CHUNK_ROWS", 32768)),
-            max_buffer_bytes=int(env.get("UPES_ENCODE_MAX_BUFFER_BYTES", 256 << 20)),
-            map_tasks=int(map_tasks) if map_tasks else None,
-            input_format=env.get("UPES_ENCODE_INPUT_FORMAT", "parquet"),
-            cluster_by=split_columns(env.get("UPES_ENCODE_CLUSTER_BY", "")),
-        )
+        fields = {
+            "output_dir": str,
+            "key_col": str,
+            "size_cols": split_columns,
+            "target_unit_bytes": int,
+            "sample_rows": int,
+            "run_id": str,
+            "chunk_rows": int,
+            "max_buffer_bytes": int,
+            "map_tasks": int,
+            "input_format": str,
+            "cluster_by": split_columns,
+        }
+        # unset or empty variables leave the dataclass default in place
+        given = {
+            name: parse(env["UPES_ENCODE_" + name.upper()])
+            for name, parse in fields.items()
+            if env.get("UPES_ENCODE_" + name.upper())
+        }
+        return cls(**given)
 
 
 def load_or_build_plan(df, cfg: EncodeJobConfig) -> EncodePlan:
@@ -317,8 +327,8 @@ def _encode_stream(
     done_local: np.ndarray,
     key_col: str,
     payload_dir: str,
-    chunk_rows: int = 32768,
-    max_buffer_bytes: int = 256 << 20,
+    chunk_rows: int = DEFAULT_CHUNK_ROWS,
+    max_buffer_bytes: int = DEFAULT_MAX_BUFFER_BYTES,
     stats: dict | None = None,
     cluster_cols: tuple = (),
     sort_units_at_flush: bool = False,
@@ -542,13 +552,14 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
             f"encode path (Spark mapInArrow limitation): {bad}; rename them "
             "or write via df.write.format('upe_encoded')"
         )
+    # before planning, which runs Spark jobs and persists plan.json
+    missing = [c for c in cfg.cluster_by if c not in df.columns]
+    if missing:
+        raise ValueError(f"cluster_by columns not in input: {missing}")
     t_plan = time.perf_counter()
     plan = load_or_build_plan(df, cfg)
     plan_sec = time.perf_counter() - t_plan
     if cfg.cluster_by:
-        missing = [c for c in cfg.cluster_by if c not in df.columns]
-        if missing:
-            raise ValueError(f"cluster_by columns not in input: {missing}")
         # clustered write: ONE range exchange so each map task owns a
         # narrow cluster-column range, then an in-partition sort (Spark's
         # external sort — spills, never OOMs).  Every chunk the task cuts

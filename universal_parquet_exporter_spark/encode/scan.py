@@ -12,14 +12,18 @@ one Spark job starts:
    invisible (:func:`.meta._committed_manifest`, cached per dataset state);
 2. **schema** — one meta-only chunk-header probe per schema generation,
    unioned by name (:func:`.meta._probe_chunk_schema`);
-3. **unit pruning** — key-column terms and an explicit key range keep
-   only the encode units whose range boundaries can hold a match;
+3. **unit pruning** — filter terms on the plan's key column keep only
+   the encode units whose range boundaries can hold a match;
 4. **chunk pruning** — the manifest zone maps (bounds, distinct-value
    sets, null counts) drop chunks no filter group can match
    (:func:`.stats._stats_keep`);
 5. **packing** — surviving chunks group into locality-packed scan
    partitions (:func:`_pack_chunk_partitions`) that
    :func:`_read_chunk_partition` decodes on an executor.
+
+This module is also the only code that decodes payload chunks:
+compaction packs its rewrite tasks with the same packer and reads them
+through :func:`_read_padded`.
 
 Filters are OR-of-AND groups of ``(col, op, value)`` terms (pyarrow's
 DNF shape; the reader's pushed Catalyst filters are one group).  Pruning
@@ -174,7 +178,6 @@ def plan_partitions(
     columns: list[str] | None,
     groups: list,
     *,
-    key_range: tuple[str | None, str | None] | None = None,
     target_bytes: int = DEFAULT_PARTITION_BYTES,
     spread: int = 1,
     evidence: dict | None = None,
@@ -184,28 +187,22 @@ def plan_partitions(
 
     ``groups`` are OR-of-AND filter groups (``[]`` = no filter): a unit
     or chunk is kept when ANY group keeps it, and a group with no
-    prunable term keeps everything.  ``key_range=(lo, hi)`` (inclusive,
-    None = open) keeps only the units that can hold such keys.  With
-    ``evidence``, the counts land in it: ``units_total`` /
-    ``units_qualifying`` when a ``key_range`` is given or every group
+    prunable term keeps everything.  With ``evidence``, the counts land
+    in it: ``units_total`` / ``units_qualifying`` when every group
     bounds the key, and ``total`` / ``qualifying`` — manifest slice rows
     before and after zone-map pruning — when filters are given."""
     payload_dir = os.path.join(output_dir, "payload")
     want_fields = [probe_schema.field(c) for c in columns] if columns else list(probe_schema)
-    plan = _load_plan(output_dir) if (groups or key_range is not None) else None
-    if plan is not None:
-        allowed = _group_units(plan, groups) if groups else None
-        if key_range is not None:
-            kr_units = np.asarray(units_for_key_range(plan, *key_range), dtype=np.int64)
-            allowed = kr_units if allowed is None else np.intersect1d(allowed, kr_units)
-        if allowed is not None:
-            if evidence is not None:
-                evidence["units_total"] = plan.n_units
-                evidence["units_qualifying"] = int(allowed.size)
-            units = man.column("unit").to_numpy(zero_copy_only=False).astype(np.int64)
-            keep = np.isin(units, allowed)
-            if not keep.all():
-                man = man.filter(pa.array(keep))
+    plan = _load_plan(output_dir) if groups else None
+    allowed = _group_units(plan, groups) if plan is not None else None
+    if allowed is not None:
+        if evidence is not None:
+            evidence["units_total"] = plan.n_units
+            evidence["units_qualifying"] = int(allowed.size)
+        units = man.column("unit").to_numpy(zero_copy_only=False).astype(np.int64)
+        keep = np.isin(units, allowed)
+        if not keep.all():
+            man = man.filter(pa.array(keep))
     norm_groups = [_normalize_terms(g, probe_schema) for g in groups]
     return _pack_chunk_partitions(
         man, payload_dir, columns, want_fields, target_bytes,
@@ -237,7 +234,8 @@ def _pack_chunk_partitions(
     locality; ``spread`` caps the target at the live bytes / ``spread``
     so a small scan still splits into about ``spread`` tasks.  Shared by
     the batch reader, the stream reader (over the manifest rows of one
-    offset range) and ``decode_dataset``."""
+    offset range), ``decode_dataset`` and compaction (over one rewrite
+    task's slices)."""
     man = man.sort_by(
         [("file", "ascending"), ("offset", "ascending"), ("row_off", "ascending")]
     )
@@ -343,12 +341,13 @@ def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
 
 
-def _read_chunk_partition(partition: _ChunkScanPartition):
+def _read_padded(partition: _ChunkScanPartition):
     """Executor-side scan of one packed chunk run: each chunk
     deserializes ONCE — column pruning happens inside the container, so
     excluded columns' buffers are never decompressed, and columns a
     chunk generation predates null-pad from the union schema — and its
-    unit-slices yield as Arrow batches."""
+    unit-slices yield as Arrow batches in their stored types, so
+    compaction re-encodes exactly what was written."""
     handles: dict[str, object] = {}
     try:
         for fname, off, length, slices in partition.chunks:
@@ -363,17 +362,38 @@ def _read_chunk_partition(partition: _ChunkScanPartition):
             for roff, nr in slices:
                 for b in tbl.slice(roff, nr).to_batches():
                     if b.num_rows:
-                        yield _normalize_batch(b)
+                        yield b
     finally:
         for fh in handles.values():
             fh.close()
+
+
+def _read_chunk_partition(partition: _ChunkScanPartition):
+    """:func:`_read_padded` with every batch in Spark's Arrow types
+    (:func:`_normalize_batch`) — the read both scan paths hand to Spark."""
+    for b in _read_padded(partition):
+        yield _normalize_batch(b)
+
+
+def _run_partitions(spark, parts: list, read, schema):
+    """ONE Spark job over planned partitions: ``parts`` are broadcast,
+    and a JVM-native range source gives each task one index, whose
+    partition ``read`` turns into Arrow batches of ``schema``."""
+    bparts = spark.sparkContext.broadcast(parts)
+
+    def run(iterator):
+        planned = bparts.value
+        for batch in iterator:
+            for i in batch.column("id").to_pylist():
+                yield from read(planned[i])
+
+    return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(run, schema)
 
 
 def decode_dataset(
     spark,
     output_dir: str,
     columns: list[str] | None = None,
-    key_range: tuple[str | None, str | None] | None = None,
     filters: list[tuple[str, str, object]] | None = None,
     pruning_evidence: dict | None = None,
 ):
@@ -383,14 +403,6 @@ def decode_dataset(
     read: orphans from a run that crashed between the data commit and the
     lineage commit are silently skipped (their units were re-encoded by
     the resuming run).
-
-    ``key_range=(lo, hi)`` (inclusive, None = unbounded) prunes the scan
-    to the encode units whose range boundaries can contain such keys
-    (:func:`..plans.partitioning.units_for_key_range`) — pruned units'
-    payload bytes are never read, the engine's partition-pruning analog
-    — then applies the exact full-precision filter on the decoded key
-    column.  With ``columns``, the key column must be included (the
-    residual filter needs it).
 
     ``filters=[(col, op, value), ...]`` (op in ``< <= > >= = == != <>
     in not_in is_null not_null startswith endswith contains``, terms
@@ -412,8 +424,8 @@ def decode_dataset(
     skipped for every null-rejecting comparison term) prunes CHUNKS by
     the per-chunk min/max zone maps the encoder
     records in the manifest (:func:`.stats._chunk_stats` — the parquet
-    row-group-statistics analog, orthogonal to key_range's unit
-    pruning): a chunk whose recorded bounds cannot satisfy a term is
+    row-group-statistics analog, orthogonal to the unit pruning
+    below): a chunk whose recorded bounds cannot satisfy a term is
     skipped before any payload byte is read, a null/absent bound never
     prunes, and the exact predicate is re-applied to the decoded rows.
     Filter columns must be included in ``columns`` when both are given;
@@ -432,10 +444,10 @@ def decode_dataset(
 
     Terms on the PLAN's key column additionally prune whole encode
     UNITS (each group's implied key range via
-    :func:`key_range_from_terms`, unioned across the disjunction) —
-    the same layer an explicit ``key_range`` drives, fired before any
-    chunk statistics are consulted; a string IN-list on the key keeps
-    only the units of its listed points.
+    :func:`key_range_from_terms`, unioned across the disjunction)
+    before any chunk statistics are consulted — a key range is just
+    ``[(key, ">=", lo), (key, "<=", hi)]``; a string IN-list on the key
+    keeps only the units of its listed points.
 
     Execution: the scan is planned on the driver by the engine's one
     scan planner (this module's, shared with the ``upe_encoded`` reader)
@@ -443,8 +455,8 @@ def decode_dataset(
     partitions are broadcast and decoded by one task each, then the
     exact residual filter applies.  ``pruning_evidence`` (a dict) is
     filled from the planner's own masks at no extra cost:
-    ``units_total``/``units_qualifying`` when ``key_range`` is given or
-    every group bounds the key, and ``total``/``qualifying`` — manifest
+    ``units_total``/``units_qualifying`` when every group bounds the
+    key, and ``total``/``qualifying`` — manifest
     slice rows before and after zone-map pruning — whenever filters are
     given.
 
@@ -453,16 +465,6 @@ def decode_dataset(
     (meta-only probes), and generations that predate a column read back
     as nulls; a column whose TYPE differs between generations raises a
     schema-conflict error rather than casting silently."""
-    key_col = None
-    if key_range is not None:
-        plan = _load_plan(output_dir)
-        if plan is None:
-            raise ValueError(f"no plan.json under {output_dir} for key-range pruning")
-        key_col = plan.key_col
-        if columns is not None and key_col not in columns:
-            raise ValueError(
-                f"key_range pruning needs the key column '{key_col}' in columns"
-            )
     fgroups = _filter_groups(filters) if filters else []
 
     # the schema comes from the whole committed manifest, before any
@@ -499,32 +501,14 @@ def decode_dataset(
             raise ValueError(f"filters need column {c!r} in columns (residual filter)")
 
     # plan on the driver (metadata only, no Spark job), then run the
-    # partitions as ONE job: one task per partition, driven from a
-    # JVM-native range source — the same task shape as the parquet-path
-    # planner's sample stage.  Partitions pack to the engine's default
-    # size, capped so the live bytes spread over the cluster's cores.
-    sc = spark.sparkContext
+    # partitions as ONE job, one task per partition.  Partitions pack to
+    # the engine's default size, capped so the live bytes spread over
+    # the cluster's cores.
     parts = plan_partitions(
         output_dir, man, probe, columns, fgroups,
-        key_range=key_range, spread=sc.defaultParallelism, evidence=pruning_evidence,
+        spread=spark.sparkContext.defaultParallelism, evidence=pruning_evidence,
     )
-    bparts = sc.broadcast(parts)
-
-    def decode(iterator):
-        planned = bparts.value
-        for batch in iterator:
-            for i in batch.column("id").to_pylist():
-                yield from _read_chunk_partition(planned[i])
-
-    out = spark.range(len(parts), numPartitions=len(parts)).mapInArrow(decode, out_schema)
-    if key_range is not None:
-        # exact residual on the full-precision key (unit pruning is a
-        # conservative prefix-range superset)
-        lo, hi = key_range
-        if lo is not None:
-            out = out.where(_exact_col(key_col) >= lo)
-        if hi is not None:
-            out = out.where(_exact_col(key_col) <= hi)
+    out = _run_partitions(spark, parts, _read_chunk_partition, out_schema)
     if filters:
         # exact residual for every term (chunk pruning is conservative;
         # _exact_col keeps a dotted name from parsing as a struct path),

@@ -96,7 +96,7 @@ class ParquetExporter:
     def export_encoded(self, name: str, df: DataFrame, key_col: str, **cfg_kwargs) -> ExportResult:
         """Export through the ENGINE instead of Parquet/Snappy: the query
         result lands as codec containers + manifest + lineage under
-        ``{output_dir}/{name}`` (resumable, key-range decodable via
+        ``{output_dir}/{name}`` (resumable, decodable via
         :func:`..encode.pipeline.decode_dataset`).  This is the sink that
         supersedes the reference's writer — same workflow surface, the
         engine's storage format.  Extra kwargs flow to

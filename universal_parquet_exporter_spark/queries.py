@@ -205,9 +205,9 @@ def q_encode_roundtrip_clustered(spark, sf_dir: str):
 
 def q_decode_key_range(spark, sf_dir: str):
     """Encode the documents table keyed by doc_id-as-string, then decode
-    only the key range ['1', '3'] — the plan's range boundaries prune
-    whole encode units before any payload byte is read, and the residual
-    filter makes the result exact (string comparison semantics, mirrored
+    only the key range ['1', '3'], given as two key-column filter terms —
+    the plan's range boundaries prune whole encode units before any
+    payload byte is read, and the residual filter makes the result exact (string comparison semantics, mirrored
     by the oracle's VARCHAR predicate).  The query raises unless
     pruning skipped units, so the driver's green row certifies the
     pruning path runs, not just the filter."""
@@ -216,7 +216,8 @@ def q_decode_key_range(spark, sf_dir: str):
         key_col="doc_id", size_cols=("text",), target_unit_bytes=64 << 10,
     )
     ev: dict = {}
-    dec = decode_dataset(spark, out, key_range=("1", "3"), pruning_evidence=ev)
+    key_range = [("doc_id", ">=", "1"), ("doc_id", "<=", "3")]
+    dec = decode_dataset(spark, out, filters=key_range, pruning_evidence=ev)
     require_pruned(ev, "key-range pruning", "units")
     return dec.select(_doc_id_long(), "lang", "n_chars")
 
@@ -232,7 +233,7 @@ def q_decode_key_range_open(spark, sf_dir: str):
         key_col="doc_id", size_cols=("text",), target_unit_bytes=64 << 10,
     )
     ev: dict = {}
-    dec = decode_dataset(spark, out, key_range=("5", None), pruning_evidence=ev)
+    dec = decode_dataset(spark, out, filters=[("doc_id", ">=", "5")], pruning_evidence=ev)
     require_pruned(ev, "open key-range pruning", "units")
     return dec.select(_doc_id_long(), "lang", "n_chars")
 

@@ -115,7 +115,12 @@ from ..encode.meta import (
     next_manifest_name as _next_manifest_name,
     set_manifest_dir,
 )
-from ..encode.pipeline import _encode_stream, split_columns
+from ..encode.pipeline import (
+    DEFAULT_CHUNK_ROWS,
+    DEFAULT_MAX_BUFFER_BYTES,
+    _encode_stream,
+    split_columns,
+)
 from ..encode.scan import (
     DEFAULT_PARTITION_BYTES,
     _ChunkScanPartition,
@@ -448,8 +453,8 @@ class _EncodedWriterBase:
             raise ValueError(
                 f"dataset plan partitions on {plan.key_col!r}, not {self.key_col!r}"
             )
-        self.chunk_rows = int(options.get("chunk_rows", 32768))
-        self.max_buffer_bytes = int(options.get("max_buffer_bytes", 256 << 20))
+        self.chunk_rows = int(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
+        self.max_buffer_bytes = int(options.get("max_buffer_bytes", DEFAULT_MAX_BUFFER_BYTES))
         # .option("cluster_by", "col1,col2"): the sink-side half of
         # write-time clustering (EncodeJobConfig.cluster_by).  A Spark
         # DataSource writer cannot repartition its own input, so the
