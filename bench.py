@@ -52,7 +52,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import universal_parquet_exporter_spark  # noqa: F401  (malloc tuning)
+import universal_parquet_exporter_spark  # noqa: F401  (Arrow pool, zip-import caching)
 from universal_parquet_exporter_spark.sources.session import build_session, warm_workers
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

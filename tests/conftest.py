@@ -6,7 +6,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import universal_parquet_exporter_spark  # noqa: F401  (applies malloc tuning)
+import universal_parquet_exporter_spark  # noqa: F401  (Arrow pool, zip-import caching)
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")

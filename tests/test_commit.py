@@ -204,3 +204,66 @@ def test_every_commit_file_is_synced_before_its_rename(tmp_path, monkeypatch):
         assert not os.path.exists(tmp) and os.path.isfile(final)
     assert synced[len(before_close):] == [os.path.join(out, "payload", writer.name)]
 
+
+
+def _frag_row(unit: int, stats=None) -> dict:
+    return dict(unit=unit, first_key="a", n_rows=1, row_off=0, bytes_in=1, bytes_out=1,
+                wall_ms=0.0, codecs="{}", file=f"f{unit}.bin", offset=0, length=1,
+                stats=stats, native=True)
+
+
+def _old_file(dir_path: str, name: str, tbl: pa.Table) -> None:
+    """A metadata file written by an older engine version, named so it
+    sorts before every ``part-<run>`` file the current commit writes."""
+    os.makedirs(dir_path, exist_ok=True)
+    pq.write_table(tbl, os.path.join(dir_path, name))
+
+
+def test_lineage_files_that_differ_in_columns_keep_every_column(tmp_path):
+    """A lineage dir written across engine versions: an old-format file
+    (``unit, run_id, status``) listed first must not hide the current
+    file's ``batch_tag`` and ``committed_at`` — a replayed stream epoch
+    would commit twice, and the new run would sort at epoch 0."""
+    out = str(tmp_path)
+    old = pa.table({"unit": pa.array([0], pa.int64()), "run_id": ["old"], "status": ["ok"]})
+    _old_file(os.path.join(out, "lineage"), "part-0old.parquet", old)
+    frags = pa.Table.from_pylist([_frag_row(1)], schema=meta.FRAG_PA_SCHEMA)
+    new, _ = meta.commit_fragments(frags, out, os.path.join(out, "data"), "new", "ds_epoch_q_0")
+
+    assert meta.completed_batch_tags(out) == {"ds_epoch_q_0"}
+    order = meta._committed_run_order(out)
+    assert [r for _, r in order] == ["old", new]
+    assert order[0][0] == 0 and order[1][0] > 0
+
+
+def test_manifest_files_that_differ_in_columns_keep_every_column(tmp_path):
+    """A manifest dir written across engine versions: an old file
+    without ``stats`` listed first must not drop the column from the
+    committed view, nor from vacuum's rewrite of the dir, which would
+    make the loss permanent."""
+    from universal_parquet_exporter_spark.encode.maintenance import vacuum
+
+    out = str(tmp_path)
+    data = os.path.join(out, "data")
+    old = pa.Table.from_pylist([_frag_row(0)], schema=meta.FRAG_PA_SCHEMA).drop_columns(["stats"])
+    _old_file(data, "part-0old.parquet", old.append_column("run_id", pa.array(["old"])))
+    _old_file(
+        os.path.join(out, "lineage"),
+        "part-0old.parquet",
+        pa.table({"unit": pa.array([0], pa.int64()), "run_id": ["old"], "status": ["ok"]}),
+    )
+    frags = pa.Table.from_pylist([_frag_row(1, '{"x": 1}')], schema=meta.FRAG_PA_SCHEMA)
+    meta.commit_fragments(frags, out, data, "new")
+    # rows of a run that died before its lineage commit: vacuum rewrites
+    orphan = pa.Table.from_pylist([_frag_row(2, '{"y": 2}')], schema=meta.FRAG_PA_SCHEMA)
+    _old_file(data, "part-1orphan.parquet", orphan.append_column("run_id", pa.array(["gone"])))
+
+    def stats(tbl):
+        return sorted(zip(tbl.column("unit").to_pylist(), tbl.column("stats").to_pylist()))
+
+    assert stats(meta._committed_manifest(out)) == [(0, None), (1, '{"x": 1}')]
+    rep = vacuum(None, out)
+    assert rep["orphan_manifest_rows"] == 1 and rep["manifest_rewritten"]
+    assert meta.manifest_dir(out).endswith("data_v1")
+    assert stats(pq.read_table(meta.manifest_dir(out))) == [(0, None), (1, '{"x": 1}')]
+    assert stats(meta._committed_manifest(out)) == [(0, None), (1, '{"x": 1}')]

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, _spark_jobs
-from universal_parquet_exporter_spark.encode import compaction
+from universal_parquet_exporter_spark.encode import meta
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.maintenance import vacuum
 from universal_parquet_exporter_spark.encode.meta import manifest_dir
@@ -331,7 +331,7 @@ def test_crash_before_pointer_swap_leaves_the_old_manifest_live(spark, tmp_path,
     def crash(*a, **k):
         raise RuntimeError("crashed before the pointer swap")
 
-    monkeypatch.setattr(compaction, "set_manifest_dir", crash)
+    monkeypatch.setattr(meta, "set_manifest_dir", crash)
     with pytest.raises(RuntimeError, match="pointer swap"):
         compact(spark, out, chunk_rows=32768)
     monkeypatch.undo()

@@ -153,7 +153,13 @@ def test_metadata_formats_have_one_owner():
     joins the lineage path (every lineage read goes through its cached
     table), only ``encode/stats.py`` names the zone-map keys or parses
     the stats JSON, neither of the two imports the scan planner or the
-    encode job, and the DataSource re-exports nothing."""
+    encode job, and the DataSource re-exports nothing.  Only
+    ``encode/meta.py`` reads a metadata directory (no other module
+    imports ``pyarrow.dataset`` or calls ``_read_meta_table``), swaps
+    the manifest pointer or parses ``data_v<N>`` names: vacuum,
+    compaction and the overwrite sink read the manifest through
+    ``meta._read_manifest`` and publish through
+    ``meta.publish_generation``."""
     import ast
 
     pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
@@ -189,3 +195,40 @@ def test_metadata_formats_have_one_owner():
 
     with open(os.path.join(pkg, "sources", "spark_datasource.py"), encoding="utf-8") as f:
         assert "noqa: F401" not in f.read()
+
+    # the manifest too: no other module reads a metadata directory, swaps
+    # the pointer or parses data_v<N> generation names
+    owned = {"_read_meta_table", "set_manifest_dir"}
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            if rel == "encode/meta.py":
+                continue
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            docs = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    hits = [a.name for a in node.names if a.name == "pyarrow.dataset"]
+                elif isinstance(node, ast.ImportFrom):
+                    mod = node.module or ""
+                    hits = [a.name for a in node.names if a.name in owned]
+                    if mod == "pyarrow.dataset" or (
+                        mod == "pyarrow" and any(a.name == "dataset" for a in node.names)
+                    ):
+                        hits.append(mod)
+                elif isinstance(node, ast.Name):
+                    hits = [node.id] if node.id in owned else []
+                elif isinstance(node, ast.Attribute):
+                    hits = [node.attr] if node.attr in owned else []
+                elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    is_gen = "data_v" in node.value or "(_v" in node.value
+                    hits = [node.value] if is_gen and id(node) not in docs else []
+                else:
+                    hits = []
+                found += [f"{rel}:{node.lineno}: {h}" for h in hits]
+    assert found == []

@@ -194,6 +194,20 @@ def test_write_key_col_mismatch(spark, tmp_path):
         _docs(spark).write.format("upe_encoded").option("key_col", "lang").mode("append").save(out)
 
 
+def test_write_key_col_defaults_to_the_plan(spark, tmp_path):
+    """The key column comes from ``plan.json``: an append to a
+    ``doc_id``-keyed dataset needs no ``key_col`` option, and the one
+    it would take in an ``overwrite`` too."""
+    sds.register(spark)
+    out = str(tmp_path / "wkeydefault")
+    df = _docs(spark)
+    load_or_build_plan(df, EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",)))
+    df.write.format("upe_encoded").mode("append").save(out)
+    assert _rows(spark.read.format("upe_encoded").load(out)) == _rows(df)
+    df.limit(5).write.format("upe_encoded").mode("overwrite").save(out)
+    assert spark.read.format("upe_encoded").load(out).count() == 5
+
+
 def test_write_append_roundtrip(spark, tmp_path):
     sds.register(spark)
     out = str(tmp_path / "wappend")

@@ -3,7 +3,9 @@
 pyspark calls ``importlib.invalidate_caches()`` at the start of every
 Python task and DataSource planner call.  Importing the engine installs
 ``memtune.cache_zip_directories``, so a ``zipimporter`` whose archive is
-unchanged on disk no longer re-reads the archive's directory.
+unchanged on disk no longer re-reads the archive's directory.  The
+allocator settings a worker needs come from the session instead
+(``build_session``'s executor environment).
 """
 
 import importlib
@@ -122,3 +124,24 @@ def test_spark_worker_skips_the_reread(spark):
 
     rows = spark.range(1, numPartitions=1).mapInArrow(probe, "reads long").collect()
     assert [r.reads for r in rows] == [0]
+
+
+def test_tasks_see_the_tuned_allocator_env(spark):
+    """glibc's malloc thresholds and Arrow's memory pool reach every
+    Python worker through the session's executor environment, without
+    a package import: a task sees them in its own environment."""
+
+    def env(_):
+        import os
+
+        keys = ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_", "ARROW_DEFAULT_MEMORY_POOL")
+        return [{k: os.environ.get(k) for k in keys}]
+
+    seen = spark.sparkContext.parallelize([0], 1).mapPartitions(env).collect()
+    assert seen == [
+        {
+            "MALLOC_MMAP_THRESHOLD_": "2147483647",
+            "MALLOC_TRIM_THRESHOLD_": "2147483647",
+            "ARROW_DEFAULT_MEMORY_POOL": "system",
+        }
+    ]

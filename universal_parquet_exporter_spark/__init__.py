@@ -23,14 +23,13 @@ import os as _os
 import sys as _sys
 
 # must be set before pyarrow is first imported: jemalloc (pyarrow's
-# default pool) bypasses the glibc tuning below and re-mmaps every large
-# buffer, which dominates runtime on fault-expensive kernels
+# default pool) re-mmaps every large buffer, which dominates runtime on
+# fault-expensive kernels
 if "pyarrow" not in _sys.modules:
     _os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
 from . import memtune as _memtune
 
-_memtune.tune_malloc()
 _memtune.cache_zip_directories()
 
 __version__ = "0.1.0"

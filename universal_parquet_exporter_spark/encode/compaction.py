@@ -22,14 +22,17 @@ repair.  :func:`compact` is the engine's analog:
    no shuffle), re-encodes them as fresh
    ~``chunk_rows``-row chunks with freshly trained FSST tables and zone
    maps, appends new payload files, and returns their manifest rows.
-3. **Publish atomically** with the same versioned-manifest pointer
-   swap vacuum's rewrite uses: the new ``data_v<N>`` dir gets every
-   surviving row (non-compacted units verbatim — their committed
-   lineage stays valid — plus in-flight runs' young uncommitted rows,
-   which must outlive the rewrite), then the compacted units' new rows
-   and their lineage through :func:`.meta.commit_fragments`, the
-   commit every encode path shares; the pointer lands last, so a reader
-   resolves either the old complete manifest or the new one.
+3. **Publish atomically** through :func:`.meta.publish_generation`,
+   the rewrite vacuum and the overwrite sink share: it re-reads the
+   live manifest and drops exactly the ``(unit, run_id)`` pairs step 1
+   selected, so the new ``data_v<N>`` dir gets every other row
+   (non-compacted units verbatim — their committed lineage stays valid
+   — plus in-flight runs' young uncommitted rows and rows committed
+   since the selection, which must outlive the rewrite), then the
+   compacted units' new rows and their lineage through
+   :func:`.meta.commit_fragments`, the commit every encode path
+   shares; the pointer lands last, so a reader resolves either the old
+   complete manifest or the new one.
 
 Crash windows mirror the encode job's: payload written but lineage
 missing → orphan files vacuum sweeps; lineage written but pointer not
@@ -61,14 +64,8 @@ from .meta import (
     FRAG_SCHEMA,
     _committed_manifest,
     _load_plan,
-    _meta_files,
     _probe_chunk_schema,
-    _read_meta_table,
-    _write_parquet_file,
-    commit_fragments,
-    manifest_dir,
-    next_manifest_name,
-    set_manifest_dir,
+    publish_generation,
 )
 from .pipeline import DEFAULT_CHUNK_ROWS, DEFAULT_MAX_BUFFER_BYTES, _encode_stream
 from .scan import _pack_chunk_partitions, _read_padded, _run_partitions
@@ -192,29 +189,11 @@ def compact(
     run_id = "compact-" + uuid.uuid4().hex[:12]
     new_frags = _run_partitions(spark, parts, rewrite, FRAG_SCHEMA).toArrow()
 
-    # surviving manifest = every raw row except the compacted units'
-    # COMMITTED rows (the (unit, run_id) pairs the targets were read
-    # from): non-target units verbatim, and in-flight runs' young
-    # uncommitted rows (even of target units) must outlive the rewrite —
-    # they commit their lineage later
-    mdir = manifest_dir(output_dir)
-    raw = _read_meta_table(mdir, None, _meta_files(mdir))
-    gone = slices.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
-    survivors = raw.join(gone, keys=["unit", "run_id"], join_type="left anti")
-
-    # version allocation scans EXISTING data_v* dirs (next_manifest_name),
-    # never current-pointer+1: a crashed or in-flight DataSource
-    # overwrite's unreferenced dir must not be clobbered or appended into.
-    # Survivors first, then the new rows and their lineage (the new
-    # rows' visibility key), pointer swap last — until the swap, readers
-    # resolve the old manifest, which the new lineage rows cannot touch
-    # (their rows exist only in the new dir)
-    new_name = next_manifest_name(output_dir)
-    new_dir = os.path.join(output_dir, new_name)
-    if survivors.num_rows:
-        _write_parquet_file(new_dir, f"part-{run_id}-survivors.parquet", survivors)
-    commit_fragments(new_frags, output_dir, new_dir, run_id, "compact")
-    set_manifest_dir(output_dir, new_name)
+    # the new generation drops exactly the (unit, run_id) pairs the
+    # targets were read from: non-target units carry over verbatim, and
+    # in-flight runs' young uncommitted rows (even of target units) and
+    # rows committed since the read outlive the rewrite
+    publish_generation(output_dir, run_id, new_frags, drop=slices, batch_tag="compact")
 
     report["slices_after"] = new_frags.num_rows
     report["bytes_after"] = pc.sum(new_frags.column("bytes_out")).as_py() or 0

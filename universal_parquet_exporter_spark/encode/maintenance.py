@@ -25,13 +25,16 @@ possible in-flight job so a live task's payload file (written, not yet
 committed) is never swept.  Production default should be hours-to-days;
 0 is for tests and known-quiet tables.
 
+The manifest is read through :func:`.meta._read_manifest` (its
+``committed`` flag is the orphan test, its ``__file`` gives a row its
+age) and rewritten through :func:`.meta.publish_generation`.
+
 Scale notes: every set here is computed on the driver in Arrow, with
-no Spark job — the manifest is metadata (fragment rows, not data), read
-one file at a time so each row carries its file's age.  The live-file
-set is one ``file`` value per committed task attempt, bounded by total
-task count (~1.6 M for 100 TB at 64 MB units), a few tens of MB.  The
-payload-dir listing is the same driver-side listing Iceberg's action
-does.  Deletes fan out through the cluster above a small threshold so
+no Spark job — the manifest is metadata (fragment rows, not data).
+The live-file set is one ``file`` value per committed task attempt,
+bounded by total task count (~1.6 M for 100 TB at 64 MB units), a few
+tens of MB.  The payload-dir listing is the same driver-side listing
+Iceberg's action does.  Deletes fan out through the cluster above a small threshold so
 the sweep is not bottlenecked on one filesystem client.
 """
 
@@ -46,51 +49,14 @@ import pyarrow.compute as pc
 from pyarrow import fs as pafs
 
 from .meta import (
-    _ok_lineage,
+    _generations,
+    _list_dir,
     _payload_fs,
+    _read_manifest,
     _remove_files,
-    _write_parquet_file,
     manifest_dir,
-    next_manifest_name,
-    set_manifest_dir,
+    publish_generation,
 )
-
-
-def _mtime(info) -> float:
-    """A listed file's mtime; a missing one (some object stores) means
-    its age is unknowable, so it counts as infinitely YOUNG — horizons
-    then protect the file rather than sweep it (0.0 would invert the
-    safety)."""
-    return info.mtime.timestamp() if info.mtime is not None else float("inf")
-
-
-def _list_payload_files(payload_dir: str) -> list[tuple[str, int, float]]:
-    """(name, size, mtime_epoch) for every payload file — regular files
-    only: a stray subdirectory is not a dead payload file."""
-    fs, root = _payload_fs(payload_dir)
-    return [
-        (info.base_name, info.size, _mtime(info))
-        for info in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
-        if info.type == pafs.FileType.File
-    ]
-
-
-def _manifest_rows_by_file(data_dir: str) -> pa.Table | None:
-    """Every raw manifest row (orphans included, every column) plus a
-    ``__part`` column naming the manifest file it came from — that
-    file's mtime is the row's age.  None when there is no manifest."""
-    import pyarrow.dataset as pads
-
-    try:
-        dset = pads.dataset(data_dir, format="parquet")
-    except (FileNotFoundError, OSError):
-        return None
-    parts = []
-    for frag in dset.get_fragments():
-        t = frag.to_table(schema=dset.schema)
-        name = pa.scalar(os.path.basename(frag.path))
-        parts.append(t.append_column("__part", pa.repeat(name, t.num_rows)))
-    return pa.concat_tables(parts) if parts else None
 
 
 def _delete_files(payload_dir: str, names: list[str], spark=None) -> None:
@@ -151,18 +117,6 @@ def _heal_interrupted_swap(data_dir: str) -> None:
             fs.delete_dir(tmp)
 
 
-def _ptr_mtime(output_dir: str) -> float | None:
-    """mtime of the manifest_current pointer file, or None if absent."""
-    fs, root = _payload_fs(output_dir)
-    info = fs.get_file_info(f"{root}/manifest_current")
-    if info.type != pafs.FileType.File:
-        return None
-    # mtime-less store: retirement age is UNKNOWABLE — _mtime's +inf
-    # makes the sweeper protect retired dirs rather than treat them as
-    # infinitely old (0.0 would invert the reader-safety horizon)
-    return _mtime(info)
-
-
 def _sweep_retired_manifests(
     output_dir: str, current_dir: str, now: float, older_than_sec: float,
     dry_run: bool = False,
@@ -173,26 +127,17 @@ def _sweep_retired_manifests(
     has had ``older_than_sec`` to finish.  Age is measured from the
     NEWEST of the pointer mtime (= last swap, when dirs retire) and the
     dir's own newest file (covers crashed unreferenced rewrites)."""
-    import re
-
     cur_name = os.path.basename(current_dir.rstrip("/"))
-    ptr_m = _ptr_mtime(output_dir)
+    ptr_m = [m for n, _s, m in _list_dir(output_dir) if n == "manifest_current"]
     fs, root = _payload_fs(output_dir)
-    names = [
-        i.base_name
-        for i in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
-        if i.type == pafs.FileType.Directory
-    ]
     swept = 0
-    for name in names:
-        if name == cur_name or not re.fullmatch(r"data(_v\d+)?", name):
+    for name, _version in _generations(output_dir):
+        if name == cur_name:
             continue
         newest = max(
-            (m for _n, _s, m in _list_payload_files(os.path.join(output_dir, name))), default=0.0
+            (m for _n, _s, m in _list_dir(os.path.join(output_dir, name))), default=0.0
         )
-        if ptr_m is not None:
-            newest = max(newest, ptr_m)
-        if (now - newest) < older_than_sec:
+        if (now - max([newest, *ptr_m])) < older_than_sec:
             continue
         if not dry_run:
             fs.delete_dir(f"{root}/{name}")
@@ -248,31 +193,26 @@ def vacuum(
         output_dir, data_dir, now, older_than_sec, dry_run=dry_run
     )
 
-    manifest = _manifest_rows_by_file(data_dir)
-    ok = _ok_lineage(output_dir, ["unit", "run_id"])
-    if manifest is None or ok is None:
+    manifest = _read_manifest(output_dir)
+    if manifest is None:
         raise ValueError(f"no manifest or lineage under {output_dir}: not an encoded dataset")
-
-    def row_keys(t):
-        return pc.binary_join_element_wise(pc.cast(t["unit"], pa.string()), t["run_id"], "/")
-
-    committed = pc.is_in(row_keys(manifest), value_set=row_keys(ok))
     # per-part-file mtimes give orphan rows their age (each manifest
     # commit writes fresh part files, so file mtime ≈ that run's commit
     # time); rows in young part files are NEVER treated as orphans
     old_parts = pa.array(
-        [n for n, _sz, m in _list_payload_files(data_dir) if (now - m) >= older_than_sec],
-        pa.string(),
+        [n for n, _sz, m in _list_dir(data_dir) if (now - m) >= older_than_sec], pa.string()
     )
-    orphan = pc.and_(pc.invert(committed), pc.is_in(manifest["__part"], value_set=old_parts))
-    live = manifest.filter(pc.invert(orphan)).drop_columns(["__part"])
+    orphan = pc.and_(
+        pc.invert(manifest["committed"]), pc.is_in(manifest["__file"], value_set=old_parts)
+    )
+    live = manifest.filter(pc.invert(orphan))
     orphan_rows = manifest.num_rows - live.num_rows
 
     # payload liveness: referenced by a committed row OR by any
     # uncommitted-but-young row (an in-flight run's files) — plus the
     # payload file's own mtime horizon, belt and braces
     keep_refs = set(pc.unique(live.column("file")).to_pylist())
-    listed = _list_payload_files(payload_dir)
+    listed = _list_dir(payload_dir)
     dead = [
         (name, int(size))
         for name, size, mtime in listed
@@ -284,16 +224,13 @@ def vacuum(
 
     rewrote = False
     if orphan_rows and rewrite_manifest and not dry_run:
-        # versioned rewrite + atomic pointer swap: write the orphan-free
-        # manifest to data_v<N+1>, then flip manifest_current.  The old
-        # dir stays on disk (readers that already resolved it finish
-        # unharmed) and is deleted by a later horizoned vacuum.
-        # allocate above every EXISTING data_v* dir (not pointer+1) so a
-        # crashed/in-flight overwrite's unreferenced dir is never reused
-        new_name = next_manifest_name(output_dir)
-        new_dir = os.path.join(output_dir, new_name)
-        _write_parquet_file(new_dir, f"part-vacuum-{uuid.uuid4().hex[:12]}.parquet", live)
-        set_manifest_dir(output_dir, new_name)
+        # a new generation without the orphans' (unit, run_id) pairs,
+        # published by the pointer swap; the old dir stays on disk
+        # (readers that already resolved it finish unharmed) and a later
+        # horizoned vacuum deletes it
+        publish_generation(
+            output_dir, f"vacuum-{uuid.uuid4().hex[:12]}", drop=manifest.filter(orphan)
+        )
         rewrote = True
 
     # stale temp files from crashed commits: plan.json.tmp* (planner) and
@@ -302,7 +239,7 @@ def vacuum(
     # under its move)
     stale_tmp = [
         name
-        for name, _size, mtime in _list_payload_files(output_dir)
+        for name, _size, mtime in _list_dir(output_dir)
         if name.startswith(("plan.json.tmp", "manifest_current.tmp"))
         and (now - mtime) >= older_than_sec
     ]

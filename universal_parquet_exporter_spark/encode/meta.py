@@ -20,10 +20,13 @@ per commit) and ``payload/`` (the tasks' append-only chunk files).
   manifest rows, which are never read, and a resume re-encodes those
   units under a fresh commit id (GC of dead files is the usual Iceberg
   maintenance sweep);
-- this module is the only reader of lineage: the ``status='ok'`` rows
-  are loaded once per dataset state (:func:`_ok_lineage`) and serve the
-  committed manifest, resume, replay detection, the encode totals,
-  vacuum and the stream reader's cursor.
+- this module is the only reader of lineage and of the manifest, and
+  the only writer of a manifest generation: lineage's ``status='ok'``
+  rows are loaded once per dataset state (:func:`_ok_lineage`);
+  :func:`_read_manifest` flags every manifest row with the one
+  ``(unit, run_id)`` visibility rule for vacuum and compaction, and
+  scans read its cached committed view; compaction, vacuum and the
+  overwrite sink publish ``data_v<N>`` through :func:`publish_generation`.
 """
 
 from __future__ import annotations
@@ -187,6 +190,25 @@ def _remove_files(dir_path: str, names, ignore=FileNotFoundError) -> None:
             pass
 
 
+def _list_dir(path: str, dirs: bool = False, hidden: bool = True) -> list[tuple[str, int, float]]:
+    """``(name, size, mtime)`` of the regular files under ``path`` (with
+    ``dirs``, of its subdirectories instead), sorted by name; empty when
+    ``path`` does not exist.  ``hidden=False`` leaves out the
+    ``.``/``_``-prefixed temp files and markers a metadata read skips.
+    A missing mtime (some object stores) reads as +inf: the entry's age
+    is unknowable, so it counts as infinitely YOUNG and every horizon
+    protects it rather than sweeps it (0.0 would invert the safety)."""
+    fs, root = _payload_fs(path)
+    want = pafs.FileType.Directory if dirs else pafs.FileType.File
+    out = []
+    for i in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)):
+        if i.type != want or (not hidden and i.base_name.startswith((".", "_"))):
+            continue
+        ns = i.mtime_ns
+        out.append((i.base_name, i.size, float("inf") if ns is None else ns / 1e9))
+    return sorted(out)
+
+
 class _TaskPayloadWriter:
     """Append-only payload file for one task attempt.  The file name is
     unique per attempt, so retried/speculative attempts never collide;
@@ -273,48 +295,60 @@ def set_manifest_dir(output_dir: str, name: str) -> None:
     _atomic_write(output_dir, _MANIFEST_PTR, name.encode(), f"{_MANIFEST_PTR}.tmp{os.getpid()}")
 
 
+def _generations(output_dir: str) -> list[tuple[str, int]]:
+    """Every manifest generation dir on disk — ``data`` and each
+    ``data_v<N>``, live, retired or left by a crashed rewrite — as
+    ``(name, N)``, ``data`` counting as 0."""
+    import re
+
+    out = []
+    for name, _size, _mtime in _list_dir(output_dir, dirs=True):
+        m = re.fullmatch(r"data(?:_v(\d+))?", name)
+        if m:
+            out.append((name, int(m.group(1) or 0)))
+    return out
+
+
 def next_manifest_name(output_dir: str) -> str:
     """Fresh ``data_v<N>`` name above EVERY existing version dir — not
     current-pointer+1: a crashed or still-in-flight overwrite's
     unreferenced ``data_v<N>`` must never be reused (clobbering it would
-    mix two writers' manifests).  Shared by the DataSource overwrite
-    sink, compaction, and vacuum's manifest rewrite so concurrent
-    version allocation is consistent."""
-    fs, root = _payload_fs(output_dir)
-    try:
-        names = [i.base_name for i in fs.get_file_info(pafs.FileSelector(root))]
-    except OSError:
-        names = []
-    top = 0
-    for n in names:
-        if n.startswith("data_v"):
-            try:
-                top = max(top, int(n[len("data_v"):]))
-            except ValueError:
-                pass
-    return f"data_v{top + 1}"
+    mix two writers' manifests)."""
+    return f"data_v{max((n for _name, n in _generations(output_dir)), default=0) + 1}"
 
 
 def _read_meta_table(
-    path: str, columns: list[str] | None, names: tuple[str, ...] | None
+    path: str, columns: list[str] | None, names: tuple[str, ...], with_file: bool = False
 ) -> pa.Table | None:
-    """The files ``names`` of a parquet metadata directory (manifest or
-    lineage) as one Arrow table, in listing order; ``names`` is a
-    :func:`_meta_files` listing, which leaves out ``_SUCCESS`` markers
-    and ``.``-prefixed temp files.  ``columns=None`` reads every column.
-    None when the directory doesn't exist yet (``names`` is None)."""
+    """The files ``names`` (a :func:`_meta_names` listing) of a parquet
+    metadata directory — manifest or lineage — as one Arrow table.
+    Files written by different engine versions may differ in columns:
+    the table holds the union of their columns (``columns`` where any
+    file has them; None reads every column), and a file without a
+    column reads as nulls there.  ``with_file`` appends ``__file``, the
+    name of each row's file.  None when there is no file or one vanished
+    under the read (a swept retired generation)."""
+    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    if names is None:
+    if not names:
         return None
     fs, root = _payload_fs(path)
+    paths = [f"{root}/{n}" for n in names]
     try:
-        dset = pads.dataset([f"{root}/{n}" for n in names], filesystem=fs, format="parquet")
-    except (FileNotFoundError, OSError):
+        dset = pads.dataset(paths, filesystem=fs, format="parquet")
+        # a dataset takes the first file's schema: read every footer
+        frags = list(dset.get_fragments())
+        schema = pa.unify_schemas([f.physical_schema for f in frags], promote_options="permissive")
+        cols = [c for c in (columns or schema.names) if c in schema.names]
+        dset = pads.FileSystemDataset(frags, schema, dset.format, fs)
+        tbl = dset.to_table(columns=cols + (["__filename"] if with_file else []))
+    except OSError:
         return None
-    if columns is None:
-        return dset.to_table()
-    return dset.to_table(columns=[c for c in columns if c in dset.schema.names])
+    if with_file:
+        idx = pc.index_in(tbl["__filename"], value_set=pa.array(paths))
+        tbl = tbl.set_column(len(cols), "__file", pa.array(names).take(idx))
+    return tbl
 
 
 def _write_parquet_file(dir_path: str, name: str, tbl: pa.Table) -> None:
@@ -403,16 +437,9 @@ def commit_fragments(
 # ---------------------------------------------------------------------------
 
 
-def _meta_files(path: str) -> tuple[str, ...] | None:
-    """Sorted names of the files a metadata-directory read sees (the
-    ``.``/``_``-prefixed temp files and markers pyarrow.dataset ignores
-    are left out); None when the directory does not exist."""
-    fs, root = _payload_fs(path)
-    try:
-        names = [i.base_name for i in fs.get_file_info(pafs.FileSelector(root))]
-    except OSError:
-        return None
-    return tuple(sorted(n for n in names if not n.startswith((".", "_"))))
+def _meta_names(path: str) -> tuple[str, ...]:
+    """Names of the files a metadata-directory read sees."""
+    return tuple(n for n, _size, _mtime in _list_dir(path, hidden=False))
 
 
 def _remember(cache: dict, key: str, token, value) -> None:
@@ -425,10 +452,10 @@ _LINEAGE_CACHE: dict[str, tuple[tuple, pa.Table | None]] = {}
 
 
 def _load_ok_lineage(
-    output_dir: str, names: tuple[str, ...] | None, columns: list[str]
+    output_dir: str, names: tuple[str, ...], columns: list[str]
 ) -> pa.Table | None:
     """The ``status='ok'`` rows of the lineage files ``names`` (a
-    :func:`_meta_files` listing), read with pyarrow — no Spark job — and
+    :func:`_meta_names` listing), read with pyarrow — no Spark job — and
     cached per dataset on those names; None when there is no lineage.
     The table holds ``columns`` where the files have them (older lineage
     files lack ``batch_tag`` and ``committed_at``).  A miss reads the
@@ -461,7 +488,44 @@ def _ok_lineage(output_dir: str, columns: list[str]) -> pa.Table | None:
     """The dataset's committed lineage rows with at least ``columns`` —
     the one lineage read: an unchanged dataset costs one directory
     listing."""
-    return _load_ok_lineage(output_dir, _meta_files(os.path.join(output_dir, "lineage")), columns)
+    return _load_ok_lineage(output_dir, _meta_names(os.path.join(output_dir, "lineage")), columns)
+
+
+def _manifest_token(output_dir: str) -> tuple[str, tuple[str, ...], tuple[str, ...]]:
+    """The dataset-state key: the live manifest dir plus the names of its
+    files and of the lineage files.  Every commit adds a freshly named
+    file and every rewrite swaps the pointer, so the key changes exactly
+    when the committed state does (a dir mtime need not).  The manifest
+    is listed first: a run lands its manifest file before its lineage
+    file, so no row reads as an orphan only because its lineage was
+    listed before it."""
+    mdir = manifest_dir(output_dir)
+    return mdir, _meta_names(mdir), _meta_names(os.path.join(output_dir, "lineage"))
+
+
+def _read_manifest(output_dir: str, columns: list[str] | None = None, token=None) -> pa.Table | None:
+    """Every row of the live manifest generation, orphans included: the
+    one manifest read.  It holds ``columns`` (None: all) where the files
+    have them, ``__file`` (the row's manifest file) and ``committed``,
+    the one visibility rule: lineage holds a ``status='ok'`` row for the
+    row's ``(unit, run_id)``.  The join runs in Arrow, with no per-row
+    Python objects (~10^7 rows at 100 TB).  Exactly the files ``token``
+    (:func:`_manifest_token`, listed now when None) names are read.
+    None when there is no manifest file or no lineage."""
+    import pyarrow.compute as pc
+
+    mdir, man_names, lin_names = token or _manifest_token(output_dir)
+    man = _read_meta_table(mdir, columns, man_names, True)
+    ok = _load_ok_lineage(output_dir, lin_names, ["unit", "run_id"])
+    if man is None or ok is None:
+        return None
+    # distinct: join keys must be unique
+    ok = ok.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
+    ok = ok.append_column("committed", pa.repeat(pa.scalar(True), ok.num_rows))
+    man = man.combine_chunks().join(ok, keys=["unit", "run_id"], join_type="left outer")
+    return man.set_column(
+        man.schema.get_field_index("committed"), "committed", pc.fill_null(man["committed"], False)
+    )
 
 
 _MANIFEST_CACHE: dict[str, tuple[tuple, pa.Table]] = {}
@@ -469,38 +533,54 @@ _MANIFEST_COLS = ["unit", "run_id", "file", "offset", "length", "row_off", "n_ro
 
 
 def _committed_manifest(output_dir: str) -> pa.Table:
-    """Committed manifest rows: the lineage ``status='ok'`` semi-join on
-    ``(unit, run_id)``.  At nominal scale this is manifest METADATA
-    (fragment rows, not data), but it is ~10^7 rows at 100 TB, so the
-    join runs entirely in Arrow (hash semi-join in C++, zero per-row
-    Python objects) and the result is cached per dataset state: a plan's ``schema()``, ``partitions()``
-    and the append-schema guard, and back-to-back ``decode_dataset``
-    calls, share one load.
-
-    The state key is the live manifest directory (the
-    ``manifest_current`` pointer's target) plus the names of the
-    committed manifest and lineage files.  Every commit adds a file under
-    a fresh name (temp write + rename) and every rewrite swaps the
-    pointer, so the key changes exactly when the committed state does —
-    unlike a directory mtime, which a coarse-grained clock or a restored
-    timestamp can leave unchanged.  Both tables are read from exactly the
-    files the key names, so a commit racing the load cannot make the
-    cached result newer or older than its key."""
-    mdir = manifest_dir(output_dir)
-    lin_names = _meta_files(os.path.join(output_dir, "lineage"))
-    token = (mdir, _meta_files(mdir), lin_names)
+    """The committed rows of :func:`_read_manifest`, ``_MANIFEST_COLS``
+    only, cached per dataset state (:func:`_manifest_token`): a plan's
+    ``schema()``, ``partitions()`` and the append-schema guard, and
+    back-to-back ``decode_dataset`` calls, share one load."""
+    token = _manifest_token(output_dir)
     hit = _MANIFEST_CACHE.get(output_dir)
     if hit is not None and hit[0] == token:
         return hit[1]
-    man = _read_meta_table(mdir, _MANIFEST_COLS, token[1])
-    ok = _load_ok_lineage(output_dir, lin_names, ["unit", "run_id"])
-    if man is None or ok is None or man.num_rows == 0:
+    man = _read_manifest(output_dir, _MANIFEST_COLS, token)
+    if man is None:
         out = MANIFEST_PA_SCHEMA.empty_table().select(_MANIFEST_COLS)
     else:
-        ok = ok.group_by(["unit", "run_id"]).aggregate([])  # distinct — join keys must be unique
-        out = man.combine_chunks().join(ok, keys=["unit", "run_id"], join_type="left semi")
+        out = man.filter(man["committed"]).drop_columns(["__file", "committed"])
     _remember(_MANIFEST_CACHE, output_dir, token, out)
     return out
+
+
+def publish_generation(
+    output_dir: str, run_id: str, frags: pa.Table | None = None, *,
+    drop: pa.Table | None = None, name: str | None = None, batch_tag: str = "",
+) -> None:
+    """Publish a new manifest generation ``name`` (default
+    :func:`next_manifest_name`), the one rewrite compaction, vacuum and
+    the overwrite sink share.  First the survivors: with ``drop``
+    (``(unit, run_id)`` pairs), every row of the live generation,
+    re-read now, but those pairs' — so rows committed after the caller
+    chose ``drop`` survive; without it nothing carries over.  Then
+    ``frags`` and their lineage (:func:`commit_fragments`), and the
+    pointer last: until it lands readers resolve the old generation,
+    which the new lineage cannot touch, and a crash leaves only an
+    unreferenced dir for vacuum's retired-manifest horizon."""
+    name = name or next_manifest_name(output_dir)
+    new_dir = os.path.join(output_dir, name)
+    if drop is not None:
+        live = _read_manifest(output_dir)
+        if live is not None:
+            gone = drop.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
+            keep = live.join(gone, keys=["unit", "run_id"], join_type="left anti")
+            # a generation is never an empty dir
+            if keep.num_rows or frags is None:
+                _write_parquet_file(
+                    new_dir,
+                    f"part-{run_id}-survivors.parquet",
+                    keep.drop_columns(["__file", "committed"]),
+                )
+    if frags is not None:
+        commit_fragments(frags, output_dir, new_dir, run_id, batch_tag)
+    set_manifest_dir(output_dir, name)
 
 
 def completed_units(output_dir: str) -> np.ndarray:

@@ -62,6 +62,8 @@ from .stats import _chunk_stats
 # upe_encoded writer's options, compaction)
 DEFAULT_CHUNK_ROWS = 32768
 DEFAULT_MAX_BUFFER_BYTES = 256 << 20
+# rows per Arrow batch a parquet-input task cuts each row group into
+PARQUET_BATCH_ROWS = 65536
 
 
 def split_columns(spec: str) -> tuple:
@@ -573,7 +575,7 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
     return _run_encode(spark, df, plan, plan_sec, cfg, cluster_cols=cfg.cluster_by)
 
 
-def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: int = 65536) -> dict:
+def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
     """Run (or resume) the encode job reading parquet directly in the
     Python workers.
 
@@ -624,7 +626,7 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig, batch_rows: 
                     pf = _parquet_file(path)
                     for g in _expand_row_groups(pf, rg):
                         tbl = _timestamps_to_us(pf.read_row_group(g, use_threads=False))
-                        yield from tbl.to_batches(max_chunksize=batch_rows)
+                        yield from tbl.to_batches(max_chunksize=PARQUET_BATCH_ROWS)
 
     work = spark.range(n_map, numPartitions=n_map)
     return _run_encode(spark, work, plan, plan_sec, cfg, read=read_slices)

@@ -1,41 +1,18 @@
-"""Worker tuning on import: glibc malloc, and zip-import directory caching.
+"""Zip-import directory caching, applied on package import.
 
-Large NumPy temporaries are malloc'd above the default mmap threshold, so
-every fresh buffer triggers mmap + page faults and every free munmaps it.
-On kernels where faults are expensive (microVM sandboxes) this makes
-allocating vector ops 10-100× slower than in-place ones.  Raising
-``M_MMAP_THRESHOLD`` / ``M_TRIM_THRESHOLD`` keeps big blocks on the brk
-heap where glibc reuses them.  Called from the package ``__init__`` so
-Spark Python workers inherit it when they unpickle our UDFs.
+glibc's malloc thresholds are not tuned here: on fault-expensive
+kernels, large fresh allocations are 10-100x slower than reused ones,
+so ``sources.session.build_session`` raises them in every Python
+worker's environment (``spark.executorEnv.*``), where the encode and
+decode kernels allocate.  The driver keeps glibc's defaults, so the
+heap it frees goes back to the OS.
 """
 
 from __future__ import annotations
 
-import ctypes
-import ctypes.util
 import os
 import sys
 import zipimport
-
-_M_TRIM_THRESHOLD = -1
-_M_MMAP_THRESHOLD = -3
-
-_applied = False
-
-
-def tune_malloc(threshold: int = 1 << 31) -> bool:
-    """Raise glibc mmap/trim thresholds; no-op on non-glibc platforms."""
-    global _applied
-    if _applied:
-        return True
-    try:
-        libc = ctypes.CDLL(ctypes.util.find_library("c") or "libc.so.6", use_errno=True)
-        libc.mallopt(_M_MMAP_THRESHOLD, ctypes.c_int(threshold if threshold < 2**31 else 2**31 - 1))
-        libc.mallopt(_M_TRIM_THRESHOLD, ctypes.c_int(threshold if threshold < 2**31 else 2**31 - 1))
-        _applied = True
-        return True
-    except Exception:
-        return False
 
 
 def cache_zip_directories() -> bool:

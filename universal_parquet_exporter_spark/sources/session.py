@@ -43,7 +43,9 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # keep glibc from mmap-thrashing in Python workers (see memtune.py)
+        # keep glibc from mmap-thrashing in Python workers: fresh large
+        # allocations cost 10-100x more than reused ones on
+        # fault-expensive kernels (glibc reads these at process start)
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "2147483647")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "2147483647")
         # pyarrow's default jemalloc pool ignores mallopt and mmaps every

@@ -13,10 +13,9 @@ protocol (pyspark 4.1 ``pyspark.sql.datasource``):
     spark.read.format("upe_encoded").option("columns", "url,lang") \
          .load(out_dir).where("url >= 'https://h'")         # pruned scan
 
-    df.write.format("upe_encoded").option("key_col", "url") \
-      .mode("append").save(out_dir)                          # encode sink
+    df.write.format("upe_encoded").mode("append").save(out_dir)   # encode sink
 
-    stream.writeStream.format("upe_encoded").option("key_col", "url") \
+    stream.writeStream.format("upe_encoded") \
       .option("checkpointLocation", ck).start(out_dir)       # streaming sink
 
     spark.readStream.format("upe_encoded").load(out_dir)      # streaming READ:
@@ -52,8 +51,9 @@ What Catalyst's v2 pushdown buys here, mechanically:
   speculative task leaves at most an uncommitted payload file — dead
   bytes that ``vacuum`` sweeps — so the sink inherits the engine's
   exactly-once-at-job-granularity story through Spark's OWN commit
-  protocol instead of beside it.  ``mode("overwrite")`` is ATOMIC: the
-  new manifest is written to a fresh ``data_v<N>`` directory and the
+  protocol instead of beside it.  ``mode("overwrite")`` is ATOMIC: it
+  publishes a new manifest generation through
+  :func:`..encode.meta.publish_generation`, whose
   ``manifest_current`` pointer swaps last (Iceberg version-hint
   pattern); readers see the old or the new dataset, never a mix.
 - **Streaming sink** (``DataSourceStreamArrowWriter``): each micro-batch
@@ -67,7 +67,8 @@ Writes require the dataset plan (``plan.json``) to exist — create it
 with :func:`..encode.pipeline.load_or_build_plan` (or any prior
 ``encode_job``) first, the create-table-then-append model: unit
 identity must be global and deterministic, and a per-task writer cannot
-sample the whole input.
+sample the whole input.  The plan also names the key column, so a
+write needs no ``key_col`` option.
 """
 
 from __future__ import annotations
@@ -113,7 +114,7 @@ from ..encode.meta import (
     completed_batch_tags,
     manifest_dir,
     next_manifest_name as _next_manifest_name,
-    set_manifest_dir,
+    publish_generation,
 )
 from ..encode.pipeline import (
     DEFAULT_CHUNK_ROWS,
@@ -433,25 +434,26 @@ class _EncodedWriterBase:
         self.path = options.get("path")
         if not self.path:
             raise ValueError("upe_encoded requires a path: .save(<output_dir>)")
-        self.key_col = options.get("key_col", "url")
-        if self.key_col not in schema_names:
-            raise ValueError(
-                f"key_col {self.key_col!r} not in the written schema {schema_names}; "
-                "set .option('key_col', <column>)"
-            )
         plan = _load_plan(self.path)
         if plan is None:
             raise ValueError(
                 f"no plan.json under {self.path}: encoded datasets are "
                 "created-then-appended (unit identity must be global). "
                 "Initialize once with load_or_build_plan(df, EncodeJobConfig"
-                f"(output_dir={self.path!r}, key_col={self.key_col!r})) or a "
+                f"(output_dir={self.path!r}, key_col=<key column>)) or a "
                 "prior encode_job."
             )
         self.plan_json = plan.to_json()
-        if plan.key_col != self.key_col:
+        # the plan fixes the key column; an explicit option must agree
+        self.key_col = options.get("key_col", plan.key_col)
+        if self.key_col != plan.key_col:
             raise ValueError(
                 f"dataset plan partitions on {plan.key_col!r}, not {self.key_col!r}"
+            )
+        if self.key_col not in schema_names:
+            raise ValueError(
+                f"key column {self.key_col!r} of the dataset plan is not in the "
+                f"written schema {schema_names}"
             )
         self.chunk_rows = int(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
         self.max_buffer_bytes = int(options.get("max_buffer_bytes", DEFAULT_MAX_BUFFER_BYTES))
@@ -487,14 +489,13 @@ class _EncodedWriterBase:
         return _FragMessage(out[0].to_pylist() if out else [])
 
     # -- commit side (Spark's Python planning worker: pyarrow only) -----
-    def _commit_rows(self, rows: list[dict], data_dir: str, run_id: str, batch_tag: str = "") -> None:
-        """Commit the tasks' manifest rows through the engine's shared
-        :func:`..encode.meta.commit_fragments` — the same manifest
-        file + lineage file every encode job writes.  Spark's commit hook
+    @staticmethod
+    def _frags(messages) -> pa.Table:
+        """The tasks' manifest rows as one table.  Spark's commit hook
         runs in the Python planning worker where no SparkSession exists;
         the commit needs none (pyarrow files, temp-write + rename)."""
-        frags = pa.Table.from_pylist(rows, schema=FRAG_PA_SCHEMA)
-        commit_fragments(frags, self.path, data_dir, run_id, batch_tag)
+        rows = [r for m in messages if m is not None for r in m.rows]
+        return pa.Table.from_pylist(rows, schema=FRAG_PA_SCHEMA)
 
     def _drop_payload(self, messages) -> None:
         """Best-effort removal of aborted/duplicate tasks' payload files;
@@ -513,22 +514,20 @@ class _EncodedBatchWriter(_EncodedWriterBase, DataSourceArrowWriter):
         # type-changing overwrite is a legitimate full replacement)
         if not overwrite:
             _check_append_schema(self.path, schema)
-        # target manifest dir is fixed at PLANNING time; the pointer swap
-        # in commit() is what publishes it
-        self.data_dir = (
-            os.path.join(self.path, _next_manifest_name(self.path))
-            if overwrite
-            else manifest_dir(self.path)
-        )
+        # an overwrite's generation is fixed at PLANNING time; the
+        # pointer swap in commit() is what publishes it
+        self.generation = _next_manifest_name(self.path) if overwrite else None
+        self.data_dir = manifest_dir(self.path)
 
     def commit(self, messages):
-        rows = [r for m in messages if m is not None for r in m.rows]
-        self._commit_rows(rows, self.data_dir, self.run_id)
+        # an append commits through the shared commit_fragments; an
+        # overwrite publishes a new generation holding only its rows —
+        # readers resolve the old dataset until the pointer lands, and
+        # superseded payload/manifest bytes age out under vacuum's horizon
         if self.overwrite:
-            # atomic publish: readers resolve the old manifest until this
-            # rename-backed pointer lands; superseded payload/manifest
-            # bytes age out under vacuum's horizon
-            set_manifest_dir(self.path, os.path.basename(self.data_dir))
+            publish_generation(self.path, self.run_id, self._frags(messages), name=self.generation)
+        else:
+            commit_fragments(self._frags(messages), self.path, self.data_dir, self.run_id)
 
     def abort(self, messages):
         self._drop_payload(messages)
@@ -574,8 +573,9 @@ class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
             # rerun's payload files are duplicates — drop, don't commit
             self._drop_payload(messages)
             return
-        rows = [r for m in messages if m is not None for r in m.rows]
-        self._commit_rows(rows, manifest_dir(self.path), f"{self.run_id}-b{batchId}", tag)
+        commit_fragments(
+            self._frags(messages), self.path, manifest_dir(self.path), f"{self.run_id}-b{batchId}", tag
+        )
 
     def abort(self, messages, batchId: int):
         self._drop_payload(messages)
@@ -592,8 +592,9 @@ class EncodedContainerDataSource(DataSource):
     Read options: ``columns`` (comma-separated decode pruning — excluded
     columns' buffers are skipped un-decompressed), ``partition_target_bytes``
     (scan-task payload size, default 64 MB).
-    Write options: ``key_col`` (must match the dataset plan), ``chunk_rows``,
-    ``max_buffer_bytes``.  See the module docstring for semantics."""
+    Write options: ``key_col`` (defaults to the dataset plan's key
+    column, and must match it), ``chunk_rows``, ``max_buffer_bytes``.
+    See the module docstring for semantics."""
 
     @classmethod
     def name(cls) -> str:
