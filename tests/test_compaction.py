@@ -353,3 +353,24 @@ def test_crash_before_pointer_swap_leaves_the_old_manifest_live(spark, tmp_path,
     assert rep["manifest_rewritten"]
     assert manifest_dir(out).endswith("data_v2")
     assert sorted(tuple(r) for r in decode_dataset(spark, out).collect()) == expected
+
+
+def test_compact_publishes_nothing_when_the_live_manifest_cannot_be_reread(spark, tmp_path, monkeypatch):
+    """The publish re-reads the live generation for its survivors: a
+    re-read that fails (a transient storage error, a file swept under
+    it) raises before any file is written — never a generation holding
+    only the compacted units, with every other unit gone."""
+    out = str(tmp_path / "reread")
+    df = _ingest_fragmented(spark, out)
+    expected = sorted(tuple(r) for r in df.collect())
+    meta._committed_manifest(out)  # the selection reads this cached view
+    reads = []
+    monkeypatch.setattr(meta, "_read_manifest", lambda *a, **k: reads.append(a) and None)
+    with pytest.raises(RuntimeError, match="nothing published"):
+        compact(spark, out, chunk_rows=32768)
+    monkeypatch.undo()
+
+    assert reads  # the publish's re-read, not the selection, failed
+    assert not os.path.exists(os.path.join(out, "manifest_current"))
+    assert not os.path.exists(os.path.join(out, "data_v1"))
+    assert sorted(tuple(r) for r in decode_dataset(spark, out).collect()) == expected

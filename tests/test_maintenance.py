@@ -326,3 +326,32 @@ def test_delete_files_skips_missing_names_on_both_sides_of_the_fan_out(spark, ou
         assert jobs == (1 if n > 256 else 0)
         assert os.listdir(pdir) == []
 
+
+
+def test_vacuum_rewrite_publishes_nothing_when_the_live_manifest_cannot_be_reread(
+    spark, webpages, outdir, monkeypatch
+):
+    """The rewrite re-reads the live generation for its survivors: a
+    re-read that fails raises before any file is written — never a
+    pointer at a generation that holds no rows."""
+    from universal_parquet_exporter_spark.encode import meta
+
+    cfg = EncodeJobConfig(output_dir=outdir, target_unit_bytes=2 << 20)
+    encode_job(spark, webpages, cfg)
+    baseline = decode_dataset(spark, outdir).orderBy("url").collect()
+    _crash_after_manifest_commit(spark, webpages, outdir)
+
+    # vacuum's own read goes through the name maintenance imported; only
+    # the publish's re-read, looked up in meta, fails
+    reads = []
+    monkeypatch.setattr(meta, "_read_manifest", lambda *a, **k: reads.append(a) and None)
+    with pytest.raises(RuntimeError, match="nothing published"):
+        vacuum(spark, outdir)
+    monkeypatch.undo()
+
+    assert reads
+    assert not os.path.exists(os.path.join(outdir, "manifest_current"))
+    assert not os.path.exists(os.path.join(outdir, "data_v1"))
+    assert decode_dataset(spark, outdir).orderBy("url").collect() == baseline
+    assert vacuum(spark, outdir)["manifest_rewritten"]
+    assert decode_dataset(spark, outdir).orderBy("url").collect() == baseline

@@ -255,7 +255,8 @@ def test_plain_relative_and_file_uri_paths_resolve_alike(tmp_path, monkeypatch):
             assert meta._payload_fs(mdir)[1] == os.path.join(absd, name)
             assert meta.next_manifest_name(q) == f"data_v{i + 2}"
             assert meta._load_plan(q).to_json() == plan.to_json()
-            assert meta._read_meta_table(mdir, None, meta._meta_names(mdir)).equals(tbl)
+            names = meta._meta_names(mdir)
+            assert meta._read_meta_table(mdir, tbl.schema, None, names).equals(tbl)
 
 
 def _mismatches_cols(df, dec):

@@ -51,6 +51,7 @@ from pyarrow import fs as pafs
 from .meta import (
     _generations,
     _list_dir,
+    _mtime,
     _payload_fs,
     _read_manifest,
     _remove_files,
@@ -128,14 +129,14 @@ def _sweep_retired_manifests(
     NEWEST of the pointer mtime (= last swap, when dirs retire) and the
     dir's own newest file (covers crashed unreferenced rewrites)."""
     cur_name = os.path.basename(current_dir.rstrip("/"))
-    ptr_m = [m for n, _s, m in _list_dir(output_dir) if n == "manifest_current"]
+    ptr_m = [_mtime(i) for n, i in _list_dir(output_dir).items() if n == "manifest_current"]
     fs, root = _payload_fs(output_dir)
     swept = 0
     for name, _version in _generations(output_dir):
         if name == cur_name:
             continue
         newest = max(
-            (m for _n, _s, m in _list_dir(os.path.join(output_dir, name))), default=0.0
+            map(_mtime, _list_dir(os.path.join(output_dir, name)).values()), default=0.0
         )
         if (now - max([newest, *ptr_m])) < older_than_sec:
             continue
@@ -193,14 +194,15 @@ def vacuum(
         output_dir, data_dir, now, older_than_sec, dry_run=dry_run
     )
 
-    manifest = _read_manifest(output_dir)
+    manifest = _read_manifest(output_dir, orphans=True)
     if manifest is None:
         raise ValueError(f"no manifest or lineage under {output_dir}: not an encoded dataset")
     # per-part-file mtimes give orphan rows their age (each manifest
     # commit writes fresh part files, so file mtime ≈ that run's commit
     # time); rows in young part files are NEVER treated as orphans
     old_parts = pa.array(
-        [n for n, _sz, m in _list_dir(data_dir) if (now - m) >= older_than_sec], pa.string()
+        [n for n, i in _list_dir(data_dir).items() if (now - _mtime(i)) >= older_than_sec],
+        pa.string(),
     )
     orphan = pc.and_(
         pc.invert(manifest["committed"]), pc.is_in(manifest["__file"], value_set=old_parts)
@@ -214,9 +216,9 @@ def vacuum(
     keep_refs = set(pc.unique(live.column("file")).to_pylist())
     listed = _list_dir(payload_dir)
     dead = [
-        (name, int(size))
-        for name, size, mtime in listed
-        if (now - mtime) >= older_than_sec and name not in keep_refs
+        (name, int(i.size))
+        for name, i in listed.items()
+        if (now - _mtime(i)) >= older_than_sec and name not in keep_refs
     ]
     reclaimed = sum(s for _, s in dead)
     if dead and not dry_run:
@@ -239,9 +241,9 @@ def vacuum(
     # under its move)
     stale_tmp = [
         name
-        for name, _size, mtime in _list_dir(output_dir)
+        for name, i in _list_dir(output_dir).items()
         if name.startswith(("plan.json.tmp", "manifest_current.tmp"))
-        and (now - mtime) >= older_than_sec
+        and (now - _mtime(i)) >= older_than_sec
     ]
     if not dry_run:
         _remove_files(output_dir, stale_tmp)

@@ -23,10 +23,10 @@ per commit) and ``payload/`` (the tasks' append-only chunk files).
 - this module is the only reader of lineage and of the manifest, and
   the only writer of a manifest generation: lineage's ``status='ok'``
   rows are loaded once per dataset state (:func:`_ok_lineage`);
-  :func:`_read_manifest` flags every manifest row with the one
-  ``(unit, run_id)`` visibility rule for vacuum and compaction, and
-  scans read its cached committed view; compaction, vacuum and the
-  overwrite sink publish ``data_v<N>`` through :func:`publish_generation`.
+  :func:`_read_manifest` applies the one ``(unit, run_id)`` visibility
+  rule — scans read its cached committed view, vacuum its rows flagged
+  ``committed`` — and compaction, vacuum and the overwrite sink
+  publish ``data_v<N>`` through :func:`publish_generation`.
 """
 
 from __future__ import annotations
@@ -190,23 +190,28 @@ def _remove_files(dir_path: str, names, ignore=FileNotFoundError) -> None:
             pass
 
 
-def _list_dir(path: str, dirs: bool = False, hidden: bool = True) -> list[tuple[str, int, float]]:
-    """``(name, size, mtime)`` of the regular files under ``path`` (with
-    ``dirs``, of its subdirectories instead), sorted by name; empty when
-    ``path`` does not exist.  ``hidden=False`` leaves out the
-    ``.``/``_``-prefixed temp files and markers a metadata read skips.
-    A missing mtime (some object stores) reads as +inf: the entry's age
-    is unknowable, so it counts as infinitely YOUNG and every horizon
-    protects it rather than sweeps it (0.0 would invert the safety)."""
+def _list_dir(path: str, dirs: bool = False, hidden: bool = True) -> dict[str, pafs.FileInfo]:
+    """The regular files under ``path`` (with ``dirs``, its
+    subdirectories instead) by name, in name order; empty when ``path``
+    does not exist.  ``hidden=False`` leaves out the ``.``/``_``-prefixed
+    temp files and markers a metadata read skips."""
     fs, root = _payload_fs(path)
     want = pafs.FileType.Directory if dirs else pafs.FileType.File
-    out = []
+    out = {}
     for i in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)):
-        if i.type != want or (not hidden and i.base_name.startswith((".", "_"))):
-            continue
-        ns = i.mtime_ns
-        out.append((i.base_name, i.size, float("inf") if ns is None else ns / 1e9))
-    return sorted(out)
+        name = i.base_name
+        if (hidden or not name.startswith((".", "_"))) and i.type == want:
+            out[name] = i
+    return {n: out[n] for n in sorted(out)}
+
+
+def _mtime(info: pafs.FileInfo) -> float:
+    """A listed entry's mtime in seconds.  A missing mtime (some object
+    stores) reads as +inf: the entry's age is unknowable, so it counts
+    as infinitely YOUNG and every horizon protects it rather than sweeps
+    it (0.0 would invert the safety)."""
+    ns = info.mtime_ns
+    return float("inf") if ns is None else ns / 1e9
 
 
 class _TaskPayloadWriter:
@@ -302,7 +307,7 @@ def _generations(output_dir: str) -> list[tuple[str, int]]:
     import re
 
     out = []
-    for name, _size, _mtime in _list_dir(output_dir, dirs=True):
+    for name in _list_dir(output_dir, dirs=True):
         m = re.fullmatch(r"data(?:_v(\d+))?", name)
         if m:
             out.append((name, int(m.group(1) or 0)))
@@ -318,16 +323,17 @@ def next_manifest_name(output_dir: str) -> str:
 
 
 def _read_meta_table(
-    path: str, columns: list[str] | None, names: tuple[str, ...], with_file: bool = False
+    path: str, schema: pa.Schema, columns: list[str] | None, names: tuple[str, ...], with_file: bool = False
 ) -> pa.Table | None:
     """The files ``names`` (a :func:`_meta_names` listing) of a parquet
-    metadata directory — manifest or lineage — as one Arrow table.
-    Files written by different engine versions may differ in columns:
-    the table holds the union of their columns (``columns`` where any
-    file has them; None reads every column), and a file without a
-    column reads as nulls there.  ``with_file`` appends ``__file``, the
-    name of each row's file.  None when there is no file or one vanished
-    under the read (a swept retired generation)."""
+    metadata directory as one Arrow table of ``schema`` — the engine's
+    own :data:`MANIFEST_PA_SCHEMA` or :data:`LINEAGE_PA_SCHEMA` —
+    ``columns`` only (None: all).  Files written by older engine
+    versions hold a subset of those columns, which read as nulls there,
+    so no column depends on which file lists first.  ``with_file``
+    appends ``__file``, the name of each row's file.  None when there is
+    no file or one vanished under the read (a swept retired
+    generation)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
@@ -335,13 +341,9 @@ def _read_meta_table(
         return None
     fs, root = _payload_fs(path)
     paths = [f"{root}/{n}" for n in names]
+    dset = pads.FileSystemDataset.from_paths(paths, schema, pads.ParquetFileFormat(), fs)
+    cols = list(columns or schema.names)
     try:
-        dset = pads.dataset(paths, filesystem=fs, format="parquet")
-        # a dataset takes the first file's schema: read every footer
-        frags = list(dset.get_fragments())
-        schema = pa.unify_schemas([f.physical_schema for f in frags], promote_options="permissive")
-        cols = [c for c in (columns or schema.names) if c in schema.names]
-        dset = pads.FileSystemDataset(frags, schema, dset.format, fs)
         tbl = dset.to_table(columns=cols + (["__filename"] if with_file else []))
     except OSError:
         return None
@@ -439,7 +441,7 @@ def commit_fragments(
 
 def _meta_names(path: str) -> tuple[str, ...]:
     """Names of the files a metadata-directory read sees."""
-    return tuple(n for n, _size, _mtime in _list_dir(path, hidden=False))
+    return tuple(_list_dir(path, hidden=False))
 
 
 def _remember(cache: dict, key: str, token, value) -> None:
@@ -457,8 +459,8 @@ def _load_ok_lineage(
     """The ``status='ok'`` rows of the lineage files ``names`` (a
     :func:`_meta_names` listing), read with pyarrow — no Spark job — and
     cached per dataset on those names; None when there is no lineage.
-    The table holds ``columns`` where the files have them (older lineage
-    files lack ``batch_tag`` and ``committed_at``).  A miss reads the
+    The table holds at least ``columns`` (null where an older lineage
+    file lacks ``batch_tag`` or ``committed_at``).  A miss reads the
     columns every earlier caller asked for as well, so callers that
     alternate share one table, and a scan that needs two columns never
     pays to read all twelve."""
@@ -474,7 +476,7 @@ def _load_ok_lineage(
     lin = None
     if names:
         cols = [c for c in LINEAGE_PA_SCHEMA.names if c in want]
-        lin = _read_meta_table(os.path.join(output_dir, "lineage"), cols, names)
+        lin = _read_meta_table(os.path.join(output_dir, "lineage"), LINEAGE_PA_SCHEMA, cols, names)
     if lin is not None:
         # one chunk per column, not one per file: the compute that
         # follows then costs per row, not per commit
@@ -503,24 +505,29 @@ def _manifest_token(output_dir: str) -> tuple[str, tuple[str, ...], tuple[str, .
     return mdir, _meta_names(mdir), _meta_names(os.path.join(output_dir, "lineage"))
 
 
-def _read_manifest(output_dir: str, columns: list[str] | None = None, token=None) -> pa.Table | None:
-    """Every row of the live manifest generation, orphans included: the
-    one manifest read.  It holds ``columns`` (None: all) where the files
-    have them, ``__file`` (the row's manifest file) and ``committed``,
-    the one visibility rule: lineage holds a ``status='ok'`` row for the
-    row's ``(unit, run_id)``.  The join runs in Arrow, with no per-row
-    Python objects (~10^7 rows at 100 TB).  Exactly the files ``token``
+def _read_manifest(
+    output_dir: str, columns: list[str] | None = None, token=None, orphans: bool = False
+) -> pa.Table | None:
+    """The committed rows of the live manifest generation, ``columns``
+    only (None: all): the one manifest read and the one visibility rule
+    — a row is committed when lineage holds a ``status='ok'`` row for
+    its ``(unit, run_id)``.  With ``orphans``, every row instead, plus
+    ``__file`` (the row's manifest file) and the rule as a ``committed``
+    flag.  The join runs in Arrow, with no per-row Python objects
+    (~10^7 rows at 100 TB).  Exactly the files ``token``
     (:func:`_manifest_token`, listed now when None) names are read.
     None when there is no manifest file or no lineage."""
     import pyarrow.compute as pc
 
     mdir, man_names, lin_names = token or _manifest_token(output_dir)
-    man = _read_meta_table(mdir, columns, man_names, True)
+    man = _read_meta_table(mdir, MANIFEST_PA_SCHEMA, columns, man_names, orphans)
     ok = _load_ok_lineage(output_dir, lin_names, ["unit", "run_id"])
     if man is None or ok is None:
         return None
     # distinct: join keys must be unique
     ok = ok.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
+    if not orphans:
+        return man.combine_chunks().join(ok, keys=["unit", "run_id"], join_type="left semi")
     ok = ok.append_column("committed", pa.repeat(pa.scalar(True), ok.num_rows))
     man = man.combine_chunks().join(ok, keys=["unit", "run_id"], join_type="left outer")
     return man.set_column(
@@ -533,19 +540,17 @@ _MANIFEST_COLS = ["unit", "run_id", "file", "offset", "length", "row_off", "n_ro
 
 
 def _committed_manifest(output_dir: str) -> pa.Table:
-    """The committed rows of :func:`_read_manifest`, ``_MANIFEST_COLS``
-    only, cached per dataset state (:func:`_manifest_token`): a plan's
+    """:func:`_read_manifest`'s committed rows, ``_MANIFEST_COLS`` only,
+    cached per dataset state (:func:`_manifest_token`): a plan's
     ``schema()``, ``partitions()`` and the append-schema guard, and
     back-to-back ``decode_dataset`` calls, share one load."""
     token = _manifest_token(output_dir)
     hit = _MANIFEST_CACHE.get(output_dir)
     if hit is not None and hit[0] == token:
         return hit[1]
-    man = _read_manifest(output_dir, _MANIFEST_COLS, token)
-    if man is None:
+    out = _read_manifest(output_dir, _MANIFEST_COLS, token)
+    if out is None:
         out = MANIFEST_PA_SCHEMA.empty_table().select(_MANIFEST_COLS)
-    else:
-        out = man.filter(man["committed"]).drop_columns(["__file", "committed"])
     _remember(_MANIFEST_CACHE, output_dir, token, out)
     return out
 
@@ -559,25 +564,28 @@ def publish_generation(
     the overwrite sink share.  First the survivors: with ``drop``
     (``(unit, run_id)`` pairs), every row of the live generation,
     re-read now, but those pairs' — so rows committed after the caller
-    chose ``drop`` survive; without it nothing carries over.  Then
-    ``frags`` and their lineage (:func:`commit_fragments`), and the
-    pointer last: until it lands readers resolve the old generation,
-    which the new lineage cannot touch, and a crash leaves only an
-    unreferenced dir for vacuum's retired-manifest horizon."""
+    chose ``drop`` survive; without it nothing carries over.  A re-read
+    that fails raises before anything is written: a generation without
+    its survivors would drop every other unit.  Then ``frags`` and their
+    lineage (:func:`commit_fragments`), and the pointer last: until it
+    lands readers resolve the old generation, which the new lineage
+    cannot touch, and a crash leaves only an unreferenced dir for
+    vacuum's retired-manifest horizon."""
     name = name or next_manifest_name(output_dir)
     new_dir = os.path.join(output_dir, name)
     if drop is not None:
-        live = _read_manifest(output_dir)
-        if live is not None:
-            gone = drop.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
-            keep = live.join(gone, keys=["unit", "run_id"], join_type="left anti")
-            # a generation is never an empty dir
-            if keep.num_rows or frags is None:
-                _write_parquet_file(
-                    new_dir,
-                    f"part-{run_id}-survivors.parquet",
-                    keep.drop_columns(["__file", "committed"]),
-                )
+        live = _read_manifest(output_dir, orphans=True)
+        if live is None:
+            raise RuntimeError(f"could not re-read the live manifest of {output_dir}; nothing published")
+        gone = drop.select(["unit", "run_id"]).group_by(["unit", "run_id"]).aggregate([])
+        keep = live.join(gone, keys=["unit", "run_id"], join_type="left anti")
+        # a generation is never an empty dir
+        if keep.num_rows or frags is None:
+            _write_parquet_file(
+                new_dir,
+                f"part-{run_id}-survivors.parquet",
+                keep.drop_columns(["__file", "committed"]),
+            )
     if frags is not None:
         commit_fragments(frags, output_dir, new_dir, run_id, batch_tag)
     set_manifest_dir(output_dir, name)
@@ -600,7 +608,7 @@ def completed_batch_tags(output_dir: str) -> set[str]:
     before encoding so micro-batch replays are no-ops (exactly-once at
     batch granularity)."""
     lin = _ok_lineage(output_dir, ["batch_tag"])
-    if lin is None or "batch_tag" not in lin.schema.names:
+    if lin is None:
         return set()
     return {t for t in lin.column("batch_tag").unique().to_pylist() if t}
 
@@ -620,10 +628,7 @@ def _committed_run_order(output_dir: str) -> list[tuple[int, str]]:
     lin = _ok_lineage(output_dir, ["run_id", "committed_at"])
     if lin is None or lin.num_rows == 0:
         return []
-    if "committed_at" in lin.schema.names:
-        ts = pc.fill_null(lin.column("committed_at").cast(pa.int64()), 0)
-    else:
-        ts = pa.array([0] * lin.num_rows, pa.int64())
+    ts = pc.fill_null(lin.column("committed_at").cast(pa.int64()), 0)
     runs = pa.table({"run_id": lin.column("run_id"), "committed_at": ts})
     runs = runs.group_by("run_id").aggregate([("committed_at", "max")])
     out = sorted(

@@ -515,9 +515,10 @@ class _EncodedBatchWriter(_EncodedWriterBase, DataSourceArrowWriter):
         if not overwrite:
             _check_append_schema(self.path, schema)
         # an overwrite's generation is fixed at PLANNING time; the
-        # pointer swap in commit() is what publishes it
+        # pointer swap in commit() is what publishes it; an append
+        # commits into the manifest dir live at planning
         self.generation = _next_manifest_name(self.path) if overwrite else None
-        self.data_dir = manifest_dir(self.path)
+        self.data_dir = None if overwrite else manifest_dir(self.path)
 
     def commit(self, messages):
         # an append commits through the shared commit_fragments; an
