@@ -57,42 +57,56 @@ def pages(spark, tmp_path_factory):
     df.unpersist()
 
 
-def test_decode_dataset_runs_one_spark_job(spark, pages):
+def test_decode_dataset_runs_one_spark_job(spark, pages, monkeypatch):
     """Full, filtered and evidence-carrying decodes each run exactly one
-    Spark job: planning, pruning and the evidence counts read metadata
-    with pyarrow on the driver."""
+    Spark job on both branches: planning, pruning and the evidence counts
+    read metadata with pyarrow on the driver, and the driver branch hands
+    Spark its survivors as a local relation."""
     df, out = pages
     urls = sorted(r.url for r in df.select("url").collect())
     lo, hi = urls[len(urls) // 4], urls[len(urls) // 2]
     terms = [("url", ">=", lo), ("url", "<", hi)]
-    got: dict = {}
-
-    def run(name, **kw):
-        got[name] = decode_dataset(spark, out, **kw).toArrow()
-
-    assert _spark_jobs(spark, lambda: run("full")) == 1
-    assert _spark_jobs(spark, lambda: run("filtered", filters=terms)) == 1
-    ev: dict = {}
-    assert _spark_jobs(spark, lambda: run("evidence", filters=terms, pruning_evidence=ev)) == 1
-
-    assert got["full"].num_rows == 3000
     want = df.where((F.col("url") >= lo) & (F.col("url") < hi)).count()
-    assert got["filtered"].num_rows == got["evidence"].num_rows == want > 0
-
-    # unit counts: the plan's units, and those the key range can reach
     plan = _load_plan(out)
     units = set(units_for_key_range(plan, lo, hi))
-    assert ev["units_total"] == sum(plan.salts) > ev["units_qualifying"] == len(units)
-    # slice counts: manifest rows of those units, before and after the
-    # url zone maps drop the chunks that can't hold [lo, hi)
     rows = [r for r in pq.read_table(manifest_dir(out)).to_pylist() if r["unit"] in units]
 
     def chunk_may_match(stats):
         mn, mx = json.loads(stats)["url"]
         return (mx is None or mx >= lo) and mn < hi
 
-    assert ev["total"] == len(rows)
-    assert ev["qualifying"] == sum(chunk_may_match(r["stats"]) for r in rows) > 0
+    for limit, branch in ((0, "spark"), (1 << 40, "driver")):
+        monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", limit)
+        got: dict = {}
+
+        def run(name, **kw):
+            got[name] = decode_dataset(spark, out, **kw).toArrow()
+
+        ev_full: dict = {}
+        assert _spark_jobs(spark, lambda: run("full", pruning_evidence=ev_full)) == 1
+        assert _spark_jobs(spark, lambda: run("filtered", filters=terms)) == 1
+        ev: dict = {}
+        assert _spark_jobs(spark, lambda: run("evidence", filters=terms, pruning_evidence=ev)) == 1
+
+        assert got["full"].num_rows == 3000
+        assert got["filtered"].num_rows == got["evidence"].num_rows == want > 0
+        # a call without filters always takes the Spark branch
+        assert ev_full == {"branch": "spark"}
+        assert ev["branch"] == branch
+
+        # unit counts: the plan's units, and those the key range can reach
+        assert ev["units_total"] == sum(plan.salts) > ev["units_qualifying"] == len(units)
+        # slice counts: manifest rows of those units, before and after the
+        # url zone maps drop the chunks that can't hold [lo, hi)
+        assert ev["total"] == len(rows)
+        kept = [r for r in rows if chunk_may_match(r["stats"])]
+        assert ev["qualifying"] == len(kept) > 0
+        if branch == "driver":
+            # the read loop evaluated every planned slice's rows, and the
+            # pre-filter is exact on a string range
+            assert ev["rows_decoded"] == sum(r["n_rows"] for r in kept) > ev["rows_kept"] == want
+        else:
+            assert "rows_decoded" not in ev and "rows_kept" not in ev
 
 
 def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tmp_path):
@@ -314,3 +328,44 @@ def test_normalized_terms_drop_what_cannot_prune():
         schema,
     )
     assert got == [("p", "=", Decimal("1.5")), ("x", "!=", 2.0), ("d", ">=", 19724)]
+
+
+def test_naive_datetime_filters_read_the_driver_local_zone(spark, tmp_path, monkeypatch):
+    """A naive datetime filter value means the instant PySpark's literal
+    converter gives it — the driver's local wall clock — in zone-map
+    pruning, the read loop's pre-filter and the exact residual alike.
+    With the driver in New York and the session in UTC, both decode
+    branches and the reader return the rows a Spark filter of the source
+    returns, on a zone-aware and on a ``TIMESTAMP_NTZ`` column."""
+    import time
+
+    sds.register(spark)
+    out = str(tmp_path / "tz")
+    src = spark.range(2000).select(
+        F.lpad(F.col("id").cast("string"), 6, "0").alias("k"),
+        F.timestamp_micros(F.lit(1704067200000000) + F.col("id") * 60_000_000).alias("ts"),
+    ).withColumn("ts_ntz", F.col("ts").cast("timestamp_ntz"))
+    encode_job(
+        spark, src,
+        EncodeJobConfig(output_dir=out, key_col="k", size_cols=("k",), target_unit_bytes=1 << 10, chunk_rows=64),
+    )
+    reader_df = spark.read.format("upe_encoded").load(out)
+
+    def keys(df):
+        return sorted(df.select("k").toArrow().column("k").to_pylist())
+
+    try:
+        monkeypatch.setenv("TZ", "America/New_York")
+        time.tzset()
+        for col in ("ts", "ts_ntz"):
+            for hour in (12, 20):
+                filters = [(col, "<", datetime(2024, 1, 1, hour))]
+                want = keys(src.where(_condition([filters])))
+                assert len(want) == 60 * (hour + 5), (col, hour)
+                assert keys(reader_df.where(_condition([filters]))) == want, (col, hour)
+                for limit in (0, 1 << 40):  # the Spark branch, then the driver branch
+                    monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", limit, raising=False)
+                    assert keys(decode_dataset(spark, out, filters=filters)) == want, (col, hour, limit)
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -19,25 +19,36 @@ one Spark job starts:
    (:func:`.stats._stats_keep`);
 5. **packing** — surviving chunks group into locality-packed scan
    partitions (:func:`_pack_chunk_partitions`) that
-   :func:`_read_chunk_partition` decodes on an executor.
+   :func:`_read_chunk_partition` decodes on an executor;
+6. **read loop** — per chunk, decode the filter columns, evaluate the
+   filter with ``pyarrow.compute`` (:func:`_prefilter_mask`), then decode
+   the rest only if rows survive, and hand Spark only the survivors;
+7. **branch** — a small filtered ``decode_dataset`` runs the read loop on
+   the driver; other scans run as one Spark job, one task per partition.
 
 This module is also the only code that decodes payload chunks:
 compaction packs its rewrite tasks with the same packer and reads them
-through :func:`_read_padded`.
+through :func:`_read_padded`, with no filter groups.
 
 Filters are OR-of-AND groups of ``(col, op, value)`` terms (pyarrow's
 DNF shape; the reader's pushed Catalyst filters are one group).  Pruning
-is conservative — every bound is a superset — so both paths re-apply the
-exact predicate to the decoded rows, the parquet row-group-statistics
-contract.
+and the pre-filter are conservative — each keeps a superset of the
+matching rows — so both paths re-apply the exact predicate to the rows
+Spark receives, the parquet row-group-statistics contract.
 """
 
 from __future__ import annotations
 
+import operator
 import os
+import time
+from datetime import datetime, timezone
+from decimal import Decimal
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import InputPartition
 
 from ..plans.partitioning import units_for_key_range
@@ -51,15 +62,41 @@ from .meta import (
     _open_payload,
     _probe_chunk_schema,
 )
-from .stats import _normalize_terms, _parse_stats, _stats_keep
+from .stats import _TS_UNIT_TO_US, _normalize_terms, _parse_stats, _stats_keep
 
 DEFAULT_PARTITION_BYTES = 64 << 20
 
+# a filtered decode_dataset under both bounds (planned payload, Arrow
+# survivors) decodes on the driver; measured crossover in CHANGES.md
+_DRIVER_DECODE_BYTES = 8 << 20
+_DRIVER_SURVIVOR_BYTES = 8 << 20
 
-_FILTER_OPS = (
-    "<", "<=", ">", ">=", "=", "==", "!=", "<>", "in", "not_in",
-    "is_null", "not_null", "startswith", "endswith", "contains",
-)
+# the exact residual each op applies in Spark (SQL NOT IN: null rows
+# never match, as in the chunk pruner's null-rejecting algebra)
+_SPARK_OPS = {
+    "<": lambda c, v: c < v, "<=": lambda c, v: c <= v,
+    ">": lambda c, v: c > v, ">=": lambda c, v: c >= v,
+    "=": lambda c, v: c == v, "==": lambda c, v: c == v,
+    "!=": lambda c, v: c != v, "<>": lambda c, v: c != v,
+    "in": lambda c, v: c.isin(*v), "not_in": lambda c, v: ~c.isin(*v),
+    "is_null": lambda c, _v: c.isNull(), "not_null": lambda c, _v: c.isNotNull(),
+    "startswith": lambda c, v: c.startswith(v), "endswith": lambda c, v: c.endswith(v),
+    "contains": lambda c, v: c.contains(v),
+}
+_FILTER_OPS = tuple(_SPARK_OPS)
+
+# the read loop's pre-filter per NORMALIZED op (stats._normalize_terms
+# folds the aliases), over columns in the zone-map domain
+_ARROW_OPS = {
+    "<": pc.less, "<=": pc.less_equal, ">": pc.greater, ">=": pc.greater_equal,
+    "=": pc.equal, "!=": pc.not_equal,
+    "in": lambda a, v: pc.is_in(a, value_set=pa.array(v)),
+    "not_in": lambda a, v: pc.invert(pc.is_in(a, value_set=pa.array(v))),
+    "is_null": lambda a, _v: pc.is_null(a), "not_null": lambda a, _v: pc.is_valid(a),
+    "startswith": lambda a, v: pc.starts_with(a, pattern=v),
+    "endswith": lambda a, v: pc.ends_with(a, pattern=v),
+    "contains": lambda a, v: pc.match_substring(a, pattern=v),
+}
 
 
 def _filter_groups(filters) -> list[list[tuple]]:
@@ -140,13 +177,17 @@ class _ChunkScanPartition(InputPartition):
     ``[(file, offset, length, [(row_off, n_rows), ...]), ...]`` sorted by
     (file, offset) so the read loop deserializes each chunk once.
     ``fields`` are the output Arrow fields (union schema restricted to
-    the requested columns) — chunks predating a column null-pad to it."""
+    the requested columns) — chunks predating a column null-pad to it.
+    ``groups`` (normalized filter groups) are the read loop's pre-filter."""
 
-    def __init__(self, payload_dir: str, columns: list[str] | None, chunks: list, fields: list):
+    def __init__(
+        self, payload_dir: str, columns: list[str] | None, chunks: list, fields: list, groups=()
+    ):
         self.payload_dir = payload_dir
         self.columns = columns
         self.chunks = chunks
         self.fields = fields
+        self.groups = groups
 
 
 def _group_units(plan, groups) -> np.ndarray | None:
@@ -255,8 +296,9 @@ def _pack_chunk_partitions(
     else:  # every unit pruned
         starts = ends = np.array([], dtype=np.int64)
 
-    # a group with no prunable term keeps every chunk
-    prune = bool(norm_groups) and all(norm_groups) and "stats" in man.schema.names
+    # a group with no prunable term keeps every chunk and every row
+    groups = norm_groups if norm_groups and all(norm_groups) else []
+    prune = bool(groups) and "stats" in man.schema.names
     if prune:
         chunk_stats = man.column("stats").take(pa.array(starts)).to_pylist()
     ordered = []
@@ -286,10 +328,10 @@ def _pack_chunk_partitions(
         cur.append(ch)
         cur_bytes += ch[2]
         if cur_bytes >= target_bytes:
-            parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields))
+            parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields, groups))
             cur, cur_bytes = [], 0
     if cur or not parts:
-        parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields))
+        parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields, groups))
     return parts
 
 
@@ -341,13 +383,68 @@ def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
 
 
+def _term_mask(tbl: pa.Table, col: str, op: str, v):
+    """One normalized term over a decoded chunk as an Arrow mask, or None
+    (keep every row) when Arrow has no exact case for its column type
+    and value.  Timestamps and dates compare as the zone-map domain's
+    epoch ints; float columns keep NaN rows (Spark sorts NaN above every
+    number); a null-padded column compares as null, as in Spark."""
+    if col not in tbl.column_names:
+        return None
+    arr = tbl.column(col)
+    t = arr.type
+    if op in ("is_null", "not_null"):
+        return _ARROW_OPS[op](arr, None)
+    date = pa.types.is_date32(t)
+    if date or pa.types.is_timestamp(t):
+        mult = 1 if date else _TS_UNIT_TO_US[t.unit]
+        if mult is None:  # ns has no exact µs domain
+            return None
+        arr, kinds = pc.multiply(arr.cast(pa.int32() if date else pa.int64()), mult), (int,)
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        kinds = (str,)
+    elif pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_decimal(t):
+        kinds = (int, float, Decimal)
+    else:
+        return None
+    vals = v if op in ("in", "not_in") else (v,)
+    if not all(isinstance(x, kinds) and not isinstance(x, bool) for x in vals):
+        return None
+    try:
+        m = _ARROW_OPS[op](arr, v)
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
+        return None
+    return pc.or_kleene(m, pc.is_nan(arr)) if pa.types.is_floating(t) else m
+
+
+def _prefilter_mask(tbl: pa.Table, groups):
+    """The normalized DNF ``groups`` over a decoded chunk with Kleene
+    and/or, or None when some group keeps every row: a superset of what
+    Spark's exact residual keeps, as every term is (:func:`_term_mask`)."""
+    mask = None
+    for g in groups:
+        gm = None
+        for col, op, v in g:
+            m = _term_mask(tbl, col, op, v)
+            if m is not None:
+                gm = m if gm is None else pc.and_kleene(gm, m)
+        if gm is None:
+            return None
+        mask = gm if mask is None else pc.or_kleene(mask, gm)
+    return mask
+
+
 def _read_padded(partition: _ChunkScanPartition):
     """Executor-side scan of one packed chunk run: each chunk
     deserializes ONCE — column pruning happens inside the container, so
     excluded columns' buffers are never decompressed, and columns a
     chunk generation predates null-pad from the union schema — and its
     unit-slices yield as Arrow batches in their stored types, so
-    compaction re-encodes exactly what was written."""
+    compaction re-encodes exactly what was written.  With filter
+    ``groups``, a chunk's filter columns decode first, and only its
+    pre-filter survivors (:func:`_prefilter_mask`) decode and yield."""
+    fcols = {t[0] for g in partition.groups for t in g}
+    ffields = [f for f in partition.fields if f.name in fcols]
     handles: dict[str, object] = {}
     try:
         for fname, off, length, slices in partition.chunks:
@@ -355,12 +452,22 @@ def _read_padded(partition: _ChunkScanPartition):
             if fh is None:
                 fh = handles[fname] = _open_payload(partition.payload_dir, fname)
             fh.seek(off)
+            payload = fh.read(length)
+            mask = None
+            if ffields:
+                ftbl = deserialize_chunk(payload, [f.name for f in ffields], missing_ok=True)
+                if ftbl.num_columns:
+                    mask = _prefilter_mask(_pad_table(ftbl, ffields), partition.groups)
+            picks = [(r, n, None if mask is None else mask.slice(r, n)) for r, n in slices]
+            picks = [p for p in picks if p[2] is None or pc.any(p[2]).as_py()]
+            if not picks:
+                continue
             tbl = _pad_table(
-                deserialize_chunk(fh.read(length), partition.columns, missing_ok=True),
-                partition.fields,
+                deserialize_chunk(payload, partition.columns, missing_ok=True), partition.fields
             )
-            for roff, nr in slices:
-                for b in tbl.slice(roff, nr).to_batches():
+            for roff, nr, m in picks:
+                part = tbl.slice(roff, nr)
+                for b in (part if m is None else part.filter(m)).to_batches():
                     if b.num_rows:
                         yield b
     finally:
@@ -390,6 +497,18 @@ def _run_partitions(spark, parts: list, read, schema):
     return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(run, schema)
 
 
+def _instant(v):
+    """A naive datetime (or each of a list's) as the zone-aware instant
+    PySpark's literal converter gives it (``time.mktime``: the driver's
+    local wall clock)."""
+    if isinstance(v, (list, tuple)):
+        return tuple(map(_instant, v))
+    if not (isinstance(v, datetime) and v.tzinfo is None):
+        return v
+    secs = int(time.mktime(v.timetuple()))
+    return datetime.fromtimestamp(secs, timezone.utc).replace(microsecond=v.microsecond)
+
+
 def decode_dataset(
     spark,
     output_dir: str,
@@ -400,65 +519,54 @@ def decode_dataset(
     """Read the encoded dataset back as a DataFrame of original rows.
 
     Only fragments whose (unit, run_id) is recorded ok in lineage are
-    read: orphans from a run that crashed between the data commit and the
-    lineage commit are silently skipped (their units were re-encoded by
-    the resuming run).
+    read: orphans from a run that crashed between the data commit and
+    the lineage commit are skipped (the resuming run re-encoded them).
 
-    ``filters=[(col, op, value), ...]`` (op in ``< <= > >= = == != <>
-    in not_in is_null not_null startswith endswith contains``, terms
-    AND-ed; ``endswith``/``contains`` (string columns) have no order
-    relation to bounds and prune through the exact distinct-value sets
-    only, mirroring the reader's ``StringEndsWith``/``StringContains``
-    pushdown; ``in`` /
-    ``not_in`` take a non-empty tuple/list; ``in`` prunes when no
-    listed value fits the bounds; ``!=``/``not_in`` prune only through
-    the distinct-value sets — a chunk whose recorded (exact, non-null)
-    value set is a SUBSET of the rejected values matches nothing —
-    plus the all-null rejection every comparison gets, because bounds
-    can never prove inequality; ``startswith`` (string columns) prunes when no value in
-    [min, max] can carry the prefix — the url-prefix scan shape —
-    and on distinct-value-set membership when recorded;
-    ``is_null``/``not_null`` ignore the value and prune on the recorded
-    per-chunk null counts — an all-null chunk, including one whose
-    generation predates the column under additive evolution, is also
-    skipped for every null-rejecting comparison term) prunes CHUNKS by
-    the per-chunk min/max zone maps the encoder
-    records in the manifest (:func:`.stats._chunk_stats` — the parquet
-    row-group-statistics analog, orthogonal to the unit pruning
-    below): a chunk whose recorded bounds cannot satisfy a term is
-    skipped before any payload byte is read, a null/absent bound never
-    prunes, and the exact predicate is re-applied to the decoded rows.
-    Filter columns must be included in ``columns`` when both are given;
-    datasets encoded before zone maps existed decode fine (no stats
-    column → no pruning).
+    ``filters`` are ``(col, op, value)`` terms, AND-ed in a flat list; a
+    list of LISTS is pyarrow's DNF, an OR of AND-groups (``[[("lang",
+    "=", "de")], [("lang", "=", "fr")]]``).  ``op`` is one of
+    ``_FILTER_OPS``: ``in``/``not_in`` take a non-empty list, and
+    ``startswith``/``endswith``/``contains`` a string on a string
+    column.  Filter columns must be in ``columns`` when both are given.
+    A naive ``datetime`` value means the instant PySpark's literal
+    converter gives it, the driver's local wall clock, in pruning, the
+    pre-filter and the residual alike.
 
-    Disjunctions use pyarrow's DNF shape: a list of LISTS of terms is
-    an OR of AND-groups (``[[("lang", "=", "de")], [("lang", "=",
-    "fr")]]``; the flat list stays one conjunction).  A chunk is
-    pruned only when EVERY group's recorded stats disqualify it — a
-    group with no prunable term keeps all chunks, conservatively
-    disabling pruning for the whole disjunction — and
-    the exact OR-of-AND predicate is re-applied to decoded rows.  The
-    out-of-range-key scan (``key < a OR key >= b``) and the
-    multi-category scan are the intended shapes.
+    Pruning is conservative (a null or absent bound never prunes), and
+    the exact predicate is re-applied to the rows Spark receives:
 
-    Terms on the PLAN's key column additionally prune whole encode
-    UNITS (each group's implied key range via
-    :func:`key_range_from_terms`, unioned across the disjunction)
-    before any chunk statistics are consulted — a key range is just
-    ``[(key, ">=", lo), (key, "<=", hi)]``; a string IN-list on the key
-    keeps only the units of its listed points.
+    - terms on the plan's key column prune whole encode UNITS: each
+      group's key range (:func:`key_range_from_terms`), unioned across
+      groups; a string IN-list keeps only the units of its points;
+    - the manifest zone maps prune CHUNKS (:func:`.stats._stats_keep`):
+      min/max bounds for comparisons, ``in`` and ``startswith``; the
+      exact distinct-value sets for equality, ``in``, ``!=``/``not_in``
+      (a chunk whose every value is rejected) and the string ops; null
+      counts for ``is_null``/``not_null``; and an all-null chunk, also
+      one from a generation that predates the column, for every
+      null-rejecting term.  A chunk is pruned only when EVERY group
+      disqualifies it.  Datasets encoded before zone maps decode
+      unpruned.
 
     Execution: the scan is planned on the driver by the engine's one
     scan planner (this module's, shared with the ``upe_encoded`` reader)
-    from metadata alone, and runs as ONE Spark job — the planned chunk
-    partitions are broadcast and decoded by one task each, then the
-    exact residual filter applies.  ``pruning_evidence`` (a dict) is
-    filled from the planner's own masks at no extra cost:
+    from metadata alone.  Each planned partition's read loop decodes
+    the filter columns first and keeps only the rows the Arrow
+    pre-filter can match.  A filtered scan whose planned payload is
+    under ``_DRIVER_DECODE_BYTES`` runs that read loop on the driver:
+    decoding then happens when ``decode_dataset`` is CALLED, not at the
+    action, and Spark gets the survivors as a local relation (unless
+    they pass ``_DRIVER_SURVIVOR_BYTES``, which falls back to a Spark
+    job).  Every other scan, and every call without filters, runs as
+    ONE Spark job — the planned chunk partitions are broadcast and
+    decoded by one task each.  ``pruning_evidence`` (a dict) is filled
+    from the planner's own masks at no extra cost:
     ``units_total``/``units_qualifying`` when every group bounds the
-    key, and ``total``/``qualifying`` — manifest
-    slice rows before and after zone-map pruning — whenever filters are
-    given.
+    key, ``total``/``qualifying`` — manifest slice rows before and
+    after zone-map pruning — whenever filters are given, and ``branch``
+    (``"driver"`` or ``"spark"``) always; the driver branch adds
+    ``rows_decoded`` (rows of the planned slices) and ``rows_kept``
+    (the pre-filter's survivors).
 
     Schema evolution (additive): appends may add or omit columns — the
     output schema is the union-by-name over all chunk generations
@@ -487,62 +595,47 @@ def decode_dataset(
             raise ValueError(f"empty {op.upper()}-list for filter column {c!r}")
         if c not in probe.names:
             raise ValueError(f"filter column {c!r} not in dataset schema")
+        t = probe.field(c).type
         if op in ("startswith", "endswith", "contains") and not (
-            isinstance(_v, str)
-            and (
-                pa.types.is_string(probe.field(c).type)
-                or pa.types.is_large_string(probe.field(c).type)
-            )
+            isinstance(_v, str) and (pa.types.is_string(t) or pa.types.is_large_string(t))
         ):
-            raise ValueError(
-                f"{op} needs a string value on a string column ({c!r})"
-            )
+            raise ValueError(f"{op} needs a string value on a string column ({c!r})")
         if columns is not None and c not in columns:
             raise ValueError(f"filters need column {c!r} in columns (residual filter)")
 
-    # plan on the driver (metadata only, no Spark job), then run the
-    # partitions as ONE job, one task per partition.  Partitions pack to
-    # the engine's default size, capped so the live bytes spread over
+    # one instant per naive datetime, the one PySpark's residual reads
+    fgroups = [[(c, op, _instant(v)) for c, op, v in g] for g in fgroups]
+
+    # plan on the driver (metadata only, no Spark job).  Partitions pack
+    # to the engine's default size, capped so the live bytes spread over
     # the cluster's cores.
     parts = plan_partitions(
         output_dir, man, probe, columns, fgroups,
         spread=spark.sparkContext.defaultParallelism, evidence=pruning_evidence,
     )
-    out = _run_partitions(spark, parts, _read_chunk_partition, out_schema)
-    if filters:
-        # exact residual for every term (chunk pruning is conservative;
-        # _exact_col keeps a dotted name from parsing as a struct path),
-        # AND-ed within a group, OR-ed across groups
-        def _term_expr(c, op, v):
-            col = _exact_col(c)
-            if op == "in":
-                return col.isin(*v)
-            if op == "not_in":
-                # SQL NOT IN: null rows never match (same as the chunk
-                # pruner's null-rejecting algebra)
-                return ~col.isin(*v)
-            if op in ("!=", "<>"):
-                return col != v
-            if op == "is_null":
-                return col.isNull()
-            if op == "not_null":
-                return col.isNotNull()
-            if op == "startswith":
-                return col.startswith(v)
-            if op == "endswith":
-                return col.endswith(v)
-            if op == "contains":
-                return col.contains(v)
-            return {
-                "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v
-            }.get(op, col == v)
-
-        cond = None
-        for g in fgroups:
-            gc = None
-            for c, op, v in g:
-                e = _term_expr(c, op, v)
-                gc = e if gc is None else (gc & e)
-            cond = gc if cond is None else (cond | gc)
-        out = out.where(cond)
+    batches = None
+    if fgroups and sum(ch[2] for p in parts for ch in p.chunks) < _DRIVER_DECODE_BYTES:
+        batches, size = [], 0
+        for b in (b for p in parts for b in _read_chunk_partition(p)):
+            size += b.nbytes
+            if size > _DRIVER_SURVIVOR_BYTES:  # cheaper as a Spark job
+                batches = None
+                break
+            batches.append(b)
+    if batches is not None:
+        # the survivors reach Spark as a local relation: no Python job
+        out = spark.createDataFrame(pa.Table.from_batches(batches) if batches else [], out_schema)
+        branch = {"branch": "driver", "rows_kept": sum(b.num_rows for b in batches),
+                  "rows_decoded": sum(nr for p in parts for *_, sl in p.chunks for _, nr in sl)}
+    else:
+        # ONE Spark job, one task per partition
+        out = _run_partitions(spark, parts, _read_chunk_partition, out_schema)
+        branch = {"branch": "spark"}
+    if pruning_evidence is not None:
+        pruning_evidence.update(branch)
+    if fgroups:
+        # the exact residual (pruning and the pre-filter are conservative;
+        # _exact_col keeps a dotted name from parsing as a struct path)
+        terms = [[_SPARK_OPS[op](_exact_col(c), v) for c, op, v in g] for g in fgroups]
+        out = out.where(reduce(operator.or_, [reduce(operator.and_, g) for g in terms]))
     return out

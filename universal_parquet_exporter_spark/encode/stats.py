@@ -87,8 +87,8 @@ def _chunk_stats(tbl: pa.Table) -> str:
     - long string minima are TRUNCATED (a prefix is still a valid lower
       bound); long string maxima are dropped (truncating a max would
       understate it and prune chunks that match — the parquet pitfall);
-    - float columns containing NaN record no bounds (NaN breaks total
-      order);
+    - float bounds skip NaN (``pc.min_max`` ignores it), so a float
+      column's max never prunes ``>``/``>=`` (:func:`_stats_keep`);
     - timestamps, dates and decimals record their zone-map domain values
       (:func:`_domain_values`) — so ``warc_ts``-style time-range scans
       prune, the canonical Common-Crawl filter column (SURVEY §1.2);
@@ -344,6 +344,8 @@ def _stats_keep(stats: dict, terms, schema: pa.Schema | None) -> bool:
                 mx = None if mx is None else conv(mx)
             except (TypeError, ValueError, ArithmeticError):
                 continue
+        if op in (">", ">=") and conv is float:
+            continue  # NaN rows sit above the recorded max in Spark's order
         try:
             if op in (">", ">="):
                 if mx is not None and not (mx > v if op == ">" else mx >= v):

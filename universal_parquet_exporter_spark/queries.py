@@ -275,6 +275,7 @@ def q_decode_filters_ts(spark, sf_dir: str):
     out = _encode(
         spark, df, "upes_zts_",
         key_col="event_key", size_cols=("props",), target_unit_bytes=64 << 10, chunk_rows=128,
+        cluster_by=("event_key",),
     )
     ev: dict = {}
     dec = decode_dataset(
@@ -337,6 +338,7 @@ def q_decode_filters_null(spark, sf_dir: str):
     out = _encode(
         spark, df, "upes_ncq_",
         key_col="doc_key", size_cols=("opt_lang",), target_unit_bytes=64 << 10, chunk_rows=128,
+        cluster_by=("doc_key",),
     )
     ev: dict = {}
     dec = decode_dataset(
@@ -358,6 +360,7 @@ def q_decode_filters_prefix(spark, sf_dir: str):
         spark, _padded_documents(spark, sf_dir).select("doc_key", "doc_id", "lang", "n_chars"),
         "upes_pfx_",
         key_col="doc_key", size_cols=("doc_key",), target_unit_bytes=64 << 10, chunk_rows=128,
+        cluster_by=("doc_key",),
     )
     terms = [("doc_key", "startswith", "0000012")]
     require_pruned(_zone_map_evidence(out, terms), "prefix bounds", "slices")
@@ -386,6 +389,7 @@ def q_decode_filters_ne(spark, sf_dir: str):
     out = _encode(
         spark, df, "upes_neq_",
         key_col="doc_key", size_cols=("cat",), target_unit_bytes=64 << 10, chunk_rows=128,
+        cluster_by=("doc_key",),
     )
     ev: dict = {}
     dec = decode_dataset(spark, out, filters=[("cat", "!=", "en")], pruning_evidence=ev)
@@ -406,6 +410,7 @@ def q_decode_filters_or(spark, sf_dir: str):
         spark, _padded_documents(spark, sf_dir).select("doc_key", "doc_id", "lang", "n_chars"),
         "upes_dnf_",
         key_col="doc_key", size_cols=("doc_key",), target_unit_bytes=64 << 10, chunk_rows=128,
+        cluster_by=("doc_key",),
     )
     ev: dict = {}
     dec = decode_dataset(
