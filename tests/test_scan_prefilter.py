@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from tests.test_scan_planner import _condition  # the oracle's own op table
 from universal_parquet_exporter_spark.encode import compaction, meta, scan, stats
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
@@ -81,20 +82,6 @@ def typed(spark, tmp_path_factory):
 
 _STR_OPS = ["startswith", "endswith", "contains"]
 _CMP_OPS = ["<", "<=", ">", ">=", "=", "==", "!=", "<>"]
-
-
-def _column(c, op, v):
-    return scan._SPARK_OPS[op](scan._exact_col(c), v)
-
-
-def _condition(groups):
-    cond = None
-    for g in groups:
-        gc = None
-        for t in g:
-            gc = _column(*t) if gc is None else gc & _column(*t)
-        cond = gc if cond is None else cond | gc
-    return cond
 
 
 def _values(rows, col):
