@@ -109,6 +109,17 @@ def test_decode_dataset_runs_one_spark_job(spark, pages, monkeypatch):
             assert "rows_decoded" not in ev and "rows_kept" not in ev
 
 
+def test_driver_branch_with_no_survivors_is_a_local_relation(spark, pages):
+    """A driver-branch decode that keeps no row still hands Spark a local
+    relation: an empty Python list would make an RDD, whose every action
+    runs a Python job."""
+    _df, out = pages
+    ev: dict = {}
+    dec = decode_dataset(spark, out, filters=[("url", "=", "no such url")], pruning_evidence=ev)
+    assert ev["branch"] == "driver" and ev["rows_kept"] == 0
+    assert "LocalTableScan" in dec._jdf.queryExecution().executedPlan().toString()
+    assert dec.count() == 0
+
 def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tmp_path):
     """The planner's manifest cache is keyed on the committed file names
     and the manifest pointer, not on directory mtimes: a commit whose
@@ -309,6 +320,38 @@ def test_both_scan_paths_match_a_spark_filter_of_the_source(spark, tmp_path, mon
     assert pruned >= len(single) // 2
 
 
+def test_numbers_spark_compares_in_double_keep_their_rows(spark, tmp_path, monkeypatch):
+    """Spark compares a float value with a decimal column in double: a
+    decimal(38,4) above 2**53 matches a float bound its exact value
+    misses, so pruning and the pre-filter keep such a term's rows, on
+    both decode branches."""
+    import pyarrow as pa
+
+    out = str(tmp_path / "dec")
+    src = spark.range(4).select(
+        F.lpad(F.col("id").cast("string"), 6, "0").alias("k"),
+        (F.lit(Decimal("12345678901234567.0001")) + F.col("id")).cast("decimal(38,4)").alias("price"),
+    )
+    encode_job(spark, src, EncodeJobConfig(output_dir=out, key_col="k", size_cols=("k",), chunk_rows=2))
+    for op in (">=", "="):
+        filters = [("price", op, 1.2345678901234568e16)]
+        want = sorted(r.k for r in src.where(_condition([filters])).collect())
+        assert "000000" in want, op  # 12345678901234567.0001 reads as 1.2345678901234568e16
+        for limit in (0, 1 << 40):  # the Spark branch, then the driver branch
+            monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", limit)
+            got = sorted(r.k for r in decode_dataset(spark, out, filters=filters).collect())
+            assert got == want, (op, limit)
+
+    schema = pa.schema([("p", pa.decimal128(38, 4)), ("i", pa.int64()), ("x", pa.float32())])
+    terms = [
+        ("p", ">=", 1.5), ("p", "in", [Decimal("1.5"), 2]), ("i", "<", 2.5), ("i", "!=", 3),
+        ("x", "=", Decimal("0.1")), ("x", "<", 3), ("x", ">", 1 << 25), ("x", "<=", 0.1),
+    ]
+    assert scan._pruning_groups(spark, [terms], schema) == [
+        [("p", "in", (Decimal("1.5"), 2)), ("i", "!=", 3), ("x", "<", 3), ("x", "<=", 0.1)]
+    ]
+
+
 def test_normalized_terms_drop_what_cannot_prune():
     import pyarrow as pa
 
@@ -330,42 +373,62 @@ def test_normalized_terms_drop_what_cannot_prune():
     assert got == [("p", "=", Decimal("1.5")), ("x", "!=", 2.0), ("d", ">=", 19724)]
 
 
-def test_naive_datetime_filters_read_the_driver_local_zone(spark, tmp_path, monkeypatch):
-    """A naive datetime filter value means the instant PySpark's literal
-    converter gives it — the driver's local wall clock — in zone-map
-    pruning, the read loop's pre-filter and the exact residual alike.
-    With the driver in New York and the session in UTC, both decode
-    branches and the reader return the rows a Spark filter of the source
-    returns, on a zone-aware and on a ``TIMESTAMP_NTZ`` column."""
+def test_datetime_filters_read_as_spark_reads_them(spark, tmp_path, monkeypatch):
+    """A datetime filter value means the instant Spark's residual compares
+    in zone-map pruning, the read loop's pre-filter and the residual
+    alike: PySpark makes a naive value a literal in the driver's local
+    zone, or a ``TIMESTAMP_NTZ`` literal that Spark casts in the session
+    zone when the session prefers NTZ.  With the driver in New York, both
+    decode branches and the reader return the rows a Spark filter of the
+    source returns, on a zone-aware and on a ``TIMESTAMP_NTZ`` column,
+    with the session in UTC and in New York, each preferring either
+    timestamp type."""
     import time
 
     sds.register(spark)
     out = str(tmp_path / "tz")
+    # one minute apart from 2024-03-10 00:00 (UTC instants and NTZ wall
+    # clocks), across New York's spring-forward gap; built without the
+    # session zone, so every session reads the same rows
     src = spark.range(2000).select(
         F.lpad(F.col("id").cast("string"), 6, "0").alias("k"),
-        F.timestamp_micros(F.lit(1704067200000000) + F.col("id") * 60_000_000).alias("ts"),
-    ).withColumn("ts_ntz", F.col("ts").cast("timestamp_ntz"))
+        F.timestamp_micros(F.lit(1710028800000000) + F.col("id") * 60_000_000).alias("ts"),
+        F.expr("timestampadd(MINUTE, id, TIMESTAMP_NTZ '2024-03-10 00:00:00')").alias("ts_ntz"),
+    )
     encode_job(
         spark, src,
         EncodeJobConfig(output_dir=out, key_col="k", size_cols=("k",), target_unit_bytes=1 << 10, chunk_rows=64),
     )
+    # both scan paths read a stored TIMESTAMP_NTZ column back as a
+    # TIMESTAMP, its wall clock read as UTC
+    back = src.withColumn("ts_ntz", F.expr(
+        "timestamp_micros(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts_ntz))"
+    ))
     reader_df = spark.read.format("upe_encoded").load(out)
 
     def keys(df):
         return sorted(df.select("k").toArrow().column("k").to_pylist())
 
+    confs = ("spark.sql.session.timeZone", "spark.sql.timestampType")
     try:
         monkeypatch.setenv("TZ", "America/New_York")
         time.tzset()
-        for col in ("ts", "ts_ntz"):
-            for hour in (12, 20):
-                filters = [(col, "<", datetime(2024, 1, 1, hour))]
-                want = keys(src.where(_condition([filters])))
-                assert len(want) == 60 * (hour + 5), (col, hour)
-                assert keys(reader_df.where(_condition([filters]))) == want, (col, hour)
-                for limit in (0, 1 << 40):  # the Spark branch, then the driver branch
-                    monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", limit, raising=False)
-                    assert keys(decode_dataset(spark, out, filters=filters)) == want, (col, hour, limit)
+        for zone in ("UTC", "America/New_York"):
+            for ts_type in ("TIMESTAMP_LTZ", "TIMESTAMP_NTZ"):
+                spark.conf.set(confs[0], zone)
+                spark.conf.set(confs[1], ts_type)
+                for col in ("ts", "ts_ntz"):
+                    for op in ("<", ">"):
+                        filters = [(col, op, datetime(2024, 3, 10, 3, 30))]
+                        case = (zone, ts_type, col, op)
+                        want = keys(back.where(_condition([filters])))
+                        assert 0 < len(want) < 2000, case
+                        assert keys(reader_df.where(_condition([filters]))) == want, case
+                        for limit in (0, 1 << 40):  # the Spark branch, then the driver branch
+                            monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", limit, raising=False)
+                            assert keys(decode_dataset(spark, out, filters=filters)) == want, (case, limit)
     finally:
         monkeypatch.undo()
         time.tzset()
+        spark.conf.set(confs[0], "UTC")
+        spark.conf.unset(confs[1])

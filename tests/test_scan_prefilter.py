@@ -194,7 +194,7 @@ def test_prefilter_keeps_every_matching_row(spark, typed):
         for i, filters in enumerate(batch):
             want = set(marks.filter(marks.column(f"m{i}")).column("k").to_pylist())
             # decode_dataset's own reading of the values, then its plan
-            groups = [[(c, op, scan._instant(v)) for c, op, v in g] for g in _groups(filters)]
+            groups = scan._pruning_groups(spark, _groups(filters), probe)
             parts = scan.plan_partitions(out, man, probe, None, groups)
             assert all(p.groups for p in parts) or not any(p.groups for p in parts)
             for p in parts:

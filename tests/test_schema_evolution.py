@@ -77,6 +77,23 @@ def test_decode_pruned_to_added_column(spark, evolved):
     assert dec.where("score IS NOT NULL").count() == new.count()
 
 
+def test_scan_of_only_added_columns_null_pads_older_rows(spark, evolved, monkeypatch):
+    """Rows of a generation that holds none of the requested columns read
+    back as null rows, not as no rows — through both decode branches,
+    with and without a filter, and through the reader."""
+    from universal_parquet_exporter_spark.encode import scan
+
+    out, old, new = evolved
+    n_old, n_new = old.count(), new.count()
+    r = spark.read.format("upe_encoded").option("columns", "score").load(out)
+    assert r.where("score IS NULL").count() == n_old
+    for limit in (0, 1 << 40):  # the Spark branch, then the driver branch
+        monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", limit)
+        assert decode_dataset(spark, out, columns=["score"]).count() == n_old + n_new
+        dec = decode_dataset(spark, out, columns=["score"], filters=[("score", "is_null", None)])
+        assert dec.count() == n_old
+
+
 def test_datasource_reads_union_and_filters_on_added_column(spark, evolved):
     out, old, new = evolved
     r = spark.read.format("upe_encoded").load(out)

@@ -74,10 +74,15 @@ def _arrow_to_ddl(schema: pa.Schema, columns: list[str] | None) -> str:
         # backtick-quote so dotted names parse as one identifier
         return "`" + name.replace("`", "``") + "`"
 
+    def ddl(t: pa.DataType) -> str:
+        # a bare "timestamp" follows spark.sql.timestampType: a stored
+        # timestamp reads back as an instant in every session
+        return _ddl_type(t).replace("timestamp", "timestamp_ltz")
+
     if columns:
         # requested order — must match deserialize_chunk's pruned order
-        return ", ".join(f"{q(c)} {_ddl_type(schema.field(c).type)}" for c in columns)
-    return ", ".join(f"{q(f.name)} {_ddl_type(f.type)}" for f in schema)
+        return ", ".join(f"{q(c)} {ddl(schema.field(c).type)}" for c in columns)
+    return ", ".join(f"{q(f.name)} {ddl(f.type)}" for f in schema)
 
 
 def _check_same_type(name: str, have: str, want: str) -> None:

@@ -45,6 +45,7 @@ import time
 from datetime import datetime, timezone
 from decimal import Decimal
 from functools import reduce
+from zoneinfo import ZoneInfo
 
 import numpy as np
 import pyarrow as pa
@@ -335,11 +336,12 @@ def _pack_chunk_partitions(
     return parts
 
 
-def _pad_table(tbl: pa.Table, fields: list) -> pa.Table:
+def _pad_table(tbl: pa.Table, fields: list, n_rows: int) -> pa.Table:
     """Conform a decoded chunk to the union schema's requested fields:
     present columns pass through (decode order already matches), absent
     ones become typed all-null columns — rows written before a column
-    existed read back as null, the Iceberg add-column semantics.  Shared
+    existed read back as null, the Iceberg add-column semantics (``n_rows``
+    of them when the chunk holds none of ``fields``).  Shared
     columns are type-CHECKED (by normalized DDL, so large/small string
     and timestamp-unit differences stay benign): a type flip between
     chunk generations with identical column-name sets is invisible to
@@ -357,7 +359,7 @@ def _pad_table(tbl: pa.Table, fields: list) -> pa.Table:
         if f.name in names:
             cols.append(tbl.column(f.name))
         else:
-            cols.append(pa.chunked_array([pa.nulls(tbl.num_rows, f.type)]))
+            cols.append(pa.chunked_array([pa.nulls(tbl.num_rows if names else n_rows, f.type)]))
     return pa.table(cols, names=[f.name for f in fields])
 
 
@@ -434,6 +436,10 @@ def _prefilter_mask(tbl: pa.Table, groups):
     return mask
 
 
+def _decode_fields(payload: bytes, fields: list, n_rows: int) -> pa.Table:
+    return _pad_table(deserialize_chunk(payload, [f.name for f in fields], missing_ok=True), fields, n_rows)
+
+
 def _read_padded(partition: _ChunkScanPartition):
     """Executor-side scan of one packed chunk run: each chunk
     deserializes ONCE — column pruning happens inside the container, so
@@ -453,18 +459,21 @@ def _read_padded(partition: _ChunkScanPartition):
                 fh = handles[fname] = _open_payload(partition.payload_dir, fname)
             fh.seek(off)
             payload = fh.read(length)
-            mask = None
-            if ffields:
-                ftbl = deserialize_chunk(payload, [f.name for f in ffields], missing_ok=True)
-                if ftbl.num_columns:
-                    mask = _prefilter_mask(_pad_table(ftbl, ffields), partition.groups)
-            picks = [(r, n, None if mask is None else mask.slice(r, n)) for r, n in slices]
+            n = max(r + k for r, k in slices)
+            got, mask = {}, None
+            if ffields:  # the filter columns decode once, first
+                ftbl = _decode_fields(payload, ffields, n)
+                mask = _prefilter_mask(ftbl, partition.groups)
+                got = dict(zip(ftbl.column_names, ftbl.columns))
+            picks = [(r, k, None if mask is None else mask.slice(r, k)) for r, k in slices]
             picks = [p for p in picks if p[2] is None or pc.any(p[2]).as_py()]
             if not picks:
                 continue
-            tbl = _pad_table(
-                deserialize_chunk(payload, partition.columns, missing_ok=True), partition.fields
-            )
+            rest = [f for f in partition.fields if f.name not in got]
+            if rest:
+                rtbl = _decode_fields(payload, rest, n)
+                got.update(zip(rtbl.column_names, rtbl.columns))
+            tbl = pa.table([got[f.name] for f in partition.fields], names=[f.name for f in partition.fields])
             for roff, nr, m in picks:
                 part = tbl.slice(roff, nr)
                 for b in (part if m is None else part.filter(m)).to_batches():
@@ -497,16 +506,64 @@ def _run_partitions(spark, parts: list, read, schema):
     return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(run, schema)
 
 
-def _instant(v):
-    """A naive datetime (or each of a list's) as the zone-aware instant
-    PySpark's literal converter gives it (``time.mktime``: the driver's
-    local wall clock)."""
-    if isinstance(v, (list, tuple)):
-        return tuple(map(_instant, v))
-    if not (isinstance(v, datetime) and v.tzinfo is None):
-        return v
-    secs = int(time.mktime(v.timetuple()))
-    return datetime.fromtimestamp(secs, timezone.utc).replace(microsecond=v.microsecond)
+def _pruning_groups(spark, groups, schema) -> list:
+    """``groups`` with each value as Spark's residual compares it, for
+    pruning and the pre-filter.  Both scan paths read every timestamp
+    column back as a Spark TIMESTAMP (a naive stored one as UTC), so a
+    datetime becomes the instant its literal means: PySpark reads a naive
+    one in the driver's local zone (``time.mktime``), or, when the
+    session prefers ``TIMESTAMP_NTZ``, as an NTZ literal that Spark casts
+    in the session zone.  A term keeps every row when Spark compares its
+    number in a lossy wider type (a float on an integer or decimal
+    column; a decimal, or an int past 2**24, on a float column) or when
+    the session zone is not a region zoneinfo reads."""
+    from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+    def spans(v):
+        return tuple(v) if isinstance(v, (list, tuple)) else (v,)
+
+    def naive(x):
+        return isinstance(x, datetime) and x.tzinfo is None
+
+    ntz = any(naive(x) for g in groups for t in g for x in spans(t[2])) and is_timestamp_ntz_preferred()
+    zone = None
+    if ntz:
+        try:
+            zone = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+        except (KeyError, ValueError):
+            pass
+
+    def exact(x, t):
+        if not isinstance(x, (int, float, Decimal)) or isinstance(x, bool):
+            return True
+        if pa.types.is_floating(t):
+            return isinstance(x, float) or (isinstance(x, int) and abs(x) <= 1 << 24)
+        return not (isinstance(x, float) and (pa.types.is_integer(t) or pa.types.is_decimal(t)))
+
+    def instant(x):
+        if not naive(x):
+            return x
+        if not ntz:
+            secs = int(time.mktime(x.timetuple()))
+            return datetime.fromtimestamp(secs, timezone.utc).replace(microsecond=x.microsecond)
+        if zone is None:
+            raise ValueError("session zone unread")
+        return x.replace(tzinfo=zone)
+
+    out = []
+    for g in groups:
+        terms = []
+        for c, op, v in g:
+            vals = spans(v)
+            if not all(exact(x, schema.field(c).type) for x in vals):
+                continue
+            try:
+                vals = tuple(map(instant, vals))
+            except (OverflowError, ValueError):
+                continue
+            terms.append((c, op, vals if op in ("in", "not_in") else vals[0]))
+        out.append(terms)
+    return out
 
 
 def decode_dataset(
@@ -528,9 +585,10 @@ def decode_dataset(
     ``_FILTER_OPS``: ``in``/``not_in`` take a non-empty list, and
     ``startswith``/``endswith``/``contains`` a string on a string
     column.  Filter columns must be in ``columns`` when both are given.
-    A naive ``datetime`` value means the instant PySpark's literal
-    converter gives it, the driver's local wall clock, in pruning, the
-    pre-filter and the residual alike.
+    Pruning and the pre-filter read each value as the residual does
+    (:func:`_pruning_groups`): a naive ``datetime`` is the instant
+    PySpark's literal means, the driver's local wall clock unless the
+    session prefers ``TIMESTAMP_NTZ``.
 
     Pruning is conservative (a null or absent bound never prunes), and
     the exact predicate is re-applied to the rows Spark receives:
@@ -603,14 +661,11 @@ def decode_dataset(
         if columns is not None and c not in columns:
             raise ValueError(f"filters need column {c!r} in columns (residual filter)")
 
-    # one instant per naive datetime, the one PySpark's residual reads
-    fgroups = [[(c, op, _instant(v)) for c, op, v in g] for g in fgroups]
-
-    # plan on the driver (metadata only, no Spark job).  Partitions pack
-    # to the engine's default size, capped so the live bytes spread over
-    # the cluster's cores.
+    # plan on the driver (metadata only, no Spark job), reading each
+    # value as the residual does.  Partitions pack to the engine's
+    # default size, capped so the live bytes spread over the cores.
     parts = plan_partitions(
-        output_dir, man, probe, columns, fgroups,
+        output_dir, man, probe, columns, _pruning_groups(spark, fgroups, probe),
         spread=spark.sparkContext.defaultParallelism, evidence=pruning_evidence,
     )
     batches = None
@@ -624,7 +679,9 @@ def decode_dataset(
             batches.append(b)
     if batches is not None:
         # the survivors reach Spark as a local relation: no Python job
-        out = spark.createDataFrame(pa.Table.from_batches(batches) if batches else [], out_schema)
+        # (an empty list would make an RDD, and the action a Python job)
+        empty = pa.RecordBatch.from_pylist([], schema=pa.schema(parts[0].fields))
+        out = spark.createDataFrame(pa.Table.from_batches(batches or [_normalize_batch(empty)]), out_schema)
         branch = {"branch": "driver", "rows_kept": sum(b.num_rows for b in batches),
                   "rows_decoded": sum(nr for p in parts for *_, sl in p.chunks for _, nr in sl)}
     else:
