@@ -68,7 +68,10 @@ from .stats import _TS_UNIT_TO_US, _normalize_terms, _parse_stats, _stats_keep
 DEFAULT_PARTITION_BYTES = 64 << 20
 
 # a filtered decode_dataset under both bounds (planned payload, Arrow
-# survivors) decodes on the driver; measured crossover in CHANGES.md
+# survivors) decodes on the driver.  On a 4-core host the driver lost
+# past ~14 MB of payload with few survivors and past ~11 MB of
+# survivors (CHANGES.md); the Spark branch gains with more cores, so
+# both bounds sit below those points
 _DRIVER_DECODE_BYTES = 8 << 20
 _DRIVER_SURVIVOR_BYTES = 8 << 20
 
@@ -519,49 +522,40 @@ def _pruning_groups(spark, groups, schema) -> list:
     the session zone is not a region zoneinfo reads."""
     from pyspark.sql.utils import is_timestamp_ntz_preferred
 
-    def spans(v):
-        return tuple(v) if isinstance(v, (list, tuple)) else (v,)
-
-    def naive(x):
-        return isinstance(x, datetime) and x.tzinfo is None
-
-    ntz = any(naive(x) for g in groups for t in g for x in spans(t[2])) and is_timestamp_ntz_preferred()
-    zone = None
+    naive = any(isinstance(x, datetime) and x.tzinfo is None for g in groups for *_, v in g
+                for x in (v if isinstance(v, (list, tuple)) else (v,)))
+    ntz, zone = naive and is_timestamp_ntz_preferred(), None
     if ntz:
         try:
             zone = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
         except (KeyError, ValueError):
             pass
 
-    def exact(x, t):
-        if not isinstance(x, (int, float, Decimal)) or isinstance(x, bool):
-            return True
-        if pa.types.is_floating(t):
-            return isinstance(x, float) or (isinstance(x, int) and abs(x) <= 1 << 24)
-        return not (isinstance(x, float) and (pa.types.is_integer(t) or pa.types.is_decimal(t)))
-
-    def instant(x):
-        if not naive(x):
+    def value(x, t):
+        number = isinstance(x, (int, Decimal)) and not isinstance(x, bool)
+        if (isinstance(x, float) and (pa.types.is_integer(t) or pa.types.is_decimal(t))) or (
+            pa.types.is_floating(t) and number and not (isinstance(x, int) and abs(x) <= 1 << 24)
+        ):
+            raise ValueError(x)  # compared in a lossy wider type
+        if not (isinstance(x, datetime) and x.tzinfo is None):
             return x
         if not ntz:
             secs = int(time.mktime(x.timetuple()))
             return datetime.fromtimestamp(secs, timezone.utc).replace(microsecond=x.microsecond)
         if zone is None:
-            raise ValueError("session zone unread")
+            raise ValueError(x)  # a session zone zoneinfo cannot read
         return x.replace(tzinfo=zone)
 
     out = []
     for g in groups:
         terms = []
         for c, op, v in g:
-            vals = spans(v)
-            if not all(exact(x, schema.field(c).type) for x in vals):
-                continue
+            many = op in ("in", "not_in")
             try:
-                vals = tuple(map(instant, vals))
-            except (OverflowError, ValueError):
+                vals = tuple(value(x, schema.field(c).type) for x in (v if many else (v,)))
+            except (OverflowError, ValueError):  # the term keeps every row
                 continue
-            terms.append((c, op, vals if op in ("in", "not_in") else vals[0]))
+            terms.append((c, op, vals if many else vals[0]))
         out.append(terms)
     return out
 
