@@ -200,3 +200,22 @@ def test_partial_chunk_coverage_poisons_exactness(spark, outdir):
     assert not st["n"].min_exact and not st["n"].max_exact
     assert st["n"].null_count is None
     assert st["n"].row_count < base["n"].row_count
+
+
+def test_float_max_is_inexact_while_nan_hides(spark, outdir):
+    """A float zone map skips NaN (``pc.min_max`` ignores it) while
+    Spark sorts NaN above every number: the recorded max is not the
+    column's MAX, so a float max is never reported as exact.  The min
+    stays exact, and the reported max stays the largest number."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(20).select(
+        F.lpad(F.col("id").cast("string"), 6, "0").alias("k"),
+        F.when(F.col("id") == 7, F.lit(float("nan"))).otherwise(F.col("id").cast("double")).alias("x"),
+    )
+    _encode(spark, df, outdir)
+    st = {r.column: r for r in dataset_column_stats(spark, outdir).collect()}
+    spark_max = df.agg(F.max("x")).first()[0]
+    assert spark_max != spark_max  # NaN
+    assert not st["x"].max_exact and st["x"].max == "19.0"
+    assert st["x"].min_exact and float(st["x"].min) == 0.0
