@@ -4,14 +4,15 @@ branches (:mod:`universal_parquet_exporter_spark.encode.scan`).
 Generated DNF filters over every filter op on a typed, two-generation
 source: both ``decode_dataset`` branches and the ``upe_encoded`` reader
 return exactly the rows a Spark filter of the source returns, and the
-pre-filter keeps a superset of them.  Every op has a pre-filter and a
-residual case, and the filterless reads (compaction, a stream
-micro-batch) carry no pre-filter."""
+pre-filter keeps a superset of them.  Every op has a pre-filter, a
+chunk-verdict and a residual case, and the filterless reads
+(compaction, a stream micro-batch) carry no pre-filter."""
 
 import os
 from datetime import date, datetime, timezone
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, Phase, example, given, settings
 from hypothesis import strategies as st
@@ -205,10 +206,78 @@ def test_prefilter_keeps_every_matching_row(spark, typed):
     check()
 
 
+def _typed_bound(text, t):
+    """A ``dataset_column_stats`` bound, rendered in the zone-map domain,
+    as a value comparable with Spark's aggregate read through Arrow."""
+    if text is None:
+        return None
+    if pa.types.is_timestamp(t) or pa.types.is_date(t) or pa.types.is_integer(t):
+        return int(text)
+    if pa.types.is_decimal(t):
+        return Decimal(text)
+    return float(text) if pa.types.is_floating(t) else text
+
+
+def _epoch(arr):
+    """Spark's aggregate in the zone-map domain: epoch µs or days."""
+    if pa.types.is_timestamp(arr.type):
+        return arr.cast(pa.timestamp("us", arr.type.tz)).cast(pa.int64())
+    return arr.cast(pa.int32()) if pa.types.is_date(arr.type) else arr
+
+
+def test_column_stats_match_spark_aggregates(spark, typed):
+    """``dataset_column_stats`` against Spark's MIN, MAX and null count
+    of the source, for every column: a bound flagged exact equals
+    Spark's, an inexact one still bounds the non-NaN values, and a
+    reported null count is exact."""
+    out, src, _rows = typed
+    cols = [c for c in src.columns if c != "ts_ntz"] + ["ts_ntz"]
+    q = lambda c: F.col(f"`{c}`")  # noqa: E731
+    no_nan = lambda c: F.when(~F.isnan(q(c)), q(c)) if c == "x" else q(c)  # noqa: E731
+    aggs = src.agg(*[
+        e for i, c in enumerate(cols) for e in (
+            F.min(q(c)).alias(f"min{i}"), F.max(q(c)).alias(f"max{i}"),
+            F.min(no_nan(c)).alias(f"lo{i}"), F.max(no_nan(c)).alias(f"hi{i}"),
+            F.count_if(q(c).isNull()).alias(f"nulls{i}"),
+        )
+    ]).toArrow()
+    got = {r.column: r for r in stats.dataset_column_stats(spark, out).collect()}
+    assert set(got) == set(cols)
+    for i, c in enumerate(cols):
+        r = got[c]
+        t = aggs.schema.field(f"min{i}").type
+        spark_min, spark_max, lo, hi = (
+            _epoch(aggs.column(f"{k}{i}").combine_chunks())[0].as_py() for k in ("min", "max", "lo", "hi")
+        )
+        mn, mx = _typed_bound(r.min, t), _typed_bound(r.max, t)
+        if r.min_exact:
+            assert mn == spark_min, (c, mn, spark_min)
+        elif mn is not None:
+            assert mn <= lo, (c, mn, lo)
+        if r.max_exact:
+            assert mx == spark_max, (c, mx, spark_max)
+        elif mx is not None:
+            assert mx >= hi, (c, mx, hi)
+        if r.null_count is not None:
+            assert r.null_count == aggs.column(f"nulls{i}")[0].as_py(), c
+        assert r.row_count == _N2
+    assert not got["x"].max_exact  # Spark's MAX(x) is NaN
+    sub = stats.dataset_column_stats(spark, out, columns=["x", "meta.lang"]).collect()
+    assert [tuple(r) for r in sub] == [tuple(got["x"]), tuple(got["meta.lang"])]
+
+
 def test_every_filter_op_has_a_prefilter_and_a_residual_case():
+    """Every op has a residual case, a pre-filter case and a chunk
+    verdict rule, whose tests are pre-filter cases too."""
     assert set(scan._SPARK_OPS) == set(scan._FILTER_OPS)
     for op in scan._FILTER_OPS:
-        assert stats._OP_ALIASES.get(op, op) in scan._ARROW_OPS, op
+        norm = stats._OP_ALIASES.get(op, op)
+        assert norm in scan._ARROW_OPS, op
+        rule = scan._ZONE_OPS[norm]
+        tests = scan._ZONE_OPS[rule] if isinstance(rule, str) else rule
+        assert tests, op
+        for _arr, test_op, _v in tests:
+            assert test_op is None or test_op in scan._ARROW_OPS, (op, test_op)
 
 
 def test_filterless_reads_carry_no_prefilter(spark, tmp_path, monkeypatch):

@@ -6,6 +6,7 @@ and the streaming sink's replayed-epoch idempotency."""
 import glob
 import os
 import shutil
+from decimal import Decimal
 
 import pyarrow as pa
 import pytest
@@ -26,8 +27,8 @@ from universal_parquet_exporter_spark.encode.pipeline import (
     encode_job,
     load_or_build_plan,
 )
-from universal_parquet_exporter_spark.encode.scan import decode_dataset
-from universal_parquet_exporter_spark.encode.stats import _parse_stats, _stats_keep
+from universal_parquet_exporter_spark.encode.scan import _chunk_keep, decode_dataset
+from universal_parquet_exporter_spark.encode.stats import _normalize_terms
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -150,26 +151,76 @@ def test_pushdown_startswith_and_equality_terms(dataset):
 
 def test_chunk_keep_algebra():
     """Unit coverage of the conservative zone-map verdicts."""
+    schema = pa.schema([
+        ("n", pa.int64()), ("s", pa.string()), ("x", pa.float64()), ("absent", pa.int64()),
+        ("p", pa.decimal128(38, 4)),
+    ])
     stats = '{"n": [10, 20], "s": ["b", "m"]}'
 
-    def keep(stats_json, terms, schema):
-        parsed = _parse_stats(stats_json)
-        return parsed is None or _stats_keep(parsed, terms, schema)
+    def keep(stats_json, terms):
+        groups = [_normalize_terms(terms, schema)]
+        return bool(_chunk_keep(pa.array([stats_json], pa.string()), groups, schema)[0])
 
-    assert keep(stats, [("n", ">=", 20)], None)
-    assert not keep(stats, [("n", ">", 20)], None)
-    assert not keep(stats, [("n", "<", 10)], None)
-    assert keep(stats, [("n", "<=", 10)], None)
-    assert keep(stats, [("n", "=", 15)], None)
-    assert not keep(stats, [("n", "=", 9)], None)
-    assert keep(stats, [("n", "in", (1, 12))], None)
-    assert not keep(stats, [("n", "in", (1, 2))], None)
-    assert keep(stats, [("s", "startswith", "m")], None)
-    assert not keep(stats, [("s", "startswith", "n")], None)
-    assert keep(stats, [("absent", "=", 1)], None)  # no bounds -> keep
-    assert keep(None, [("n", "=", 1)], None)  # legacy chunk, no stats
-    assert keep('{"s": ["b", null]}', [("s", ">=", "zzz")], None)  # open max
-    assert not keep('{"s": ["b", null]}', [("s", "<", "b")], None)
+    assert keep(stats, [("n", ">=", 20)])
+    assert not keep(stats, [("n", ">", 20)])
+    assert not keep(stats, [("n", "<", 10)])
+    assert keep(stats, [("n", "<=", 10)])
+    assert keep(stats, [("n", "=", 15)])
+    assert not keep(stats, [("n", "=", 9)])
+    assert keep(stats, [("n", "in", (1, 12))])
+    assert not keep(stats, [("n", "in", (1, 2))])
+    assert keep(stats, [("s", "startswith", "m")])
+    assert not keep(stats, [("s", "startswith", "n")])
+    assert keep(stats, [("absent", "=", 1)])  # no bounds -> keep
+    assert keep(None, [("n", "=", 1)])  # legacy chunk, no stats
+    assert keep("{not json", [("n", "=", 1)])  # garbled stats keep
+    assert keep('{"s": ["b", null]}', [("s", ">=", "zzz")])  # open max
+    assert not keep('{"s": ["b", null]}', [("s", "<", "b")])
+
+    # a float max skips NaN, which Spark sorts above every number
+    assert keep('{"x": [0.0, 5.0]}', [("x", ">", 7.0)])
+    assert keep('{"x": [0.0, 5.0]}', [("x", ">=", 7.0)])
+    assert not keep('{"x": [0.0, 5.0]}', [("x", "=", 7.0)])
+    assert not keep('{"x": [0.0, 5.0]}', [("x", "<", 0.0)])
+
+    # a decimal compares exactly with a value finer than its scale
+    dec = '{"p": ["1.2500", "2.0000"]}'
+    assert not keep(dec, [("p", ">=", Decimal("2.00001"))])
+    assert not keep(dec, [("p", "<", Decimal("1.24999"))])
+    assert keep(dec, [("p", "<", Decimal("1.25001"))])
+
+    # null counts: an absent or all-null column prunes every
+    # null-rejecting term, and is_null prunes a column without nulls
+    nc = '{"n": [1, 3], "_n": 10, "_nc": {"n": 0, "x": 10}}'
+    for col in ("x", "s"):  # all-null, absent from _nc
+        for term in [(col, "not_null", None), (col, "=", "b"), (col, "!=", "b"), (col, "<", 1.0),
+                     (col, "in", ("b",)), (col, "startswith", "b"), (col, "contains", "b")]:
+            assert not keep(nc, [term]), term
+        assert keep(nc, [(col, "is_null", None)])
+    assert not keep(nc, [("n", "is_null", None)])
+    assert keep(nc, [("n", "not_null", None)])
+    assert keep('{"n": [1, 3]}', [("n", "is_null", None)])  # no counts recorded
+
+    # != and not_in prune through the exact distinct-value sets
+    dv = '{"n": [1, 3], "s": ["a", "b"], "_dv": {"n": [1, 3], "s": ["a", "b"]}}'
+    assert not keep('{"n": [1, 1], "_dv": {"n": [1]}}', [("n", "!=", 1)])
+    assert keep(dv, [("n", "!=", 1)])
+    assert not keep(dv, [("n", "not_in", (1, 3, 5))])
+    assert keep(dv, [("n", "not_in", (1, 5))])
+    assert not keep(dv, [("n", "=", 2)])  # inside the bounds, not in the set
+    assert not keep(dv, [("s", "endswith", "z")])
+    assert keep(dv, [("s", "contains", "b")])
+
+    # a value of the wrong type keeps the chunk, filtered or recorded
+    assert keep(stats, [("n", "=", "15x")])
+    assert keep(stats, [("s", "<", 3)])
+    assert keep('{"n": ["a", "b"]}', [("n", "=", 99)])
+    assert keep('{"n": [1, 3], "_dv": {"n": [1, "z"]}}', [("n", "=", 2)])
+
+    # groups: a chunk is pruned only when every group disqualifies it
+    groups = [_normalize_terms(g, schema) for g in ([("n", "<", 5)], [("s", "=", "c")])]
+    got = _chunk_keep(pa.array([stats, '{"n": [1, 3]}', '{"n": [30, 40], "s": ["x", "z"]}']), groups, schema)
+    assert got.tolist() == [True, True, False]
 
 
 # ---------------------------------------------------------------------------
@@ -350,6 +401,41 @@ def test_stream_replayed_epoch_is_idempotent(spark, tmp_path):
     assert spark.read.format("upe_encoded").load(out).count() == n_first
     for name in dup_files:  # duplicate payload dropped, not orphaned
         assert not os.path.exists(os.path.join(out, "payload", name))
+
+
+def test_stream_torn_attempt_is_invisible_to_both_scan_paths(spark, tmp_path, monkeypatch):
+    """A micro-batch whose payload and manifest rows are written but
+    whose lineage never commits (a crash inside the sink's commit) stays
+    invisible: the reader and ``decode_dataset`` see each row exactly
+    once, through the committed (unit, run_id) semi-join."""
+    sds.register(spark)
+    out = str(tmp_path / "torn")
+    opts = {"path": out, "key_col": "doc_id", "checkpointLocation": str(tmp_path / "torn_ck")}
+    df = _docs(spark).limit(40)
+    load_or_build_plan(df, EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",)))
+    w = sds._EncodedStreamWriter(opts, df.schema)
+    w.commit([w.write(iter(df.toArrow().to_batches()))], batchId=0)
+
+    write_meta = meta._write_parquet_file
+
+    def crash_before_lineage(dir_path, name, tbl):
+        if os.path.basename(dir_path) == "lineage":
+            raise OSError("crash between the manifest and the lineage write")
+        write_meta(dir_path, name, tbl)
+
+    monkeypatch.setattr(meta, "_write_parquet_file", crash_before_lineage)
+    with pytest.raises(OSError, match="crash"):
+        w.commit([w.write(iter(df.toArrow().to_batches()))], batchId=1)
+    monkeypatch.undo()
+    # the torn batch's manifest rows landed beside the committed ones
+    assert len(glob.glob(os.path.join(manifest_dir(out), "*.parquet"))) == 2
+
+    want = _rows(df)
+    assert _rows(spark.read.format("upe_encoded").load(out)) == want
+    assert _rows(decode_dataset(spark, out)) == want
+    # a retry of the batch commits it once
+    w.commit([w.write(iter(df.toArrow().to_batches()))], batchId=1)
+    assert spark.read.format("upe_encoded").load(out).count() == 80
 
 
 def test_stream_fresh_query_batch0_is_not_a_replay(spark, tmp_path):

@@ -127,58 +127,3 @@ def test_stateful_running_totals_across_batches(spark, checkpoint):
         assert r.n == exp[r.event_type], (r.event_type, r.n, exp[r.event_type])
     # and intermediate snapshots exist (cross-batch state was exercised)
     assert got.count() > final.count()
-
-
-def test_streaming_encode_ingest_end_to_end(spark, checkpoint):
-    """A web-page stream lands in the REAL encode engine: one micro-batch
-    per source file (maxFilesPerTrigger=1), per-batch lineage, decode
-    reproduces every streamed row exactly once, and a replayed batch is
-    a committed no-op."""
-    from universal_parquet_exporter_spark.encode.meta import completed_batch_tags
-    from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
-    from universal_parquet_exporter_spark.encode.scan import decode_dataset
-    from universal_parquet_exporter_spark.fixtures import generate_webpages
-    from universal_parquet_exporter_spark.streaming import streaming_encode_ingest
-
-    src = os.path.join(checkpoint, "pages_src")
-    out = os.path.join(checkpoint, "enc_out")
-    pages = generate_webpages(spark, 3000, partitions=1).cache()
-    # two arrivals -> two micro-batches
-    pages.where("pmod(xxhash64(url), 2) = 0").coalesce(1).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    pages.where("pmod(xxhash64(url), 2) = 1").coalesce(1).write.mode("append").parquet(src)
-
-    q = streaming_encode_ingest(spark, src, schema, out).trigger(availableNow=True).start()
-    q.awaitTermination(180)
-
-    tags = completed_batch_tags(out)
-    assert len(tags) == 2, tags
-    dec = decode_dataset(spark, out)
-    assert dec.count() == 3000
-    assert dec.select("url").distinct().count() == pages.select("url").distinct().count()
-    j = pages.alias("a").join(dec.alias("b"), "url")
-    assert (
-        j.where(
-            ~F.col("a.text").eqNullSafe(F.col("b.text"))
-            | ~F.col("a.html").eqNullSafe(F.col("b.html"))
-        ).count()
-        == 0
-    )
-
-    # replayed attempt semantics: a torn attempt (encode ran again for an
-    # already-committed batch under a fresh run_id, lineage never
-    # committed for it) must stay invisible to decode — we emulate the
-    # torn replay by running the encode WITHOUT the sink's tag guard and
-    # dropping its lineage rows, then assert decode still sees each row
-    # exactly once via the (unit, run_id) semi-join
-    lineage_dir = os.path.join(out, "lineage")
-    cfg = EncodeJobConfig(output_dir=out, skip_completed=False, batch_tag="torn_replay")
-    encode_job(spark, pages.where("pmod(xxhash64(url), 2) = 0"), cfg)
-    ldf = spark.read.parquet(lineage_dir)
-    kept = spark.createDataFrame(
-        ldf.where("batch_tag != 'torn_replay'").collect(), ldf.schema
-    )
-    shutil.rmtree(lineage_dir)
-    kept.write.parquet(lineage_dir)
-    assert decode_dataset(spark, out).count() == 3000  # duplicates invisible
-    pages.unpersist()

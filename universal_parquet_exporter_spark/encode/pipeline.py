@@ -103,10 +103,8 @@ class EncodeJobConfig:
     # lineage; False (streaming append) encodes every input row, adding
     # fragments to existing units under this run's id.
     skip_completed: bool = True
-    # idempotency tag recorded in lineage (streaming micro-batches use
-    # "batch_<id>"): a replayed foreachBatch attempt is skipped when its
-    # tag is already committed, and a torn attempt's fragments carry an
-    # uncommitted run_id, so decode never sees duplicates.
+    # a tag recorded in lineage beside this run's units, read back by
+    # meta.completed_batch_tags
     batch_tag: str = ""
     # "parquet": the input argument is a directory; work items come from
     # driver-side footer scans.  "iceberg": the input argument is a

@@ -15,8 +15,10 @@ one Spark job starts:
 3. **unit pruning** — filter terms on the plan's key column keep only
    the encode units whose range boundaries can hold a match;
 4. **chunk pruning** — the manifest zone maps (bounds, distinct-value
-   sets, null counts) drop chunks no filter group can match
-   (:func:`.stats._stats_keep`);
+   sets, null counts), read once per scan into Arrow arrays
+   (:func:`.stats._zone_maps`), drop chunks no filter group can match:
+   the chunk verdict (:func:`_chunk_keep`) is the read loop's pre-filter
+   run over those arrays, each op through its tests in ``_ZONE_OPS``;
 5. **packing** — surviving chunks group into locality-packed scan
    partitions (:func:`_pack_chunk_partitions`) that
    :func:`_read_chunk_partition` decodes on an executor;
@@ -63,7 +65,7 @@ from .meta import (
     _open_payload,
     _probe_chunk_schema,
 )
-from .stats import _TS_UNIT_TO_US, _normalize_terms, _parse_stats, _stats_keep
+from .stats import _TS_UNIT_TO_US, _normalize_terms, _zone_maps
 
 DEFAULT_PARTITION_BYTES = 64 << 20
 
@@ -101,6 +103,136 @@ _ARROW_OPS = {
     "endswith": lambda a, v: pc.ends_with(a, pattern=v),
     "contains": lambda a, v: pc.match_substring(a, pattern=v),
 }
+
+
+def _prefix_min(z: pa.RecordBatch, v):
+    """The zone maps' min cut to the length of prefix ``v``."""
+    t = z["min"].type
+    if isinstance(v, str) and (pa.types.is_string(t) or pa.types.is_large_string(t)):
+        return pc.utf8_slice_codeunits(z["min"], 0, len(v))
+    return None
+
+
+# the chunk verdict per normalized op (:func:`_zone_keep`): the tests a
+# chunk's zone maps (:func:`.stats._zone_maps`) must pass for the chunk
+# to keep.  A test (zone-map array, op, value) runs _term_mask, None
+# standing for the term's own op or value.  Every value op rejects nulls
+# ("nonnull" > 0) and needs a member of a recorded distinct-value set
+# ("values") to pass.  "top" is the max as an upper bound in Spark's
+# order (null for floats: NaN sorts above the recorded max), and "in" is
+# the OR over its values of "=".
+_NONNULL = ("nonnull", ">", 0)
+_ANY = (_NONNULL, ("values", None, None))
+_ZONE_OPS = {
+    "is_null": (("nulls", "!=", 0),),
+    "not_null": (_NONNULL,),
+    "<": _ANY + (("min", "<", None),),
+    "<=": _ANY + (("min", "<=", None),),
+    ">": _ANY + (("top", ">", None),),
+    ">=": _ANY + (("top", ">=", None),),
+    "=": _ANY + (("min", "<=", None), ("max", ">=", None)),
+    "in": "=",
+    "startswith": _ANY + (("max", ">=", None), (_prefix_min, "<=", None)),
+    "!=": _ANY, "not_in": _ANY, "endswith": _ANY, "contains": _ANY,
+}
+
+
+def _term_mask(arr, op: str, v):
+    """One normalized term over the column ``arr`` as an Arrow mask, or
+    None (keep every row) when ``arr`` is None (a column the chunk
+    lacks) or Arrow has no exact case for its type and value.
+    Timestamps and dates compare as the zone-map domain's epoch ints,
+    decimals at a scale fine enough for any value; float columns keep
+    NaN rows (Spark sorts NaN above every number); a null-padded column
+    compares as null, as in Spark."""
+    if arr is None:
+        return None
+    t = arr.type
+    if op in ("is_null", "not_null"):
+        return _ARROW_OPS[op](arr, None)
+    date = pa.types.is_date32(t)
+    if date or pa.types.is_timestamp(t):
+        mult = 1 if date else _TS_UNIT_TO_US[t.unit]
+        if mult is None:  # ns has no exact µs domain
+            return None
+        arr, kinds = pc.multiply(arr.cast(pa.int32() if date else pa.int64()), mult), (int,)
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        kinds = (str,)
+    elif pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_decimal(t):
+        kinds = (int, float, Decimal)
+    else:
+        return None
+    vals = v if op in ("in", "not_in") else (v,)
+    if not all(isinstance(x, kinds) and not isinstance(x, bool) for x in vals):
+        return None
+    try:
+        if pa.types.is_decimal(t):
+            arr = arr.cast(pa.decimal256(76, 38))
+        m = _ARROW_OPS[op](arr, v)
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
+        return None
+    return pc.or_kleene(m, pc.is_nan(arr)) if pa.types.is_floating(t) else m
+
+
+def _kleene(groups, mask):
+    """The OR over ``groups`` of the Kleene AND of ``mask(*term)`` over
+    each group's terms, skipping a term whose mask is None; None when
+    some group has no mask left (it keeps everything)."""
+    out = None
+    for g in groups:
+        gm = None
+        for term in g:
+            m = mask(*term)
+            if m is not None:
+                gm = m if gm is None else pc.and_kleene(gm, m)
+        if gm is None:
+            return None
+        out = gm if out is None else pc.or_kleene(out, gm)
+    return out
+
+
+def _prefilter_mask(tbl: pa.Table, groups):
+    """The normalized DNF ``groups`` over a decoded chunk, or None when
+    some group keeps every row: a superset of what Spark's exact residual
+    keeps, as every term is (:func:`_term_mask`)."""
+    return _kleene(groups, lambda c, op, v: _term_mask(
+        tbl.column(c) if c in tbl.column_names else None, op, v))
+
+
+def _zone_keep(z: pa.RecordBatch, op: str, v):
+    """One normalized term's verdict over a column's zone maps: the
+    Kleene AND of its :data:`_ZONE_OPS` tests, where a distinct-value
+    set passes when any member does."""
+    tests = _ZONE_OPS[op]
+    if isinstance(tests, str):
+        return _kleene([[(tests, x)] for x in v], lambda o, x: _zone_keep(z, o, x))
+
+    def test(arr, o, x):
+        arr = arr(z, v) if callable(arr) else z[arr]
+        o, x = o or op, v if x is None else x
+        if arr is None or not pa.types.is_list(arr.type):
+            return _term_mask(arr, o, x)
+        m = _term_mask(pc.list_flatten(arr), o, x)
+        if m is None:
+            return None
+        hit = np.zeros(len(arr), bool)
+        hit[pc.list_parent_indices(arr).filter(pc.fill_null(m, True)).to_numpy()] = True
+        return pa.array(hit, mask=arr.is_null().to_numpy(zero_copy_only=False))
+
+    return _kleene([tests], test)
+
+
+def _chunk_keep(stats, groups, schema: pa.Schema) -> np.ndarray:
+    """The zone-map verdict over every chunk (``stats``, one JSON per
+    chunk): the normalized DNF ``groups`` run over the chunks' zone maps
+    as the read loop's pre-filter runs over rows (:func:`_zone_keep`).
+    A chunk is pruned only when its recorded stats prove that no group
+    can match; an unknown (null) verdict keeps it."""
+    _rows, maps = _zone_maps(stats, schema, {t[0] for g in groups for t in g})
+    keep = _kleene(groups, lambda c, op, v: _zone_keep(maps[c], op, v))
+    if keep is None:
+        return np.ones(len(stats), bool)
+    return pc.fill_null(keep, True).to_numpy(zero_copy_only=False)
 
 
 def _filter_groups(filters) -> list[list[tuple]]:
@@ -302,24 +434,16 @@ def _pack_chunk_partitions(
 
     # a group with no prunable term keeps every chunk and every row
     groups = norm_groups if norm_groups and all(norm_groups) else []
-    prune = bool(groups) and "stats" in man.schema.names
-    if prune:
-        chunk_stats = man.column("stats").take(pa.array(starts)).to_pylist()
+    if groups and "stats" in man.schema.names:
+        keep = _chunk_keep(man.column("stats").take(starts).combine_chunks(), groups, probe_schema)
+        starts, ends = starts[keep], ends[keep]
     ordered = []
-    kept_slices = 0
-    for i, (s, e) in enumerate(zip(starts, ends)):
-        if prune:
-            stats = _parse_stats(chunk_stats[i])
-            if stats is not None and not any(
-                _stats_keep(stats, g, probe_schema) for g in norm_groups
-            ):
-                continue
-        kept_slices += int(e - s)
+    for s, e in zip(starts, ends):
         slices = np.stack((row_offs[s:e], n_rows_a[s:e]), axis=1).tolist()
         ordered.append((fnames[fcodes[s]], int(offsets[s]), int(lengths[s]), slices))
     if evidence is not None and norm_groups:
         evidence["total"] = man.num_rows
-        evidence["qualifying"] = kept_slices
+        evidence["qualifying"] = int((ends - starts).sum())
 
     if spread > 1:
         live = sum(ch[2] for ch in ordered)
@@ -386,57 +510,6 @@ def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         cols.append(col)
         fields.append(pa.field(f.name, col.type, f.nullable))
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
-
-
-def _term_mask(tbl: pa.Table, col: str, op: str, v):
-    """One normalized term over a decoded chunk as an Arrow mask, or None
-    (keep every row) when Arrow has no exact case for its column type
-    and value.  Timestamps and dates compare as the zone-map domain's
-    epoch ints; float columns keep NaN rows (Spark sorts NaN above every
-    number); a null-padded column compares as null, as in Spark."""
-    if col not in tbl.column_names:
-        return None
-    arr = tbl.column(col)
-    t = arr.type
-    if op in ("is_null", "not_null"):
-        return _ARROW_OPS[op](arr, None)
-    date = pa.types.is_date32(t)
-    if date or pa.types.is_timestamp(t):
-        mult = 1 if date else _TS_UNIT_TO_US[t.unit]
-        if mult is None:  # ns has no exact µs domain
-            return None
-        arr, kinds = pc.multiply(arr.cast(pa.int32() if date else pa.int64()), mult), (int,)
-    elif pa.types.is_string(t) or pa.types.is_large_string(t):
-        kinds = (str,)
-    elif pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_decimal(t):
-        kinds = (int, float, Decimal)
-    else:
-        return None
-    vals = v if op in ("in", "not_in") else (v,)
-    if not all(isinstance(x, kinds) and not isinstance(x, bool) for x in vals):
-        return None
-    try:
-        m = _ARROW_OPS[op](arr, v)
-    except (pa.ArrowException, TypeError, ValueError, OverflowError):
-        return None
-    return pc.or_kleene(m, pc.is_nan(arr)) if pa.types.is_floating(t) else m
-
-
-def _prefilter_mask(tbl: pa.Table, groups):
-    """The normalized DNF ``groups`` over a decoded chunk with Kleene
-    and/or, or None when some group keeps every row: a superset of what
-    Spark's exact residual keeps, as every term is (:func:`_term_mask`)."""
-    mask = None
-    for g in groups:
-        gm = None
-        for col, op, v in g:
-            m = _term_mask(tbl, col, op, v)
-            if m is not None:
-                gm = m if gm is None else pc.and_kleene(gm, m)
-        if gm is None:
-            return None
-        mask = gm if mask is None else pc.or_kleene(mask, gm)
-    return mask
 
 
 def _decode_fields(payload: bytes, fields: list, n_rows: int) -> pa.Table:
@@ -590,15 +663,14 @@ def decode_dataset(
     - terms on the plan's key column prune whole encode UNITS: each
       group's key range (:func:`key_range_from_terms`), unioned across
       groups; a string IN-list keeps only the units of its points;
-    - the manifest zone maps prune CHUNKS (:func:`.stats._stats_keep`):
-      min/max bounds for comparisons, ``in`` and ``startswith``; the
-      exact distinct-value sets for equality, ``in``, ``!=``/``not_in``
-      (a chunk whose every value is rejected) and the string ops; null
-      counts for ``is_null``/``not_null``; and an all-null chunk, also
-      one from a generation that predates the column, for every
-      null-rejecting term.  A chunk is pruned only when EVERY group
-      disqualifies it.  Datasets encoded before zone maps decode
-      unpruned.
+    - the manifest zone maps prune CHUNKS (:func:`_chunk_keep`, the
+      pre-filter run over them): min/max bounds for comparisons, ``in``
+      and ``startswith``; the exact distinct-value sets for every value
+      op (a chunk none of whose values passes); null counts for
+      ``is_null``/``not_null``; and an all-null chunk, also one from a
+      generation that predates the column, for every null-rejecting
+      term.  A chunk is pruned only when EVERY group disqualifies it.
+      Datasets encoded before zone maps decode unpruned.
 
     Execution: the scan is planned on the driver by the engine's one
     scan planner (this module's, shared with the ``upe_encoded`` reader)

@@ -3,18 +3,24 @@ and every scan and metadata query reads back.
 
 This module owns the format — the JSON written by :func:`_chunk_stats`,
 the one write-side conversion of Arrow values into the zone-map domain
-(:func:`_domain_values`), the one read-side conversion back into each
-column's own ordered domain (:func:`_domain_reader`), the pruning
-verdict (:func:`_stats_keep`) and the metadata-only column statistics
-(:func:`dataset_column_stats`).
+(:func:`_domain_values`), and the one read: :func:`_zone_maps` turns the
+chunks' JSON into small Arrow arrays in each column's own type.  The
+scan planner's chunk verdict (``scan._chunk_keep``) runs the read
+loop's pre-filter over those arrays, and the metadata-only column
+statistics (:func:`dataset_column_stats`) aggregate them with
+``pyarrow.compute``.
 """
 
 from __future__ import annotations
 
+import io
 import json
 from decimal import Decimal
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.json as pj
 
 from .meta import _committed_manifest, _probe_chunk_schema
 
@@ -63,21 +69,6 @@ def _domain_values(arr: pa.Array, t: pa.DataType) -> list:
     return vals
 
 
-def _domain_reader(t: pa.DataType):
-    """The converter from a value recorded in the zone-map domain for a
-    column of type ``t`` to the column's own ordered domain: ``Decimal``
-    from the exact decimal string, float, an epoch int (integers,
-    timestamps, dates) or str.  It raises TypeError, ValueError or
-    ArithmeticError on a value outside that domain."""
-    if pa.types.is_decimal(t):
-        return lambda v: Decimal(str(v))
-    if pa.types.is_floating(t):
-        return float
-    if pa.types.is_integer(t) or pa.types.is_timestamp(t) or pa.types.is_date(t):
-        return int
-    return str
-
-
 def _chunk_stats(tbl: pa.Table) -> str:
     """Per-chunk zone map: JSON ``{col: [min, max]}`` over int/float/
     string/timestamp/date/decimal columns — the engine's analog of
@@ -88,7 +79,8 @@ def _chunk_stats(tbl: pa.Table) -> str:
       bound); long string maxima are dropped (truncating a max would
       understate it and prune chunks that match — the parquet pitfall);
     - float bounds skip NaN (``pc.min_max`` ignores it), so a float
-      column's max never prunes ``>``/``>=`` (:func:`_stats_keep`);
+      column's max is no upper bound in Spark's order, where NaN sorts
+      above every number (``top`` in :func:`_zone_maps`);
     - timestamps, dates and decimals record their zone-map domain values
       (:func:`_domain_values`) — so ``warc_ts``-style time-range scans
       prune, the canonical Common-Crawl filter column (SURVEY §1.2);
@@ -124,7 +116,6 @@ def _chunk_stats(tbl: pa.Table) -> str:
     keys) never prunes on null counts."""
     import math
 
-    import pyarrow.compute as pc
 
     stats: dict[str, list] = {}
     dv_map: dict[str, list] = {}
@@ -186,7 +177,6 @@ def _dv_values(col, t) -> list | None:
     None when it exceeds ``_STATS_DV_MAX`` (a prefix probe exits before
     the full unique() on high-cardinality columns) or any string member
     exceeds the length cap.  Sorted — stats stay byte-deterministic."""
-    import pyarrow.compute as pc
 
     # pc.unique/count_distinct take ChunkedArray directly — no copy
     if len(col) > _STATS_DV_PROBE:
@@ -203,7 +193,7 @@ def _dv_values(col, t) -> list | None:
 
 
 # ---------------------------------------------------------------------------
-# the zone-map evaluator
+# the read side: filter values and recorded zone maps in Arrow
 # ---------------------------------------------------------------------------
 
 _OP_ALIASES = {"==": "=", "<>": "!="}
@@ -212,8 +202,7 @@ _OP_ALIASES = {"==": "=", "<>": "!="}
 def _normalize_terms(terms, schema: pa.Schema):
     """Convert term values to the zone-map domain ONCE per scan (not per
     chunk): timestamps → epoch-µs ints, dates → epoch-days ints,
-    decimals → ``Decimal`` (the domain :func:`_domain_reader` re-types
-    their recorded bounds to); ``==``/``<>`` become ``=``/``!=``.
+    decimals → ``Decimal``; ``==``/``<>`` become ``=``/``!=``.
     Terms whose column is absent from the schema or whose value can't
     convert (or is a float NaN, which has no place in the bounds' order)
     are dropped from PRUNING — the exact residual still applies them."""
@@ -234,7 +223,7 @@ def _normalize_terms(terms, schema: pa.Schema):
         elif pa.types.is_date(t):
             conv, kind = date_value_days, date
         elif pa.types.is_decimal(t):
-            conv, kind = _domain_reader(t), object
+            conv, kind = (lambda x: Decimal(str(x))), object
         else:
             conv = None
         try:
@@ -253,123 +242,106 @@ def _normalize_terms(terms, schema: pa.Schema):
     return out
 
 
-def _parse_stats(stats_json: str | None) -> dict | None:
+def _zone_types(t: pa.DataType):
+    """``(JSON type, Arrow type)`` of the zone-map values of a column of
+    type ``t``: the type they are recorded in and the one they read back
+    as (timestamps as µs in the column's zone, dates as date32, other
+    types as ``t``), or None for a column that records none."""
+    if pa.types.is_timestamp(t):
+        return pa.int64(), pa.timestamp("us", t.tz)
+    if pa.types.is_date(t):
+        return pa.int32(), pa.date32()
+    if pa.types.is_integer(t):
+        return pa.int64(), t
+    if pa.types.is_floating(t):
+        return pa.float64(), t
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_decimal(t):
+        return pa.string(), t
+    return None
+
+
+def _cast(arr: pa.Array, t: pa.DataType) -> pa.Array:
+    """``arr`` as type ``t``, null where a value does not convert."""
     try:
-        stats = json.loads(stats_json) if stats_json else None
-    except (TypeError, ValueError):
-        return None
-    return stats if isinstance(stats, dict) else None
+        return arr.cast(t)
+    except pa.ArrowException:
+        out = []
+        for v in arr:
+            try:
+                out.append(v.cast(t).as_py())
+            except pa.ArrowException:
+                out.append(None)
+        return pa.array(out, t)
 
 
-def _stats_keep(stats: dict, terms, schema: pa.Schema | None) -> bool:
-    """Zone-map verdict for ONE chunk's parsed stats (:func:`_parse_stats`)
-    and one AND-group of terms: False only when the recorded stats PROVE
-    a term can't match (missing or partial stats keep).  This is the
-    engine's one pruning evaluator — the reader and ``decode_dataset``
-    both plan through it, and neither runs a Spark job to prune.  Terms
-    must be pre-normalized (:func:`_normalize_terms`); recorded values
-    of a column ``schema`` knows are re-typed by :func:`_domain_reader`,
-    and a value that does not fit the column's domain never prunes."""
-    dv_map = stats.get("_dv")
-    if not isinstance(dv_map, dict):
-        dv_map = {}
-    nc_map = stats.get("_nc")
-    n_total = stats.get("_n")
-    have_nc = isinstance(nc_map, dict) and isinstance(n_total, int)
-    for col, op, v in terms:
-        # null-count pruning (the parquet null-count analog): a column
-        # absent from a recorded _nc map is all-null in this chunk —
-        # including chunks whose generation PREDATES the column under
-        # additive evolution; comparison/equality/prefix terms are
-        # null-rejecting, so all-null prunes those too
-        if have_nc:
-            nc = nc_map.get(col)
-            all_null = not isinstance(nc, int) or nc >= n_total
-            if op == "is_null":
-                if isinstance(nc, int) and nc == 0:
-                    return False
-                continue
-            if op == "not_null":
-                if all_null:
-                    return False
-                continue
-            if all_null:
-                return False
-        elif op in ("is_null", "not_null"):
-            continue
-        known = schema is not None and col in schema.names
-        conv = _domain_reader(schema.field(col).type) if known else None
-        # exact distinct-value sets (≤ _STATS_DV_MAX values recorded):
-        # equality/IN/prefix prune on MEMBERSHIP — the interleaved-
-        # categorical case min/max bounds can never exclude
-        dv = dv_map.get(col)
-        if dv is not None and conv is not None:
-            try:
-                dv = [conv(x) for x in dv]
-            except (TypeError, ValueError, ArithmeticError):
-                dv = None
-        if dv is not None and op in ("!=", "not_in"):
-            # inequality prunes ONLY through the exact value set: the
-            # chunk matches nothing when every recorded non-null value
-            # is rejected (all-null rejection already returned above)
-            rejected = v if op == "not_in" else (v,)
-            try:
-                if all(x in rejected for x in dv):
-                    return False
-            except TypeError:
-                pass  # cross-type membership: never prune on it
-            continue
-        if dv is not None:
-            strs = all(isinstance(x, str) for x in dv)
-            try:
-                if op == "=" and v not in dv:
-                    return False
-                if op == "in" and not any(x in dv for x in v):
-                    return False
-                if op == "startswith" and strs and not any(x.startswith(v) for x in dv):
-                    return False
-                if op == "endswith" and strs and not any(x.endswith(v) for x in dv):
-                    return False
-                if op == "contains" and strs and not any(v in x for x in dv):
-                    return False
-            except TypeError:
-                pass  # cross-type membership: never prune on it
-        bounds = stats.get(col)
-        if not isinstance(bounds, (list, tuple)) or len(bounds) != 2:
-            continue
-        mn, mx = bounds
-        if conv is not None:
-            try:
-                mn = None if mn is None else conv(mn)
-                mx = None if mx is None else conv(mx)
-            except (TypeError, ValueError, ArithmeticError):
-                continue
-        if op in (">", ">=") and conv is float:
-            continue  # NaN rows sit above the recorded max in Spark's order
-        try:
-            if op in (">", ">="):
-                if mx is not None and not (mx > v if op == ">" else mx >= v):
-                    return False
-            elif op in ("<", "<="):
-                if mn is not None and not (mn < v if op == "<" else mn <= v):
-                    return False
-            elif op == "=":
-                if (mn is not None and mn > v) or (mx is not None and mx < v):
-                    return False
-            elif op == "in":
-                if mn is not None and mx is not None and not any(
-                    mn <= x <= mx for x in v
-                ):
-                    return False
-            elif op == "startswith":
-                # all matches are >= v and share v's length-prefix
-                if mx is not None and mx < v:
-                    return False
-                if mn is not None and isinstance(mn, str) and mn[: len(v)] > v:
-                    return False
-        except TypeError:
-            continue  # cross-type comparison: never prune on it
-    return True
+def _read_json_lines(lines: list, options) -> pa.Table:
+    """One row per JSON line, read by Arrow's JSON reader; a line that
+    does not read as one object of the options' schema reads as ``{}``
+    (found by bisection, so only a garbled map costs extra reads)."""
+    if not lines:
+        return options.explicit_schema.empty_table()
+    try:
+        tbl = pj.read_json(io.BytesIO("\n".join(lines).encode()), parse_options=options)
+        if tbl.num_rows == len(lines):
+            return tbl
+    except pa.ArrowInvalid:
+        pass
+    if len(lines) == 1:
+        return _read_json_lines(["{}"], options)
+    mid = len(lines) // 2
+    return pa.concat_tables([_read_json_lines(lines[:mid], options), _read_json_lines(lines[mid:], options)])
+
+
+def _zone_maps(stats: pa.Array, schema: pa.Schema, columns) -> tuple[pa.Array, dict[str, pa.RecordBatch]]:
+    """Each chunk's zone map, from ``stats`` (an Arrow array of its JSON,
+    one per chunk), as Arrow arrays with a row per chunk: the row count
+    (``_n``), and for each of ``columns`` of ``schema`` a batch of
+    ``min`` and ``max`` (:func:`_zone_types`), ``top`` (the max as an
+    upper bound in Spark's order: null for floats, whose recorded max
+    skips NaN), ``rows``, ``nulls`` and ``nonnull`` counts, and
+    ``values``, the exact distinct-value set as a list.  Null is what a
+    chunk did not record or what does not convert: a missing or garbled
+    map is null throughout, and a column absent from a recorded ``_nc``
+    map is all-null in that chunk."""
+    kinds = {c: _zone_types(schema.field(c).type) for c in columns}
+    recorded = {c: k[0] for c, k in kinds.items() if k is not None}
+    # the writer records _n/_nc unless a real column takes either name
+    counts = "_n" not in schema.names and "_nc" not in schema.names
+    fields = [pa.field(c, pa.list_(j)) for c, j in recorded.items() if c != "_dv"]
+    if counts:
+        fields += [pa.field("_n", pa.int64()), pa.field("_nc", pa.struct([(c, pa.int64()) for c in columns]))]
+    fields.append(pa.field("_dv", pa.struct([(c, pa.list_(j)) for c, j in recorded.items()])))
+    options = pj.ParseOptions(explicit_schema=pa.schema(fields), unexpected_field_behavior="ignore")
+    tbl = _read_json_lines(pc.fill_null(stats, "{}").to_pylist(), options)
+    n = tbl.num_rows
+    col = lambda name: tbl.column(name).combine_chunks()  # noqa: E731
+    nc = col("_nc") if counts else None
+    # a recorded null-count map needs the chunk's row count beside it
+    rows = pc.if_else(pc.is_valid(nc), col("_n"), pa.nulls(n, pa.int64())) if counts else pa.nulls(n, pa.int64())
+    out = {}
+    for c in columns:
+        zt = kinds[c][1] if kinds[c] else schema.field(c).type
+        lo = hi = pa.nulls(n, zt)
+        if c in recorded and c != "_dv":
+            b = col(c)
+            b = pc.if_else(pc.equal(pc.list_value_length(b), 2), b, pa.nulls(n, b.type))
+            lo, hi = _cast(pc.list_element(b, 0), zt), _cast(pc.list_element(b, 1), zt)
+        values = pa.nulls(n, pa.list_(zt))
+        if c in recorded:
+            dv = col("_dv").field(c)
+            lists = pa.ListArray.from_arrays(dv.offsets, _cast(dv.values, zt))
+            # a set with a member that does not convert is not exact: drop it
+            drop = dv.is_null().to_numpy(zero_copy_only=False)
+            drop[pc.list_parent_indices(lists).filter(lists.values.is_null()).to_numpy()] = True
+            values = pc.if_else(pa.array(drop), values, lists)
+        nulls = pc.if_else(pc.is_valid(rows), pc.coalesce(nc.field(c), rows), rows) if counts else rows
+        out[c] = pa.RecordBatch.from_pydict({
+            "min": lo, "max": hi,
+            "top": pa.nulls(n, zt) if pa.types.is_floating(zt) else hi,
+            "rows": rows, "nulls": nulls, "nonnull": pc.subtract(rows, nulls),
+            "values": values,
+        })
+    return rows, out
 
 
 def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = None):
@@ -397,17 +369,17 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
       MIN/MAX ignore nulls, so all-null chunks cannot move the answer),
       and, for strings, no recorded minimum sits at the truncation cap
       (a capped minimum may be a truncated prefix — a valid lower
-      bound, not the exact minimum).  Long-string columns and
-      NaN-bearing float chunks record no bounds, so they surface as
-      inexact rather than wrong.
+      bound, not the exact minimum).  Long-string columns record no
+      bounds, so they surface as inexact rather than wrong; a float
+      column's ``max`` is never exact, since its zone maps skip NaN,
+      which Spark's ``MAX`` returns (its ``min`` is: NaN sorts above
+      every number).
 
     One further never-wrong guard: a chunk whose committed slices cover
     FEWER rows than its recorded ``_n`` (compaction can supersede a
     subset of a multi-unit chunk) poisons exactness for every column —
     its whole-chunk statistics describe dead rows too.
     """
-    import pyarrow.compute as pc
-
     man = _committed_manifest(output_dir)
     if "stats" not in man.schema.names:
         raise ValueError(f"dataset at {output_dir} predates zone-map statistics")
@@ -425,70 +397,37 @@ def dataset_column_stats(spark, output_dir: str, columns: list[str] | None = Non
     chunks = man.group_by(["file", "offset"], use_threads=False).aggregate(
         [("stats", "first"), ("n_rows", "sum")]
     )
-    stats = [_parse_stats(s) or {} for s in chunks.column("stats_first").to_pylist()]
-    n_tot = [st.get("_n") if type(st.get("_n")) is int else None for st in stats]
-    # a recorded null-count map needs the chunk's row count beside it
-    nc_maps = [
-        st.get("_nc") if n is not None and isinstance(st.get("_nc"), dict) else None
-        for st, n in zip(stats, n_tot)
-    ]
-    any_partial = any(
-        n is None or cov < n
-        for n, cov in zip(n_tot, chunks.column("n_rows_sum").to_pylist())
-    )
-
-    def typed(conv, v):
-        if v is None:
-            return None
-        try:
-            return conv(v)
-        except (TypeError, ValueError, ArithmeticError):
-            return None
-
-    def render(v):  # decimals in plain notation (never 1E-7)
-        return None if v is None else format(v, "f") if isinstance(v, Decimal) else str(v)
-
+    rows, maps = _zone_maps(chunks.column("stats_first").combine_chunks(), probe, cols)
+    partial = pc.any(pc.fill_null(pc.less(chunks.column("n_rows_sum"), rows), True)).as_py()
     n_rows_total = pc.sum(man.column("n_rows")).as_py()
+
+    def render(v: pa.Scalar):  # the zone-map domain; decimals never as 1E-7
+        if not v.is_valid:
+            return None
+        if pa.types.is_decimal(v.type):
+            return format(v.as_py(), "f")
+        return str(_domain_values(pa.array([v]), v.type)[0])
 
     out_rows = []
     for c in cols:
-        # bounds compare in the column's own domain: exact epoch ints for
-        # timestamps/dates, Decimal for decimals, lexicographic strings
-        conv = _domain_reader(probe.field(c).type)
-        mins, maxs = [], []
-        miss_mn = miss_mx = at_cap = nc_unknown = False
-        nc_sum = 0
-        for st, n, ncm in zip(stats, n_tot, nc_maps):
-            # an absent key under a recorded _nc map means the column is
-            # absent from the chunk (all-null under additive evolution);
-            # no map at all means unknown
-            all_null = False
-            if ncm is None:
-                nc_unknown = True
-            else:
-                nc = ncm.get(c) if type(ncm.get(c)) is int else None
-                all_null = nc is None or nc >= n
-                nc_sum += n if nc is None else nc
-            b = st.get(c)
-            mn, mx = b if isinstance(b, list) and len(b) == 2 else (None, None)
-            if conv is str and isinstance(mn, str) and len(mn) >= _STATS_STR_MAX:
-                at_cap = True
-            mn, mx = typed(conv, mn), typed(conv, mx)
-            if mn is not None:
-                mins.append(mn)
-            elif not all_null:
-                miss_mn = True
-            if mx is not None:
-                maxs.append(mx)
-            elif not all_null:
-                miss_mx = True
+        z = maps[c]
+        # a chunk with no non-null value cannot move SQL MIN/MAX
+        all_null = pc.fill_null(pc.less_equal(z["nonnull"], 0), False)
+
+        def exact(bound):
+            return not (partial or pc.any(pc.and_(pc.is_null(bound), pc.invert(all_null))).as_py())
+
+        t = z["min"].type
+        capped = (pa.types.is_string(t) or pa.types.is_large_string(t)) and pc.any(
+            pc.greater_equal(pc.utf8_length(z["min"]), _STATS_STR_MAX)
+        ).as_py()
         out_rows.append((
             c,
-            render(min(mins) if mins else None),
-            render(max(maxs) if maxs else None),
-            not (miss_mn or at_cap or any_partial),
-            not (miss_mx or any_partial),
-            None if nc_unknown or any_partial else nc_sum,
+            render(pc.min(z["min"])),
+            render(pc.max(z["max"])),
+            exact(z["min"]) and not capped,
+            exact(z["top"]),
+            None if partial or z["nulls"].null_count else pc.sum(z["nulls"], min_count=0).as_py(),
             n_rows_total,
         ))
     return spark.createDataFrame(

@@ -60,8 +60,7 @@ What Catalyst's v2 pushdown buys here, mechanically:
   commits under a ``ds_epoch_<batchId>`` lineage tag with a
   batch-unique run id; a replayed epoch (failure between sink commit
   and checkpoint write) is detected by its already-committed tag and
-  skipped — exactly-once at batch granularity, the same guarantee the
-  ``foreachBatch`` path (:mod:`...streaming.jobs`) provides, now native.
+  skipped — exactly-once at batch granularity.
 
 Writes require the dataset plan (``plan.json``) to exist — create it
 with :func:`..encode.pipeline.load_or_build_plan` (or any prior
@@ -537,8 +536,7 @@ class _EncodedBatchWriter(_EncodedWriterBase, DataSourceArrowWriter):
 class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
     """Micro-batch sink with replay-proof commits: the lineage tag
     ``ds_epoch_<query_token>_<batchId>`` plus a batch-unique run id give
-    exactly-once at batch granularity (the native twin of
-    :func:`...streaming.jobs.streaming_encode_ingest`).
+    exactly-once at batch granularity.
 
     The tag is SCOPED by a token derived from the query's checkpoint
     location: restarts from the same checkpoint share the token (and

@@ -2,19 +2,18 @@
 
 The reference is strictly batch (SURVEY.md §1.4 — no watermarks, windows
 or stateful ops anywhere), so this module is an *extension*: the same
-engine operators applied to unbounded inputs, for pipelines that encode
-or analyze a continuously-crawled corpus.
+engine operators applied to unbounded inputs, for pipelines that analyze
+a continuously-crawled corpus.  Streams are encoded by the
+``upe_encoded`` stream sink (:mod:`..sources.spark_datasource`).
 """
 
 from .jobs import (
-    streaming_encode_ingest,
     streaming_event_counts,
     streaming_quality_scores,
     streaming_running_totals,
 )
 
 __all__ = [
-    "streaming_encode_ingest",
     "streaming_event_counts",
     "streaming_quality_scores",
     "streaming_running_totals",

@@ -56,56 +56,6 @@ def streaming_quality_scores(spark: SparkSession, source_dir: str, schema) -> Da
     )
 
 
-def streaming_encode_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    output_dir: str,
-    key_col: str = "url",
-    size_cols: tuple = ("text", "html"),
-):
-    """Streaming ingestion INTO the encode engine: each micro-batch runs
-    the real ``encode_job`` (same codecs, same lineage) in append mode,
-    so a continuously-arriving web-page stream lands as encoded units
-    with per-batch lineage.
-
-    Exactly-once at batch granularity without any extra machinery:
-    every attempt uses a fresh ``run_id`` and decode only reads
-    (unit, run_id) pairs whose lineage committed, so a torn attempt's
-    fragments are invisible (the engine's existing orphan immunity);
-    a REPLAYED batch is skipped up front because its ``batch_tag`` is
-    already committed in lineage.
-
-    Returns an un-started ``DataStreamWriter`` — callers add a trigger
-    (tests use ``availableNow``) and ``.start()``.  The unit plan is
-    built from the first batch and persisted, so unit identity is stable
-    across all later batches and restarts."""
-    import os as _os
-
-    from ..encode.meta import completed_batch_tags
-    from ..encode.pipeline import EncodeJobConfig, encode_job
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(source_dir)
-
-    def sink(batch_df, batch_id: int):
-        tag = f"batch_{batch_id}"
-        sess = batch_df.sparkSession
-        if tag in completed_batch_tags(output_dir):
-            return  # replayed attempt of a committed batch: no-op
-        cfg = EncodeJobConfig(
-            output_dir=output_dir,
-            key_col=key_col,
-            size_cols=size_cols,
-            skip_completed=False,
-            batch_tag=tag,
-        )
-        encode_job(sess, batch_df, cfg)
-
-    return stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", _os.path.join(output_dir, "_stream_checkpoint")
-    )
-
-
 def streaming_running_totals(spark: SparkSession, source_dir: str, schema) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: running
     per-event_type row counts and value sums maintained across
