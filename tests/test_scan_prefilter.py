@@ -231,7 +231,7 @@ def test_column_stats_match_spark_aggregates(spark, typed):
     Spark's, an inexact one still bounds the non-NaN values, and a
     reported null count is exact."""
     out, src, _rows = typed
-    cols = [c for c in src.columns if c != "ts_ntz"] + ["ts_ntz"]
+    cols = src.columns
     q = lambda c: F.col(f"`{c}`")  # noqa: E731
     no_nan = lambda c: F.when(~F.isnan(q(c)), q(c)) if c == "x" else q(c)  # noqa: E731
     aggs = src.agg(*[

@@ -221,6 +221,10 @@ def test_chunk_keep_algebra():
     groups = [_normalize_terms(g, schema) for g in ([("n", "<", 5)], [("s", "=", "c")])]
     got = _chunk_keep(pa.array([stats, '{"n": [1, 3]}', '{"n": [30, 40], "s": ["x", "z"]}']), groups, schema)
     assert got.tolist() == [True, True, False]
+    # a garbled map keeps its own chunk only; the others keep their verdicts
+    many = pa.array([stats, "{not json", '{"n": [30, 40]}', "{} {}", '{"n": ["a", "b"]}', '{"n": [1, 2]}'])
+    got = _chunk_keep(many, [_normalize_terms([("n", "<", 5)], schema)], schema)
+    assert got.tolist() == [False, True, False, True, True, True]
 
 
 # ---------------------------------------------------------------------------
