@@ -273,11 +273,13 @@ def test_every_filter_op_has_a_prefilter_and_a_residual_case():
     for op in scan._FILTER_OPS:
         norm = stats._OP_ALIASES.get(op, op)
         assert norm in scan._ARROW_OPS, op
-        rule = scan._ZONE_OPS[norm]
-        tests = scan._ZONE_OPS[rule] if isinstance(rule, str) else rule
+        tests = list(scan._ZONE_OPS[norm])
         assert tests, op
-        for _arr, test_op, _v in tests:
-            assert test_op is None or test_op in scan._ARROW_OPS, (op, test_op)
+        for arr, test_op, _v in tests:
+            if isinstance(arr, tuple):
+                tests.extend(arr)
+            else:
+                assert test_op is None or test_op in scan._ARROW_OPS, (op, test_op)
 
 
 def test_filterless_reads_carry_no_prefilter(spark, tmp_path, monkeypatch):

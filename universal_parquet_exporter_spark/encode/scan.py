@@ -116,13 +116,15 @@ def _prefix_min(z: pa.RecordBatch, v):
 # the chunk verdict per normalized op (:func:`_zone_keep`): the tests a
 # chunk's zone maps (:func:`.stats._zone_maps`) must pass for the chunk
 # to keep.  A test (zone-map array, op, value) runs _term_mask, None
-# standing for the term's own op or value.  Every value op rejects nulls
-# ("nonnull" > 0) and needs a member of a recorded distinct-value set
-# ("values") to pass.  "top" is the max as an upper bound in Spark's
-# order (null for floats: NaN sorts above the recorded max), and "in" is
-# the OR over its values of "=".
+# standing for the term's own op or value; a test whose array is a tuple
+# of tests is the OR over the term's values of their AND.  Every value op
+# rejects nulls ("nonnull" > 0) and needs a member of a recorded
+# distinct-value set ("values") to pass.  "top" is the max as an upper
+# bound in Spark's order (null for floats: NaN sorts above the recorded
+# max).  "in" tests each value's bounds as "=" does.
 _NONNULL = ("nonnull", ">", 0)
 _ANY = (_NONNULL, ("values", None, None))
+_EQ = (("min", "<=", None), ("max", ">=", None))
 _ZONE_OPS = {
     "is_null": (("nulls", "!=", 0),),
     "not_null": (_NONNULL,),
@@ -130,8 +132,8 @@ _ZONE_OPS = {
     "<=": _ANY + (("min", "<=", None),),
     ">": _ANY + (("top", ">", None),),
     ">=": _ANY + (("top", ">=", None),),
-    "=": _ANY + (("min", "<=", None), ("max", ">=", None)),
-    "in": "=",
+    "=": _ANY + _EQ,
+    "in": _ANY + ((_EQ, None, None),),
     "startswith": _ANY + (("max", ">=", None), (_prefix_min, "<=", None)),
     "!=": _ANY, "not_in": _ANY, "endswith": _ANY, "contains": _ANY,
 }
@@ -203,11 +205,10 @@ def _zone_keep(z: pa.RecordBatch, op: str, v):
     """One normalized term's verdict over a column's zone maps: the
     Kleene AND of its :data:`_ZONE_OPS` tests, where a distinct-value
     set passes when any member does."""
-    tests = _ZONE_OPS[op]
-    if isinstance(tests, str):
-        return _kleene([[(tests, x)] for x in v], lambda o, x: _zone_keep(z, o, x))
 
     def test(arr, o, x):
+        if isinstance(arr, tuple):
+            return _kleene([[(a, t, y) for a, t, _ in arr] for y in v], test)
         arr = arr(z, v) if callable(arr) else z[arr]
         o, x = o or op, v if x is None else x
         if arr is None or not pa.types.is_list(arr.type):
@@ -219,7 +220,7 @@ def _zone_keep(z: pa.RecordBatch, op: str, v):
         hit[pc.list_parent_indices(arr).filter(pc.fill_null(m, True)).to_numpy()] = True
         return pa.array(hit, mask=arr.is_null().to_numpy(zero_copy_only=False))
 
-    return _kleene([tests], test)
+    return _kleene([_ZONE_OPS[op]], test)
 
 
 def _chunk_keep(stats, groups, schema: pa.Schema) -> np.ndarray:
