@@ -108,6 +108,8 @@ def test_stats_column_validation(spark, outdir):
     _encode(spark, df, outdir)
     with pytest.raises(ValueError, match="columns not in dataset"):
         dataset_column_stats(spark, outdir, columns=["nope"])
+    twice = dataset_column_stats(spark, outdir, columns=["n", "n"]).collect()
+    assert len(twice) == 2 and twice[0] == twice[1] and twice[0].max_exact
 
 
 def test_dotted_column_stats_are_exact(spark, outdir):

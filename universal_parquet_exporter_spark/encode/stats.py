@@ -303,6 +303,7 @@ def _zone_maps(stats: pa.Array, schema: pa.Schema, columns) -> tuple[pa.Array, d
     chunk did not record or what does not convert: a missing or garbled
     map is null throughout, and a column absent from a recorded ``_nc``
     map is all-null in that chunk."""
+    columns = list(dict.fromkeys(columns))  # one JSON field per name
     kinds = {c: _zone_types(schema.field(c).type) for c in columns}
     recorded = {c: k[0] for c, k in kinds.items() if k is not None}
     # the writer records _n/_nc unless a real column takes either name
