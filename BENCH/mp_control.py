@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def _build_plan(items, total_rows, target_unit_bytes=64 << 20):
     """Deterministic plan from a local (no-Spark) sample of row groups —
     same planner tail as the pipeline (plan_from_sample)."""
-    import pandas as pd
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -48,7 +48,7 @@ def _build_plan(items, total_rows, target_unit_bytes=64 << 20):
         )
         ks.extend(tbl.column("url").to_pylist())
         szs.extend(sz.to_pylist())
-    sample = pd.DataFrame({"k": ks, "sz": szs})
+    sample = pa.table({"k": pa.array(ks, pa.string()), "sz": pa.array(szs, pa.int64())})
     return plan_from_sample(sample, total_rows, "url", target_unit_bytes)
 
 

@@ -33,3 +33,20 @@ def _spark_jobs(spark, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _broadcasts(monkeypatch, fn) -> int:
+    """Number of ``SparkContext.broadcast`` calls ``fn()`` makes."""
+    from pyspark import SparkContext
+
+    calls = []
+    real = SparkContext.broadcast
+
+    def counting(self, value):
+        calls.append(value)
+        return real(self, value)
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "broadcast", counting)
+        fn()
+    return len(calls)

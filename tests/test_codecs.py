@@ -7,6 +7,7 @@ null-heavy and escape-heavy byte streams.
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -209,3 +210,116 @@ def test_delta_property_roundtrip(xs):
     v = np.array(xs, dtype=np.int64)
     meta, bufs = delta_encode(v)
     assert np.array_equal(delta_decode(meta, bufs), v)
+
+
+# ---------------------------------------------------------------------------
+# FSST table pins
+# ---------------------------------------------------------------------------
+
+
+def _fsst_pin_samples() -> dict:
+    """Named training samples: seeded webpages columns cut or tiled to
+    64 KiB, and edge inputs (short, random, constant, top-byte and
+    NUL-bearing symbols)."""
+    from universal_parquet_exporter_spark.fixtures.webpages import generate_batch
+
+    ids = np.sort(np.random.default_rng(18).choice(1_000_000, 2_000, replace=False))
+    batch = generate_batch(ids)
+    out = {}
+    for name in ("url", "html", "text", "lang"):
+        vals = batch.column(name).cast(pa.binary()).to_pylist()
+        data = b"".join(v for v in vals if v)
+        out[name] = np.resize(np.frombuffer(data, dtype=np.uint8), 1 << 16).tobytes()
+    r = np.random.default_rng(7)
+    out["random64"] = r.integers(0, 256, 64, dtype=np.uint8).tobytes()
+    out["random100"] = r.integers(0, 256, 100, dtype=np.uint8).tobytes()
+    out["random64k"] = r.integers(0, 256, 1 << 16, dtype=np.uint8).tobytes()
+    out["zeros"] = bytes(4096)
+    out["ab"] = b"ab" * 2000
+    out["top_bytes"] = bytes(range(0xFA, 0x100)) * 700
+    out["nul_nul_a"] = b"\x00\x00a" * 1500
+    out["a_nul"] = b"a\x00" * 2000
+    out["mixed_nul"] = (b"\x00\x00a" * 3 + b"a\x00" * 5 + b"xyz") * 600
+    out["fox"] = TEXT
+    out["small_alphabet"] = r.choice(np.frombuffer(b"abcde \x00\xff", np.uint8), 30_000).tobytes()
+    return out
+
+
+def _fsst_digest(sample: bytes) -> str:
+    import hashlib
+
+    tbl = fsst_train(sample)
+    h = hashlib.sha256()
+    for part in (tbl.table_buffer(), bytes(tbl.to_meta()["lens"]), fsst_encode(sample, tbl)):
+        h.update(len(part).to_bytes(8, "little"))
+        h.update(part)
+    return h.hexdigest()[:32]
+
+
+# sha256 prefixes of (table bytes, symbol lengths, fsst_encode output) for
+# each sample of _fsst_pin_samples: training and encoding must stay byte
+# for byte what every committed payload was written with
+_FSST_PINS = {
+    "url": "84ed7b3764734f1ef0582fdce5b4413c",
+    "html": "26b85a6e754ccb4e53d4c48d398db2af",
+    "text": "0edf123e7c85718e0b634cb53495c8ad",
+    "lang": "694972fc720ad9b8dc8a5122dea8dea3",
+    "random64": "f7428846bf80ad1b7774940210a17227",
+    "random100": "96ed8ca2169b3cf055baca72d30d4acd",
+    "random64k": "0321eaa087472a39f3c72995ee905f62",
+    "zeros": "adcd8e7eb00a4cff62acc6e4c7524bd3",
+    "ab": "e2c3712713e7b2ce9eb2ea7ec2cef52d",
+    "top_bytes": "c6c985b62b5dd847e596c48a28ee149d",
+    "nul_nul_a": "9eecba4e6c3fe158860bf83197f740c5",
+    "a_nul": "93e8ea09ded92bcd2d46973ead7d72fb",
+    "mixed_nul": "ce4ddd02c0057a2850e0e20c6a98a9f9",
+    "fox": "da0120b06360cbd9bd0df1ee4bcaac66",
+    "small_alphabet": "6c2baed1e5732c390c93b6f60f22f2c6",
+}
+
+
+def _native_arrays_oracle(symbols: list[bytes]) -> tuple:
+    """The per-symbol construction of the C kernels' lookup arrays, kept
+    as the reference the vectorized ``FsstTable.native_arrays`` must
+    reproduce exactly."""
+    lens = np.array([len(s) for s in symbols], dtype=np.int32)
+    offs = np.zeros(len(symbols) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offs[1:])
+    flat = np.frombuffer(b"".join(symbols), dtype=np.uint8)
+    vals = np.zeros(max(len(symbols), 1), dtype=np.uint64)
+    masks = np.zeros(max(len(symbols), 1), dtype=np.uint64)
+    code1 = np.full(256, -1, dtype=np.int16)
+    by_first2: dict[int, list[int]] = {}
+    for code, sym in enumerate(symbols):
+        vals[code] = int.from_bytes(sym.ljust(8, b"\x00"), "little")
+        masks[code] = (1 << (8 * len(sym))) - 1 if len(sym) < 8 else 0xFFFFFFFFFFFFFFFF
+        if len(sym) == 1:
+            code1[sym[0]] = code
+        else:
+            by_first2.setdefault(sym[0] | (sym[1] << 8), []).append(code)
+    counts = np.zeros(65536, dtype=np.int32)
+    for w2, codes in by_first2.items():
+        codes.sort(key=lambda c: (-len(symbols[c]), c))
+        counts[w2] = len(codes)
+    first2_off = np.zeros(65537, dtype=np.int32)
+    np.cumsum(counts, out=first2_off[1:])
+    grouped2 = np.array([c for w2 in sorted(by_first2) for c in by_first2[w2]], dtype=np.uint8)
+    best2 = np.full(65536, -1, dtype=np.int16)
+    for w2, codes in by_first2.items():
+        best2[w2] = codes[0]
+    return flat, offs[:-1].copy(), lens, grouped2, first2_off, code1, vals, masks, best2
+
+
+def test_fsst_tables_are_pinned():
+    samples = _fsst_pin_samples()
+    assert {k: _fsst_digest(v) for k, v in samples.items()} == _FSST_PINS
+    for name, sample in samples.items():
+        tbl = fsst_train(sample)
+        want = _native_arrays_oracle(tbl.symbols)
+        got = FsstTable(list(tbl.symbols)).native_arrays()
+        assert len(got) == len(want), name
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype and np.array_equal(g, w), name
+        lens, vals = FsstTable(list(tbl.symbols)).decode_arrays()
+        assert lens.dtype == want[2].dtype and np.array_equal(lens, want[2]), name
+        assert vals.dtype == want[6].dtype and np.array_equal(vals, want[6]), name

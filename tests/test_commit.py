@@ -11,8 +11,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import _spark_jobs
-from universal_parquet_exporter_spark.encode import meta
+from tests.conftest import _broadcasts, _spark_jobs
+from universal_parquet_exporter_spark.encode import meta, scan
+from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     encode_job,
@@ -159,6 +160,30 @@ def test_parquet_job_runs_one_spark_job_fresh_and_on_resume(spark, webpages_parq
     out = str(tmp_path / "d")
     assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1
     assert _spark_jobs(spark, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1
+
+
+def test_each_job_makes_one_broadcast(spark, webpages, webpages_parquet, tmp_path, monkeypatch):
+    """Both encode jobs ship plan, resume set and work items, and a
+    Spark-branch decode and a compaction their planned partitions, in ONE
+    broadcast: a broadcast is unpickled once per worker, a task closure
+    once per task."""
+    out = str(tmp_path / "p")
+    assert _broadcasts(monkeypatch, lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == 1
+    frag = str(tmp_path / "f")
+    for i in range(2):
+        half = webpages.where(F.crc32(F.col("url")) % 2 == i)
+        cfg = _cfg(frag, skip_completed=False)
+        assert _broadcasts(monkeypatch, lambda: encode_job(spark, half, cfg)) == 1
+    monkeypatch.setattr(scan, "_DRIVER_DECODE_BYTES", 0)
+    ev: dict = {}
+    url = webpages.select("url").orderBy("url").first()[0]
+    dec = lambda: decode_dataset(spark, out, filters=[("url", "<=", url)], pruning_evidence=ev)
+    assert _broadcasts(monkeypatch, lambda: dec().count()) == 1
+    assert ev["branch"] == "spark"
+    rep: dict = {}
+    assert _broadcasts(monkeypatch, lambda: rep.update(compact(spark, frag, chunk_rows=32768))) == 1
+    assert rep["manifest_rewritten"]
+    assert decode_dataset(spark, frag).count() == N_ROWS
 
 
 def test_every_commit_file_is_synced_before_its_rename(tmp_path, monkeypatch):

@@ -232,3 +232,27 @@ def test_metadata_formats_have_one_owner():
                     hits = []
                 found += [f"{rel}:{node.lineno}: {h}" for h in hits]
     assert found == []
+
+
+def test_encode_plan_path_is_arrow_only():
+    """The planner and the encode job never touch pandas: neither module
+    imports it, and neither calls ``toPandas`` or ``to_pandas`` — both
+    planners hand ``plan_from_sample`` an Arrow table."""
+    import ast
+
+    pkg = os.path.join(REPO, "universal_parquet_exporter_spark")
+    found = []
+    for rel in ("plans/partitioning.py", "encode/pipeline.py"):
+        with open(os.path.join(pkg, rel), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                hits = [a.name for a in node.names if a.name.split(".")[0] == "pandas"]
+            elif isinstance(node, ast.ImportFrom):
+                hits = [node.module] if (node.module or "").split(".")[0] == "pandas" else []
+            elif isinstance(node, ast.Attribute):
+                hits = [node.attr] if node.attr in ("toPandas", "to_pandas") else []
+            else:
+                hits = []
+            found += [f"{rel}:{node.lineno}: {h}" for h in hits]
+    assert found == []

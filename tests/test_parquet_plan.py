@@ -16,6 +16,7 @@ from universal_parquet_exporter_spark.encode.pipeline import (
     _parquet_work_items,
     encode_job,
     encode_parquet_job,
+    load_or_build_plan,
     load_or_build_plan_parquet,
 )
 from universal_parquet_exporter_spark.fixtures.webpages import generate_batch
@@ -64,6 +65,40 @@ def _plan_json(out):
 def test_parquet_plan_json_is_pinned(spark, pages_dir, tmp_path):
     encode_parquet_job(spark, pages_dir, _cfg(tmp_path))
     assert _plan_json(tmp_path) == _PINNED_PLAN
+
+
+def _keyed_frame(spark):
+    """A seeded string-keyed frame: duplicate keys, one hot key heavy
+    enough to be salted, a non-ASCII key longer than KEY_WIDTH
+    characters, and a null key."""
+    rng = np.random.default_rng(18)
+    pool = [f"https://h{i % 7}.example/{i:05x}" for i in range(90)]
+    keys = list(rng.choice(pool, 400)) + ["https://hot.example/"] * 40
+    keys += ["https://例え.jp/" + "ü" * 60] * 20 + [None] * 20
+    sizes = rng.integers(0, 3000, len(keys))
+    sizes[400:] = 20_000
+    rows = [(k, "x" * int(n)) for k, n in zip(keys, sizes)]
+    return spark.createDataFrame(rows, "url string, text string")
+
+
+# plan.json the DataFrame planner builds for _keyed_frame: the whole
+# frame is its sample, the null key plans as 'None', and the long
+# non-ASCII key cuts at 48 characters
+_PINNED_FRAME_PLAN = (
+    '{"key_col": "url", "boundaries": ["None", '
+    '"https://h0.example/00038", "https://h1.example/00024", '
+    '"https://h1.example/00055", "https://h2.example/00041", '
+    '"https://h3.example/0001f", "https://h4.example/00004", '
+    '"https://h4.example/00043", "https://h5.example/0003d", '
+    '"https://h6.example/0003e", "https://hot.example/", '
+    '"https://\\u4f8b\\u3048.jp/' + "\\u00fc" * 34 + '"], '
+    '"salts": [1, 4, 1, 1, 1, 1, 1, 1, 1, 1, 1, 7, 4]}'
+)
+
+
+def test_dataframe_plan_json_is_pinned(spark, tmp_path):
+    load_or_build_plan(_keyed_frame(spark), _cfg(tmp_path, target_unit_bytes=64 << 10))
+    assert _plan_json(tmp_path) == _PINNED_FRAME_PLAN
 
 
 def test_parquet_plan_runs_no_spark_job(spark, pages_dir, tmp_path):

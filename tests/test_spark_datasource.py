@@ -86,6 +86,19 @@ def test_read_filtered_values_exact(spark, dataset):
     assert _rows(got) == _rows(exp)
 
 
+def test_one_reader_frame_serves_a_pushed_then_an_or_filter(spark, dataset):
+    """One ``upe_encoded`` DataFrame queried first with a pushable filter,
+    then with a disjunction, which Spark pushes nothing of.  A reader
+    that pruned by the first query's terms in the second would drop the
+    rows outside the prefix that the OR keeps."""
+    df = spark.read.format("upe_encoded").load(dataset)
+    first = F.col("doc_id").startswith("12")
+    second = (F.col("lang") == "de") | (F.col("doc_id") < "2")
+    for pred in (first, second):
+        assert _rows(df.where(pred)) == _rows(_docs(spark).where(pred))
+    assert len(_rows(df.where(second))) > len(_rows(df.where(first)))
+
+
 def test_read_works_with_pushdown_conf_off(spark, dataset):
     spark.conf.set(sds._PUSHDOWN_CONF, "false")
     try:

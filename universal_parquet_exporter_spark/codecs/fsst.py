@@ -9,7 +9,8 @@ String Compression", VLDB 2020).  This implementation is original:
 
 - **train** (:func:`fsst_train`): bounded iterative table construction on a
   ≤64 KiB sample — parse sample with current table, count symbol-pair
-  concatenations, keep the top-gain candidates (5 rounds).
+  concatenations, keep the top-gain candidates (5 rounds), vectorized
+  end to end, like the C kernels' lookup arrays (no per-symbol loop).
 - **encode** (:func:`fsst_encode`): per-position longest-match lengths are
   precomputed fully vectorized (8-byte little-endian windows +
   ``np.searchsorted`` per symbol length); the final greedy walk is a tight
@@ -42,6 +43,7 @@ TRAIN_ROUNDS = 5
 class FsstTable:
     symbols: list[bytes]  # index == code byte
     _arrays: tuple | None = field(default=None, repr=False, compare=False)
+    _dec: tuple | None = field(default=None, repr=False, compare=False)
 
     def to_meta(self) -> dict:
         return {"lens": [len(s) for s in self.symbols]}
@@ -49,48 +51,47 @@ class FsstTable:
     def table_buffer(self) -> bytes:
         return b"".join(self.symbols)
 
+    def decode_arrays(self):
+        """(sym_len i32, sym_val u64): each code's length and zero-padded
+        little-endian 8-byte image — all the C decoder reads."""
+        if self._dec is None:
+            n = len(self.symbols)
+            lens = np.fromiter(map(len, self.symbols), dtype=np.int32, count=n)
+            img = np.zeros((max(n, 1), 8), dtype=np.uint8)
+            img[:n][np.arange(8) < lens[:, None]] = np.frombuffer(self.table_buffer(), np.uint8)
+            self._dec = (lens, img.view("<u8").ravel())
+        return self._dec
+
     def native_arrays(self):
         """(sym_flat u8, sym_off i32, sym_len i32, grouped2 u8, first2_off
-        i32[65537], code1 i16[256], sym_val u64, sym_mask u64) — symbols of
-        length >= 2 grouped by their FIRST TWO bytes (length-desc within a
-        bucket) so the C scan only examines candidates that already match
-        two bytes; length-1 symbols resolve via the direct code1 table.
-        Little-endian 8-byte value/mask pairs give a one-load candidate
-        check."""
+        i32[65537], code1 i16[256], sym_val u64, sym_mask u64, best2 i16[65536])
+        — symbols of length >= 2 grouped by their FIRST TWO bytes (length-desc,
+        then code, in a bucket; best2 is the bucket's first) so the C scan only
+        examines candidates that already match two bytes; length-1 symbols
+        resolve via the direct code1 table.  Little-endian 8-byte value/mask
+        pairs give a one-load candidate check."""
         if self._arrays is None:
-            lens = np.array([len(s) for s in self.symbols], dtype=np.int32)
-            offs = np.zeros(len(self.symbols) + 1, dtype=np.int32)
+            lens, vals = self.decode_arrays()
+            offs = np.zeros(lens.size + 1, dtype=np.int32)
             np.cumsum(lens, out=offs[1:])
             flat = np.frombuffer(self.table_buffer(), dtype=np.uint8)
-            vals = np.zeros(max(len(self.symbols), 1), dtype=np.uint64)
-            masks = np.zeros(max(len(self.symbols), 1), dtype=np.uint64)
+            masks = _LEN_MASKS[np.pad(lens, (0, vals.size - lens.size))]
+            codes = np.arange(lens.size)
             code1 = np.full(256, -1, dtype=np.int16)
-            by_first2: dict[int, list[int]] = {}
-            for code, sym in enumerate(self.symbols):
-                vals[code] = int.from_bytes(sym.ljust(8, b"\x00"), "little")
-                masks[code] = (1 << (8 * len(sym))) - 1 if len(sym) < 8 else 0xFFFFFFFFFFFFFFFF
-                if len(sym) == 1:
-                    code1[sym[0]] = code
-                else:
-                    by_first2.setdefault(sym[0] | (sym[1] << 8), []).append(code)
-            grouped_list: list[int] = []
-            first2_off = np.zeros(65537, dtype=np.int32)
-            # cumulative bucket offsets without a 65536-iteration Python
-            # loop: only occupied buckets contribute
-            counts = np.zeros(65536, dtype=np.int32)
-            for w2, codes in by_first2.items():
-                codes.sort(key=lambda c: (-len(self.symbols[c]), c))
-                counts[w2] = len(codes)
-            np.cumsum(counts, out=first2_off[1:])
-            order = sorted(by_first2)
-            for w2 in order:
-                grouped_list.extend(by_first2[w2])
-            grouped2 = np.array(grouped_list, dtype=np.uint8)
-            # direct-mapped longest candidate per 2-byte prefix: the C
-            # scan's common case is one load here + an L1 verify
+            one = lens == 1
+            code1[flat[offs[:-1][one]]] = codes[one]
+            multi = codes[~one]
+            w2 = (vals[multi] & np.uint64(0xFFFF)).astype(np.int64)
+            order = np.lexsort((multi, -lens[multi], w2))
+            grouped2 = multi[order].astype(np.uint8)
+            # first2_off is a step function over the <= 255 occupied
+            # buckets: repeat each running count up to the next bucket
+            heads, counts = np.unique(w2, return_counts=True)
+            starts = np.zeros(heads.size + 1, dtype=np.int32)
+            np.cumsum(counts, out=starts[1:])
+            first2_off = np.repeat(starts, np.diff(heads, prepend=-1, append=65536))
             best2 = np.full(65536, -1, dtype=np.int16)
-            for w2, codes in by_first2.items():
-                best2[w2] = codes[0]
+            best2[heads] = grouped2[starts[:-1]]
             self._arrays = (
                 flat, offs[:-1].copy(), lens, grouped2, first2_off, code1, vals, masks, best2
             )
@@ -133,65 +134,71 @@ def _token_ids(sample: bytes, table: "FsstTable") -> np.ndarray:
 def fsst_train(sample: bytes) -> FsstTable:
     """Build a symbol table from a sample — bounded iterative construction
     (parse with current table, count adjacent-token concatenations, keep
-    the top-gain candidates), all counting vectorized with ``np.unique``."""
+    the top-gain candidates) on NumPy arrays: ``np.bincount`` counts, and
+    a candidate is its (little-endian 8-byte image, length), so dedup and
+    ranking are sorts — (−gain, big-endian image, length) is ``bytes`` order."""
     sample = sample[:SAMPLE_BYTES]
     if not sample:
         return FsstTable([])
-    table: list[bytes] = []
+    table = FsstTable([])
     for _ in range(TRAIN_ROUNDS):
-        def materialize(tid: int) -> bytes:
-            return table[tid] if tid < 256 else bytes([tid - 256])
-
-        # (ids < 256 always index into the current table; escapes are ≥ 256)
-
-        ids = _token_ids(sample, FsstTable(table))
+        # token id < 256: a code of the current table; >= 256: literal byte
+        ids = _token_ids(sample, table)
+        sym_len, sym_val = table.decode_arrays()
         lens = np.ones(512, dtype=np.int32)
-        for i, s in enumerate(table):
-            lens[i] = len(s)
+        lens[: sym_len.size] = sym_len
+        vals = np.zeros(512, dtype=np.uint64)
+        vals[256:] = np.arange(256)
+        vals[: sym_len.size] = sym_val[: sym_len.size]
 
-        uniq1, cnt1 = np.unique(ids, return_counts=True)
-        gain1 = cnt1 * np.maximum(lens[uniq1] - 1, 1)
+        cnt1 = np.bincount(ids, minlength=512)
+        uniq1 = np.flatnonzero(cnt1)
+        gain1 = cnt1[uniq1] * np.maximum(lens[uniq1] - 1, 1)
 
-        a, b = ids[:-1], ids[1:]
-        ok = (lens[a] + lens[b]) <= MAX_LEN
-        pkey = a[ok].astype(np.int64) * 512 + b[ok]
-        uniq2, cnt2 = np.unique(pkey, return_counts=True)
-        la = lens[(uniq2 // 512).astype(np.int32)]
-        lb = lens[(uniq2 % 512).astype(np.int32)]
-        gain2 = cnt2 * (la + lb - 1)
+        # adjacent pairs, counted over the k tokens that occur (rank
+        # order is id order, so pairs come out ordered as a * 512 + b)
+        k = uniq1.size
+        rank = np.zeros(512, dtype=np.int64)
+        rank[uniq1] = np.arange(k)
+        r, ln_ids = rank[ids], lens[ids]
+        ok = (ln_ids[:-1] + ln_ids[1:]) <= MAX_LEN
+        cnt2 = np.bincount(r[:-1][ok] * k + r[1:][ok], minlength=k * k)
+        pair = np.flatnonzero(cnt2)
+        uniq2 = uniq1[pair // k] * 512 + uniq1[pair % k]
+        gain2 = cnt2[pair] * (lens[uniq2 // 512] + lens[uniq2 % 512] - 1)
 
-        # take a generous top slice, materialize bytes, dedupe by max gain
-        order1 = np.argsort(-gain1)[: 2 * MAX_SYMBOLS]
-        order2 = np.argsort(-gain2)[: 2 * MAX_SYMBOLS]
-        gains: dict[bytes, int] = {}
-        for i in order1:
-            s = materialize(int(uniq1[i]))
-            g = int(gain1[i])
-            if g > gains.get(s, 0):
-                gains[s] = g
-        for i in order2:
-            key = int(uniq2[i])
-            s = materialize(key // 512) + materialize(key % 512)
-            g = int(gain2[i])
-            if g > gains.get(s, 0):
-                gains[s] = g
-        ranked = sorted(gains.items(), key=lambda kv: (-kv[1], kv[0]))
-        table = [s for s, g in ranked[:MAX_SYMBOLS] if g > 1]
-    return FsstTable(table)
+        # a generous top slice of each kind, as (image, length, gain)
+        o1 = np.argsort(-gain1)[: 2 * MAX_SYMBOLS]
+        o2 = np.argsort(-gain2)[: 2 * MAX_SYMBOLS]
+        t1 = uniq1[o1]
+        ta, tb = uniq2[o2] // 512, uniq2[o2] % 512
+        img = np.concatenate(
+            (vals[t1], vals[ta] | (vals[tb] << (np.uint64(8) * lens[ta].astype(np.uint64))))
+        )
+        ln = np.concatenate((lens[t1], lens[ta] + lens[tb]))
+        gain = np.concatenate((-gain1[o1], -gain2[o2]))
+        be = img.byteswap()
+        # one candidate per byte string, at its largest gain
+        o = np.lexsort((gain, ln, be))
+        first = np.ones(o.size, dtype=bool)
+        first[1:] = (be[o][1:] != be[o][:-1]) | (ln[o][1:] != ln[o][:-1])
+        o = o[first]
+        o = o[np.lexsort((ln[o], be[o], gain[o]))][:MAX_SYMBOLS]
+        o = o[gain[o] < -1]
+        keep = img[o].astype("<u8").view(np.uint8).reshape(-1, 8)
+        buf = keep[np.arange(8) < ln[o][:, None]].tobytes()
+        table = FsstTable.from_meta({"lens": ln[o].tolist()}, buf)
+    return table
 
 
 def _match_tables(table: FsstTable):
     """Per symbol length: (sorted uint64 prefix values, code array)."""
+    lens, vals = table.decode_arrays()
     by_len: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    tmp: dict[int, list[tuple[int, int]]] = {}
-    for code, sym in enumerate(table.symbols):
-        val = int.from_bytes(sym.ljust(8, b"\x00"), "little")
-        tmp.setdefault(len(sym), []).append((val, code))
-    for ln, pairs in tmp.items():
-        pairs.sort()
-        vals = np.array([p[0] for p in pairs], dtype=np.uint64)
-        codes = np.array([p[1] for p in pairs], dtype=np.uint8)
-        by_len[ln] = (vals, codes)
+    for ln in np.unique(lens).tolist():
+        codes = np.flatnonzero(lens == ln)
+        codes = codes[np.argsort(vals[codes], kind="stable")]
+        by_len[ln] = (vals[codes], codes.astype(np.uint8))
     return by_len
 
 
@@ -289,8 +296,7 @@ def fsst_decode_np(enc: bytes, table: FsstTable) -> np.ndarray:
         return np.empty(0, dtype=np.uint8)
     lib = get_native()
     if lib is not None:
-        arrays = table.native_arrays()
-        lens, vals = arrays[2], arrays[6]
+        lens, vals = table.decode_arrays()
         u8p = ctypes.POINTER(ctypes.c_uint8)
         i32p = ctypes.POINTER(ctypes.c_int32)
         u64p = ctypes.POINTER(ctypes.c_uint64)
@@ -325,8 +331,8 @@ def fsst_decode_np(enc: bytes, table: FsstTable) -> np.ndarray:
     symbol = ~(marker | literal)
 
     sym_lens = np.zeros(MAX_SYMBOLS + 1, dtype=np.int64)
-    for c, s in enumerate(table.symbols):
-        sym_lens[c] = len(s)
+    lens = table.decode_arrays()[0]
+    sym_lens[: lens.size] = lens
     sym_flat = np.frombuffer(table.table_buffer(), dtype=np.uint8)
     sym_offsets = np.zeros(MAX_SYMBOLS + 1, dtype=np.int64)
     np.cumsum(sym_lens[:-1], out=sym_offsets[1:])

@@ -16,7 +16,8 @@ repair.  :func:`compact` is the engine's analog:
    driver, with no Spark job.
 2. **Rewrite** those units in ONE Spark job: the driver packs the
    target slices by unit into one scan partition per task
-   (:func:`.scan._pack_chunk_partitions`) and broadcasts them; each task
+   (:func:`.scan._pack_chunk_partitions`) and broadcasts them with the
+   plan, the job's one broadcast; each task
    decodes its units' slices straight from storage through the scan
    module's read loop (payload bytes never enter the JVM, and there is
    no shuffle), re-encodes them as fresh
@@ -162,21 +163,24 @@ def compact(
     by_unit = slices.sort_by("unit")
     task = np.searchsorted(sorted_units, by_unit.column("unit").to_numpy()) * n_part // n_targets
     cuts = np.searchsorted(task, np.arange(n_part + 1))
+    # each task's partition travels with the plan JSON in the job's one
+    # broadcast (pickled once: every entry shares the same string)
+    plan_json = plan.to_json()
     parts = [
-        _pack_chunk_partitions(
+        (plan_json, _pack_chunk_partitions(
             by_unit.slice(s, e - s), payload_dir, None, union_fields, float("inf"), [], None
-        )[0]
+        )[0])
         for s, e in zip(cuts[:-1], cuts[1:])
     ]
-    bplan = spark.sparkContext.broadcast(plan.to_json())
     key_col = plan.key_col
 
-    def rewrite(part):
+    def rewrite(planned):
         """Feed the partition's decoded rows straight back through the
         encode stream — payload in and out via storage."""
+        plan_json, part = planned
         yield from _encode_stream(
             _read_padded(part),
-            EncodePlan.from_json(bplan.value),
+            EncodePlan.from_json(plan_json),
             np.array([], dtype=np.int64),
             key_col,
             payload_dir,

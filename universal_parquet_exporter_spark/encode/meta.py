@@ -39,6 +39,7 @@ import uuid
 import numpy as np
 import pyarrow as pa
 from pyarrow import fs as pafs
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..plans.partitioning import EncodePlan
 
@@ -122,7 +123,8 @@ FRAG_PA_SCHEMA = pa.schema(
         ("native", pa.bool_()),
     ]
 )
-FRAG_SCHEMA = _arrow_to_ddl(FRAG_PA_SCHEMA, None)  # the same fields as mapInArrow DDL
+# the same fields as the StructType mapInArrow takes (no DDL for the JVM to parse)
+FRAG_SCHEMA = from_arrow_schema(FRAG_PA_SCHEMA)
 MANIFEST_PA_SCHEMA = FRAG_PA_SCHEMA.append(pa.field("run_id", pa.string()))
 # one row per (unit, commit): the visibility key every reader semi-joins
 # manifest rows against, plus the unit's rolled-up fragment totals

@@ -284,9 +284,7 @@ def load_or_build_plan_parquet(
             sz += pc.coalesce(pc.binary_length(tbl.column(c)), 0).to_numpy()
         keys.append(tbl.column(key_col).take(rows).cast(pa.string()).combine_chunks())
         sizes.append(sz[rows])
-    sample = pa.table(
-        {"k": pa.chunked_array(keys, pa.string()), "sz": np.concatenate(sizes)}
-    ).to_pandas()
+    sample = pa.table({"k": pa.chunked_array(keys, pa.string()), "sz": np.concatenate(sizes)})
     plan = plan_from_sample(sample, total_rows, key_col, cfg.target_unit_bytes)
     _persist_plan(plan, cfg.output_dir)
     return plan
@@ -608,15 +606,14 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
     # against stragglers
     n_map = cfg.map_tasks or max(1, min(len(items), 4 * spark.sparkContext.defaultParallelism))
     n_map = min(n_map, len(items))
-    # work distribution: the items list is BROADCAST (torrent-shipped
-    # once per executor — ~50 MB for 100 TB of 64 MB row groups) and a
-    # JVM-native range source carries only slice ids, so the encode
-    # stage has NO python work-list relay in front of it
-    bitems = spark.sparkContext.broadcast(items)
+    # work distribution: the items list rides in the job's one broadcast
+    # (torrent-shipped and unpickled once per executor — ~50 MB for 100 TB
+    # of 64 MB row groups) and a JVM-native range source carries only
+    # slice ids, so the encode stage has NO python work-list relay in
+    # front of it
     n_items = len(items)
 
-    def read_slices(iterator):
-        all_items = bitems.value
+    def read_slices(iterator, all_items):
         for batch in iterator:
             for s in batch.column("id").to_pylist():
                 # slice s of n_map contiguous, equal slices
@@ -627,29 +624,31 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
                         yield from tbl.to_batches(max_chunksize=PARQUET_BATCH_ROWS)
 
     work = spark.range(n_map, numPartitions=n_map)
-    return _run_encode(spark, work, plan, plan_sec, cfg, read=read_slices)
+    return _run_encode(spark, work, plan, plan_sec, cfg, read=read_slices, items=items)
 
 
 def _run_encode(
-    spark, work, plan: EncodePlan, plan_sec: float, cfg: EncodeJobConfig, read=None, cluster_cols=()
+    spark, work, plan: EncodePlan, plan_sec: float, cfg: EncodeJobConfig, read=None, items=None,
+    cluster_cols=(),
 ) -> dict:
-    """The encode stage both jobs run: broadcast the plan and the units
-    a resume skips, encode each partition of ``work`` through
-    :func:`_encode_stream` (``read`` turns a task's input batches into
-    the rows to encode; None encodes the batches themselves), then
-    commit through :func:`_finish_encode`."""
+    """The encode stage both jobs run: ONE broadcast carries the plan,
+    the units a resume skips and the parquet work ``items``; each
+    partition of ``work`` is encoded through :func:`_encode_stream`
+    (``read(batches, items)`` turns a task's input batches into the rows
+    to encode; None encodes the batches themselves), then committed
+    through :func:`_finish_encode`."""
     done = completed_units(cfg.output_dir) if cfg.skip_completed else np.array([], dtype=np.int64)
-    bplan = spark.sparkContext.broadcast(plan.to_json())
-    bdone = spark.sparkContext.broadcast(done)
+    bjob = spark.sparkContext.broadcast((plan.to_json(), done, items))
     key_col = cfg.key_col
     payload_dir = os.path.join(cfg.output_dir, "payload")
     chunk_rows = cfg.chunk_rows
     max_buf = cfg.max_buffer_bytes
 
     def map_encode(iterator):
+        plan_json, done_local, items_local = bjob.value
         yield from _encode_stream(
-            iterator if read is None else read(iterator),
-            EncodePlan.from_json(bplan.value), bdone.value, key_col, payload_dir, chunk_rows,
+            iterator if read is None else read(iterator, items_local),
+            EncodePlan.from_json(plan_json), done_local, key_col, payload_dir, chunk_rows,
             max_buf, cluster_cols=cluster_cols,
         )
 

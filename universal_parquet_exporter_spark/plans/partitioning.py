@@ -87,7 +87,7 @@ def plan_encode(
     sample = (
         df.sample(fraction=fraction, seed=seed)
         .select(exact(key_col).alias("k"), size_expr.alias("sz"))
-        .toPandas()
+        .toArrow()
     )
     return plan_from_sample(sample, total_rows, key_col, target_bytes, hot_factor)
 
@@ -99,32 +99,35 @@ def plan_from_sample(
     target_bytes: int,
     hot_factor: float = 2.0,
 ) -> EncodePlan:
-    """Build an :class:`EncodePlan` from a (k, sz) pandas sample — the
-    shared tail of both samplers (DataFrame-scan and parquet-footer)."""
-    if len(sample) == 0:
+    """Build an :class:`EncodePlan` from a (k, sz) Arrow table sample —
+    the shared tail of both samplers (DataFrame-scan and parquet-footer)."""
+    import pyarrow.compute as pc
+
+    if sample.num_rows == 0:
         return EncodePlan(key_col, [], [1])
-    # plan on KEY_WIDTH-byte prefixes — the same comparison the assigner
-    # uses, so plan units and assigned units agree exactly
-    sample = sample.copy()
-    sample["k"] = sample["k"].astype(str).str.slice(0, KEY_WIDTH)
-    sample = sample.sort_values("k").reset_index(drop=True)
-    scale = total_rows / len(sample)
-    total_bytes_est = float(sample["sz"].sum()) * scale
+    # plan on KEY_WIDTH-character prefixes — the same comparison the
+    # assigner uses, so plan units and assigned units agree exactly; a
+    # null key plans as 'None'
+    k = pc.utf8_slice_codeunits(pc.fill_null(sample.column("k").cast("string"), "None"), 0, KEY_WIDTH)
+    order = pc.sort_indices(k)
+    keys = k.take(order).to_numpy(zero_copy_only=False)
+    sz = sample.column("sz").take(order).to_numpy()
+    scale = total_rows / sample.num_rows
+    total_bytes_est = float(sz.sum()) * scale
     n_buckets = max(1, int(np.ceil(total_bytes_est / target_bytes)))
 
-    cum = np.cumsum(sample["sz"].to_numpy(dtype=np.float64))
+    cum = np.cumsum(sz.astype(np.float64))
     total = cum[-1]
     # boundary i at cumulative fraction (i+1)/B
     cuts = [(i + 1) / n_buckets * total for i in range(n_buckets - 1)]
     idx = np.searchsorted(cum, cuts)
-    keys = sample["k"].to_numpy()
     boundaries = sorted(set(str(keys[min(i, len(keys) - 1)]) for i in idx))
     n_buckets = len(boundaries) + 1
 
     # estimate bytes per bucket from the sample to find hot ranges
     bucket_of = np.searchsorted(np.array(boundaries, dtype=object), keys, side="right")
     est = np.zeros(n_buckets)
-    np.add.at(est, bucket_of, sample["sz"].to_numpy(dtype=np.float64) * scale)
+    np.add.at(est, bucket_of, sz.astype(np.float64) * scale)
     salts = [max(1, int(np.ceil(b / (hot_factor * target_bytes)))) for b in est]
     return EncodePlan(key_col, boundaries, salts)
 
