@@ -6,6 +6,8 @@ with edge cases: empty chunks, single values, constant runs, extreme int64,
 null-heavy and escape-heavy byte streams.
 """
 
+import hashlib
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -246,8 +248,6 @@ def _fsst_pin_samples() -> dict:
 
 
 def _fsst_digest(sample: bytes) -> str:
-    import hashlib
-
     tbl = fsst_train(sample)
     h = hashlib.sha256()
     for part in (tbl.table_buffer(), bytes(tbl.to_meta()["lens"]), fsst_encode(sample, tbl)):

@@ -389,7 +389,8 @@ def _encode_stream(
                 col = probe.column(field.name).combine_chunks()
                 bufs_ = col.buffers()
                 if bufs_[2] is not None and bufs_[2].size >= 64:
-                    sample = bufs_[2].to_pybytes()[:65536]
+                    # copy only the sample, never the whole column
+                    sample = memoryview(bufs_[2])[:65536].tobytes()
                     from ..codecs.fsst import fsst_train
 
                     fsst_tables[field.name] = fsst_train(sample)
@@ -607,10 +608,10 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
     n_map = cfg.map_tasks or max(1, min(len(items), 4 * spark.sparkContext.defaultParallelism))
     n_map = min(n_map, len(items))
     # work distribution: the items list rides in the job's one broadcast
-    # (torrent-shipped and unpickled once per executor — ~50 MB for 100 TB
-    # of 64 MB row groups) and a JVM-native range source carries only
-    # slice ids, so the encode stage has NO python work-list relay in
-    # front of it
+    # (torrent-shipped once per executor and unpickled once per Python
+    # worker, never per task — ~50 MB for 100 TB of 64 MB row groups) and
+    # a JVM-native range source carries only slice ids, so the encode
+    # stage has NO python work-list relay in front of it
     n_items = len(items)
 
     def read_slices(iterator, all_items):
