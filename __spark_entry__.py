@@ -635,8 +635,8 @@ def oracle_sql() -> dict[str, str]:
         "compact_roundtrip": (
             "SELECT doc_id, text, lang, source, n_chars FROM documents"
         ),
-        # Spark DataSource read path (pushFilters unit/zone-map pruning
-        # + Spark residual) == the same predicates as plain SQL
+        # Spark DataSource read path (every chunk, filtered by Spark)
+        # == the same predicates as plain SQL
         "source_read_filtered": (
             "SELECT doc_id, text, lang, n_chars FROM documents "
             "WHERE CAST(doc_id AS VARCHAR) >= '10' AND CAST(doc_id AS VARCHAR) <= '24' "

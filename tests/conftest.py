@@ -50,3 +50,14 @@ def _broadcasts(monkeypatch, fn) -> int:
         m.setattr(SparkContext, "broadcast", counting)
         fn()
     return len(calls)
+
+
+def _kept_chunks(spark, out: str, terms) -> list:
+    """Chunks the scan planner keeps for the conjunction ``terms``, each
+    value read as ``decode_dataset`` reads it."""
+    from universal_parquet_exporter_spark.encode import meta, scan
+
+    man = meta._committed_manifest(out)
+    probe = meta._probe_chunk_schema(out, man)
+    parts = scan.plan_partitions(out, man, probe, None, scan._pruning_groups(spark, [terms], probe))
+    return [ch for p in parts for ch in p.chunks]

@@ -216,32 +216,29 @@ def test_pre_nullcount_datasets_never_prune_on_nulls(spark, outdir):
 
 
 # ---------------------------------------------------------------------------
-# DataSource reader: IsNull / IsNotNull pushdown
+# is_null / not_null pruning, and the DataSource reader's null filters
 # ---------------------------------------------------------------------------
 
 
 def test_datasource_null_pushdown_prunes(spark, outdir):
-    from pyspark.sql.datasource import EqualTo, IsNotNull, IsNull
-
+    from tests.conftest import _kept_chunks
     from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
     df = _null_half_df(spark)
     _encode(spark, df, outdir)
     sds.register(spark)
 
-    def kept(filters):
-        r = sds._EncodedPushdownReader({"path": outdir})
-        r.pushFilters(filters)
-        return sum(len(p.chunks) for p in r.partitions())
+    def kept(terms):
+        return len(_kept_chunks(spark, outdir, terms))
 
     total = kept([])
-    n_notnull = kept([IsNotNull(("opt",))])
-    n_isnull = kept([IsNull(("opt",))])
+    n_notnull = kept([("opt", "not_null", None)])
+    n_isnull = kept([("opt", "is_null", None)])
     assert 0 < n_notnull < total
     assert 0 < n_isnull < total
-    # Catalyst pushes IsNotNull beside the comparison: equality on `opt`
-    # prunes the all-null chunks through BOTH paths
-    n_eq = kept([IsNotNull(("opt",)), EqualTo(("opt",), "v450")])
+    # equality on `opt` prunes the all-null chunks not_null prunes, and
+    # the chunks whose values miss it
+    n_eq = kept([("opt", "not_null", None), ("opt", "=", "v450")])
     assert n_eq < n_notnull
 
     got = spark.read.format("upe_encoded").load(outdir).where("opt IS NOT NULL")

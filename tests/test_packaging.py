@@ -256,3 +256,26 @@ def test_encode_plan_path_is_arrow_only():
                 hits = []
             found += [f"{rel}:{node.lineno}: {h}" for h in hits]
     assert found == []
+
+
+def test_sources_plan_without_a_session_or_pushed_filters():
+    """Nothing under ``sources/`` calls ``getActiveSession`` or defines
+    ``pushFilters``: a source's reader runs in Spark's planning worker,
+    where no session exists, and Spark 4.1.2 reuses one query's pushed
+    read plan for every later query on the same DataFrame."""
+    import ast
+
+    src = os.path.join(REPO, "universal_parquet_exporter_spark", "sources")
+    found = []
+    for name in sorted(os.listdir(src)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(src, name), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            called = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+            if called == "getActiveSession":
+                found.append(f"{name}:{node.lineno}: getActiveSession")
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.name == "pushFilters":
+                found.append(f"{name}:{node.lineno}: def pushFilters")
+    assert found == []

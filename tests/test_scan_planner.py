@@ -1,8 +1,9 @@
 """The one scan planner (:mod:`universal_parquet_exporter_spark.encode.scan`):
 ``decode_dataset`` plans on the driver and runs as one Spark job, the
 planner's manifest cache follows commits exactly, and both scan paths —
-``decode_dataset`` and the ``upe_encoded`` reader — plan the same chunks
-and return the rows a plain Spark filter of the source returns."""
+``decode_dataset``, which prunes, and the ``upe_encoded`` reader, which
+Spark filters — return the rows a plain Spark filter of the source
+returns."""
 
 import dataclasses
 import json
@@ -14,22 +15,8 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
-)
 from tests.conftest import _spark_jobs
-from universal_parquet_exporter_spark.encode import meta, scan, stats
+from universal_parquet_exporter_spark.encode import meta, scan
 from universal_parquet_exporter_spark.encode.meta import _load_plan, manifest_dir
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
@@ -147,34 +134,6 @@ def test_manifest_cache_sees_a_commit_behind_restored_directory_mtimes(spark, tm
 # ---------------------------------------------------------------------------
 # differential: decode_dataset vs the upe_encoded reader vs a Spark filter
 # ---------------------------------------------------------------------------
-
-_CATALYST = {
-    "<": LessThan,
-    "<=": LessThanOrEqual,
-    ">": GreaterThan,
-    ">=": GreaterThanOrEqual,
-    "=": EqualTo,
-    "==": EqualTo,
-    "in": In,
-    "startswith": StringStartsWith,
-    "endswith": StringEndsWith,
-    "contains": StringContains,
-}
-
-
-def _catalyst(c, op, v):
-    """The filter Catalyst pushes to the reader for one term."""
-    a = (c,)
-    if op in ("!=", "<>"):
-        return Not(EqualTo(a, v))
-    if op == "not_in":
-        return Not(In(a, tuple(v)))
-    if op == "is_null":
-        return IsNull(a)
-    if op == "not_null":
-        return IsNotNull(a)
-    return _CATALYST[op](a, tuple(v) if op == "in" else v)
-
 
 def _column(c, op, v):
     col = F.col("`" + c + "`")
@@ -296,25 +255,15 @@ def test_both_scan_paths_match_a_spark_filter_of_the_source(spark, tmp_path, mon
 
     monkeypatch.setattr(scan, "plan_partitions", recording_plan)
     reader_df = spark.read.format("upe_encoded").load(out)
-    all_chunks = _planned_chunks(sds._EncodedPushdownReader({"path": out}).partitions())
+    # the reader plans every chunk; Spark filters its rows
+    all_chunks = _planned_chunks(sds._EncodedReader({"path": out}).partitions())
     pruned = 0
     for filters in single + dnf:
-        groups = filters if isinstance(filters[0], list) else [filters]
-        cond = _condition(groups)
+        cond = _condition(filters if isinstance(filters[0], list) else [filters])
         want = _sorted_rows(src.where(cond).toArrow())
         assert _sorted_rows(decode_dataset(spark, out, filters=filters).toArrow()) == want, filters
         assert _sorted_rows(reader_df.where(cond).toArrow()) == want, filters
-
-        reader = sds._EncodedPushdownReader({"path": out})
-        if len(groups) == 1:
-            reader.pushFilters([_catalyst(*t) for t in groups[0]])
-        # Catalyst pushes no disjunction to a Python source: the reader
-        # plans every chunk for a DNF filter, a superset of the decode's
-        reader_chunks = _planned_chunks(reader.partitions())
-        if len(groups) == 1:
-            assert planned[-1] == reader_chunks, filters
-        else:
-            assert set(planned[-1]) <= set(reader_chunks) == set(all_chunks), filters
+        assert set(planned[-1]) <= set(all_chunks), filters
         pruned += len(planned[-1]) < len(all_chunks)
     # the filters exercise pruning, not only the residual
     assert pruned >= len(single) // 2
@@ -352,25 +301,22 @@ def test_numbers_spark_compares_in_double_keep_their_rows(spark, tmp_path, monke
     ]
 
 
-def test_normalized_terms_drop_what_cannot_prune():
+def test_normalized_terms_drop_what_cannot_prune(spark):
     import pyarrow as pa
 
     schema = pa.schema(
         [("ts", pa.timestamp("us")), ("d", pa.date32()), ("x", pa.float64()), ("p", pa.decimal128(38, 4))]
     )
-    got = stats._normalize_terms(
-        [
-            ("ts", "in", ["2024-01-01"]),  # strings don't convert to epoch-µs
-            ("d", "=", datetime(2024, 1, 1)),  # a datetime is not a date bound
-            ("x", "<", float("nan")),  # NaN has no place in the bounds' order
-            ("absent", "=", 1),
-            ("p", "==", 1.5),
-            ("x", "<>", 2.0),
-            ("d", ">=", date(2024, 1, 2)),
-        ],
-        schema,
-    )
-    assert got == [("p", "=", Decimal("1.5")), ("x", "!=", 2.0), ("d", ">=", 19724)]
+    got = scan._pruning_groups(spark, [[
+        ("ts", "in", ["2024-01-01"]),  # strings don't convert to epoch-µs
+        ("d", "=", datetime(2024, 1, 1)),  # a datetime is not a date bound
+        ("x", "<", float("nan")),  # NaN has no place in the bounds' order
+        ("absent", "=", 1),
+        ("p", "==", Decimal("1.5")),
+        ("x", "<>", 2.0),
+        ("d", ">=", date(2024, 1, 2)),
+    ]], schema)
+    assert got == [[("p", "=", Decimal("1.5")), ("x", "!=", 2.0), ("d", ">=", 19724)]]
 
 
 def test_datetime_filters_read_as_spark_reads_them(spark, tmp_path, monkeypatch):

@@ -271,7 +271,7 @@ def test_every_filter_op_has_a_prefilter_and_a_residual_case():
     verdict rule, whose tests are pre-filter cases too."""
     assert set(scan._SPARK_OPS) == set(scan._FILTER_OPS)
     for op in scan._FILTER_OPS:
-        norm = stats._OP_ALIASES.get(op, op)
+        norm = scan._OP_ALIASES.get(op, op)
         assert norm in scan._ARROW_OPS, op
         tests = list(scan._ZONE_OPS[norm])
         assert tests, op

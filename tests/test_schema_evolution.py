@@ -1,15 +1,16 @@
 """Additive schema evolution: appends may add or omit columns; decode
 resolves the union-by-name schema from meta-only probes, null-padding
 the generations that predate a column — and type flips fail loudly, at
-write time through the guarded sink and at read time through the union
-probe."""
+write time through the append guard every writer and encode job runs,
+and at read time through the union probe."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _spark_jobs
+from universal_parquet_exporter_spark.encode import pipeline
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.meta import (
     _committed_manifest,
@@ -19,6 +20,7 @@ from universal_parquet_exporter_spark.encode.meta import (
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     encode_job,
+    encode_parquet_job,
     load_or_build_plan,
 )
 from universal_parquet_exporter_spark.encode.scan import decode_dataset
@@ -117,9 +119,31 @@ def test_writer_rejects_type_flip(spark, evolved):
         bad.write.format("upe_encoded").option("key_col", "doc_id").mode("append").save(out)
 
 
-def test_decode_fails_loudly_on_conflicting_generations(spark, tmp_path):
-    """The unguarded function API can write a type flip; the union probe
-    must refuse to decode it rather than silently cast."""
+def test_encode_jobs_reject_a_type_flip_before_any_spark_job(spark, tmp_path):
+    """Both encode jobs run the append-schema guard before they plan: a
+    type flip on a committed column raises with no Spark job run and
+    nothing committed, so the dataset still decodes its old rows."""
+    out = str(tmp_path / "jobs")
+    df = _docs(spark).limit(20)
+    cfg = EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",), skip_completed=False)
+    encode_job(spark, df, cfg)
+    flipped = df.withColumn("n_chars", F.col("n_chars").cast("string"))
+    src = str(tmp_path / "flipped")
+    flipped.write.parquet(src)
+
+    def rejected(run):
+        with pytest.raises(ValueError, match="type conflict appending column 'n_chars'"):
+            run()
+
+    assert _spark_jobs(spark, lambda: rejected(lambda: encode_job(spark, flipped, cfg))) == 0
+    assert _spark_jobs(spark, lambda: rejected(lambda: encode_parquet_job(spark, src, cfg))) == 0
+    assert _rows(decode_dataset(spark, out)) == _rows(df)
+
+
+def test_decode_fails_loudly_on_conflicting_generations(spark, tmp_path, monkeypatch):
+    """A type flip written past the append guard (as by a writer that
+    predates it) must make the union probe refuse to decode rather than
+    silently cast."""
     out = str(tmp_path / "conflict")
     df = _docs(spark).limit(20)
     encode_job(
@@ -128,6 +152,7 @@ def test_decode_fails_loudly_on_conflicting_generations(spark, tmp_path):
         EncodeJobConfig(output_dir=out, key_col="doc_id", size_cols=("text",)),
     )
     flipped = df.withColumn("n_chars", F.col("n_chars").cast("double"))
+    monkeypatch.setattr(pipeline, "_check_append_schema", lambda *_args: None)
     encode_job(
         spark,
         flipped,

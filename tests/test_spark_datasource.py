@@ -1,7 +1,8 @@
-"""The ``upe_encoded`` Spark Python DataSource: read parity, filter
-pushdown (with pruning EVIDENCE, not just unchanged answers), column
-pruning, the write commit protocol (append / atomic overwrite / abort),
-and the streaming sink's replayed-epoch idempotency."""
+"""The ``upe_encoded`` Spark Python DataSource: read parity with Spark
+filtering the rows, the scan planner's pruning of the same terms (with
+pruning EVIDENCE, not just unchanged answers), column pruning, the write
+commit protocol (append / atomic overwrite / abort), and the streaming
+sink's replayed-epoch idempotency."""
 
 import glob
 import os
@@ -11,15 +12,8 @@ from decimal import Decimal
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    EqualTo,
-    GreaterThanOrEqual,
-    In,
-    LessThanOrEqual,
-    StringStartsWith,
-)
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _kept_chunks
 from universal_parquet_exporter_spark.encode import meta
 from universal_parquet_exporter_spark.encode.meta import manifest_dir
 from universal_parquet_exporter_spark.encode.pipeline import (
@@ -27,8 +21,7 @@ from universal_parquet_exporter_spark.encode.pipeline import (
     encode_job,
     load_or_build_plan,
 )
-from universal_parquet_exporter_spark.encode.scan import _chunk_keep, decode_dataset
-from universal_parquet_exporter_spark.encode.stats import _normalize_terms
+from universal_parquet_exporter_spark.encode.scan import _chunk_keep, _pruning_groups, decode_dataset
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -100,49 +93,44 @@ def test_one_reader_frame_serves_a_pushed_then_an_or_filter(spark, dataset):
 
 
 def test_read_works_with_pushdown_conf_off(spark, dataset):
-    spark.conf.set(sds._PUSHDOWN_CONF, "false")
+    """The reader takes no pushed filters, so a filtered read returns the
+    source's rows with Python filter pushdown on and off."""
+    conf = "spark.sql.python.filterPushdown.enabled"
+    want = _rows(_docs(spark).where("doc_id >= '45'"))
     try:
-        got = spark.read.format("upe_encoded").load(dataset).where("doc_id >= '45'")
-        assert _rows(got) == _rows(_docs(spark).where("doc_id >= '45'"))
+        for enabled in ("true", "false"):
+            spark.conf.set(conf, enabled)
+            got = spark.read.format("upe_encoded").load(dataset).where("doc_id >= '45'")
+            assert _rows(got) == want, enabled
     finally:
-        spark.conf.set(sds._PUSHDOWN_CONF, "true")
+        spark.conf.unset(conf)
 
 
-def _planned_chunks(dataset, filters):
-    """Chunks the reader would scan under the given Catalyst filters."""
-    reader = sds._EncodedPushdownReader({"path": dataset})
-    reader.pushFilters(filters)
-    return [ch for p in reader.partitions() for ch in p.chunks]
-
-
-def test_pushdown_prunes_chunks(dataset):
+def test_pushdown_prunes_chunks(spark, dataset):
     """Pruning EVIDENCE: a selective key predicate plans strictly fewer
     chunks than the full scan (key-range unit pruning + zone maps), and
     an impossible predicate plans zero."""
-    full = _planned_chunks(dataset, [])
-    narrow = _planned_chunks(
-        dataset,
-        [GreaterThanOrEqual(("doc_id",), "10"), LessThanOrEqual(("doc_id",), "11")],
-    )
-    nothing = _planned_chunks(dataset, [GreaterThanOrEqual(("doc_id",), "\x7f\x7f")])
+    full = _kept_chunks(spark, dataset, [])
+    narrow = _kept_chunks(spark, dataset, [("doc_id", ">=", "10"), ("doc_id", "<=", "11")])
+    nothing = _kept_chunks(spark, dataset, [("doc_id", ">=", "\x7f\x7f")])
     assert len(full) > 0
     assert 0 < len(narrow) < len(full)
     assert len(nothing) == 0
 
 
-def test_pushdown_zone_map_on_non_key_column(dataset):
+def test_pushdown_zone_map_on_non_key_column(spark, dataset):
     """n_chars is stats-covered but not the key: its bounds prune chunks
     without any unit-range help."""
-    full = _planned_chunks(dataset, [])
-    hi = _planned_chunks(dataset, [GreaterThanOrEqual(("n_chars",), 10**9)])
+    full = _kept_chunks(spark, dataset, [])
+    hi = _kept_chunks(spark, dataset, [("n_chars", ">=", 10**9)])
     assert len(hi) < len(full)
 
 
 def test_pushdown_in_list_on_key(spark, dataset):
     """IN-lists on the key prune to the union of point ranges, and the
     answer stays exact under Spark's residual."""
-    full = _planned_chunks(dataset, [])
-    planned = _planned_chunks(dataset, [In(("doc_id",), ("10", "11"))])
+    full = _kept_chunks(spark, dataset, [])
+    planned = _kept_chunks(spark, dataset, [("doc_id", "in", ("10", "11"))])
     assert 0 < len(planned) < len(full)
     got = (
         spark.read.format("upe_encoded")
@@ -155,14 +143,14 @@ def test_pushdown_in_list_on_key(spark, dataset):
     )
 
 
-def test_pushdown_startswith_and_equality_terms(dataset):
-    got = _planned_chunks(dataset, [StringStartsWith(("doc_id",), "1")])
-    assert 0 < len(got) <= len(_planned_chunks(dataset, []))
-    eq = _planned_chunks(dataset, [EqualTo(("doc_id",), "10")])
+def test_pushdown_startswith_and_equality_terms(spark, dataset):
+    got = _kept_chunks(spark, dataset, [("doc_id", "startswith", "1")])
+    assert 0 < len(got) <= len(_kept_chunks(spark, dataset, []))
+    eq = _kept_chunks(spark, dataset, [("doc_id", "=", "10")])
     assert 0 < len(eq) <= len(got)
 
 
-def test_chunk_keep_algebra():
+def test_chunk_keep_algebra(spark):
     """Unit coverage of the conservative zone-map verdicts."""
     schema = pa.schema([
         ("n", pa.int64()), ("s", pa.string()), ("x", pa.float64()), ("absent", pa.int64()),
@@ -171,7 +159,7 @@ def test_chunk_keep_algebra():
     stats = '{"n": [10, 20], "s": ["b", "m"]}'
 
     def keep(stats_json, terms):
-        groups = [_normalize_terms(terms, schema)]
+        groups = _pruning_groups(spark, [terms], schema)
         return bool(_chunk_keep(pa.array([stats_json], pa.string()), groups, schema)[0])
 
     assert keep(stats, [("n", ">=", 20)])
@@ -231,12 +219,12 @@ def test_chunk_keep_algebra():
     assert keep('{"n": [1, 3], "_dv": {"n": [1, "z"]}}', [("n", "=", 2)])
 
     # groups: a chunk is pruned only when every group disqualifies it
-    groups = [_normalize_terms(g, schema) for g in ([("n", "<", 5)], [("s", "=", "c")])]
+    groups = _pruning_groups(spark, [[("n", "<", 5)], [("s", "=", "c")]], schema)
     got = _chunk_keep(pa.array([stats, '{"n": [1, 3]}', '{"n": [30, 40], "s": ["x", "z"]}']), groups, schema)
     assert got.tolist() == [True, True, False]
     # a garbled map keeps its own chunk only; the others keep their verdicts
     many = pa.array([stats, "{not json", '{"n": [30, 40]}', "{} {}", '{"n": ["a", "b"]}', '{"n": [1, 2]}'])
-    got = _chunk_keep(many, [_normalize_terms([("n", "<", 5)], schema)], schema)
+    got = _chunk_keep(many, _pruning_groups(spark, [[("n", "<", 5)]], schema), schema)
     assert got.tolist() == [False, True, False, True, True, True]
 
 

@@ -395,8 +395,7 @@ def test_dv_equality_prunes_where_bounds_cannot(spark, outdir):
 
 
 def test_dv_pruning_through_datasource_reader(spark, outdir):
-    from pyspark.sql.datasource import EqualTo
-
+    from tests.conftest import _kept_chunks
     from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
     df = _dv_df(spark)
@@ -407,13 +406,11 @@ def test_dv_pruning_through_datasource_reader(spark, outdir):
     encode_job(spark, df, cfg)
     sds.register(spark)
 
-    def kept(filters):
-        r = sds._EncodedPushdownReader({"path": outdir})
-        r.pushFilters(filters)
-        return sum(len(p.chunks) for p in r.partitions())
+    def kept(terms):
+        return len(_kept_chunks(spark, outdir, terms))
 
-    n_absent = kept([EqualTo(("cat",), "es")])
-    n_present = kept([EqualTo(("cat",), "de")])
+    n_absent = kept([("cat", "=", "es")])
+    n_present = kept([("cat", "=", "de")])
     assert n_absent == 0 < n_present
     got = (
         spark.read.format("upe_encoded").load(outdir).where("cat = 'de'").count()
@@ -596,10 +593,9 @@ def test_ne_null_semantics_and_all_null_chunks(spark, outdir):
 
 
 def test_ne_pushdown_through_datasource_reader(spark, outdir):
-    """Catalyst pushes `cat != 'en'` as Not(EqualTo) and NOT IN as
-    Not(In); the reader prunes the all-'en' chunks and stays exact."""
-    from pyspark.sql.datasource import EqualTo, In, Not
-
+    """`cat != 'en'` and NOT IN prune the all-'en' chunks through the
+    distinct-value sets, and the reader's answers stay exact."""
+    from tests.conftest import _kept_chunks
     from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
     df = _ne_df(spark)
@@ -610,14 +606,12 @@ def test_ne_pushdown_through_datasource_reader(spark, outdir):
     encode_job(spark, df, cfg)
     sds.register(spark)
 
-    def kept(filters):
-        r = sds._EncodedPushdownReader({"path": outdir})
-        r.pushFilters(filters)
-        return sum(len(p.chunks) for p in r.partitions())
+    def kept(terms):
+        return len(_kept_chunks(spark, outdir, terms))
 
     full = kept([])
-    ne = kept([Not(EqualTo(("cat",), "en"))])
-    nin = kept([Not(In(("cat",), ("en", "de", "fr", "zh")))])
+    ne = kept([("cat", "!=", "en")])
+    nin = kept([("cat", "not_in", ("en", "de", "fr", "zh"))])
     assert 0 < ne < full
     assert nin == 0
     got = (
@@ -790,9 +784,8 @@ def test_endswith_contains_prune_on_distinct_sets(spark, outdir):
 
 
 def test_endswith_contains_nullsafe_pushdown_through_reader(spark, outdir):
-    """Catalyst pushes StringEndsWith/StringContains/EqualNullSafe to the
-    Python DataSource; the reader maps them to the same distinct-set /
-    equality pruning terms, and results equal the plain predicates."""
+    """LIKE suffix and substring patterns and ``<=>`` read through the
+    Python DataSource equal the plain predicates."""
     from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
     sds.register(spark)

@@ -697,3 +697,29 @@ def _probe_chunk_schema(output_dir: str, man: pa.Table) -> pa.Schema:
                 fields.append(f)
                 seen[f.name] = d
     return pa.schema(fields)
+
+
+def _check_append_schema(output_dir: str, schema: pa.Schema) -> None:
+    """Additive schema evolution, type-stable: an append may ADD columns
+    (older rows null-pad on decode) or OMIT columns (new rows null-pad),
+    but a column shared with any existing chunk generation must keep its
+    type — a silent type flip would poison the union probe for every
+    future reader, so it fails here, before anything is written.  Naive
+    (``TIMESTAMP_NTZ``) and zone-aware timestamps count as two types.
+    Every append runs it: both ``upe_encoded`` writers and both encode
+    jobs, over the Arrow schema of the rows they will write."""
+    man = _committed_manifest(output_dir)
+    if man.num_rows == 0:
+        return
+    union = _probe_chunk_schema(output_dir, man)
+    for f in schema:
+        if f.name not in union.names:
+            continue
+        have = _ddl_type(union.field(f.name).type, ntz=True)
+        got = _ddl_type(f.type, ntz=True)
+        if got != have:
+            raise ValueError(
+                f"type conflict appending column {f.name!r}: dataset has "
+                f"{have}, append writes {got} (schema evolution is additive "
+                "only — cast upstream or use a new column name)"
+            )

@@ -40,6 +40,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..plans.partitioning import EncodePlan, assign_units_arrow, plan_encode
 from .container import serialize_chunk
@@ -47,6 +48,7 @@ from .meta import (
     FRAG_PA_SCHEMA,
     FRAG_SCHEMA,
     _TaskPayloadWriter,
+    _check_append_schema,
     _load_plan,
     _ok_lineage,
     _payload_fs,
@@ -319,6 +321,25 @@ def _cluster_order(units: np.ndarray, batch: pa.RecordBatch, cluster_cols: tuple
     ).to_numpy()
 
 
+def _head_value_bytes(col: pa.ChunkedArray, limit: int) -> bytes:
+    """The first ``limit`` value bytes of a string or binary column, the
+    bytes ``combine_chunks()`` would start its data buffer with: each
+    chunk's values from its own first offset, so a sliced chunk starts at
+    its slice and only the sample is copied."""
+    parts, need = [], limit
+    for arr in col.chunks:
+        if need <= 0:
+            break
+        _validity, offsets, data = arr.buffers()
+        if data is None or not len(arr):
+            continue
+        wide = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+        lo, hi = np.frombuffer(offsets, np.int64 if wide else np.int32)[[arr.offset, arr.offset + len(arr)]]
+        parts.append(memoryview(data)[int(lo) : int(min(hi, lo + need))])
+        need -= len(parts[-1])
+    return b"".join(parts)
+
+
 def _encode_stream(
     iterator,
     plan_local: EncodePlan,
@@ -386,11 +407,8 @@ def _encode_stream(
         for field in probe.schema:
             if pa.types.is_string(field.type) or pa.types.is_binary(field.type) or \
                pa.types.is_large_string(field.type) or pa.types.is_large_binary(field.type):
-                col = probe.column(field.name).combine_chunks()
-                bufs_ = col.buffers()
-                if bufs_[2] is not None and bufs_[2].size >= 64:
-                    # copy only the sample, never the whole column
-                    sample = memoryview(bufs_[2])[:65536].tobytes()
+                sample = _head_value_bytes(probe.column(field.name), 65536)
+                if len(sample) >= 64:
                     from ..codecs.fsst import fsst_train
 
                     fsst_tables[field.name] = fsst_train(sample)
@@ -555,6 +573,7 @@ def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
     missing = [c for c in cfg.cluster_by if c not in df.columns]
     if missing:
         raise ValueError(f"cluster_by columns not in input: {missing}")
+    _check_append_schema(cfg.output_dir, to_arrow_schema(df.schema))
     t_plan = time.perf_counter()
     plan = load_or_build_plan(df, cfg)
     plan_sec = time.perf_counter() - t_plan
@@ -596,6 +615,12 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
         items, total_rows = _parquet_work_items(input_dir)
     if not items:
         raise ValueError(f"no parquet input in {input_dir}")
+    with _parquet_file(items[0][0]) as first:
+        # Arrow reads Spark's INT96 instants as naive timestamps, which
+        # the guard would take for TIMESTAMP_NTZ: it skips them, and
+        # decode's per-chunk type check still rejects a non-timestamp
+        int96 = {c.path for c in first.schema if c.physical_type == "INT96"}
+        _check_append_schema(cfg.output_dir, pa.schema([f for f in first.schema_arrow if f.name not in int96]))
     t_plan = time.perf_counter()
     plan = load_or_build_plan_parquet(items, total_rows, cfg)
     plan_sec = time.perf_counter() - t_plan

@@ -5,7 +5,9 @@ through the ``upe_encoded`` Spark source
 (:mod:`..sources.spark_datasource`).  Both plan here, with pyarrow and no
 SparkSession — the reader inside Spark's planning worker, exactly like a
 JVM DSv2 ``ScanBuilder``, and ``decode_dataset`` on the driver before its
-one Spark job starts:
+one Spark job starts.  Only ``decode_dataset`` passes filters, so only
+its scans prune (steps 3 and 4) and pre-filter; the reader plans every
+chunk and Spark filters the rows it returns:
 
 1. **committed manifest** — manifest rows semi-joined to lineage
    ``status='ok'`` on ``(unit, run_id)``, so orphans from a torn run are
@@ -33,10 +35,11 @@ compaction packs its rewrite tasks with the same packer and reads them
 through :func:`_read_padded`, with no filter groups.
 
 Filters are OR-of-AND groups of ``(col, op, value)`` terms (pyarrow's
-DNF shape; the reader's pushed Catalyst filters are one group).  Pruning
-and the pre-filter are conservative — each keeps a superset of the
-matching rows — so both paths re-apply the exact predicate to the rows
-Spark receives, the parquet row-group-statistics contract.
+DNF shape), each value converted once per scan by
+:func:`_pruning_groups`.  Pruning and the pre-filter are conservative —
+each keeps a superset of the matching rows — so ``decode_dataset``
+re-applies the exact predicate to the rows Spark receives, the parquet
+row-group-statistics contract.
 """
 
 from __future__ import annotations
@@ -44,7 +47,7 @@ from __future__ import annotations
 import operator
 import os
 import time
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 from decimal import Decimal
 from functools import reduce
 from zoneinfo import ZoneInfo
@@ -65,7 +68,7 @@ from .meta import (
     _open_payload,
     _probe_chunk_schema,
 )
-from .stats import _TS_UNIT_TO_US, _normalize_terms, _zone_maps
+from .stats import _TS_UNIT_TO_US, _zone_maps, date_value_days, ts_value_us
 
 DEFAULT_PARTITION_BYTES = 64 << 20
 
@@ -90,9 +93,10 @@ _SPARK_OPS = {
     "contains": lambda c, v: c.contains(v),
 }
 _FILTER_OPS = tuple(_SPARK_OPS)
+_OP_ALIASES = {"==": "=", "<>": "!="}
 
-# the read loop's pre-filter per NORMALIZED op (stats._normalize_terms
-# folds the aliases), over columns in the zone-map domain
+# the read loop's pre-filter per NORMALIZED op (_pruning_groups folds
+# the aliases), over columns in the zone-map domain
 _ARROW_OPS = {
     "<": pc.less, "<=": pc.less_equal, ">": pc.greater, ">=": pc.greater_equal,
     "=": pc.equal, "!=": pc.not_equal,
@@ -272,8 +276,8 @@ def key_range_from_terms(terms, key_col: str) -> tuple[str | None, str | None]:
     bound needs prefix-successor arithmetic the unit pruner doesn't
     require), and a string IN-list contributes its [min, max].
     Non-string operands never contribute (the key domain is string).
-    Used by the planner's unit pruning, which both
-    :func:`decode_dataset` and the ``upe_encoded`` reader run."""
+    Used by the planner's unit pruning of :func:`decode_dataset`'s
+    filters."""
     lo = hi = None
     for col, op, v in terms:
         if col != key_col:
@@ -363,12 +367,13 @@ def plan_partitions(
     """Prune the committed manifest ``man`` by unit, then by chunk, and
     pack what survives into scan partitions.
 
-    ``groups`` are OR-of-AND filter groups (``[]`` = no filter): a unit
-    or chunk is kept when ANY group keeps it, and a group with no
-    prunable term keeps everything.  With ``evidence``, the counts land
-    in it: ``units_total`` / ``units_qualifying`` when every group
-    bounds the key, and ``total`` / ``qualifying`` — manifest slice rows
-    before and after zone-map pruning — when filters are given."""
+    ``groups`` are OR-of-AND filter groups as :func:`_pruning_groups`
+    returns them (``[]`` = no filter): a unit or chunk is kept when ANY
+    group keeps it, and a group with no prunable term keeps everything.
+    With ``evidence``, the counts land in it: ``units_total`` /
+    ``units_qualifying`` when every group bounds the key, and ``total``
+    / ``qualifying`` — manifest slice rows before and after zone-map
+    pruning — when filters are given."""
     payload_dir = os.path.join(output_dir, "payload")
     want_fields = [probe_schema.field(c) for c in columns] if columns else list(probe_schema)
     plan = _load_plan(output_dir) if groups else None
@@ -381,10 +386,9 @@ def plan_partitions(
         keep = np.isin(units, allowed)
         if not keep.all():
             man = man.filter(pa.array(keep))
-    norm_groups = [_normalize_terms(g, probe_schema) for g in groups]
     return _pack_chunk_partitions(
         man, payload_dir, columns, want_fields, target_bytes,
-        norm_groups, probe_schema, spread=spread, evidence=evidence,
+        groups, probe_schema, spread=spread, evidence=evidence,
     )
 
 
@@ -583,17 +587,29 @@ def _run_partitions(spark, parts: list, read, schema):
     return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(run, schema)
 
 
-def _pruning_groups(spark, groups, schema) -> list:
-    """``groups`` with each value as Spark's residual compares it, for
-    pruning and the pre-filter.  Both scan paths read every timestamp
-    column back as a Spark TIMESTAMP (a naive stored one as UTC), so a
-    datetime becomes the instant its literal means: PySpark reads a naive
-    one in the driver's local zone (``time.mktime``), or, when the
-    session prefers ``TIMESTAMP_NTZ``, as an NTZ literal that Spark casts
-    in the session zone.  A term keeps every row when Spark compares its
-    number in a lossy wider type (a float on an integer or decimal
-    column; a decimal, or an int past 2**24, on a float column) or when
-    the session zone is not a region zoneinfo reads."""
+def _pruning_groups(spark, groups, schema: pa.Schema) -> list:
+    """``groups`` as pruning and the pre-filter read them: each value is
+    converted once per scan, not per chunk, in this order:
+
+    1. ``==``/``<>`` become ``=``/``!=``;
+    2. a term on a column ``schema`` lacks is dropped;
+    3. so is a term whose number Spark compares in a lossy wider type (a
+       float on an integer or decimal column; a decimal, or an int past
+       2**24, on a float column) or a float NaN, which has no place in
+       the bounds' order;
+    4. a naive datetime becomes the instant its literal means in Spark's
+       residual: PySpark reads it in the driver's local zone
+       (``time.mktime``), or, when the session prefers
+       ``TIMESTAMP_NTZ``, as an NTZ literal that Spark casts in the
+       session zone (a zone zoneinfo cannot read drops the term); both
+       scan paths read every timestamp column back as a Spark TIMESTAMP,
+       a naive stored one as UTC;
+    5. values move to the zone-map domain: timestamps to epoch-µs ints,
+       dates to epoch-day ints, decimals to ``Decimal``; a value that
+       does not convert drops its term.
+
+    A dropped term still applies in the exact residual; here it keeps
+    every row."""
     from pyspark.sql.utils import is_timestamp_ntz_preferred
 
     naive = any(isinstance(x, datetime) and x.tzinfo is None for g in groups for *_, v in g
@@ -607,27 +623,39 @@ def _pruning_groups(spark, groups, schema) -> list:
 
     def value(x, t):
         number = isinstance(x, (int, Decimal)) and not isinstance(x, bool)
-        if (isinstance(x, float) and (pa.types.is_integer(t) or pa.types.is_decimal(t))) or (
+        if (isinstance(x, float) and (x != x or pa.types.is_integer(t) or pa.types.is_decimal(t))) or (
             pa.types.is_floating(t) and number and not (isinstance(x, int) and abs(x) <= 1 << 24)
         ):
-            raise ValueError(x)  # compared in a lossy wider type
-        if not (isinstance(x, datetime) and x.tzinfo is None):
-            return x
-        if not ntz:
-            secs = int(time.mktime(x.timetuple()))
-            return datetime.fromtimestamp(secs, timezone.utc).replace(microsecond=x.microsecond)
-        if zone is None:
-            raise ValueError(x)  # a session zone zoneinfo cannot read
-        return x.replace(tzinfo=zone)
+            raise ValueError(x)  # NaN, or compared in a lossy wider type
+        if isinstance(x, datetime) and x.tzinfo is None:
+            if not ntz:
+                secs = int(time.mktime(x.timetuple()))
+                x = datetime.fromtimestamp(secs, timezone.utc).replace(microsecond=x.microsecond)
+            elif zone is None:
+                raise ValueError(x)  # a session zone zoneinfo cannot read
+            else:
+                x = x.replace(tzinfo=zone)
+        if pa.types.is_timestamp(t) or pa.types.is_date(t):
+            kind, conv = (datetime, ts_value_us) if pa.types.is_timestamp(t) else (date, date_value_days)
+            if not isinstance(x, kind):
+                raise ValueError(x)
+            return conv(x)
+        return Decimal(str(x)) if pa.types.is_decimal(t) else x
 
     out = []
     for g in groups:
         terms = []
         for c, op, v in g:
-            many = op in ("in", "not_in")
+            op = _OP_ALIASES.get(op, op)
+            if c not in schema.names:
+                continue
+            if op in ("is_null", "not_null"):
+                terms.append((c, op, None))
+                continue
+            many, t = op in ("in", "not_in"), schema.field(c).type
             try:
-                vals = tuple(value(x, schema.field(c).type) for x in (v if many else (v,)))
-            except (OverflowError, ValueError):  # the term keeps every row
+                vals = tuple(value(x, t) for x in (v if many else (v,)))
+            except (TypeError, ValueError, ArithmeticError, AttributeError):
                 continue
             terms.append((c, op, vals if many else vals[0]))
         out.append(terms)

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import io
 import json
-from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
@@ -193,53 +192,8 @@ def _dv_values(col, t) -> list | None:
 
 
 # ---------------------------------------------------------------------------
-# the read side: filter values and recorded zone maps in Arrow
+# the read side: recorded zone maps in Arrow
 # ---------------------------------------------------------------------------
-
-_OP_ALIASES = {"==": "=", "<>": "!="}
-
-
-def _normalize_terms(terms, schema: pa.Schema):
-    """Convert term values to the zone-map domain ONCE per scan (not per
-    chunk): timestamps → epoch-µs ints, dates → epoch-days ints,
-    decimals → ``Decimal``; ``==``/``<>`` become ``=``/``!=``.
-    Terms whose column is absent from the schema or whose value can't
-    convert (or is a float NaN, which has no place in the bounds' order)
-    are dropped from PRUNING — the exact residual still applies them."""
-    from datetime import date, datetime
-
-    out = []
-    for col, op, v in terms:
-        op = _OP_ALIASES.get(op, op)
-        if col not in schema.names:
-            continue
-        if op in ("is_null", "not_null"):
-            # value-less terms skip the domain conversion entirely
-            out.append((col, op, None))
-            continue
-        t = schema.field(col).type
-        if pa.types.is_timestamp(t):
-            conv, kind = ts_value_us, datetime
-        elif pa.types.is_date(t):
-            conv, kind = date_value_days, date
-        elif pa.types.is_decimal(t):
-            conv, kind = (lambda x: Decimal(str(x))), object
-        else:
-            conv = None
-        try:
-            if conv is not None and op in ("in", "not_in"):
-                v = tuple(conv(x) for x in v)
-            elif conv is not None:
-                if not isinstance(v, kind):
-                    continue
-                v = conv(v)
-        except (TypeError, ValueError, ArithmeticError, AttributeError):
-            continue
-        vals = v if op in ("in", "not_in") else (v,)
-        if any(isinstance(x, float) and x != x for x in vals):
-            continue
-        out.append((col, op, v))
-    return out
 
 
 def _zone_types(t: pa.DataType):

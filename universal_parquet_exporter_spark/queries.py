@@ -31,9 +31,10 @@ from .encode.scan import (
     DEFAULT_PARTITION_BYTES,
     _filter_groups,
     _pack_chunk_partitions,
+    _pruning_groups,
     decode_dataset,
 )
-from .encode.stats import _normalize_terms, dataset_column_stats
+from .encode.stats import dataset_column_stats
 from .sources.spark_datasource import register
 
 
@@ -54,7 +55,7 @@ def require_pruned(ev: dict, what: str, layer: str) -> None:
         raise RuntimeError(f"{what} pruned nothing ({ev})")
 
 
-def _zone_map_evidence(out_dir: str, filters) -> dict:
+def _zone_map_evidence(spark, out_dir: str, filters) -> dict:
     """The scan planner's zone-map verdict for ``filters`` over EVERY
     slice of the committed manifest, as ``{"total", "qualifying"}``.
     ``decode_dataset``'s evidence counts only the slices of the units a
@@ -63,7 +64,7 @@ def _zone_map_evidence(out_dir: str, filters) -> dict:
     reads this instead, so it certifies the chunk stats themselves."""
     man = _committed_manifest(out_dir)
     probe = _probe_chunk_schema(out_dir, man)
-    groups = [_normalize_terms(g, probe) for g in _filter_groups(filters)]
+    groups = _pruning_groups(spark, _filter_groups(filters), probe)
     ev: dict = {}
     _pack_chunk_partitions(
         man, os.path.join(out_dir, "payload"), None, list(probe),
@@ -254,7 +255,7 @@ def q_decode_filters(spark, sf_dir: str):
         spark, _documents(spark, sf_dir), "upes_zmq_",
         key_col="doc_id", size_cols=("text",), target_unit_bytes=64 << 10, chunk_rows=128,
     )
-    require_pruned(_zone_map_evidence(out, [("doc_id", ">=", "5")]), "zone maps", "slices")
+    require_pruned(_zone_map_evidence(spark, out, [("doc_id", ">=", "5")]), "zone maps", "slices")
     dec = decode_dataset(spark, out, filters=[("doc_id", ">=", "5"), ("n_chars", ">=", 200)])
     return dec.select(_doc_id_long(), "lang", "n_chars")
 
@@ -363,7 +364,7 @@ def q_decode_filters_prefix(spark, sf_dir: str):
         cluster_by=("doc_key",),
     )
     terms = [("doc_key", "startswith", "0000012")]
-    require_pruned(_zone_map_evidence(out, terms), "prefix bounds", "slices")
+    require_pruned(_zone_map_evidence(spark, out, terms), "prefix bounds", "slices")
     dec = decode_dataset(spark, out, filters=terms)
     return dec.select(_doc_id_long(), "lang", "n_chars")
 
@@ -521,7 +522,7 @@ def q_compact_filtered(spark, sf_dir: str):
     if not rep["units_compacted"] or rep["slices_after"] >= rep["slices_before"]:
         raise RuntimeError(f"compaction merged nothing: {rep}")
     terms = [("doc_id", ">=", "00000300")]
-    require_pruned(_zone_map_evidence(out, terms), "post-compact zone maps", "slices")
+    require_pruned(_zone_map_evidence(spark, out, terms), "post-compact zone maps", "slices")
     dec = decode_dataset(spark, out, filters=terms)
     return dec.select(_doc_id_long(), "lang", "source", "n_chars")
 
@@ -567,12 +568,11 @@ def q_compact_clustered(spark, sf_dir: str):
 
 def q_source_read_filtered(spark, sf_dir: str):
     """Encode the documents table, then read it back through the
-    registered ``upe_encoded`` Spark format with a key-range + zone-map
-    predicate — the filters reach the reader via Catalyst's pushFilters,
-    prune units/chunks before payload reads, and Spark applies the exact
-    residual.  The oracle is the same predicate as plain SQL over the
-    source, so the driver's value hash certifies the DataSource read
-    path end to end (pushdown included), not just the function-call
+    registered ``upe_encoded`` Spark format with a key-range and
+    ``n_chars`` predicate, which Spark applies to every row the reader
+    returns (the reader takes no pushed filters).  The oracle is the same predicate as
+    plain SQL over the source, so the driver's value hash certifies the
+    DataSource read path end to end, not just the function-call
     decode."""
     out = _encode(
         spark, _documents(spark, sf_dir), "upes_dsr_",

@@ -7,11 +7,11 @@ parquet_writer.py:17``), re-expressed as Spark's own source/sink
 protocol (pyspark 4.1 ``pyspark.sql.datasource``):
 
     from universal_parquet_exporter_spark.sources.spark_datasource import register
-    register(spark)                       # also enables Python filter pushdown
+    register(spark)
 
     spark.read.format("upe_encoded").load(out_dir)          # full scan
     spark.read.format("upe_encoded").option("columns", "url,lang") \
-         .load(out_dir).where("url >= 'https://h'")         # pruned scan
+         .load(out_dir).where("url >= 'https://h'")         # Spark filters
 
     df.write.format("upe_encoded").mode("append").save(out_dir)   # encode sink
 
@@ -22,23 +22,23 @@ protocol (pyspark 4.1 ``pyspark.sql.datasource``):
         # tail the dataset's commits as micro-batches (offset = cursor in
         # the (committed_at, run_id) total order — see _EncodedStreamReader)
 
-What Catalyst's v2 pushdown buys here, mechanically:
+What Spark's v2 source protocol covers here, mechanically:
 
-- **Filter pushdown** (``DataSourceReader.pushFilters``): predicates from
-  any ``.where``/SQL reach the reader BEFORE planning.  Key-column
-  predicates prune whole encode units via the persisted plan's range
-  boundaries (:func:`..plans.partitioning.units_for_key_range`), and
-  every stats-covered column prunes chunks via the manifest zone maps —
-  both BEFORE a single payload byte is read.  Pruning is conservative
-  (bounds are supersets), so ALL filters are returned to Spark for the
-  exact residual — the same contract parquet row-group statistics have.
+- **No filter pushdown**: the reader plans every committed chunk and
+  Spark applies a query's filters to the rows it returns.  Plan-time
+  pruning cannot be made safe in a Python source on Spark 4.1.2: once a
+  reader takes pushed filters, ``PythonScanBuilder`` stores the pushed
+  plan on the relation (``PythonDataSourceV2.setReadInfo``) and
+  ``getOrCreateReadInfo`` hands it to every later query on the same
+  DataFrame, which would then read only the first query's chunks.  A
+  filtered read that should prune units and chunks goes through
+  :func:`..encode.scan.decode_dataset`, whose planner sees its filters.
 - **Partition planning**: this reader is a thin protocol adapter over
   the engine's one scan planner, :mod:`..encode.scan`, which
   :func:`..encode.scan.decode_dataset` runs too: committed manifest
-  rows (lineage semi-join, so orphans from torn runs are invisible),
-  unit and chunk pruning, and chunks packed into
-  ~``partition_target_bytes`` scan partitions by payload locality.
-  Planning reads ONLY metadata (manifest + lineage parquet, plan.json)
+  rows (lineage semi-join, so orphans from torn runs are invisible)
+  packed into ~``partition_target_bytes`` scan partitions by payload
+  locality.  Planning reads ONLY metadata (manifest + lineage parquet)
   with pyarrow — it runs in Spark's planning worker where no
   SparkSession exists, exactly like a JVM DSv2 ``ScanBuilder``.
 - **Write commit protocol** (``DataSourceArrowWriter``): tasks encode
@@ -77,35 +77,22 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    EqualNullSafe,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
     WriterCommitMessage,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..encode.meta import (
     FRAG_PA_SCHEMA,
     _arrow_to_ddl,
+    _check_append_schema,
     _committed_manifest,
     _committed_run_order,
-    _ddl_type,
     _load_plan,
     _probe_chunk_schema,
     _remove_files,
@@ -130,82 +117,11 @@ from ..encode.scan import (
 from ..plans.partitioning import EncodePlan
 
 FORMAT_NAME = "upe_encoded"
-_PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
 
 
 def register(spark) -> None:
-    """Register the ``upe_encoded`` format on a session.  Python-source
-    filter pushdown is OFF by default in Spark and a reader implementing
-    ``pushFilters`` hard-fails without it, so this also turns the conf on
-    (runtime-settable; verified on 4.1.2).  A session that turns it off
-    again gets the plain reader (:meth:`EncodedContainerDataSource.reader`)."""
-    spark.conf.set(_PUSHDOWN_CONF, "true")
+    """Register the ``upe_encoded`` format on a session."""
     spark.dataSource.register(EncodedContainerDataSource)
-
-
-# ---------------------------------------------------------------------------
-# filter → pruning terms
-# ---------------------------------------------------------------------------
-
-_CMP_OPS = {
-    EqualTo: "=",
-    GreaterThan: ">",
-    GreaterThanOrEqual: ">=",
-    LessThan: "<",
-    LessThanOrEqual: "<=",
-}
-
-
-def _terms_from_filters(filters) -> list[tuple[str, str, object]]:
-    """Catalyst filters → conjunctive pruning terms ``(col, op, value)``.
-    Unsupported shapes are simply absent (they still reach Spark's
-    residual — we return every filter as unhandled)."""
-    terms = []
-    for f in filters:
-        if isinstance(f, Not):
-            # Catalyst pushes `col != v` as Not(EqualTo) and `NOT IN` as
-            # Not(In); both prune through the distinct-value sets
-            inner = f.child
-            attr = getattr(inner, "attribute", None)
-            if not (isinstance(attr, tuple) and len(attr) == 1):
-                continue
-            if isinstance(inner, EqualTo):
-                terms.append((attr[0], "!=", inner.value))
-            elif isinstance(inner, In):
-                terms.append((attr[0], "not_in", tuple(inner.value)))
-            continue
-        attr = getattr(f, "attribute", None)
-        if not (isinstance(attr, tuple) and len(attr) == 1):
-            continue  # nested paths don't exist in chunk schemas
-        col = attr[0]
-        op = _CMP_OPS.get(type(f))
-        if op is not None:
-            terms.append((col, op, f.value))
-        elif isinstance(f, In):
-            terms.append((col, "in", tuple(f.value)))
-        elif isinstance(f, StringStartsWith):
-            terms.append((col, "startswith", f.value))
-        elif isinstance(f, StringEndsWith):
-            # no order relation to bounds — prunes via distinct-value
-            # sets only (and the null-rejecting all-null rule)
-            terms.append((col, "endswith", f.value))
-        elif isinstance(f, StringContains):
-            terms.append((col, "contains", f.value))
-        elif isinstance(f, EqualNullSafe):
-            # col <=> NULL is IS NULL; with a non-null operand it prunes
-            # exactly like equality (null rows can't match a value)
-            if f.value is None:
-                terms.append((col, "is_null", None))
-            else:
-                terms.append((col, "=", f.value))
-        elif isinstance(f, IsNull):
-            terms.append((col, "is_null", None))
-        elif isinstance(f, IsNotNull):
-            # Catalyst pushes IsNotNull beside almost every comparison,
-            # so all-null chunks (evolution: column-predating
-            # generations) prune on any filtered scan
-            terms.append((col, "not_null", None))
-    return terms
 
 
 # ---------------------------------------------------------------------------
@@ -213,43 +129,45 @@ def _terms_from_filters(filters) -> list[tuple[str, str, object]]:
 # ---------------------------------------------------------------------------
 
 
+def _read_options(options) -> tuple[str, list[str] | None, int]:
+    """A read's ``path``, ``columns`` (None = every column) and
+    ``partition_target_bytes``: one parse for ``schema()`` and both
+    readers."""
+    path = options.get("path")
+    if not path:
+        raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
+    columns = list(split_columns(options.get("columns", ""))) or None
+    return path, columns, int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
+
+
+def _plan_scan(path: str, columns: list[str] | None, target_bytes: int, runs=None) -> list:
+    """Scan partitions over every committed chunk, or over the fragments
+    of ``runs`` only, in the whole dataset's union schema.  No filter
+    prunes them: Spark filters the rows the reader returns."""
+    man = _committed_manifest(path)
+    rows = man
+    if runs is not None:
+        import pyarrow.compute as pc
+
+        rows = man.filter(pc.is_in(man.column("run_id"), pa.array(runs, pa.string())))
+    if rows.num_rows == 0:
+        return [_ChunkScanPartition(os.path.join(path, "payload"), columns, [], [])]
+    return plan_partitions(path, rows, _probe_chunk_schema(path, man), columns, [], target_bytes=target_bytes)
+
+
 class _EncodedReader(DataSourceReader):
-    """Plain reader (no ``pushFilters`` method — Spark hard-fails a
-    reader that declares one while the pushdown conf is off)."""
+    """Batch reader: every committed chunk, packed into scan partitions.
+    It takes no pushed filters (see the module docstring), so it works
+    whatever ``spark.sql.python.filterPushdown.enabled`` says."""
 
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
-        self.columns = list(split_columns(options.get("columns", ""))) or None
-        self.target_bytes = int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
-        self._terms: list[tuple[str, str, object]] = []
+        self.path, self.columns, self.target_bytes = _read_options(options)
 
     def partitions(self):
-        man = _committed_manifest(self.path)
-        if man.num_rows == 0:
-            return [_ChunkScanPartition(os.path.join(self.path, "payload"), self.columns, [], [])]
-        return plan_partitions(
-            self.path,
-            man,
-            _probe_chunk_schema(self.path, man),
-            self.columns,
-            [self._terms] if self._terms else [],
-            target_bytes=self.target_bytes,
-        )
+        return _plan_scan(self.path, self.columns, self.target_bytes)
 
     def read(self, partition: _ChunkScanPartition):
         return _read_chunk_partition(partition)
-
-
-class _EncodedPushdownReader(_EncodedReader):
-    def pushFilters(self, filters):
-        """Record prunable terms; return EVERY filter (pruning is a
-        conservative superset — zone maps and unit ranges — so Spark
-        must keep the exact residual, the parquet-statistics contract)."""
-        fl = list(filters)
-        self._terms = _terms_from_filters(fl)
-        return fl
 
 
 # ---------------------------------------------------------------------------
@@ -295,11 +213,7 @@ class _EncodedStreamReader(DataSourceStreamReader):
     replays the dataset's full committed history as batch 0."""
 
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
-        self.columns = list(split_columns(options.get("columns", ""))) or None
-        self.target_bytes = int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
+        self.path, self.columns, self.target_bytes = _read_options(options)
         self.starting = options.get("starting", "earliest").lower()
         if self.starting not in ("earliest", "latest"):
             raise ValueError(f"starting must be earliest|latest, got {self.starting!r}")
@@ -343,8 +257,6 @@ class _EncodedStreamReader(DataSourceStreamReader):
 
     # -- planning (driver) ----------------------------------------------
     def partitions(self, start: dict, end: dict):
-        import pyarrow.compute as pc
-
         gen = _current_generation(self.path)
         for off in (start, end):
             if off.get("gen") != gen:
@@ -364,20 +276,10 @@ class _EncodedStreamReader(DataSourceStreamReader):
             # cursor from it so the NEXT batch caps from the right place
             self._cursor = hi
         runs = [r for t, r in _committed_run_order(self.path) if lo < (t, r) <= hi]
-        man = _committed_manifest(self.path)
-        if man.num_rows == 0 or not runs:
-            return [_ChunkScanPartition(os.path.join(self.path, "payload"), self.columns, [], [])]
         # the OUTPUT schema is the full dataset's union (fixed at stream
-        # start by Spark) — probe it from the whole manifest, then plan
-        # scan partitions from this interval's fragments only
-        return plan_partitions(
-            self.path,
-            man.filter(pc.is_in(man.column("run_id"), pa.array(runs, pa.string()))),
-            _probe_chunk_schema(self.path, man),
-            self.columns,
-            [],
-            target_bytes=self.target_bytes,
-        )
+        # start by Spark); the scan partitions hold this interval's
+        # fragments only
+        return _plan_scan(self.path, self.columns, self.target_bytes, runs)
 
     # -- executor side ---------------------------------------------------
     def read(self, partition: _ChunkScanPartition):
@@ -399,30 +301,6 @@ class _FragMessage(WriterCommitMessage):
 
     def __init__(self, rows: list[dict]):
         self.rows = rows
-
-
-def _check_append_schema(output_dir: str, schema) -> None:
-    """Additive schema evolution, type-stable: an append may ADD columns
-    (older rows null-pad on decode) or OMIT columns (new rows null-pad),
-    but a column shared with any existing chunk generation must keep its
-    type — a silent type flip would poison the union probe for every
-    future reader, so it fails here, at write planning time.  Naive
-    (``TIMESTAMP_NTZ``) and zone-aware timestamps count as two types."""
-    man = _committed_manifest(output_dir)
-    if man.num_rows == 0:
-        return
-    union = _probe_chunk_schema(output_dir, man)
-    for f in schema.fields:
-        if f.name not in union.names:
-            continue
-        have = _ddl_type(union.field(f.name).type, ntz=True)
-        got = f.dataType.simpleString().replace("bigint", "long")
-        if got != have:
-            raise ValueError(
-                f"type conflict appending column {f.name!r}: dataset has "
-                f"{have}, append writes {got} (schema evolution is additive "
-                "only — cast upstream or use a new column name)"
-            )
 
 
 class _EncodedWriterBase:
@@ -512,7 +390,7 @@ class _EncodedBatchWriter(_EncodedWriterBase, DataSourceArrowWriter):
         # overwrite supersedes entirely, so only append checks it (a
         # type-changing overwrite is a legitimate full replacement)
         if not overwrite:
-            _check_append_schema(self.path, schema)
+            _check_append_schema(self.path, to_arrow_schema(schema))
         # an overwrite's generation is fixed at PLANNING time; the
         # pointer swap in commit() is what publishes it; an append
         # commits into the manifest dir live at planning
@@ -550,7 +428,7 @@ class _EncodedStreamWriter(_EncodedWriterBase, DataSourceStreamArrowWriter):
         super().__init__(options, schema)
         # streaming epochs are appends — the additive-evolution guard
         # always applies here
-        _check_append_schema(self.path, schema)
+        _check_append_schema(self.path, to_arrow_schema(schema))
         ck = options.get("checkpointLocation")
         if ck:
             import hashlib
@@ -600,12 +478,8 @@ class EncodedContainerDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("upe_encoded requires a path: .load(<output_dir>)")
-        man = _committed_manifest(path)
-        probe = _probe_chunk_schema(path, man)
-        columns = split_columns(self.options.get("columns", ""))
+        path, columns, _target_bytes = _read_options(self.options)
+        probe = _probe_chunk_schema(path, _committed_manifest(path))
         if columns:
             missing = [c for c in columns if c not in probe.names]
             if missing:
@@ -613,16 +487,7 @@ class EncodedContainerDataSource(DataSource):
         return _arrow_to_ddl(probe, columns)
 
     def reader(self, schema):
-        # a reader DECLARING pushFilters hard-fails when the conf is off,
-        # so the capability is chosen by the live conf (driver-side here)
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        enabled = False
-        if spark is not None:
-            enabled = str(spark.conf.get(_PUSHDOWN_CONF, "false")).lower() == "true"
-        cls = _EncodedPushdownReader if enabled else _EncodedReader
-        return cls(self.options)
+        return _EncodedReader(self.options)
 
     def writer(self, schema, overwrite: bool):
         return _EncodedBatchWriter(self.options, schema, overwrite)
