@@ -52,6 +52,24 @@ def _broadcasts(monkeypatch, fn) -> int:
     return len(calls)
 
 
+def _sql_executions(spark, fn) -> int:
+    """Number of SQL executions ``fn()`` runs: how far the newest
+    execution id in the session's SQL status store moves, read once the
+    listener bus has drained.  Ids only grow, while the store's count
+    stops at ``spark.sql.ui.retainedExecutions``."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        last = store.executionsList().lastOption()
+        return last.get().executionId() if last.isDefined() else -1
+
+    before = newest()
+    fn()
+    return newest() - before
+
+
 def _kept_chunks(spark, out: str, terms) -> list:
     """Chunks the scan planner keeps for the conjunction ``terms``, each
     value read as ``decode_dataset`` reads it."""

@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import _broadcasts, _spark_jobs
+from tests.conftest import _broadcasts, _spark_jobs, _sql_executions
 from universal_parquet_exporter_spark.encode import meta, scan
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.pipeline import (
@@ -183,6 +183,29 @@ def test_each_job_makes_one_broadcast(spark, webpages, webpages_parquet, tmp_pat
     rep: dict = {}
     assert _broadcasts(monkeypatch, lambda: rep.update(compact(spark, frag, chunk_rows=32768))) == 1
     assert rep["manifest_rewritten"]
+    assert decode_dataset(spark, frag).count() == N_ROWS
+
+
+def test_parquet_encode_and_compaction_run_off_sql(spark, webpages, webpages_parquet, tmp_path, monkeypatch):
+    """The parquet encode stage and compaction's rewrite neither read nor
+    return a DataFrame: a fresh encode, a resume and a compaction each
+    run one Spark job and one broadcast, and no SQL execution."""
+
+    def counts(fn):
+        got = {}
+        got["jobs"] = _spark_jobs(spark, lambda: got.update(
+            broadcasts=_broadcasts(monkeypatch, lambda: got.update(sql=_sql_executions(spark, fn)))
+        ))
+        return got
+
+    one_job = {"jobs": 1, "broadcasts": 1, "sql": 0}
+    out = str(tmp_path / "p")
+    assert counts(lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == one_job
+    assert counts(lambda: encode_parquet_job(spark, webpages_parquet, _cfg(out))) == one_job
+    frag = str(tmp_path / "f")
+    for i in range(2):
+        encode_job(spark, webpages.where(F.crc32(F.col("url")) % 2 == i), _cfg(frag, skip_completed=False))
+    assert counts(lambda: compact(spark, frag, chunk_rows=32768)) == one_job
     assert decode_dataset(spark, frag).count() == N_ROWS
 
 

@@ -14,9 +14,10 @@ from universal_parquet_exporter_spark.encode import meta
 from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.maintenance import vacuum
 from universal_parquet_exporter_spark.encode.meta import manifest_dir
-from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job
+from universal_parquet_exporter_spark.encode.pipeline import EncodeJobConfig, encode_job, encode_parquet_job
 from universal_parquet_exporter_spark.encode.scan import decode_dataset
 from universal_parquet_exporter_spark.encode.stats import dataset_column_stats
+from universal_parquet_exporter_spark.fixtures import generate_webpages
 from universal_parquet_exporter_spark.sources import spark_datasource as sds
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -195,6 +196,33 @@ def test_compact_evolved_dataset_preserves_union(spark, tmp_path):
     assert rep["slices_after"] < rep["slices_before"]
     after = sorted(tuple(r) for r in decode_dataset(spark, out).select(*cols).collect())
     assert after == before
+
+
+def test_compact_merges_a_dataframe_and_an_int96_parquet_generation(spark, tmp_path):
+    """``encode_job`` stores ``warc_ts`` zone-aware, and
+    ``encode_parquet_job`` of Spark-written (INT96) parquet stores it
+    naive: one Spark type, so the append guard and the union probe let
+    both in.  The rewrite casts every decoded batch to the targets' union
+    schema, so their rows merge into shared chunks, and both scan paths
+    read the same rows before and after."""
+    pages = generate_webpages(spark, 2000, partitions=2).cache()
+    out, src = str(tmp_path / "mixed"), str(tmp_path / "src")
+    pages.where(F.hash("url") % 2 != 0).write.parquet(src)
+    cfg = dict(output_dir=out, target_unit_bytes=256 << 10, chunk_rows=64, skip_completed=False)
+    encode_job(spark, pages.where(F.hash("url") % 2 == 0), EncodeJobConfig(**cfg))
+    encode_parquet_job(spark, src, EncodeJobConfig(**cfg))
+    sds.register(spark)
+
+    def both_paths():
+        reads = (decode_dataset(spark, out), spark.read.format("upe_encoded").load(out))
+        return [sorted(tuple(r) for r in d.select(*pages.columns).collect()) for d in reads]
+
+    expected = sorted(tuple(r) for r in pages.collect())
+    pages.unpersist()
+    assert both_paths() == [expected, expected]
+    rep = compact(spark, out, chunk_rows=4096)
+    assert 0 < rep["slices_after"] < rep["slices_before"]
+    assert both_paths() == [expected, expected]
 
 
 def test_compact_skips_crashed_overwrite_version_dir(spark, tmp_path):

@@ -2,6 +2,8 @@
 driver-side sample of at most 16 row groups, no Spark job, a pinned
 ``plan.json``, and bad input rejected before any Spark job."""
 
+import hashlib
+import json
 import os
 import time
 
@@ -11,6 +13,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from tests.conftest import _spark_jobs
+from universal_parquet_exporter_spark.encode import meta
+from universal_parquet_exporter_spark.encode.compaction import compact
 from universal_parquet_exporter_spark.encode.pipeline import (
     EncodeJobConfig,
     _parquet_work_items,
@@ -147,3 +151,37 @@ def test_encode_jobs_report_plan_time(spark, pages_dir, tmp_path, path):
     wall = time.perf_counter() - t0
     assert 0 <= m["plan_sec"] <= wall
     assert m["plan_sec"] + m["encode_stage_sec"] <= wall
+
+
+def _slice_digest(out) -> tuple[int, str]:
+    """(slices, sha256) of a dataset's committed slices: each slice's
+    ``(unit, row_off, n_rows, first_key)``, the sha256 of its chunk's
+    payload bytes and its stats JSON, in key order."""
+    cols = ["unit", "run_id", "row_off", "n_rows", "first_key", "file", "offset", "length", "stats"]
+    rows = []
+    for r in meta._read_manifest(str(out), cols).to_pylist():
+        with meta._open_payload(os.path.join(str(out), "payload"), r["file"]) as fh:
+            fh.seek(r["offset"])
+            payload = hashlib.sha256(fh.read(r["length"])).hexdigest()
+        rows.append([r["unit"], r["row_off"], r["n_rows"], r["first_key"], payload, r["stats"]])
+    return len(rows), hashlib.sha256(json.dumps(sorted(rows)).encode()).hexdigest()
+
+
+# the fixture's encode (4 map tasks, 256-row chunks) and its compaction:
+# which engine job runs the stage must not change a byte
+_PINNED_ENCODE = (32, "43ba0104f0fbc6a04924095a06b7ac2ec967b7c50806d8de79e103e8b2598689")
+_PINNED_COMPACTION = (8, "04854f9bde202184d384d4ea804eff8383624724053b80132ad40fef17d71ec8")
+
+
+def test_parquet_encode_writes_pinned_bytes(spark, pages_dir, tmp_path):
+    encode_parquet_job(spark, pages_dir, _cfg(tmp_path, map_tasks=4, chunk_rows=256))
+    assert _plan_json(tmp_path) == _PINNED_PLAN
+    assert _slice_digest(tmp_path) == _PINNED_ENCODE
+
+
+def test_compaction_writes_pinned_bytes(spark, pages_dir, tmp_path):
+    """Every unit holds a slice from each of the 4 map tasks; compaction
+    merges them into one chunk run per unit."""
+    encode_parquet_job(spark, pages_dir, _cfg(tmp_path, map_tasks=4, chunk_rows=256))
+    assert compact(spark, str(tmp_path), chunk_rows=4096)["manifest_rewritten"]
+    assert _slice_digest(tmp_path) == _PINNED_COMPACTION

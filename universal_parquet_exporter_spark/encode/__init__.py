@@ -13,7 +13,7 @@ Layers:
   domain conversions, the pruning verdict and metadata-only column
   statistics;
 - :mod:`.pipeline` — the distributed encode job: size-aware partition
-  planning, ``mapInArrow`` encode, commit and checkpointed resume;
+  planning, map-side encode, commit and checkpointed resume;
 - :mod:`.scan` — the scan planner both read paths run, and the decode
   (read-back) path;
 - :mod:`.maintenance` — vacuum sweep for dead payload files and orphan

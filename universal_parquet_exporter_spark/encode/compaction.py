@@ -14,13 +14,14 @@ repair.  :func:`compact` is the engine's analog:
    Selection is an Arrow ``group_by`` over the scan planner's cached
    committed manifest (:func:`.meta._committed_manifest`), on the
    driver, with no Spark job.
-2. **Rewrite** those units in ONE Spark job: the driver packs the
-   target slices by unit into one scan partition per task
+2. **Rewrite** those units in ONE Spark job with no SQL query
+   (:func:`.scan._collect_tasks`): the driver packs the target slices
+   by unit into one scan partition per task
    (:func:`.scan._pack_chunk_partitions`) and broadcasts them with the
-   plan, the job's one broadcast; each task
-   decodes its units' slices straight from storage through the scan
-   module's read loop (payload bytes never enter the JVM, and there is
-   no shuffle), re-encodes them as fresh
+   plan, the job's one broadcast; each Python task decodes its units'
+   slices straight from storage through the scan module's read loop
+   (payload bytes never enter the JVM, and there is no shuffle), casts
+   them to the targets' union types, re-encodes them as fresh
    ~``chunk_rows``-row chunks with freshly trained FSST tables and zone
    maps, appends new payload files, and returns their manifest rows.
 3. **Publish atomically** through :func:`.meta.publish_generation`,
@@ -62,14 +63,14 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .meta import (
-    FRAG_SCHEMA,
+    FRAG_PA_SCHEMA,
     _committed_manifest,
     _load_plan,
     _probe_chunk_schema,
     publish_generation,
 )
 from .pipeline import DEFAULT_CHUNK_ROWS, DEFAULT_MAX_BUFFER_BYTES, _encode_stream
-from .scan import _pack_chunk_partitions, _read_padded, _run_partitions
+from .scan import _collect_tasks, _pack_chunk_partitions, _read_padded
 
 
 def compact(
@@ -176,10 +177,13 @@ def compact(
 
     def rewrite(planned):
         """Feed the partition's decoded rows straight back through the
-        encode stream — payload in and out via storage."""
+        encode stream — payload in and out via storage.  Each batch takes
+        the union's types first: generations may store one Spark type two
+        ways (zone-aware and naive timestamps), and the values stay."""
         plan_json, part = planned
+        union = pa.schema(part.fields)
         yield from _encode_stream(
-            _read_padded(part),
+            (b.cast(union) for b in _read_padded(part)),
             EncodePlan.from_json(plan_json),
             np.array([], dtype=np.int64),
             key_col,
@@ -191,7 +195,7 @@ def compact(
         )
 
     run_id = "compact-" + uuid.uuid4().hex[:12]
-    new_frags = _run_partitions(spark, parts, rewrite, FRAG_SCHEMA).toArrow()
+    new_frags = _collect_tasks(spark, parts, rewrite, FRAG_PA_SCHEMA)
 
     # the new generation drops exactly the (unit, run_id) pairs the
     # targets were read from: non-target units carry over verbatim, and

@@ -1,4 +1,4 @@
-"""The distributed encode job: plan → mapInArrow encode → payload files
+"""The distributed encode job: plan → map-side encode → payload files
 + manifest and lineage commit.
 
 Engine analog of the reference's batch-export orchestration
@@ -23,9 +23,10 @@ Scale notes (100 TB / 1000-executor thinking):
   of payload bytes is precisely what destroys multi-core scaling, and at
   nominal scale a consolidate-per-unit exchange is pure network cost on
   already-compressed bytes;
-- the stage's one Spark action brings the manifest rows to the driver
-  as Arrow, and :func:`.meta.commit_fragments` commits them (storage,
-  commit protocol and crash windows: :mod:`.meta`);
+- the stage's one Spark job (``mapInArrow`` over a DataFrame, Python
+  RDD tasks with no SQL over parquet) brings the manifest rows to the
+  driver as Arrow, and :func:`.meta.commit_fragments` commits them
+  (storage, commit protocol and crash windows: :mod:`.meta`);
 - payload files hold our codec output verbatim — sizes are honest and
   decode never pays a double-decompress.
 """
@@ -57,7 +58,7 @@ from .meta import (
     completed_units,
     manifest_dir,
 )
-from .scan import decode_dataset  # noqa: F401  (perfbench/engine.py calls pipeline.decode_dataset)
+from .scan import _collect_tasks, decode_dataset  # noqa: F401  (perfbench/engine.py calls pipeline.decode_dataset)
 from .stats import _chunk_stats
 
 # the encode defaults every entry point shares (EncodeJobConfig, the
@@ -248,10 +249,15 @@ def _parquet_file(path: str):
     return pq.ParquetFile(fs.open_input_file(p))
 
 
-def _expand_row_groups(pf, rg: int):
-    """A work item's row-group field: an explicit row group, or -1 for
-    'every row group in the file' (Iceberg-manifest items)."""
-    return range(pf.metadata.num_row_groups) if rg < 0 else (rg,)
+def _read_items(items):
+    """A parquet map task's rows in Arrow batches: its ``(file, row
+    group)`` items read by the Arrow C++ reader, row group -1 meaning
+    every row group in the file (Iceberg-manifest items)."""
+    for path, rg in items:
+        pf = _parquet_file(path)
+        for g in range(pf.metadata.num_row_groups) if rg < 0 else (rg,):
+            tbl = _timestamps_to_us(pf.read_row_group(g, use_threads=False))
+            yield from tbl.to_batches(max_chunksize=PARQUET_BATCH_ROWS)
 
 
 def load_or_build_plan_parquet(
@@ -598,8 +604,8 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
     The work-list is (file, row-group) pairs — at nominal (Iceberg) scale
     this list comes from the table's manifests; here it is built from file
     footers on the driver.  Each task opens its row groups with the Arrow
-    C++ parquet reader, so raw rows NEVER cross the JVM<->Python boundary:
-    the only Arrow-IPC traffic is the encoded fragments (~5x smaller).
+    C++ parquet reader, so no row enters the JVM: the stage runs as
+    Python RDD tasks with no SQL query (:func:`.scan._collect_tasks`).
     This is the scan topology a 1000-executor job wants — column chunks
     stream from storage straight into the encode kernels — and it is what
     `bench.py` measures.  The plan is sampled on the driver
@@ -632,73 +638,69 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
     # against stragglers
     n_map = cfg.map_tasks or max(1, min(len(items), 4 * spark.sparkContext.defaultParallelism))
     n_map = min(n_map, len(items))
-    # work distribution: the items list rides in the job's one broadcast
-    # (torrent-shipped once per executor and unpickled once per Python
-    # worker, never per task — ~50 MB for 100 TB of 64 MB row groups) and
-    # a JVM-native range source carries only slice ids, so the encode
-    # stage has NO python work-list relay in front of it
-    n_items = len(items)
+    key_col, payload_dir = cfg.key_col, os.path.join(cfg.output_dir, "payload")
+    chunk_rows, max_buf = cfg.chunk_rows, cfg.max_buffer_bytes
 
-    def read_slices(iterator, all_items):
-        for batch in iterator:
-            for s in batch.column("id").to_pylist():
-                # slice s of n_map contiguous, equal slices
-                for path, rg in all_items[n_items * s // n_map : n_items * (s + 1) // n_map]:
-                    pf = _parquet_file(path)
-                    for g in _expand_row_groups(pf, rg):
-                        tbl = _timestamps_to_us(pf.read_row_group(g, use_threads=False))
-                        yield from tbl.to_batches(max_chunksize=PARQUET_BATCH_ROWS)
+    def stage(plan_json, done):
+        # one entry per map task, its slice of n_map contiguous, equal
+        # slices of the items, in the job's one broadcast (unpickled once
+        # per Python worker — ~50 MB for 100 TB of 64 MB row groups — and
+        # pickle writes the shared plan string and resume array once)
+        n = len(items)
+        parts = [(plan_json, done, items[n * s // n_map : n * (s + 1) // n_map]) for s in range(n_map)]
 
-    work = spark.range(n_map, numPartitions=n_map)
-    return _run_encode(spark, work, plan, plan_sec, cfg, read=read_slices, items=items)
+        def encode_slice(part):
+            plan_json, done_local, slice_items = part
+            yield from _encode_stream(
+                _read_items(slice_items), EncodePlan.from_json(plan_json), done_local, key_col,
+                payload_dir, chunk_rows, max_buf,
+            )
 
+        return _collect_tasks(spark, parts, encode_slice, FRAG_PA_SCHEMA)
 
-def _run_encode(
-    spark, work, plan: EncodePlan, plan_sec: float, cfg: EncodeJobConfig, read=None, items=None,
-    cluster_cols=(),
-) -> dict:
-    """The encode stage both jobs run: ONE broadcast carries the plan,
-    the units a resume skips and the parquet work ``items``; each
-    partition of ``work`` is encoded through :func:`_encode_stream`
-    (``read(batches, items)`` turns a task's input batches into the rows
-    to encode; None encodes the batches themselves), then committed
-    through :func:`_finish_encode`."""
-    done = completed_units(cfg.output_dir) if cfg.skip_completed else np.array([], dtype=np.int64)
-    bjob = spark.sparkContext.broadcast((plan.to_json(), done, items))
-    key_col = cfg.key_col
-    payload_dir = os.path.join(cfg.output_dir, "payload")
-    chunk_rows = cfg.chunk_rows
-    max_buf = cfg.max_buffer_bytes
-
-    def map_encode(iterator):
-        plan_json, done_local, items_local = bjob.value
-        yield from _encode_stream(
-            iterator if read is None else read(iterator, items_local),
-            EncodePlan.from_json(plan_json), done_local, key_col, payload_dir, chunk_rows,
-            max_buf, cluster_cols=cluster_cols,
-        )
-
-    return _finish_encode(work.mapInArrow(map_encode, FRAG_SCHEMA), plan, plan_sec, done, cfg)
+    return _finish_encode(stage, plan, plan_sec, cfg)
 
 
-def _finish_encode(
-    frags, plan: EncodePlan, plan_sec: float, done: np.ndarray, cfg: EncodeJobConfig
-) -> dict:
-    """Shared tail of the encode job: ONE Spark action runs the encode
-    stage and brings its MANIFEST rows to the driver as Arrow — the
-    encoded bytes themselves were already written to payload files by
-    the map tasks, so the JVM never touches them — then
-    :func:`.meta.commit_fragments` writes the manifest and lineage files,
-    and the returned totals come from the committed lineage.  See
-    :mod:`.meta` for why this is crash-safe without unit
+def _run_encode(spark, df, plan: EncodePlan, plan_sec: float, cfg: EncodeJobConfig, cluster_cols=()) -> dict:
+    """``encode_job``'s stage: ONE broadcast carries the plan and the
+    units a resume skips, and each partition of ``df`` is encoded through
+    :func:`_encode_stream` in a ``mapInArrow`` query (the rows come from
+    the JVM), then committed through :func:`_finish_encode`."""
+    key_col, payload_dir = cfg.key_col, os.path.join(cfg.output_dir, "payload")
+    chunk_rows, max_buf = cfg.chunk_rows, cfg.max_buffer_bytes
+
+    def stage(plan_json, done):
+        bjob = spark.sparkContext.broadcast((plan_json, done))
+
+        def map_encode(iterator):
+            plan_json, done_local = bjob.value
+            yield from _encode_stream(
+                iterator, EncodePlan.from_json(plan_json), done_local, key_col, payload_dir, chunk_rows,
+                max_buf, cluster_cols=cluster_cols,
+            )
+
+        return df.mapInArrow(map_encode, FRAG_SCHEMA).toArrow()
+
+    return _finish_encode(stage, plan, plan_sec, cfg)
+
+
+def _finish_encode(stage, plan: EncodePlan, plan_sec: float, cfg: EncodeJobConfig) -> dict:
+    """Shared tail of the encode job: ``stage(plan JSON, resume set)``
+    runs the encode stage as ONE Spark job and returns its MANIFEST rows
+    on the driver as Arrow — the encoded bytes themselves were already
+    written to payload files by the map tasks, so the JVM never touches
+    them — then :func:`.meta.commit_fragments` writes the manifest and
+    lineage files, and the returned totals come from the committed
+    lineage.  See :mod:`.meta` for why this is crash-safe without unit
     consolidation."""
     import pyarrow.compute as pc
 
+    done = completed_units(cfg.output_dir) if cfg.skip_completed else np.array([], dtype=np.int64)
     t_stage = time.perf_counter()
     commit_id, t_manifest = commit_fragments(
-        frags.toArrow(), cfg.output_dir, manifest_dir(cfg.output_dir), cfg.run_id, cfg.batch_tag
+        stage(plan.to_json(), done), cfg.output_dir, manifest_dir(cfg.output_dir), cfg.run_id, cfg.batch_tag
     )
-    # wall of the read→assign→encode action plus the manifest file
+    # wall of the read→assign→encode job plus the manifest file
     # (excludes planning and the lineage commit, which are O(1) driver work)
     stage_wall = t_manifest - t_stage
 
@@ -721,9 +723,9 @@ def _finish_encode(
 
 
 def _timestamps_to_us(tbl: pa.Table) -> pa.Table:
-    """Spark's INT96 parquet timestamps read back as ns; Spark's Arrow
-    boundary only accepts µs (Spark timestamp semantics).  Lossless here —
-    the source values are µs-precision."""
+    """Spark's INT96 parquet timestamps read back as ns; they are stored
+    in µs, Spark's unit, as a DataFrame encode stores them.  Lossless
+    here — the source values are µs-precision."""
     fields = [
         pa.field(f.name, pa.timestamp("us", f.type.tz), f.nullable)
         if pa.types.is_timestamp(f.type) and f.type.unit != "us"

@@ -587,6 +587,23 @@ def _run_partitions(spark, parts: list, read, schema):
     return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(run, schema)
 
 
+def _collect_tasks(spark, parts: list, fn, schema: pa.Schema) -> pa.Table:
+    """ONE Spark job with no SQL, for work whose rows never enter the JVM
+    (the parquet encode stage, compaction's rewrite): ``parts`` are
+    broadcast, each entry runs as one Python RDD task, and the Arrow
+    batches ``fn(part)`` yields are pickled to the driver as one table of
+    ``schema``.  Work that reads or returns a DataFrame stays in SQL
+    (``encode_job``'s ``mapInArrow``, :func:`_run_partitions`)."""
+    bparts = spark.sparkContext.broadcast(parts)
+
+    def run(indices):
+        for i in indices:
+            yield from fn(bparts.value[i])
+
+    batches = spark.sparkContext.parallelize(range(len(parts)), len(parts)).mapPartitions(run).collect()
+    return pa.Table.from_batches(batches, schema)
+
+
 def _pruning_groups(spark, groups, schema: pa.Schema) -> list:
     """``groups`` as pruning and the pre-filter read them: each value is
     converted once per scan, not per chunk, in this order:
