@@ -35,6 +35,26 @@ def _spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _spark_tasks(spark, fn) -> int:
+    """Number of tasks in the stages of the Spark jobs ``fn()`` runs,
+    read through a job group once the listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the Spark tasks of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+
+
 def _broadcasts(monkeypatch, fn) -> int:
     """Number of ``SparkContext.broadcast`` calls ``fn()`` makes."""
     from pyspark import SparkContext

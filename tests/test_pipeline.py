@@ -280,8 +280,8 @@ def test_iceberg_input_format_via_manifest_mock(spark, webpages, webpages_parque
         if f.endswith(".parquet")
     )
     meta = spark.createDataFrame(
-        [(f, pq.ParquetFile(f).metadata.num_rows, 0) for f in files],
-        "file_path string, record_count long, content int",
+        [(f, pq.ParquetFile(f).metadata.num_rows, 0, os.path.getsize(f)) for f in files],
+        "file_path string, record_count long, content int, file_size_in_bytes long",
     )
     seen_sql = {}
 
@@ -296,7 +296,7 @@ def test_iceberg_input_format_via_manifest_mock(spark, webpages, webpages_parque
     metrics = encode_parquet_job(spark, "warehouse.web.pages", cfg)
     assert (
         seen_sql["q"]
-        == "SELECT file_path, record_count, content FROM warehouse.web.pages.files"
+        == "SELECT file_path, record_count, content, file_size_in_bytes FROM warehouse.web.pages.files"
     )
     assert metrics["rows"] == N_ROWS
     dec = decode_dataset(spark, outdir)
@@ -317,8 +317,8 @@ def test_iceberg_input_rejects_merge_on_read_deletes(spark, webpages_parquet, ou
         for f in os.listdir(webpages_parquet)
         if f.endswith(".parquet")
     )
-    rows = [(f, 100, 0) for f in files] + [("s3://wh/deletes/pos-00.parquet", 7, 1)]
-    meta = spark.createDataFrame(rows, "file_path string, record_count long, content int")
+    rows = [(f, 100, 0, 4096) for f in files] + [("s3://wh/deletes/pos-00.parquet", 7, 1, 512)]
+    meta = spark.createDataFrame(rows, "file_path string, record_count long, content int, file_size_in_bytes long")
     monkeypatch.setattr(spark, "sql", lambda q, *a, **kw: meta)
     cfg = EncodeJobConfig(
         output_dir=outdir, target_unit_bytes=2 << 20, input_format="iceberg"

@@ -145,3 +145,22 @@ def test_tasks_see_the_tuned_allocator_env(spark):
             "ARROW_DEFAULT_MEMORY_POOL": "system",
         }
     ]
+
+
+
+
+def test_rdd_and_sql_jobs_share_one_python_worker_pool(spark):
+    """``build_session`` gives RDD and SQL tasks one worker environment,
+    so both kinds of job run in one pool of Python workers.  Every worker
+    is forked by its pool's daemon, so its parent pid names the pool."""
+
+    def daemon(_rows):
+        return [os.getppid()]
+
+    def sql_daemon(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"ppid": daemon(b)})
+
+    rdd = set(spark.sparkContext.parallelize(range(4), 4).mapPartitions(daemon).collect())
+    sql = {r.ppid for r in spark.range(4, numPartitions=4).mapInArrow(sql_daemon, "ppid long").collect()}
+    assert len(rdd) == 1 and sql == rdd, (rdd, sql)

@@ -15,10 +15,10 @@ repair.  :func:`compact` is the engine's analog:
    committed manifest (:func:`.meta._committed_manifest`), on the
    driver, with no Spark job.
 2. **Rewrite** those units in ONE Spark job with no SQL query
-   (:func:`.scan._collect_tasks`): the driver packs the target slices
-   by unit into one scan partition per task
-   (:func:`.scan._pack_chunk_partitions`) and broadcasts them with the
-   plan, the job's one broadcast; each Python task decodes its units'
+   (:func:`.scan._collect_tasks`): the driver cuts the target units
+   into tasks by their payload bytes (:func:`.scan._task_cuts`), packs
+   each task's slices into one scan partition and broadcasts them with
+   the plan, the job's one broadcast; each Python task decodes its units'
    slices straight from storage through the scan module's read loop
    (payload bytes never enter the JVM, and there is no shuffle), casts
    them to the targets' union types, re-encodes them as fresh
@@ -70,7 +70,7 @@ from .meta import (
     publish_generation,
 )
 from .pipeline import DEFAULT_CHUNK_ROWS, DEFAULT_MAX_BUFFER_BYTES, _encode_stream
-from .scan import _collect_tasks, _pack_chunk_partitions, _read_padded
+from .scan import _collect_tasks, _pack_chunk_partitions, _read_padded, _task_cuts
 
 
 def compact(
@@ -142,8 +142,7 @@ def compact(
     # before and after compaction).  One meta-only probe per distinct
     # name set over the TARGET slices finds that union; a type flip
     # between generations fails loudly here, not mid-rewrite.
-    target_units = targets.column("unit")
-    slices = man.filter(pc.is_in(man.column("unit"), value_set=target_units))
+    slices = man.filter(pc.is_in(man.column("unit"), value_set=targets.column("unit")))
     union_fields = list(_probe_chunk_schema(output_dir, slices))
     # the rewrite pads rows to the TARGETS' union only, so a cluster
     # column that exists solely in non-target generations would crash
@@ -156,14 +155,12 @@ def compact(
         )
 
     # a unit's slices must meet in one task (so it re-packs into the
-    # fewest chunks): contiguous runs of sorted unit ids, one scan
-    # partition per task over all columns of the targets' union, never
-    # split by size
-    n_part = max(1, min(n_targets, spark.sparkContext.defaultParallelism))
-    sorted_units = np.sort(target_units.to_numpy())
+    # fewest chunks): runs of units in id order, cut by payload bytes,
+    # each one scan partition over all columns of the targets' union
+    targets = targets.sort_by("unit")
+    firsts = np.concatenate(([0], np.cumsum(targets.column("count_all"))))
+    cuts = firsts[_task_cuts(targets.column("bytes_out_sum"), spark.sparkContext.defaultParallelism)]
     by_unit = slices.sort_by("unit")
-    task = np.searchsorted(sorted_units, by_unit.column("unit").to_numpy()) * n_part // n_targets
-    cuts = np.searchsorted(task, np.arange(n_part + 1))
     # each task's partition travels with the plan JSON in the job's one
     # broadcast (pickled once: every entry shares the same string)
     plan_json = plan.to_json()

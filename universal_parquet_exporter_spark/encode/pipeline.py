@@ -58,7 +58,8 @@ from .meta import (
     completed_units,
     manifest_dir,
 )
-from .scan import _collect_tasks, decode_dataset  # noqa: F401  (perfbench/engine.py calls pipeline.decode_dataset)
+from .scan import DEFAULT_PARTITION_BYTES, _collect_tasks, _task_cuts
+from .scan import decode_dataset  # noqa: F401  (perfbench/engine.py calls pipeline.decode_dataset)
 from .stats import _chunk_stats
 
 # the encode defaults every entry point shares (EncodeJobConfig, the
@@ -98,9 +99,9 @@ class EncodeJobConfig:
     # map_tasks small without risking executor OOM).  256 MB default =
     # several full-size chunks per wave, no measurable ratio cost.
     max_buffer_bytes: int = DEFAULT_MAX_BUFFER_BYTES
-    # explicit map-task count for the parquet path (None = ~4 waves of
-    # defaultParallelism).  Benchmarks pin this so every parallelism
-    # level runs IDENTICAL per-task work — the way a real cluster scales.
+    # explicit map-task count for the parquet path (None = the engine's
+    # task-sizing rule, scan._task_cuts).  Benchmarks pin this so every
+    # parallelism level runs IDENTICAL per-task work.
     map_tasks: int | None = None
     # resume semantics: True (batch default) skips units already ok in
     # lineage; False (streaming append) encodes every input row, adding
@@ -186,13 +187,13 @@ def load_or_build_plan(df, cfg: EncodeJobConfig) -> EncodePlan:
     return plan
 
 
-def _parquet_work_items(input_dir: str) -> tuple[list[tuple[str, int]], int]:
-    """(file, row-group) work-list + total row count from the footers.  At
-    nominal (Iceberg) scale both come from the table's manifests instead
-    of a directory listing."""
+def _parquet_work_items(input_dir: str) -> tuple[list[tuple[str, int, int]], int]:
+    """(file, row group, compressed bytes) work-list + total row count
+    from the footers.  At nominal (Iceberg) scale both come from the
+    table's manifests instead of a directory listing."""
     import pyarrow.parquet as pq
 
-    items: list[tuple[str, int]] = []
+    items: list[tuple[str, int, int]] = []
     total_rows = 0
     for fn in sorted(os.listdir(input_dir)):
         if not fn.endswith(".parquet"):
@@ -200,16 +201,18 @@ def _parquet_work_items(input_dir: str) -> tuple[list[tuple[str, int]], int]:
         full = os.path.join(input_dir, fn)
         md = pq.ParquetFile(full).metadata
         total_rows += md.num_rows
-        items.extend((full, rg) for rg in range(md.num_row_groups))
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            items.append((full, rg, sum(g.column(j).total_compressed_size for j in range(g.num_columns))))
     return items, total_rows
 
 
-def _iceberg_work_items(spark, table: str) -> tuple[list[tuple[str, int]], int]:
+def _iceberg_work_items(spark, table: str) -> tuple[list[tuple[str, int, int]], int]:
     """Work-list + row count from an Iceberg table's own manifests via its
     ``<table>.files`` metadata table — no directory listing and no
-    driver-side footer scan.  Each item is ``(file_path, -1)``; the map
-    task expands ``-1`` to the file's row groups itself (footers are read
-    where the data is — the Iceberg split-planning shape).
+    driver-side footer scan.  Each item is ``(file_path, -1, size)``;
+    the map task expands ``-1`` to the file's row groups itself (footers
+    are read where the data is — the Iceberg split-planning shape).
 
     Copy-on-write tables only: ``content`` classifies each manifest entry
     (0 = data, 1 = position deletes, 2 = equality deletes), and a v2
@@ -218,12 +221,10 @@ def _iceberg_work_items(spark, table: str) -> tuple[list[tuple[str, int]], int]:
     resurrect deleted rows, so any delete file fails the job fast instead.
 
     Requires an Iceberg catalog configured on the session
-    (``spark.sql.catalog.*``); the sandbox has none, so this branch is
-    exercised by a mock of the metadata-table query
-    (``tests/test_pipeline.py``), the same way the JDBC reader is tested
-    without a database."""
+    (``spark.sql.catalog.*``); ``tests/test_pipeline.py`` mocks the
+    metadata-table query, as the JDBC reader is tested without a database."""
     files = spark.sql(
-        f"SELECT file_path, record_count, content FROM {table}.files"
+        f"SELECT file_path, record_count, content, file_size_in_bytes FROM {table}.files"
     ).collect()
     n_deletes = sum(1 for r in files if int(r.content or 0) != 0)
     if n_deletes:
@@ -235,7 +236,7 @@ def _iceberg_work_items(spark, table: str) -> tuple[list[tuple[str, int]], int]:
             "rewrite_position_delete_files) and re-run."
         )
     data = [r for r in files if int(r.content or 0) == 0]
-    items = [(r.file_path, -1) for r in data]
+    items = [(r.file_path, -1, int(r.file_size_in_bytes)) for r in data]
     total_rows = int(sum(r.record_count for r in data))
     return items, total_rows
 
@@ -251,9 +252,9 @@ def _parquet_file(path: str):
 
 def _read_items(items):
     """A parquet map task's rows in Arrow batches: its ``(file, row
-    group)`` items read by the Arrow C++ reader, row group -1 meaning
-    every row group in the file (Iceberg-manifest items)."""
-    for path, rg in items:
+    group, bytes)`` items read by the Arrow C++ reader, row group -1
+    meaning every row group in the file (Iceberg-manifest items)."""
+    for path, rg, _nbytes in items:
         pf = _parquet_file(path)
         for g in range(pf.metadata.num_row_groups) if rg < 0 else (rg,):
             tbl = _timestamps_to_us(pf.read_row_group(g, use_threads=False))
@@ -261,7 +262,7 @@ def _read_items(items):
 
 
 def load_or_build_plan_parquet(
-    items: list[tuple[str, int]], total_rows: int, cfg: EncodeJobConfig
+    items: list[tuple[str, int, int]], total_rows: int, cfg: EncodeJobConfig
 ) -> EncodePlan:
     """Parquet-path planner: sample (key, row-size) from at most 16 row
     groups, read by pyarrow on the driver one at a time — no Spark job,
@@ -281,7 +282,7 @@ def load_or_build_plan_parquet(
     pick = items[:: max(1, len(items) // 16)][:16]
     per_item = max(64, cfg.sample_rows // len(pick))
     keys, sizes = [], []
-    for path, rg in pick:
+    for path, rg, _nbytes in pick:
         tbl = _parquet_file(path).read_row_group(max(rg, 0), columns=[key_col, *cfg.size_cols])
         if key_col not in tbl.column_names:
             raise ValueError(f"key column {key_col!r} is not in the parquet input {path}")
@@ -551,15 +552,14 @@ def _encode_stream(
 def encode_job(spark, df, cfg: EncodeJobConfig) -> dict:
     """Run (or resume) the encode job over an arbitrary DataFrame.
 
-    Map-side combine: every input partition encodes its rows into
-    per-unit *fragments* before the shuffle, so the exchange carries
-    compressed bytes (~5x less traffic than shuffling raw rows — the
-    difference between shuffling 100 TB and 20 TB at nominal scale).  The
-    reduce side only concatenates fragments into the final per-unit
-    container; nothing is re-encoded.  Fragment boundaries depend on input
-    splits, so payload bytes may differ between runs at different
-    parallelism — decoded data is identical (the north-rule invariant),
-    and resume stays unit-atomic via lineage.
+    ONE ``mapInArrow`` job: every input partition encodes its rows into
+    per-unit *fragments*, writes their payload straight to storage and
+    returns only their manifest rows, which the driver commits
+    (:func:`_finish_encode`); no shuffle runs and nothing is re-encoded.
+    Fragment boundaries depend on input splits, so payload bytes may
+    differ between runs at different parallelism — decoded data is
+    identical (the north-rule invariant), and resume stays unit-atomic
+    via lineage.
 
     For parquet-backed inputs prefer :func:`encode_parquet_job`: this
     DataFrame path pays a JVM->Python Arrow transfer of every raw row,
@@ -631,23 +631,20 @@ def encode_parquet_job(spark, input_dir: str, cfg: EncodeJobConfig) -> dict:
     plan = load_or_build_plan_parquet(items, total_rows, cfg)
     plan_sec = time.perf_counter() - t_plan
 
-    # task granularity: cfg.map_tasks if pinned (benchmarks pin it so
-    # every parallelism level runs identical per-task work), else ~4
-    # waves of the current parallelism; chunking no longer ties fragment
-    # size to this split, so the choice only balances scheduling overhead
-    # against stragglers
-    n_map = cfg.map_tasks or max(1, min(len(items), 4 * spark.sparkContext.defaultParallelism))
-    n_map = min(n_map, len(items))
+    # runs of items cut by stored bytes, or map_tasks runs if pinned: each
+    # task trains FSST once and cuts chunks within its own rows
+    n_min = cfg.map_tasks or spark.sparkContext.defaultParallelism
+    target = float("inf") if cfg.map_tasks else DEFAULT_PARTITION_BYTES
+    cuts = _task_cuts([nbytes for *_, nbytes in items], n_min, target)
     key_col, payload_dir = cfg.key_col, os.path.join(cfg.output_dir, "payload")
     chunk_rows, max_buf = cfg.chunk_rows, cfg.max_buffer_bytes
 
     def stage(plan_json, done):
-        # one entry per map task, its slice of n_map contiguous, equal
-        # slices of the items, in the job's one broadcast (unpickled once
-        # per Python worker — ~50 MB for 100 TB of 64 MB row groups — and
-        # pickle writes the shared plan string and resume array once)
-        n = len(items)
-        parts = [(plan_json, done, items[n * s // n_map : n * (s + 1) // n_map]) for s in range(n_map)]
+        # one entry per map task, its run of items, in the job's one
+        # broadcast (unpickled once per Python worker — ~50 MB for 100 TB
+        # of 64 MB row groups — and pickle writes the shared plan string
+        # and resume array once)
+        parts = [(plan_json, done, items[s:e]) for s, e in zip(cuts[:-1], cuts[1:])]
 
         def encode_slice(part):
             plan_json, done_local, slice_items = part

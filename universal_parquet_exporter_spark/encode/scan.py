@@ -21,9 +21,9 @@ chunk and Spark filters the rows it returns:
    (:func:`.stats._zone_maps`), drop chunks no filter group can match:
    the chunk verdict (:func:`_chunk_keep`) is the read loop's pre-filter
    run over those arrays, each op through its tests in ``_ZONE_OPS``;
-5. **packing** — surviving chunks group into locality-packed scan
-   partitions (:func:`_pack_chunk_partitions`) that
-   :func:`_read_chunk_partition` decodes on an executor;
+5. **packing** — surviving chunks are cut into scan partitions by the
+   task-sizing rule of every engine job (:func:`_task_cuts`), and
+   :func:`_read_chunk_partition` decodes each on an executor;
 6. **read loop** — per chunk, decode the filter columns, evaluate the
    filter with ``pyarrow.compute`` (:func:`_prefilter_mask`), then decode
    the rest only if rows survive, and hand Spark only the survivors;
@@ -360,12 +360,12 @@ def plan_partitions(
     columns: list[str] | None,
     groups: list,
     *,
-    target_bytes: int = DEFAULT_PARTITION_BYTES,
-    spread: int = 1,
+    target_bytes: float = DEFAULT_PARTITION_BYTES,
+    parallelism: int = 1,
     evidence: dict | None = None,
 ) -> list[_ChunkScanPartition]:
     """Prune the committed manifest ``man`` by unit, then by chunk, and
-    pack what survives into scan partitions.
+    pack what survives into scan partitions (:func:`_task_cuts`).
 
     ``groups`` are OR-of-AND filter groups as :func:`_pruning_groups`
     returns them (``[]`` = no filter): a unit or chunk is kept when ANY
@@ -388,8 +388,21 @@ def plan_partitions(
             man = man.filter(pa.array(keep))
     return _pack_chunk_partitions(
         man, payload_dir, columns, want_fields, target_bytes,
-        groups, probe_schema, spread=spread, evidence=evidence,
+        groups, probe_schema, parallelism=parallelism, evidence=evidence,
     )
+
+
+def _task_cuts(weights, parallelism: int, target: float = DEFAULT_PARTITION_BYTES) -> np.ndarray:
+    """Every engine job's task-sizing rule.  Ordered items, weighted by
+    the bytes each reads from storage, go to ``n = min(items,
+    max(parallelism, ceil(total / target)))`` contiguous tasks, each item
+    by the quantile of its midpoint, so no task is empty; a heavy item may
+    leave fewer than ``n``.  ``target = inf`` pins ``n``.  Returns cuts:
+    task ``k`` is items ``cuts[k]:cuts[k + 1]``; no items give one empty task."""
+    w = np.asarray(weights, dtype=np.float64)
+    n = min(w.size, max(parallelism, int(np.ceil(w.sum() / target))))
+    task = np.floor((np.cumsum(w) - w / 2) * n / w.sum()).astype(np.int64)
+    return np.concatenate(([0], np.flatnonzero(np.diff(task)) + 1, [w.size]))
 
 
 def _pack_chunk_partitions(
@@ -397,10 +410,10 @@ def _pack_chunk_partitions(
     payload_dir: str,
     columns: list[str] | None,
     want_fields: list,
-    target_bytes: int,
+    target_bytes: float,
     norm_groups: list,
     probe_schema: pa.Schema,
-    spread: int = 1,
+    parallelism: int = 1,
     evidence: dict | None = None,
 ) -> list[_ChunkScanPartition]:
     """Group manifest rows (unit-slices) by their chunk, VECTORIZED:
@@ -412,12 +425,10 @@ def _pack_chunk_partitions(
     zone-map verdict runs once per CHUNK (slices of a chunk share its
     stats), over the DNF ``norm_groups`` (``[]`` = keep every chunk).
 
-    Chunk runs pack into ~``target_bytes`` partitions by payload
-    locality; ``spread`` caps the target at the live bytes / ``spread``
-    so a small scan still splits into about ``spread`` tasks.  Shared by
-    the batch reader, the stream reader (over the manifest rows of one
-    offset range), ``decode_dataset`` and compaction (over one rewrite
-    task's slices)."""
+    The chunks, in payload order and weighted by length, are cut into
+    partitions by :func:`_task_cuts`.  Shared by the batch reader, the
+    stream reader (over the manifest rows of one offset range),
+    ``decode_dataset`` and compaction (one rewrite task's slices)."""
     man = man.sort_by(
         [("file", "ascending"), ("offset", "ascending"), ("row_off", "ascending")]
     )
@@ -450,22 +461,11 @@ def _pack_chunk_partitions(
         evidence["total"] = man.num_rows
         evidence["qualifying"] = int((ends - starts).sum())
 
-    if spread > 1:
-        live = sum(ch[2] for ch in ordered)
-        target_bytes = min(target_bytes, max(1, -(-live // spread)))
-    # consecutive chunks of one payload file stay together
-    parts: list[_ChunkScanPartition] = []
-    cur: list = []
-    cur_bytes = 0
-    for ch in ordered:
-        cur.append(ch)
-        cur_bytes += ch[2]
-        if cur_bytes >= target_bytes:
-            parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields, groups))
-            cur, cur_bytes = [], 0
-    if cur or not parts:
-        parts.append(_ChunkScanPartition(payload_dir, columns, cur, want_fields, groups))
-    return parts
+    cuts = _task_cuts(lengths[starts], parallelism, target_bytes)
+    return [
+        _ChunkScanPartition(payload_dir, columns, ordered[s:e], want_fields, groups)
+        for s, e in zip(cuts[:-1], cuts[1:])
+    ]
 
 
 def _pad_table(tbl: pa.Table, fields: list, n_rows: int) -> pa.Table:
@@ -774,11 +774,10 @@ def decode_dataset(
             raise ValueError(f"filters need column {c!r} in columns (residual filter)")
 
     # plan on the driver (metadata only, no Spark job), reading each
-    # value as the residual does.  Partitions pack to the engine's
-    # default size, capped so the live bytes spread over the cores.
+    # value as the residual does, cut into tasks by :func:`_task_cuts`
     parts = plan_partitions(
         output_dir, man, probe, columns, _pruning_groups(spark, fgroups, probe),
-        spread=spark.sparkContext.defaultParallelism, evidence=pruning_evidence,
+        parallelism=spark.sparkContext.defaultParallelism, evidence=pruning_evidence,
     )
     batches = None
     if fgroups and sum(ch[2] for p in parts for ch in p.chunks) < _DRIVER_DECODE_BYTES:

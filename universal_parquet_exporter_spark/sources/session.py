@@ -52,6 +52,8 @@ def build_session(
         # large batch — catastrophic on fault-expensive kernels; the
         # system pool routes through the tuned glibc malloc instead
         .config("spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL", "system")
+        # SQL tasks add this to their Python workers' env; set for RDD tasks too, both share one pool
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         # cap JVM background threads (GC/JIT default to one per core):
         # on preemption-expensive kernels they steal cycles from the
         # Python encode workers.  Set on BOTH driver and executor so a

@@ -37,10 +37,10 @@ What Spark's v2 source protocol covers here, mechanically:
   the engine's one scan planner, :mod:`..encode.scan`, which
   :func:`..encode.scan.decode_dataset` runs too: committed manifest
   rows (lineage semi-join, so orphans from torn runs are invisible)
-  packed into ~``partition_target_bytes`` scan partitions by payload
-  locality.  Planning reads ONLY metadata (manifest + lineage parquet)
-  with pyarrow — it runs in Spark's planning worker where no
-  SparkSession exists, exactly like a JVM DSv2 ``ScanBuilder``.
+  cut into scan partitions by :func:`..encode.scan._task_cuts`.  Planning
+  reads ONLY metadata with pyarrow in Spark's planning worker, where no
+  SparkSession exists (a JVM DSv2 ``ScanBuilder``'s place), so
+  :func:`register` hands it the cluster's parallelism.
 - **Write commit protocol** (``DataSourceArrowWriter``): tasks encode
   their Arrow batches with the engine's own stream
   (:func:`..encode.pipeline._encode_stream` — codec auto-selection,
@@ -77,6 +77,7 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -120,8 +121,13 @@ FORMAT_NAME = "upe_encoded"
 
 
 def register(spark) -> None:
-    """Register the ``upe_encoded`` format on a session."""
-    spark.dataSource.register(EncodedContainerDataSource)
+    """Register the ``upe_encoded`` format on a session, as a class made
+    here so cloudpickle ships it by value, parallelism and all."""
+
+    class _BoundSource(EncodedContainerDataSource):
+        parallelism = spark.sparkContext.defaultParallelism
+
+    spark.dataSource.register(_BoundSource)
 
 
 # ---------------------------------------------------------------------------
@@ -140,34 +146,34 @@ def _read_options(options) -> tuple[str, list[str] | None, int]:
     return path, columns, int(options.get("partition_target_bytes", DEFAULT_PARTITION_BYTES))
 
 
-def _plan_scan(path: str, columns: list[str] | None, target_bytes: int, runs=None) -> list:
-    """Scan partitions over every committed chunk, or over the fragments
-    of ``runs`` only, in the whole dataset's union schema.  No filter
-    prunes them: Spark filters the rows the reader returns."""
-    man = _committed_manifest(path)
-    rows = man
-    if runs is not None:
-        import pyarrow.compute as pc
+class _ChunkReader:
+    """Both readers' options, parallelism, planning and executor read."""
 
-        rows = man.filter(pc.is_in(man.column("run_id"), pa.array(runs, pa.string())))
-    if rows.num_rows == 0:
-        return [_ChunkScanPartition(os.path.join(path, "payload"), columns, [], [])]
-    return plan_partitions(path, rows, _probe_chunk_schema(path, man), columns, [], target_bytes=target_bytes)
+    def __init__(self, options, parallelism: int = 1):
+        self.path, self.columns, self.target_bytes = _read_options(options)
+        self.parallelism = parallelism
+
+    def _plan(self, runs=None) -> list:
+        """Scan partitions over every committed chunk, or the fragments of
+        ``runs``, in the dataset's union schema; Spark filters their rows."""
+        man = _committed_manifest(self.path)
+        rows = man if runs is None else man.filter(pc.is_in(man.column("run_id"), pa.array(runs, pa.string())))
+        if rows.num_rows == 0:
+            return [_ChunkScanPartition(os.path.join(self.path, "payload"), self.columns, [], [])]
+        return plan_partitions(self.path, rows, _probe_chunk_schema(self.path, man), self.columns, [],
+                               target_bytes=self.target_bytes, parallelism=self.parallelism)
+
+    def read(self, partition: _ChunkScanPartition):
+        return _read_chunk_partition(partition)
 
 
-class _EncodedReader(DataSourceReader):
+class _EncodedReader(_ChunkReader, DataSourceReader):
     """Batch reader: every committed chunk, packed into scan partitions.
     It takes no pushed filters (see the module docstring), so it works
     whatever ``spark.sql.python.filterPushdown.enabled`` says."""
 
-    def __init__(self, options):
-        self.path, self.columns, self.target_bytes = _read_options(options)
-
     def partitions(self):
-        return _plan_scan(self.path, self.columns, self.target_bytes)
-
-    def read(self, partition: _ChunkScanPartition):
-        return _read_chunk_partition(partition)
+        return self._plan()
 
 
 # ---------------------------------------------------------------------------
@@ -181,7 +187,7 @@ def _current_generation(path: str) -> str:
     return os.path.basename(manifest_dir(path).rstrip("/"))
 
 
-class _EncodedStreamReader(DataSourceStreamReader):
+class _EncodedStreamReader(_ChunkReader, DataSourceStreamReader):
     """``spark.readStream.format("upe_encoded")`` — tail a dataset's
     COMMITS.  Completes the source matrix (batch read, batch sink,
     stream sink): an encoded dataset becomes a message-log-like input
@@ -194,12 +200,11 @@ class _EncodedStreamReader(DataSourceStreamReader):
     ``(committed_at_µs, run_id)`` over committed runs
     (:func:`..encode.meta._committed_run_order`).  A micro-batch is the half-open
     cursor interval ``(start, end]`` → the manifest fragments of exactly
-    those runs, planned into locality-packed chunk partitions by the
-    same vectorized planner the batch reader uses
-    (:func:`_pack_chunk_partitions`).  Lineage is append-only within a
-    generation, so a replayed ``(start, end]`` rebuilds byte-identical
-    batches — exactly-once through Spark's own offset log, with no
-    reader-side state.
+    those runs, planned into chunk partitions by the same vectorized
+    planner the batch reader uses (:func:`..encode.scan.plan_partitions`).
+    Lineage is append-only within a generation, so a replayed ``(start,
+    end]`` rebuilds byte-identical batches — exactly-once through Spark's
+    own offset log, with no reader-side state.
 
     Determinism contract (documented, enforced where cheap): commits to
     a streamed dataset must come through this engine's commit paths
@@ -212,8 +217,8 @@ class _EncodedStreamReader(DataSourceStreamReader):
     ``option("starting", "earliest"|"latest")`` — earliest (default)
     replays the dataset's full committed history as batch 0."""
 
-    def __init__(self, options):
-        self.path, self.columns, self.target_bytes = _read_options(options)
+    def __init__(self, options, parallelism: int = 1):
+        super().__init__(options, parallelism)
         self.starting = options.get("starting", "earliest").lower()
         if self.starting not in ("earliest", "latest"):
             raise ValueError(f"starting must be earliest|latest, got {self.starting!r}")
@@ -279,11 +284,7 @@ class _EncodedStreamReader(DataSourceStreamReader):
         # the OUTPUT schema is the full dataset's union (fixed at stream
         # start by Spark); the scan partitions hold this interval's
         # fragments only
-        return _plan_scan(self.path, self.columns, self.target_bytes, runs)
-
-    # -- executor side ---------------------------------------------------
-    def read(self, partition: _ChunkScanPartition):
-        return _read_chunk_partition(partition)
+        return self._plan(runs)
 
     def commit(self, end: dict) -> None:
         # offsets live in Spark's checkpoint; nothing reader-side to GC
@@ -468,10 +469,13 @@ class EncodedContainerDataSource(DataSource):
 
     Read options: ``columns`` (comma-separated decode pruning — excluded
     columns' buffers are skipped un-decompressed), ``partition_target_bytes``
-    (scan-task payload size, default 64 MB).
+    (a cap on a scan task's payload, default 64 MB).  A scan plans at
+    least ``parallelism`` tasks: 1, or the session's on :func:`register`'s.
     Write options: ``key_col`` (defaults to the dataset plan's key
     column, and must match it), ``chunk_rows``, ``max_buffer_bytes``.
     See the module docstring for semantics."""
+
+    parallelism = 1
 
     @classmethod
     def name(cls) -> str:
@@ -487,7 +491,7 @@ class EncodedContainerDataSource(DataSource):
         return _arrow_to_ddl(probe, columns)
 
     def reader(self, schema):
-        return _EncodedReader(self.options)
+        return _EncodedReader(self.options, self.parallelism)
 
     def writer(self, schema, overwrite: bool):
         return _EncodedBatchWriter(self.options, schema, overwrite)
@@ -498,4 +502,4 @@ class EncodedContainerDataSource(DataSource):
         return _EncodedStreamWriter(self.options, schema)
 
     def streamReader(self, schema):
-        return _EncodedStreamReader(self.options)
+        return _EncodedStreamReader(self.options, self.parallelism)
